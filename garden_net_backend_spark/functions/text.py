@@ -63,9 +63,12 @@ def lang_id(text: Column) -> Column:
     interpreted per element (never codegen), measured 1.4× slower at
     sf0.1; the CASE chain stays inside whole-stage codegen and the
     repeated hit-count subtrees are shared by codegen subexpression
-    elimination. Value-identical: the first language (alphabetical)
-    whose hits are ≥ every later language's hits IS the
-    (hits desc, lang asc) argmax."""
+    elimination. For non-NULL text the result is unchanged: the first
+    language (alphabetical) whose hits are ≥ every later language's
+    hits IS the (hits desc, lang asc) argmax. The NULL case changed:
+    NULL text has NULL hit counts, every comparison is NULL, and the
+    chain falls through to the last language, 'fr' — the sorted-array
+    version returned 'de'. 'fr' is what the SQL oracle returns."""
     langs = sorted(LANG_STOPWORDS)
     hits = {lang: stopword_hits(text, lang) for lang in langs}
     expr = F.lit(langs[-1])

@@ -43,6 +43,14 @@ from ..functions.text import with_shingles
 _MERSENNE = (1 << 31) - 1
 
 
+def _local_checkpoint(df: DataFrame) -> DataFrame:
+    """The default ``checkpoint`` of the operators that take one: an
+    eager localCheckpoint. A caller that must release the blocks when
+    its unit of work ends (the streaming ingest runner's ``pin``)
+    passes its own."""
+    return df.localCheckpoint(eager=True)
+
+
 def normalize_text(col):
     """Canonical text form for exact dedup: lower, collapse whitespace,
     strip."""
@@ -382,6 +390,7 @@ def minhash_dedup_pairs(
     seed: int = 42,
     shingle: str = "char",
     grams: DataFrame | None = None,
+    checkpoint=_local_checkpoint,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded
     candidates → **exact** Jaccard verification of candidates only →
@@ -404,12 +413,12 @@ def minhash_dedup_pairs(
     instead of variable-length text, the same fingerprint trade
     :func:`ngram_jaccard_pairs_prefix` has always used (identical
     Jaccard up to a ~2⁻⁶⁴ per-pair collision; sizes are exact either
-    way).
+    way). ``checkpoint`` takes that signature checkpoint.
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(
+    sigs = checkpoint(minhash_signatures(
         docs, text_col, id_col, num_hashes, ngram, seed, shingle, grams=grams
-    ).localCheckpoint(eager=True)
+    ))
     cands = minhash_lsh_candidates(sigs, bands, rows_per_band)
     if grams is None:
         shing = with_shingles(docs, text_col, "_grams", ngram, shingle).select(
@@ -973,6 +982,7 @@ def excise_duplicate_spans_incremental(
     min_tokens: int = 50,
     seed: int = 42,
     max_tokens_per_doc: int | None = 2_000_000,
+    checkpoint=_local_checkpoint,
 ) -> tuple[DataFrame, DataFrame]:
     """Substring-excise an incoming SHARD against an already-indexed
     corpus → ``(cleaned_shard, updated_index)``.
@@ -1004,9 +1014,9 @@ def excise_duplicate_spans_incremental(
     # merge consume the shard fingerprints — checkpoint once (shard-
     # sized, the ingest unit) so the token-hash scan runs once, not
     # twice
-    wins = _window_fingerprints(
+    wins = checkpoint(_window_fingerprints(
         shard, text_col, id_col, min_tokens, seed
-    ).localCheckpoint(eager=True)
+    ))
     joined = wins.join(
         index.select("wkey", "n_occurrences", "first_id", "first_pos"),
         "wkey",
@@ -1278,6 +1288,7 @@ def line_dedup_incremental(
     min_chars: int = 1,
     normalize: bool = True,
     joiner: str = "\n",
+    checkpoint=_local_checkpoint,
 ) -> tuple[DataFrame, DataFrame]:
     """Line-dedup an incoming SHARD against an already-indexed corpus →
     ``(cleaned_shard, updated_index)`` — the line-family mirror of
@@ -1301,9 +1312,9 @@ def line_dedup_incremental(
     # branch, the rebuild totals, and the shard-index delta all consume
     # the exploded line rows — checkpoint once (shard-sized, the ingest
     # unit) so the split+normalize+hash scan runs once, not four times
-    rows = _line_rows(
+    rows = checkpoint(_line_rows(
         shard, text_col, id_col, sep, min_chars, normalize
-    ).localCheckpoint(eager=True)
+    ))
     qual = rows.filter("_qual")
     joined = qual.join(
         index.select(

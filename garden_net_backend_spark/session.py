@@ -8,6 +8,7 @@ Only the master / memory lines are local-mode specific.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -29,10 +30,33 @@ _ENGINE_CONFS = {
 }
 
 
+def driver_memory(meminfo: str | None) -> str:
+    """``spark.driver.memory`` for a host whose ``/proc/meminfo`` text is
+    ``meminfo``: about 60% of MemTotal, capped at 48g, so a local-mode
+    JVM (executors included) leaves the rest of the host to Python
+    workers and the OS. ``None`` (no such file) or text without a
+    MemTotal line gives the cap."""
+    m = re.search(r"^MemTotal:\s*(\d+)\s*kB", meminfo or "", re.MULTILINE)
+    if m is None:
+        return "48g"
+    mb = int(m.group(1)) * 6 // 10 // 1024
+    return f"{mb}m" if mb < 48 * 1024 else "48g"
+
+
+def _read_meminfo() -> str | None:
+    try:
+        with open("/proc/meminfo") as fh:
+            return fh.read()
+    except OSError:
+        return None
+
+
 def get_session(app_name: str = "garden_net_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Return (or create) the engine's SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
+    ``SPARK_GRAFT_DRIVER_MEM`` sets the driver memory; unset, it is sized
+    from the host (:func:`driver_memory`).
     """
     # make google.protobuf importable (vendored shim) BEFORE the JVM
     # starts: python workers inherit PYTHONPATH from the JVM's env
@@ -45,10 +69,11 @@ def get_session(app_name: str = "garden_net_spark", shuffle_partitions: int | No
     except Exception:
         pass  # shim is best-effort; TWS tests skip if absent
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(_read_meminfo())
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
     )
     for k, v in _ENGINE_CONFS.items():
         builder = builder.config(k, v)

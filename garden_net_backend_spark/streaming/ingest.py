@@ -50,6 +50,18 @@ outputs are already durably present — re-running it against an index
 that contains its own rows would reject every one of its docs as a
 "stored" duplicate).
 
+One runner, :func:`_run_ingest_batch`, is the single owner of this
+idempotency, replay and release contract for every ingest face: the
+batch-id check, the stored-prefix reads, the compacted-replay no-op
+with its manifest check, the persisted input projection, the
+decide/write timers, the tagged dynamic-partition-overwrite writes,
+the metrics row, and — when the batch ends — the release of the input
+and of every eager checkpoint the batch pinned. A face supplies only
+its decide step, its pre-checks and any after-write stamp; the
+MinHash gate (:func:`_minhash_gate`) and the first-seen line/substring
+stage (:func:`_first_seen_stage`) are shared by the standalone faces
+and the composed curation face.
+
 All stored-prefix probes go through the Hadoop FileSystem API
 (``spark._jvm``), never ``os.path`` — on object storage
 (s3a://, abfs://, hdfs://) a driver-local probe reads every path as
@@ -462,7 +474,8 @@ def _stored_prefix(
 ) -> DataFrame | None:
     """The stored prefix a (possibly replayed) batch decides against:
     everything at ``path`` EXCEPT the batch's own (possibly
-    half-written) partition — shared by all four ingest faces."""
+    half-written) partition — read by :func:`_run_ingest_batch` for
+    every output of every ingest face."""
     df = _read_if_exists(spark, path)
     if df is not None and "ingest_batch" in df.columns:
         df = df.filter(F.col("ingest_batch") != batch_id)
@@ -520,11 +533,301 @@ def _write_batch_metrics(
     )
 
 
+def _release(pinned: DataFrame) -> None:
+    """Drop the blocks of an eagerly local-checkpointed frame. Its
+    logical plan is the LogicalRDD over the checkpointed RDD, which
+    stays registered as persisted, blocks held, until it is unpersisted
+    here: dropping the Python frame and a JVM GC do not release it."""
+    pinned._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _run_ingest_batch(
+    batch: DataFrame,
+    batch_id: int,
+    family: str,
+    outputs: list[str],
+    id_col: str,
+    content_col: str,
+    decide,
+    metrics: bool = True,
+    guard=None,
+    flag_output: int = 0,
+    keep=None,
+) -> None:
+    """The batch lifecycle every ingest face shares — the single owner
+    of the module docstring's idempotency, replay and release contract:
+
+    1. reject a reserved ``batch_id`` (:func:`_check_batch_id`);
+    2. read the stored prefix of every dir in ``outputs``;
+    3. run the face's pre-checks, ``guard(spark, *prefixes)``, which
+       may return an after-write stamp;
+    4. no-op a re-driven batch if ANY output already holds it
+       compacted, once :func:`_assert_true_replay` confirms it is a
+       replay. Every output is checked: compaction is per-path, and
+       with only the index folded the ingest_batch filter no longer
+       excludes the batch's own rows — every doc would self-match as a
+       "stored" dup, or on the substring face be excised to empty
+       (review r10);
+    5. persist the input projection ``(id_col, content_col)``, filtered
+       by ``keep(content Column)`` when given;
+    6. ``decide(new, *prefixes, pin)`` → ``(accepted, writes)``, timed
+       as ``decide_sec``: ``pin`` is the eager ``localCheckpoint`` every
+       face takes through the runner, ``writes`` lists
+       ``(frame, dir, partition columns)``;
+    7. write each frame in order, tagged with ``src_batch`` and
+       ``ingest_batch``, as a dynamic partition overwrite, then run the
+       stamp — timed as ``write_sec``;
+    8. with ``metrics``, one row in ``<outputs[0]>_metrics``: n_accepted
+       counts ``accepted``, ``stored_prefix`` says whether
+       ``outputs[flag_output]`` had one;
+    9. finally, release every pin and the persisted input, so a long
+       stream holds no checkpoint blocks past the batch that made them.
+
+    ``outputs[0]`` owns the metrics row and the replay manifest."""
+    _check_batch_id(batch_id)
+    spark = batch.sparkSession
+    stored = [_stored_prefix(spark, d, batch_id) for d in outputs]
+    stamp = guard(spark, *stored) if guard is not None else None
+    if any(_was_compacted(s, batch_id) for s in stored):
+        _assert_true_replay(
+            spark, outputs[0], family, batch_id, batch, id_col,
+            _input_fingerprint(batch, id_col, content_col),
+        )
+        return
+    t0 = time.time()
+    raw = batch.select(id_col, content_col)
+    new = raw if keep is None else raw.filter(keep(F.col(content_col)))
+    new = new.persist()
+    pins: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        pins.append(df.localCheckpoint(eager=True))
+        return pins[-1]
+
+    try:
+        accepted, writes = decide(new, *stored, pin)
+        t1 = time.time()
+        tag = F.lit(int(batch_id))
+        for frame, path, part_cols in writes:
+            (
+                frame.withColumn("src_batch", tag)
+                .withColumn("ingest_batch", tag)
+                .write.mode("overwrite")
+                .options(partitionOverwriteMode="dynamic")
+                .partitionBy(*part_cols)
+                .parquet(path)
+            )
+        if stamp is not None:
+            stamp()
+        if metrics:
+            t2 = time.time()
+            # fingerprint from the PERSISTED projection — the manifest
+            # must never cost an extra source scan, and is skipped
+            # entirely with metrics=False (review r10 pass 2). With a
+            # keep filter it is the RAW projection, unpersisted: the
+            # manifest covers the raw batch in both the write and replay
+            # paths, so a quality filter never makes a true replay of
+            # the same raw batch read as an input collision
+            input_fp = _input_fingerprint(raw, id_col, content_col)
+            _write_batch_metrics(
+                spark, outputs[0].rstrip("/") + "_metrics", family,
+                batch_id, int(input_fp.split(":")[0]), accepted.count(),
+                stored[flag_output] is not None, t1 - t0, t2 - t1,
+                input_fp,
+            )
+    finally:
+        for df in pins:
+            _release(df)
+        new.unpersist()
+
+
+def _start_foreach_batch(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    available_now: bool,
+    face,
+    *args,
+    **kwargs,
+):
+    """Start ``stream`` with ``face(df, batch_id, *args, **kwargs)`` as
+    its ``foreachBatch`` body → the started StreamingQuery; the one
+    starter behind every ``*_stream`` wrapper (``available_now``: see
+    :func:`ingest_dedup_stream`)."""
+    writer = stream.writeStream.foreachBatch(
+        lambda df, batch_id: face(df, batch_id, *args, **kwargs)
+    ).option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _check_sidecar(
+    spark: SparkSession,
+    index_dir: str,
+    name: str,
+    fp: str,
+    mismatch,
+    required: bool = False,
+):
+    """The frozen-frame guard: verify the fingerprint sidecar
+    ``<index_dir>/<name>`` against ``fp`` and raise
+    ``ValueError(mismatch(stored))`` when it differs — or, with
+    ``required`` (verify-only serving), when it is missing (``stored``
+    then reads ``"<missing>"``). → None when the sidecar is present,
+    else the after-write stamp that creates it. Faces stamp only once
+    the batch's data is durably written, so a failed first batch never
+    pins its frame; re-stamping the same fp on replay is a no-op
+    overwrite."""
+    path = index_dir.rstrip("/") + "/" + name
+    stored = _read_small_text(spark, path)
+    if (stored is None and required) or (
+        stored is not None and stored.strip() != fp
+    ):
+        raise ValueError(mismatch((stored or "<missing>").strip()))
+    if stored is None:
+        return lambda: _write_small_text(spark, path, fp)
+    return None
+
+
+def _minhash_gate(
+    new: DataFrame,
+    stored_docs: DataFrame | None,
+    stored_bands: DataFrame | None,
+    pin,
+    threshold: float,
+    mh: dict,
+) -> DataFrame:
+    """The MinHash near-dup gate of :func:`process_ingest_batch` and of
+    the curation face: pairs of the persisted batch ``new`` among
+    itself and against the stored corpus (probing its banded index) →
+    the keep-id frame of :func:`_ingest_decide`. ``mh`` holds the
+    text/id columns and MinHash parameters :func:`_minhash_bands`
+    takes."""
+    from ..operators.dedup import minhash_dedup_incremental, minhash_dedup_pairs
+
+    kw = dict(mh, threshold=threshold)
+    if stored_docs is None:
+        pairs = minhash_dedup_pairs(new, checkpoint=pin, **kw)
+    else:
+        pairs = minhash_dedup_incremental(
+            new,
+            stored_docs.select(mh["id_col"], mh["text_col"]),
+            corpus_bands=stored_bands.select("id", "band", "bhash")
+            if stored_bands is not None
+            else None,
+            **kw,
+        )
+    return _ingest_decide(pairs, new, stored_docs, mh["id_col"], pin)
+
+
+def _minhash_bands(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    ngram: int,
+    seed: int,
+    shingle: str,
+) -> DataFrame:
+    """The stored MinHash index rows of ``docs``: the BANDED signatures
+    (band_signatures docstring). The next batch probes them with a
+    plain equi-join — no corpus-side band hashing ever again — and the
+    band partition column gives the probe partition pruning at scale."""
+    from ..operators.dedup import band_signatures, minhash_signatures
+
+    return band_signatures(
+        minhash_signatures(
+            docs, text_col, id_col, num_hashes, ngram, seed, shingle
+        ),
+        bands,
+        num_hashes // bands,
+    )
+
+
+def _first_seen_stage(
+    docs: DataFrame,
+    stored_idx: DataFrame | None,
+    pin,
+    key: str,
+    index,
+    dedup,
+    dedup_incremental,
+) -> tuple[DataFrame, DataFrame]:
+    """The line and substring stage, shared by their standalone faces
+    and the curation face: cut content whose corpus-wide first
+    occurrence is elsewhere → (cleaned docs, index DELTA). ``index``,
+    ``dedup`` and ``dedup_incremental`` are the family's kernels over
+    ``docs``; ``key`` is its index key column.
+
+    The delta holds only keys never seen before: decisions read key
+    EXISTENCE + first occurrence only, so it reproduces batch
+    decisions while the index write stays shard-sized. One
+    stored-index SCAN per batch, zero stored-index SHUFFLES: the
+    shard's keys broadcast into a semi-join that prunes the
+    corpus-sized index map-side (the batch side is micro-batch-sized
+    by the streaming contract), the shard-sized survivor set is
+    pinned, and both the dedup join and the delta anti-join run
+    against THAT. The previous shape shuffled the whole stored index
+    twice per batch (once for the kernel's left join, once for the
+    delta anti-join) — corpus-sized per-batch work at exactly the
+    scale this loop exists for (review r10)."""
+    if stored_idx is None:
+        return dedup(docs), index(docs)
+    shard = pin(index(docs))
+    touched = pin(
+        stored_idx.select(key, "n_occurrences", "first_id", "first_pos").join(
+            F.broadcast(shard.select(key)), key, "left_semi"
+        )
+    )
+    cleaned, _ = dedup_incremental(docs, touched)
+    delta = shard.join(F.broadcast(touched.select(key)), key, "left_anti")
+    return cleaned, delta
+
+
+def _line_stage(
+    docs, stored_idx, pin, text_col, id_col, sep, min_chars, normalize, joiner
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`_first_seen_stage` over lines (lkey)."""
+    from ..operators.dedup import line_dedup, line_dedup_incremental, line_index
+
+    kw = dict(sep=sep, min_chars=min_chars, normalize=normalize)
+    return _first_seen_stage(
+        docs, stored_idx, pin, "lkey",
+        lambda d: line_index(d, text_col, id_col, **kw),
+        lambda d: line_dedup(d, text_col, id_col, joiner=joiner, **kw),
+        lambda d, idx: line_dedup_incremental(
+            d, idx, text_col, id_col, joiner=joiner, checkpoint=pin, **kw
+        ),
+    )
+
+
+def _substring_stage(
+    docs, stored_idx, pin, text_col, id_col, min_tokens, seed
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`_first_seen_stage` over ``min_tokens`` windows (wkey)."""
+    from ..operators.dedup import (
+        excise_duplicate_spans,
+        excise_duplicate_spans_incremental,
+        window_index,
+    )
+
+    return _first_seen_stage(
+        docs, stored_idx, pin, "wkey",
+        lambda d: window_index(d, text_col, id_col, min_tokens, seed),
+        lambda d: excise_duplicate_spans(d, text_col, id_col, min_tokens, seed),
+        lambda d, idx: excise_duplicate_spans_incremental(
+            d, idx, text_col, id_col, min_tokens, seed, checkpoint=pin
+        ),
+    )
+
+
 def _ingest_decide(
     pairs: DataFrame,
     new: DataFrame,
     stored_docs: DataFrame | None,
     id_col: str,
+    pin,
 ) -> DataFrame:
     """The family-independent accept decision → keep-id frame.
 
@@ -533,11 +836,12 @@ def _ingest_decide(
     survivors collapse via connected components to the min id. The
     decision logic references the pair set ~5 times (both reject
     sides, batch restriction, CC, keep set) — materialize the
-    dup-sized frame ONCE or every branch re-expands the whole emitter
-    chain inside one plan (measured: 249s → ~15s on a 5-doc batch)."""
+    dup-sized frame ONCE (``pin``) or every branch re-expands the whole
+    emitter chain inside one plan (measured: 249s → ~15s on a 5-doc
+    batch)."""
     from ..operators.dedup import dedup_representatives
 
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = pin(pairs)
     vs_stored = None
     if stored_docs is not None:
         stored_ids = stored_docs.select(F.col(id_col).alias("_sid"))
@@ -591,106 +895,31 @@ def process_ingest_batch(
 ) -> None:
     """One idempotent ingest step (the ``foreachBatch`` body; callable
     directly for replay/backfill). See module docstring for the
-    decision rule and idempotency contract."""
-    from ..operators.dedup import (
-        band_signatures,
-        minhash_dedup_incremental,
-        minhash_dedup_pairs,
-        minhash_signatures,
+    decision rule; :func:`_run_ingest_batch` runs the batch."""
+    mh = dict(
+        text_col=text_col, id_col=id_col, num_hashes=num_hashes,
+        bands=bands, ngram=ngram, seed=seed, shingle=shingle,
     )
 
-    _check_batch_id(batch_id)
-    spark = batch.sparkSession
-    stored_docs = _stored_prefix(spark, accepted_dir, batch_id)
-    stored_bands = _stored_prefix(spark, index_dir, batch_id)
-    # no-op a re-driven batch if EITHER output already holds its rows
-    # compacted: with only the index folded, the ingest_batch filter no
-    # longer excludes the batch's own bands and every doc would
-    # self-match as a "stored" dup (review r10)
-    if _was_compacted(stored_docs, batch_id) or _was_compacted(
-        stored_bands, batch_id
-    ):
-        _assert_true_replay(
-            spark, accepted_dir, "minhash", batch_id, batch, id_col,
-            _input_fingerprint(batch, id_col, text_col),
+    def decide(new, stored_docs, stored_bands, pin):
+        keep_ids = _minhash_gate(
+            new, stored_docs, stored_bands, pin, threshold, mh
         )
-        return
-    t0 = time.time()
-    new = batch.select(id_col, text_col).persist()
-    try:
-        kw = dict(
-            text_col=text_col, id_col=id_col, threshold=threshold,
-            num_hashes=num_hashes, bands=bands, ngram=ngram,
-            seed=seed, shingle=shingle,
-        )
-        if stored_docs is None:
-            pairs = minhash_dedup_pairs(new, **kw)
-        else:
-            pairs = minhash_dedup_incremental(
-                new,
-                stored_docs.select(id_col, text_col),
-                corpus_bands=stored_bands.select("id", "band", "bhash")
-                if stored_bands is not None
-                else None,
-                **kw,
-            )
-        keep_ids = _ingest_decide(pairs, new, stored_docs, id_col)
-        accepted = batch.join(keep_ids, id_col, "left_semi").withColumn(
-            "src_batch", F.lit(int(batch_id))
-        ).withColumn("ingest_batch", F.lit(int(batch_id)))
         # the accept decision READS accepted_dir (the stored prefix) and
-        # the write below OVERWRITES a partition of the same path — a
+        # the write OVERWRITES a partition of the same path — a
         # self-referential read-write Spark (rightly) refuses. Pin the
         # batch-sized decision to block storage first; both writes then
         # run off the checkpoint, never the directory being replaced.
-        accepted = accepted.localCheckpoint(eager=True)
-        t1 = time.time()
-        writer_opts = {"partitionOverwriteMode": "dynamic"}
-        (
-            accepted.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch")
-            .parquet(accepted_dir)
-        )
-        # store the BANDED index (band_signatures docstring): the next
-        # batch probes it with a plain equi-join — no corpus-side band
-        # hashing ever again, and the band partition column gives the
-        # probe partition pruning at scale
-        bands_df = band_signatures(
-            minhash_signatures(
-                accepted, text_col, id_col, num_hashes, ngram, seed, shingle
-            ),
-            bands,
-            num_hashes // bands,
-        ).withColumn("src_batch", F.lit(int(batch_id))).withColumn(
-            "ingest_batch", F.lit(int(batch_id))
-        )
-        (
-            bands_df.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch", "band")
-            .parquet(index_dir)
-        )
-        if metrics:
-            t2 = time.time()
-            # fingerprint from the PERSISTED projection — the manifest
-            # must never cost an extra source scan, and is skipped
-            # entirely with metrics=False (review r10 pass 2)
-            input_fp = _input_fingerprint(new, id_col, text_col)
-            _write_batch_metrics(
-                spark,
-                accepted_dir.rstrip("/") + "_metrics",
-                "minhash",
-                batch_id,
-                int(input_fp.split(":")[0]),
-                accepted.count(),
-                stored_docs is not None,
-                t1 - t0,
-                t2 - t1,
-                input_fp,
-            )
-    finally:
-        new.unpersist()
+        accepted = pin(batch.join(keep_ids, id_col, "left_semi"))
+        return accepted, [
+            (accepted, accepted_dir, ["ingest_batch"]),
+            (_minhash_bands(accepted, **mh), index_dir, ["ingest_batch", "band"]),
+        ]
+
+    _run_ingest_batch(
+        batch, batch_id, "minhash", [accepted_dir, index_dir], id_col,
+        text_col, decide, metrics,
+    )
 
 
 def process_ingest_batch_substring(
@@ -717,38 +946,26 @@ def process_ingest_batch_substring(
 
     Index = the ``window_index`` shape (wkey, n_occurrences, first_id,
     first_pos). Each batch appends only its DELTA — windows whose
-    content was never seen before: the excise decision reads window
-    EXISTENCE + first occurrence only, so the delta reproduces batch
-    decisions exactly while keeping the index write shard-sized (a
-    full merged-index rewrite per batch would be corpus-sized — the
-    exact cost this loop exists to avoid). The stored
-    ``n_occurrences`` therefore counts occurrences within the window's
-    first-seeing batch only; decisions never read it.
+    content was never seen before (:func:`_first_seen_stage`); a full
+    merged-index rewrite per batch would be corpus-sized — the exact
+    cost this loop exists to avoid. The stored ``n_occurrences``
+    therefore counts occurrences within the window's first-seeing
+    batch only; decisions never read it.
 
     Per-batch cost contract: window fingerprints scatter uniformly
     under the hash, so no content-based pruning of the stored index is
     possible (any batch touches every key range — a ``pmod(wkey, K)``
     layout column was dead weight and was removed). What IS bounded:
-    the stored index is SCANNED once per batch and never shuffled —
-    the shard's distinct wkeys broadcast into a semi-join that prunes
-    it map-side to a shard-sized survivor set, and both the excise
-    join and the delta anti-join run against that pinned set. The
-    scan is the floor for exact substring dedup without an external
-    KV store; everything above it is shard-sized.
+    the stored index is SCANNED once per batch and never shuffled.
+    The scan is the floor for exact substring dedup without an
+    external KV store; everything above it is shard-sized.
 
     Contract inherited from the incremental kernel: doc ids assigned
     monotonically across batches, so the stored first occurrence is
     the global (id, pos) minimum and chained ingests equal the batch
-    excision restricted to each shard (equivalence-tested). Same
-    idempotency + compaction story as the other faces (``src_batch``
-    data column, dynamic partition overwrite, compacted-replay
-    no-op)."""
-    from ..operators.dedup import (
-        excise_duplicate_spans,
-        excise_duplicate_spans_incremental,
-        window_index,
-    )
-
+    excision restricted to each shard (equivalence-tested). The
+    metrics row counts every doc as accepted (excised, not dropped);
+    its ``stored_prefix`` reports the window index."""
     if n_buckets is not None:
         import warnings
 
@@ -765,109 +982,29 @@ def process_ingest_batch_substring(
             DeprecationWarning,
             stacklevel=2,
         )
-    _check_batch_id(batch_id)
-    spark = batch.sparkSession
 
-    stored_acc = _stored_prefix(spark, accepted_dir, batch_id)
-    stored_idx = _stored_prefix(spark, index_dir, batch_id)
-    # either-side check: an index-compacted replay would read its own
-    # windows as "in corpus" and durably excise every doc's accepted
-    # text to empty (review r10 — confirmed by repro)
-    if _was_compacted(stored_acc, batch_id) or _was_compacted(
-        stored_idx, batch_id
-    ):
-        _assert_true_replay(
-            spark, accepted_dir, "substring", batch_id, batch, id_col,
-            _input_fingerprint(batch, id_col, text_col),
+    def decide(new, stored_acc, stored_idx, pin):
+        cleaned, delta = _substring_stage(
+            new, stored_idx, pin, text_col, id_col, min_tokens, seed
         )
-        return
-    t0 = time.time()
-    new = batch.select(id_col, text_col).persist()
-    try:
-        if stored_idx is None:
-            cleaned = excise_duplicate_spans(
-                new, text_col, id_col, min_tokens, seed
-            )
-            delta = window_index(new, text_col, id_col, min_tokens, seed)
-        else:
-            idx_sel = stored_idx.select(
-                "wkey", "n_occurrences", "first_id", "first_pos"
-            )
-            # one stored-index SCAN per batch, zero stored-index
-            # SHUFFLES: prune the corpus-sized index to the shard's
-            # wkeys with a broadcast semi-join (the batch side is
-            # micro-batch-sized by the streaming contract), pin the
-            # shard-sized survivor set, and run both the excise join
-            # and the delta anti-join against THAT. The previous shape
-            # shuffled the whole stored index twice per batch (once for
-            # the kernel's left join, once for the delta anti-join) —
-            # corpus-sized per-batch work at exactly the scale this
-            # loop exists for (review r10).
-            shard_widx = window_index(
-                new, text_col, id_col, min_tokens, seed
-            ).localCheckpoint(eager=True)
-            touched = idx_sel.join(
-                F.broadcast(shard_widx.select("wkey")), "wkey", "left_semi"
-            ).localCheckpoint(eager=True)
-            cleaned, _ = excise_duplicate_spans_incremental(
-                new, touched, text_col, id_col, min_tokens, seed
-            )
-            delta = shard_widx.join(
-                F.broadcast(touched.select("wkey")), "wkey", "left_anti"
-            )
-        accepted = (
-            batch.join(
-                cleaned.select(
-                    id_col, "clean_text", "n_cut_tokens", "oversize"
-                ),
-                id_col,
-            )
-            .withColumn("src_batch", F.lit(int(batch_id)))
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-        )
-        # both outputs read stored state the writes below replace
-        # partitions of (cleaned/delta ← index_dir) — pin the
-        # batch-sized frames before any overwrite
-        accepted = accepted.localCheckpoint(eager=True)
+        # both outputs read stored state the writes replace partitions
+        # of (cleaned/delta ← index_dir) — pin the batch-sized frames
+        # before any overwrite
+        accepted = pin(batch.join(
+            cleaned.select(id_col, "clean_text", "n_cut_tokens", "oversize"),
+            id_col,
+        ))
         # legacy wbucket layout compat — see _attach_legacy_wbucket
-        delta_rows = delta.withColumn(
-            "src_batch", F.lit(int(batch_id))
-        ).withColumn("ingest_batch", F.lit(int(batch_id)))
-        delta_rows, idx_part_cols = _attach_legacy_wbucket(
-            stored_idx, delta_rows
-        )
-        delta_rows = delta_rows.localCheckpoint(eager=True)
-        t1 = time.time()
-        writer_opts = {"partitionOverwriteMode": "dynamic"}
-        (
-            accepted.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch")
-            .parquet(accepted_dir)
-        )
-        (
-            delta_rows.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy(*idx_part_cols)
-            .parquet(index_dir)
-        )
-        if metrics:
-            t2 = time.time()
-            input_fp = _input_fingerprint(new, id_col, text_col)
-            _write_batch_metrics(
-                spark,
-                accepted_dir.rstrip("/") + "_metrics",
-                "substring",
-                batch_id,
-                int(input_fp.split(":")[0]),
-                accepted.count(),  # nothing rejected: excised, not dropped
-                stored_idx is not None,
-                t1 - t0,
-                t2 - t1,
-                input_fp,
-            )
-    finally:
-        new.unpersist()
+        delta, idx_part_cols = _attach_legacy_wbucket(stored_idx, delta)
+        return accepted, [
+            (accepted, accepted_dir, ["ingest_batch"]),
+            (pin(delta), index_dir, idx_part_cols),
+        ]
+
+    _run_ingest_batch(
+        batch, batch_id, "substring", [accepted_dir, index_dir], id_col,
+        text_col, decide, metrics, flag_output=1,
+    )
 
 
 def ingest_dedup_stream_substring(
@@ -880,18 +1017,11 @@ def ingest_dedup_stream_substring(
 ):
     """Substring counterpart of :func:`ingest_dedup_stream` — wire a
     streaming document source into the span-excision ingest loop."""
-
-    def _dispatch(df: DataFrame, batch_id: int) -> None:
-        process_ingest_batch_substring(
-            df, batch_id, accepted_dir, index_dir, **kernel_kwargs
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(_dispatch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        stream_docs, checkpoint_dir, available_now,
+        process_ingest_batch_substring, accepted_dir, index_dir,
+        **kernel_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def process_ingest_batch_lines(
@@ -919,98 +1049,29 @@ def process_ingest_batch_lines(
     delta index — stored ``n_occurrences`` is batch-local and
     decisions never read it).
 
-    Same cost contract as the substring face: the stored index is
-    SCANNED once per batch and never shuffled (shard lkeys broadcast
-    into a semi-join prune feeding both the dedup join and the delta
-    anti-join); same idempotency/compaction/replay-manifest story as
-    every face. ``sep``/``min_chars``/``normalize`` must stay constant
-    across batches (drift shows in ``audit_ingest_index``)."""
-    from ..operators.dedup import line_dedup, line_dedup_incremental, line_index
+    Same cost contract as the substring face (:func:`_first_seen_stage`)
+    and, like it, nothing rejected: lines cut, docs kept.
+    ``sep``/``min_chars``/``normalize`` must stay constant across
+    batches (drift shows in ``audit_ingest_index``)."""
 
-    _check_batch_id(batch_id)
-    spark = batch.sparkSession
-    stored_acc = _stored_prefix(spark, accepted_dir, batch_id)
-    stored_idx = _stored_prefix(spark, index_dir, batch_id)
-    if _was_compacted(stored_acc, batch_id) or _was_compacted(
-        stored_idx, batch_id
-    ):
-        _assert_true_replay(
-            spark, accepted_dir, "line", batch_id, batch, id_col,
-            _input_fingerprint(batch, id_col, text_col),
+    def decide(new, stored_acc, stored_idx, pin):
+        cleaned, delta = _line_stage(
+            new, stored_idx, pin, text_col, id_col, sep, min_chars,
+            normalize, joiner,
         )
-        return
-    t0 = time.time()
-    new = batch.select(id_col, text_col).persist()
-    kw = dict(sep=sep, min_chars=min_chars, normalize=normalize)
-    try:
-        if stored_idx is None:
-            cleaned = line_dedup(
-                new, text_col, id_col, joiner=joiner, **kw
-            )
-            delta = line_index(new, text_col, id_col, **kw)
-        else:
-            idx_sel = stored_idx.select(
-                "lkey", "n_occurrences", "first_id", "first_pos"
-            )
-            shard_lidx = line_index(
-                new, text_col, id_col, **kw
-            ).localCheckpoint(eager=True)
-            touched = idx_sel.join(
-                F.broadcast(shard_lidx.select("lkey")), "lkey", "left_semi"
-            ).localCheckpoint(eager=True)
-            cleaned, _ = line_dedup_incremental(
-                new, touched, text_col, id_col, joiner=joiner, **kw
-            )
-            delta = shard_lidx.join(
-                F.broadcast(touched.select("lkey")), "lkey", "left_anti"
-            )
-        accepted = (
-            batch.join(
-                cleaned.select(
-                    id_col, "clean_text", "n_kept_lines", "n_cut_lines"
-                ),
-                id_col,
-            )
-            .withColumn("src_batch", F.lit(int(batch_id)))
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-        )
-        accepted = accepted.localCheckpoint(eager=True)
-        delta_rows = (
-            delta.withColumn("src_batch", F.lit(int(batch_id)))
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-            .localCheckpoint(eager=True)
-        )
-        t1 = time.time()
-        writer_opts = {"partitionOverwriteMode": "dynamic"}
-        (
-            accepted.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch")
-            .parquet(accepted_dir)
-        )
-        (
-            delta_rows.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch")
-            .parquet(index_dir)
-        )
-        if metrics:
-            t2 = time.time()
-            input_fp = _input_fingerprint(new, id_col, text_col)
-            _write_batch_metrics(
-                spark,
-                accepted_dir.rstrip("/") + "_metrics",
-                "line",
-                batch_id,
-                int(input_fp.split(":")[0]),
-                accepted.count(),  # nothing rejected: lines cut, docs kept
-                stored_idx is not None,
-                t1 - t0,
-                t2 - t1,
-                input_fp,
-            )
-    finally:
-        new.unpersist()
+        accepted = pin(batch.join(
+            cleaned.select(id_col, "clean_text", "n_kept_lines", "n_cut_lines"),
+            id_col,
+        ))
+        return accepted, [
+            (accepted, accepted_dir, ["ingest_batch"]),
+            (pin(delta), index_dir, ["ingest_batch"]),
+        ]
+
+    _run_ingest_batch(
+        batch, batch_id, "line", [accepted_dir, index_dir], id_col,
+        text_col, decide, metrics, flag_output=1,
+    )
 
 
 def ingest_dedup_stream_lines(
@@ -1023,18 +1084,11 @@ def ingest_dedup_stream_lines(
 ):
     """Line-dedup counterpart of :func:`ingest_dedup_stream` — wire a
     streaming document source into the line-excision ingest loop."""
-
-    def _dispatch(df: DataFrame, batch_id: int) -> None:
-        process_ingest_batch_lines(
-            df, batch_id, accepted_dir, index_dir, **kernel_kwargs
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(_dispatch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        stream_docs, checkpoint_dir, available_now,
+        process_ingest_batch_lines, accepted_dir, index_dir,
+        **kernel_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_ingest_index(
@@ -1078,10 +1132,9 @@ def compact_ingest_index(
     layout contract)."""
     # mergeSchema: a mixed-era directory (pre-src_batch partitions next
     # to post-upgrade ones) must not let single-file schema inference
-    # drop the provenance column — the "src_batch not in columns"
-    # branch below would then stamp the -1 sentinel over EVERY row,
-    # including batches whose real ids are in the files, silently
-    # disarming the replay no-op guard (review r10)
+    # drop the provenance column — _src_batch would then stamp the -1
+    # sentinel over EVERY row, including batches whose real ids are in
+    # the files, silently disarming the replay no-op guard (review r10)
     if backup_generations < 1:
         # validate BEFORE the corpus-sized rewrite below — _swap_live
         # would catch it, but only after paying the full compaction
@@ -1100,45 +1153,70 @@ def compact_ingest_index(
     # "wbucket" kept for indexes written before the layout column was
     # retired — it folds through as ordinary sub-partitioning
     sub = [c for c in ("band", "_cell", "wbucket") if c in df.columns]
-    part_cols = ["ingest_batch"] + sub
-    compacted = df.withColumn("ingest_batch", F.lit(COMPACTED_BATCH_ID))
-    if "src_batch" not in compacted.columns:
-        # pre-src_batch data: original ids are unrecoverable; mark them
-        # compacted-unknown rather than refusing (replay no-op guard
-        # simply never fires for them)
-        compacted = compacted.withColumn(
-            "src_batch", F.lit(COMPACTED_BATCH_ID)
-        )
-    else:
-        # mixed-era dirs surface pre-upgrade rows as NULL under the
-        # merged schema — same unknown-provenance meaning, same sentinel
-        compacted = compacted.withColumn(
-            "src_batch",
-            F.coalesce(F.col("src_batch"), F.lit(COMPACTED_BATCH_ID)),
-        )
-    base = path.rstrip("/")
-    tmp = base + ".compact.tmp"
-    # round-robin repartition, NOT hash-by-partition-columns:
-    # post-withColumn ingest_batch is the constant -1, so hashing on
-    # part_cols alone funnels the whole corpus into one task (or ≤|band
-    # values| tasks) — a single-writer OOM/straggler at scale (review
-    # r10). Round-robin keeps every core writing without paying a
-    # murmur3 pass over the full row payload (text/embeddings); files
-    # per partition dir ≤ parallelism, still a huge cut from one file
-    # per (batch × dir). sortWithinPartitions clusters src_batch into
-    # tight row groups so _was_compacted's no-match probe (the common
-    # case, run per batch) is answered by row-group min/max stats
-    # instead of a full compacted-partition scan (review r10).
-    nparts = max(1, spark.sparkContext.defaultParallelism)
-    writer = compacted.repartition(nparts).sortWithinPartitions(
-        *sub, "src_batch"
-    )
-    writer.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
-    _swap_live(
-        spark, base, tmp, keep_backup, copy_sidecars=True,
+    _write_compacted(
+        spark, path, df.withColumn("src_batch", _src_batch(df)), sub,
+        keep_backup, copy_sidecars=True,
         backup_generations=backup_generations,
     )
     return path
+
+
+def _src_batch(df: DataFrame):
+    """``df``'s ``src_batch`` for a compacted rewrite. Rows whose
+    original batch id is unrecoverable carry the compacted sentinel
+    (marked compacted-unknown rather than refused; the replay no-op
+    guard simply never fires for them): data written before the column
+    existed, and the pre-upgrade rows of a mixed-era dir, which the
+    merged schema surfaces as NULL."""
+    if "src_batch" not in df.columns:
+        return F.lit(COMPACTED_BATCH_ID)
+    return F.coalesce(F.col("src_batch"), F.lit(COMPACTED_BATCH_ID))
+
+
+def _write_compacted(
+    spark: SparkSession,
+    path: str,
+    rows: DataFrame,
+    sub: list[str],
+    keep_backup: bool,
+    sidecars: list[tuple[str, str]] = (),
+    copy_sidecars: bool = False,
+    backup_generations: int = 1,
+) -> None:
+    """Replace the live dir ``path`` with ``rows`` in the compacted
+    layout — all in the reserved ``ingest_batch=-1`` partition,
+    sub-partitioned by ``sub`` — written to ``<path>.compact.tmp``
+    with the ``(name, text)`` ``sidecars`` stamped inside, then swapped
+    live (:func:`_swap_live`).
+
+    Round-robin repartition, NOT hash-by-partition-columns:
+    ingest_batch is the constant -1, so hashing on the partition
+    columns alone funnels the whole corpus into one task (or ≤|band
+    values| tasks) — a single-writer OOM/straggler at scale (review
+    r10). Round-robin keeps every core writing without paying a
+    murmur3 pass over the full row payload (text/embeddings); files
+    per partition dir ≤ parallelism, still a huge cut from one file
+    per (batch × dir). sortWithinPartitions clusters src_batch into
+    tight row groups so _was_compacted's no-match probe (the common
+    case, run per batch) is answered by row-group min/max stats
+    instead of a full compacted-partition scan (review r10)."""
+    base = path.rstrip("/")
+    tmp = base + ".compact.tmp"
+    nparts = max(1, spark.sparkContext.defaultParallelism)
+    (
+        rows.withColumn("ingest_batch", F.lit(COMPACTED_BATCH_ID))
+        .repartition(nparts)
+        .sortWithinPartitions(*sub, "src_batch")
+        .write.mode("overwrite")
+        .partitionBy("ingest_batch", *sub)
+        .parquet(tmp)
+    )
+    for name, text in sidecars:
+        _write_small_text(spark, f"{tmp}/{name}", text)
+    _swap_live(
+        spark, base, tmp, keep_backup, copy_sidecars=copy_sidecars,
+        backup_generations=backup_generations,
+    )
 
 
 def _swap_live(
@@ -1356,45 +1434,17 @@ def rebuild_semantic_assignments(
     # carry the REAL src_batch from the accepted rows (flattening it to
     # -1 would blind _was_compacted: an uncommitted batch re-driven
     # after a rebuild would re-write its assign partition on top of the
-    # rebuilt rows — durable duplicates; review r10 pass 2). Pre-r10
-    # corpora without the column degrade to the compacted sentinel.
-    src = (
-        # NULL-coalesce: mixed-era corpora surface pre-upgrade rows as
-        # NULL under the merged schema — degrade them to the sentinel
-        accepted.select(
-            id_col,
-            F.coalesce(
-                F.col("src_batch"), F.lit(COMPACTED_BATCH_ID)
-            ).alias("src_batch"),
-        )
-        if "src_batch" in accepted.columns
-        else accepted.select(
-            id_col, F.lit(COMPACTED_BATCH_ID).alias("src_batch")
-        )
-    )
-    rows = assigned.join(src, id_col).withColumn(
-        "ingest_batch", F.lit(COMPACTED_BATCH_ID)
-    )
-    base = assign_dir.rstrip("/")
-    tmp = base + ".compact.tmp"
-    nparts = max(1, spark.sparkContext.defaultParallelism)
-    (
-        # round-robin: full parallelism (ingest_batch is the constant
-        # -1; hashing _cell alone = one task per cell); src_batch sort
-        # keeps the replay probe's row-group pruning intact (same
-        # treatment as compact_ingest_index)
-        rows.repartition(nparts)
-        .sortWithinPartitions("_cell", "src_batch")
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch", "_cell")
-        .parquet(tmp)
+    # rebuilt rows — durable duplicates; review r10 pass 2)
+    rows = assigned.join(
+        accepted.select(id_col, _src_batch(accepted).alias("src_batch")),
+        id_col,
     )
     # stamp the NEW fingerprint inside tmp before the swap (the old
     # one must NOT be carried over)
-    _write_small_text(
-        spark, tmp + "/_cells_fingerprint", cells_fingerprint(cells)
+    _write_compacted(
+        spark, assign_dir, rows, ["_cell"], keep_backup,
+        [("_cells_fingerprint", cells_fingerprint(cells))],
     )
-    _swap_live(spark, base, tmp, keep_backup, copy_sidecars=False)
     return assign_dir
 
 
@@ -1449,79 +1499,49 @@ def audit_ingest_index(
             "audit_ingest_index: nothing stored at "
             f"{accepted_dir!r} / {index_dir!r}"
         )
+    # each family: the index re-derived from the corpus, with the same
+    # column names as the stored index, and its (key, key, payload)
     if family == "minhash":
-        from ..operators.dedup import band_signatures, minhash_signatures
-
-        derived = band_signatures(
-            minhash_signatures(
-                accepted, text_col, id_col, num_hashes, ngram, seed, shingle
-            ),
-            bands,
-            num_hashes // bands,
-        ).select(
-            F.col("id").alias("_k1"), F.col("band").alias("_k2"),
-            F.col("bhash").alias("_payload"),
+        derived = _minhash_bands(
+            accepted, text_col, id_col, num_hashes, bands, ngram, seed, shingle
         )
-        stored_n = stored.select(
-            F.col("id").alias("_k1"), F.col("band").alias("_k2"),
-            F.col("bhash").alias("_spayload"),
-        )
+        keyed = (F.col("id"), F.col("band"), F.col("bhash"))
     elif family == "semantic":
         from ..operators.similarity import _alias_cells, _assign_cells
 
         if cells is None:
             raise ValueError("semantic audit needs the frozen cells frame")
-        # verify-only: an audit must never STAMP a fingerprint (the
-        # enforce helper writes one when absent, which would bless a
-        # wrong frame on a pre-fingerprint index)
-        stored_fp = _read_small_text(
-            spark, index_dir.rstrip("/") + "/_cells_fingerprint"
-        )
-        if stored_fp is not None and stored_fp.strip() != cells_fingerprint(cells):
-            raise ValueError(
+        # verify-only: an audit must never STAMP a fingerprint (stamping
+        # when absent would bless a wrong frame on a pre-fingerprint
+        # index), so the stamp _check_sidecar returns is dropped
+        _check_sidecar(
+            spark, index_dir, "_cells_fingerprint", cells_fingerprint(cells),
+            lambda s: (
                 "audit_ingest_index: cells frame does not match the stored "
                 "centroid fingerprint — the audit would re-derive with the "
                 "wrong clustering; pass the frame the corpus was ingested with"
-            )
+            ),
+        )
         derived = _assign_cells(
             accepted.select(id_col, vec_col), _alias_cells(cells),
             id_col, vec_col, assign,
-        ).select(
-            F.col(id_col).alias("_k1"), F.lit(0).alias("_k2"),
-            F.col("_cell").cast("long").alias("_payload"),
         )
-        stored_n = stored.select(
-            F.col(id_col).alias("_k1"), F.lit(0).alias("_k2"),
-            F.col("_cell").cast("long").alias("_spayload"),
-        )
-    elif family == "substring":
-        from ..operators.dedup import window_index
+        keyed = (F.col(id_col), F.lit(0), F.col("_cell").cast("long"))
+    elif family in ("substring", "line"):
+        from ..operators.dedup import line_index, window_index
 
         # n_occurrences is by-design batch-local in the loop's delta
         # index (decisions never read it) — audit keys + firsts only
-        derived = window_index(
-            accepted, text_col, id_col, min_tokens, seed
-        ).select(
-            F.col("wkey").alias("_k1"), F.lit(0).alias("_k2"),
-            F.struct("first_id", "first_pos").alias("_payload"),
-        )
-        stored_n = stored.select(
-            F.col("wkey").alias("_k1"), F.lit(0).alias("_k2"),
-            F.struct("first_id", "first_pos").alias("_spayload"),
-        )
-    elif family == "line":
-        from ..operators.dedup import line_index
-
-        # same batch-local-counts argument as the substring face
-        derived = line_index(
-            accepted, text_col, id_col, sep, min_chars, normalize
-        ).select(
-            F.col("lkey").alias("_k1"), F.lit(0).alias("_k2"),
-            F.struct("first_id", "first_pos").alias("_payload"),
-        )
-        stored_n = stored.select(
-            F.col("lkey").alias("_k1"), F.lit(0).alias("_k2"),
-            F.struct("first_id", "first_pos").alias("_spayload"),
+        if family == "substring":
+            derived = window_index(accepted, text_col, id_col, min_tokens, seed)
+        else:
+            derived = line_index(
+                accepted, text_col, id_col, sep, min_chars, normalize
+            )
+        keyed = (
+            F.col("wkey" if family == "substring" else "lkey"),
+            F.lit(0),
+            F.struct("first_id", "first_pos"),
         )
     elif family == "pq":
         from ..operators.similarity import (
@@ -1533,22 +1553,19 @@ def audit_ingest_index(
         if codebooks is None:
             raise ValueError("pq audit needs the frozen codebooks frame")
         # verify-only, like the semantic branch: an audit never stamps
-        stored_fp = _read_small_text(
-            spark, index_dir.rstrip("/") + "/_codebooks_fingerprint"
-        )
-        if stored_fp is not None and stored_fp.strip() != codebooks_fingerprint(
-            codebooks
-        ):
-            raise ValueError(
+        _check_sidecar(
+            spark, index_dir, "_codebooks_fingerprint",
+            codebooks_fingerprint(codebooks), lambda s: (
                 "audit_ingest_index: codebooks frame does not match the "
                 "stored codebook fingerprint — the audit would re-encode "
                 "with the wrong codebooks; pass the frame the codes were "
                 "encoded with"
-            )
+            ),
+        )
         derived = pq_encode(
             accepted.select(id_col, vec_col), codebooks, id_col, vec_col
         )
-        audit_cells = cells is not None and "_cell" in stored.columns
+        keyed = (F.col(id_col), F.lit(0), F.col("codes"))
         if cells is not None and "_cell" not in stored.columns:
             raise ValueError(
                 "audit_ingest_index: a cells frame was passed but the "
@@ -1556,52 +1573,42 @@ def audit_ingest_index(
                 "not the celled layout; audit without cells, or rebuild "
                 "with rebuild_pq_codes(cells=...)"
             )
-        if audit_cells:
+        if cells is not None:
             # the _cell column is the partition key ivf_pq_topk PRUNES
             # by (round 12) — a wrong cell silently hides the row from
             # every pruned query batch, so the audit re-derives it
-            stored_cfp = _read_small_text(
-                spark, index_dir.rstrip("/") + "/_cells_fingerprint"
-            )
-            if (
-                stored_cfp is not None
-                and stored_cfp.strip() != cells_fingerprint(cells)
-            ):
-                raise ValueError(
+            _check_sidecar(
+                spark, index_dir, "_cells_fingerprint",
+                cells_fingerprint(cells), lambda s: (
                     "audit_ingest_index: cells frame does not match the "
                     "stored centroid fingerprint — the audit would "
                     "re-cell with the wrong clustering; pass the frame "
                     "the codes were celled with"
-                )
+                ),
+            )
             derived = derived.join(
                 _assign_cells(
                     accepted.select(id_col, vec_col), _alias_cells(cells),
                     id_col, vec_col, assign,
-                ).select(id_col, F.col("_cell").alias("_dcell")),
+                ).select(id_col, "_cell"),
                 id_col,
-            ).select(
-                F.col(id_col).alias("_k1"), F.lit(0).alias("_k2"),
-                F.struct(
-                    F.col("codes"), F.col("_dcell").cast("long").alias("_cell")
-                ).alias("_payload"),
             )
-            stored_n = stored.select(
-                F.col(id_col).alias("_k1"), F.lit(0).alias("_k2"),
+            keyed = (
+                F.col(id_col),
+                F.lit(0),
                 F.struct(
                     F.col("codes"), F.col("_cell").cast("long").alias("_cell")
-                ).alias("_spayload"),
-            )
-        else:
-            derived = derived.select(
-                F.col(id_col).alias("_k1"), F.lit(0).alias("_k2"),
-                F.col("codes").alias("_payload"),
-            )
-            stored_n = stored.select(
-                F.col(id_col).alias("_k1"), F.lit(0).alias("_k2"),
-                F.col("codes").alias("_spayload"),
+                ),
             )
     else:
         raise ValueError(f"unknown family: {family!r}")
+    k1, k2, payload = keyed
+    derived = derived.select(
+        k1.alias("_k1"), k2.alias("_k2"), payload.alias("_payload")
+    )
+    stored_n = stored.select(
+        k1.alias("_k1"), k2.alias("_k2"), payload.alias("_spayload")
+    )
     diff = derived.join(stored_n, ["_k1", "_k2"], "full_outer").select(
         F.col("_payload").isNull().cast("int").alias("_extra"),
         F.col("_spayload").isNull().cast("int").alias("_missing"),
@@ -1710,18 +1717,10 @@ def ingest_dedup_stream(
     ``available_now=True`` drains the current backlog and stops — the
     batch-equivalence test mode and the nightly-catchup shape; leave
     False for a long-running micro-batch ingester."""
-
-    def _dispatch(df: DataFrame, batch_id: int) -> None:
-        process_ingest_batch(
-            df, batch_id, accepted_dir, index_dir, **kernel_kwargs
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(_dispatch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        stream_docs, checkpoint_dir, available_now, process_ingest_batch,
+        accepted_dir, index_dir, **kernel_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def process_ingest_batch_semantic(
@@ -1753,78 +1752,63 @@ def process_ingest_batch_semantic(
     happens after the ``.compacting``-marker probe so a crashed swap
     is never papered over by re-creating the live dir (review r10).
 
-    Same idempotency contract: decisions replay against the pre-batch
-    prefix, writes are dynamic partition overwrites keyed by
-    ``ingest_batch``.
+    The idempotency contract is :func:`_run_ingest_batch`'s.
     """
     from ..operators.similarity import (
         _alias_cells,
         _assign_cells,
         semantic_dedup_incremental,
+        semantic_dedup_pairs,
     )
 
-    _check_batch_id(batch_id)
-    spark = batch.sparkSession
-
-    # prefix reads FIRST: _stored_prefix raises on a .compacting
-    # marker, so the fingerprint logic below can never run against (or
-    # re-create) a mid-swap assign_dir
-    stored_docs = _stored_prefix(spark, accepted_dir, batch_id)
-    stored_assign = _stored_prefix(spark, assign_dir, batch_id)
-    # verify-only here; the stamp moves to after the writes (a failed
-    # first batch must not pin its cells frame on an empty table)
-    fp = cells_fingerprint(cells)
-    fp_path = assign_dir.rstrip("/") + "/_cells_fingerprint"
-    stored_fp = _read_small_text(spark, fp_path)
-    if stored_fp is not None and stored_fp.strip() != fp:
-        raise ValueError(
-            "semantic ingest: the cells frame does not match the centroids "
-            f"the stored assignments in {assign_dir!r} were built with "
-            f"(stored fingerprint {stored_fp.strip()[:16]}…, got {fp[:16]}…). "
-            "A re-clustered centroid frame silently invalidates every "
-            "stored assignment — re-cluster means re-ingest "
-            "(rebuild_semantic_assignments)."
+    def guard(spark, stored_docs, stored_assign):
+        # the runner reads the prefixes FIRST: _stored_prefix raises on
+        # a .compacting marker, so this check can never run against (or
+        # re-create) a mid-swap assign_dir. Verify-only here; the stamp
+        # runs after the writes
+        fp = cells_fingerprint(cells)
+        stamp = _check_sidecar(
+            spark, assign_dir, "_cells_fingerprint", fp, lambda s: (
+                "semantic ingest: the cells frame does not match the "
+                "centroids the stored assignments in "
+                f"{assign_dir!r} were built with (stored fingerprint "
+                f"{s[:16]}…, got {fp[:16]}…). A re-clustered centroid "
+                "frame silently invalidates every stored assignment — "
+                "re-cluster means re-ingest (rebuild_semantic_assignments)."
+            ),
         )
-    if (
-        stored_fp is None
-        and stored_assign is not None
-        # non-EMPTINESS, not non-None-ness: a first batch that crashed
-        # between its assign write and the stamp leaves a dir whose
-        # only rows are its own (excluded) partition — that replay must
-        # reprocess and stamp, not brick (review r10 pass 3)
-        and bool(stored_assign.limit(1).take(1))
-    ):
-        # a populated table with no sidecar (pre-fingerprint data, or a
-        # deleted sidecar) has UNKNOWN provenance: stamping the current
-        # frame would bless whatever the caller happens to pass and
-        # silence the guard forever (review r10 pass 2 — the audit's
-        # verify-only rule, applied to the ingest path too)
-        raise ValueError(
-            f"semantic ingest: {assign_dir!r} holds assignments but no "
-            "_cells_fingerprint — cannot verify the cells frame matches "
-            "them. Adopt a frame explicitly with "
-            "rebuild_semantic_assignments (re-derives the table AND "
-            "stamps its fingerprint)."
-        )
-    if _was_compacted(stored_docs, batch_id) or _was_compacted(
-        stored_assign, batch_id
-    ):
-        _assert_true_replay(
-            spark, accepted_dir, "semantic", batch_id, batch, id_col,
-            _input_fingerprint(batch, id_col, vec_col),
-        )
-        return
-    t0 = time.time()
-    new = batch.select(id_col, vec_col).persist()
-    try:
-        if stored_docs is None:
-            from ..operators.similarity import semantic_dedup_pairs
-
-            pairs = semantic_dedup_pairs(
-                new, threshold=threshold, cells=cells, id_col=id_col,
-                vec_col=vec_col, assign=assign,
-                max_cell_size=max_cell_size, hot_mode=hot_mode,
+        if (
+            stamp is not None
+            and stored_assign is not None
+            # non-EMPTINESS, not non-None-ness: a first batch that
+            # crashed between its assign write and the stamp leaves a
+            # dir whose only rows are its own (excluded) partition —
+            # that replay must reprocess and stamp, not brick (review
+            # r10 pass 3)
+            and bool(stored_assign.limit(1).take(1))
+        ):
+            # a populated table with no sidecar (pre-fingerprint data,
+            # or a deleted sidecar) has UNKNOWN provenance: stamping the
+            # current frame would bless whatever the caller happens to
+            # pass and silence the guard forever (review r10 pass 2 —
+            # the audit's verify-only rule, applied to the ingest path)
+            raise ValueError(
+                f"semantic ingest: {assign_dir!r} holds assignments but no "
+                "_cells_fingerprint — cannot verify the cells frame matches "
+                "them. Adopt a frame explicitly with "
+                "rebuild_semantic_assignments (re-derives the table AND "
+                "stamps its fingerprint)."
             )
+        return stamp
+
+    kw = dict(
+        threshold=threshold, id_col=id_col, vec_col=vec_col, assign=assign,
+        max_cell_size=max_cell_size, hot_mode=hot_mode,
+    )
+
+    def decide(new, stored_docs, stored_assign, pin):
+        if stored_docs is None:
+            pairs = semantic_dedup_pairs(new, cells=cells, **kw)
         else:
             pairs = semantic_dedup_incremental(
                 new,
@@ -1833,65 +1817,25 @@ def process_ingest_batch_semantic(
                 corpus_assign=stored_assign.select(id_col, "_cell")
                 if stored_assign is not None
                 else None,
-                threshold=threshold,
-                id_col=id_col,
-                vec_col=vec_col,
-                assign=assign,
-                max_cell_size=max_cell_size,
-                hot_mode=hot_mode,
+                **kw,
             )
-        keep_ids = _ingest_decide(pairs, new, stored_docs, id_col)
-        accepted = batch.join(keep_ids, id_col, "left_semi").withColumn(
-            "src_batch", F.lit(int(batch_id))
-        ).withColumn("ingest_batch", F.lit(int(batch_id)))
+        keep_ids = _ingest_decide(pairs, new, stored_docs, id_col, pin)
         # same self-referential read-overwrite hazard as the MinHash
         # loop: pin the decision before replacing partitions
-        accepted = accepted.localCheckpoint(eager=True)
-        t1 = time.time()
-        writer_opts = {"partitionOverwriteMode": "dynamic"}
-        (
-            accepted.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch")
-            .parquet(accepted_dir)
-        )
+        accepted = pin(batch.join(keep_ids, id_col, "left_semi"))
         assign_rows = _assign_cells(
-            accepted.select(id_col, vec_col),
-            _alias_cells(cells),
-            id_col,
-            vec_col,
-            assign,
-        ).withColumn("src_batch", F.lit(int(batch_id))).withColumn(
-            "ingest_batch", F.lit(int(batch_id))
+            accepted.select(id_col, vec_col), _alias_cells(cells),
+            id_col, vec_col, assign,
         )
-        (
-            assign_rows.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch", "_cell")
-            .parquet(assign_dir)
-        )
-        # stamp only once the batch's data is durably written (a
-        # failed first batch must not pin a cells frame); re-stamping
-        # the same fp on replay is a no-op overwrite
-        if stored_fp is None:
-            _write_small_text(spark, fp_path, fp)
-        if metrics:
-            t2 = time.time()
-            input_fp = _input_fingerprint(new, id_col, vec_col)
-            _write_batch_metrics(
-                spark,
-                accepted_dir.rstrip("/") + "_metrics",
-                "semantic",
-                batch_id,
-                int(input_fp.split(":")[0]),
-                accepted.count(),
-                stored_docs is not None,
-                t1 - t0,
-                t2 - t1,
-                input_fp,
-            )
-    finally:
-        new.unpersist()
+        return accepted, [
+            (accepted, accepted_dir, ["ingest_batch"]),
+            (assign_rows, assign_dir, ["ingest_batch", "_cell"]),
+        ]
+
+    _run_ingest_batch(
+        batch, batch_id, "semantic", [accepted_dir, assign_dir], id_col,
+        vec_col, decide, metrics, guard=guard,
+    )
 
 
 def process_ingest_batch_curation(
@@ -1931,18 +1875,18 @@ def process_ingest_batch_curation(
         1. MinHash near-dup GATE on the original text (reject docs
            near-duplicating the accepted corpus or a lower-id
            batchmate — the :func:`process_ingest_batch` decision rule,
-           verbatim),
+           through the same :func:`_minhash_gate`),
         2. LINE dedup of the survivors' original text (repeated lines
            cut, corpus-wide first occurrence survives),
         3. SUBSTRING span excision of the LINE-CLEANED text (duplicated
            ≥``min_tokens`` passages cut, first occurrence survives),
 
-    each stage against its own stored index, all four outputs written
-    with the shared idempotency contract (``ingest_batch`` dynamic
-    partition overwrite, ``src_batch`` provenance, compacted-replay
-    no-op + manifest check). A real crawl pipeline runs the families
-    TOGETHER, and composition is where ordering bugs live — so the
-    stage wiring is explicit about which TEXT each index sees:
+    each stage against its own stored index (stages 2 and 3 are the
+    standalone faces' :func:`_first_seen_stage`), all four outputs
+    written by :func:`_run_ingest_batch`. A real crawl pipeline runs
+    the families TOGETHER, and composition is where ordering bugs live
+    — so the stage wiring is explicit about which TEXT each index
+    sees:
 
     - the MinHash band index and the line index are derived from the
       survivors' ORIGINAL text (the gate and the line stage both
@@ -1966,202 +1910,68 @@ def process_ingest_batch_curation(
     one banded-index partition-pruned join (MinHash), two stored-index
     scans pruned map-side by broadcast semi-joins (line, substring),
     everything else shard-sized. No stage rescans the corpus."""
-    from ..operators.dedup import (
-        band_signatures,
-        excise_duplicate_spans,
-        excise_duplicate_spans_incremental,
-        line_dedup,
-        line_dedup_incremental,
-        line_index,
-        minhash_dedup_incremental,
-        minhash_dedup_pairs,
-        minhash_signatures,
-        window_index,
+    mh = dict(
+        text_col=text_col, id_col=id_col, num_hashes=num_hashes,
+        bands=bands, ngram=ngram, seed=seed, shingle=shingle,
     )
 
-    _check_batch_id(batch_id)
-    spark = batch.sparkSession
-    stored_docs = _stored_prefix(spark, accepted_dir, batch_id)
-    stored_bands = _stored_prefix(spark, minhash_index_dir, batch_id)
-    stored_lidx = _stored_prefix(spark, line_index_dir, batch_id)
-    stored_widx = _stored_prefix(spark, substring_index_dir, batch_id)
-    # replay no-op if ANY output already holds this batch compacted
-    # (same either-side hazard as the standalone faces, ×4)
-    if any(
-        _was_compacted(s, batch_id)
-        for s in (stored_docs, stored_bands, stored_lidx, stored_widx)
-    ):
-        _assert_true_replay(
-            spark, accepted_dir, "curation", batch_id, batch, id_col,
-            _input_fingerprint(batch, id_col, text_col),
+    def decide(new, stored_docs, stored_bands, stored_lidx, stored_widx, pin):
+        # ---- stage 1: MinHash gate -----------------------------------
+        keep_ids = _minhash_gate(
+            new, stored_docs, stored_bands, pin, threshold, mh
         )
-        return
-    t0 = time.time()
-    # the replay manifest fingerprints the RAW batch in both the write
-    # and replay paths — the quality filter must not make a true replay
-    # of the same raw batch read as an input collision
-    raw_fp_frame = batch.select(id_col, text_col)
-    new = raw_fp_frame
-    if quality_rules is not None:
-        # ---- stage 0: quality filter (batch-chain order: BEFORE the
-        # dedup gate — rejected rows never touch any stored index) ----
-        new = new.filter(quality_rules(F.col(text_col)))
-    new = new.persist()
-    try:
-        # ---- stage 1: MinHash gate (process_ingest_batch, verbatim) --
-        mh_kw = dict(
-            text_col=text_col, id_col=id_col, threshold=threshold,
-            num_hashes=num_hashes, bands=bands, ngram=ngram,
-            seed=seed, shingle=shingle,
-        )
-        if stored_docs is None:
-            pairs = minhash_dedup_pairs(new, **mh_kw)
-        else:
-            pairs = minhash_dedup_incremental(
-                new,
-                stored_docs.select(id_col, text_col),
-                corpus_bands=stored_bands.select("id", "band", "bhash")
-                if stored_bands is not None
-                else None,
-                **mh_kw,
-            )
-        keep_ids = _ingest_decide(pairs, new, stored_docs, id_col)
-        surv = new.join(keep_ids, id_col, "left_semi").localCheckpoint(
-            eager=True
-        )
+        surv = pin(new.join(keep_ids, id_col, "left_semi"))
         # ---- stage 2: line dedup of survivors' ORIGINAL text ---------
-        line_kw = dict(sep=sep, min_chars=min_chars, normalize=normalize)
-        if stored_lidx is None:
-            line_clean = line_dedup(surv, text_col, id_col, joiner=joiner, **line_kw)
-            line_delta = line_index(surv, text_col, id_col, **line_kw)
-        else:
-            lidx_sel = stored_lidx.select(
-                "lkey", "n_occurrences", "first_id", "first_pos"
-            )
-            shard_lidx = line_index(
-                surv, text_col, id_col, **line_kw
-            ).localCheckpoint(eager=True)
-            touched_l = lidx_sel.join(
-                F.broadcast(shard_lidx.select("lkey")), "lkey", "left_semi"
-            ).localCheckpoint(eager=True)
-            line_clean, _ = line_dedup_incremental(
-                surv, touched_l, text_col, id_col, joiner=joiner, **line_kw
-            )
-            line_delta = shard_lidx.join(
-                F.broadcast(touched_l.select("lkey")), "lkey", "left_anti"
-            )
+        line_clean, line_delta = _line_stage(
+            surv, stored_lidx, pin, text_col, id_col, sep, min_chars,
+            normalize, joiner,
+        )
         # the line-cleaned text is BOTH stage 3's input and the window
         # index's derivation base — pin it once
-        lined = line_clean.select(
+        lined = pin(line_clean.select(
             id_col,
             F.col("clean_text").alias(text_col),
             "n_kept_lines",
             "n_cut_lines",
-        ).localCheckpoint(eager=True)
-        stage3_in = lined.select(id_col, text_col)
+        ))
         # ---- stage 3: span excision of the LINE-CLEANED text ---------
-        if stored_widx is None:
-            span_clean = excise_duplicate_spans(
-                stage3_in, text_col, id_col, min_tokens, seed
-            )
-            span_delta = window_index(
-                stage3_in, text_col, id_col, min_tokens, seed
-            )
-        else:
-            widx_sel = stored_widx.select(
-                "wkey", "n_occurrences", "first_id", "first_pos"
-            )
-            shard_widx = window_index(
-                stage3_in, text_col, id_col, min_tokens, seed
-            ).localCheckpoint(eager=True)
-            touched_w = widx_sel.join(
-                F.broadcast(shard_widx.select("wkey")), "wkey", "left_semi"
-            ).localCheckpoint(eager=True)
-            span_clean, _ = excise_duplicate_spans_incremental(
-                stage3_in, touched_w, text_col, id_col, min_tokens, seed
-            )
-            span_delta = shard_widx.join(
-                F.broadcast(touched_w.select("wkey")), "wkey", "left_anti"
-            )
+        span_clean, span_delta = _substring_stage(
+            lined.select(id_col, text_col), stored_widx, pin, text_col,
+            id_col, min_tokens, seed,
+        )
         # ---- assemble accepted rows + the three index deltas ---------
-        accepted = (
+        accepted = pin(
             batch.join(keep_ids, id_col, "left_semi")
-            .join(
-                lined.select(id_col, "n_kept_lines", "n_cut_lines"), id_col
-            )
+            .join(lined.select(id_col, "n_kept_lines", "n_cut_lines"), id_col)
             .join(
                 span_clean.select(
                     id_col, "clean_text", "n_cut_tokens", "oversize"
                 ),
                 id_col,
             )
-            .withColumn("src_batch", F.lit(int(batch_id)))
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-            .localCheckpoint(eager=True)
-        )
-        t1 = time.time()
-        writer_opts = {"partitionOverwriteMode": "dynamic"}
-        (
-            accepted.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch")
-            .parquet(accepted_dir)
-        )
-        bands_df = band_signatures(
-            minhash_signatures(
-                accepted, text_col, id_col, num_hashes, ngram, seed, shingle
-            ),
-            bands,
-            num_hashes // bands,
-        ).withColumn("src_batch", F.lit(int(batch_id))).withColumn(
-            "ingest_batch", F.lit(int(batch_id))
-        )
-        (
-            bands_df.write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch", "band")
-            .parquet(minhash_index_dir)
         )
         # legacy wbucket layout compat — see _attach_legacy_wbucket
-        span_rows = span_delta.withColumn(
-            "src_batch", F.lit(int(batch_id))
-        ).withColumn("ingest_batch", F.lit(int(batch_id)))
-        span_rows, span_part_cols = _attach_legacy_wbucket(
-            stored_widx, span_rows
+        span_delta, span_part_cols = _attach_legacy_wbucket(
+            stored_widx, span_delta
         )
-        (
-            line_delta.withColumn("src_batch", F.lit(int(batch_id)))
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-            .localCheckpoint(eager=True)
-            .write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy("ingest_batch")
-            .parquet(line_index_dir)
-        )
-        (
-            span_rows.localCheckpoint(eager=True)
-            .write.mode("overwrite")
-            .options(**writer_opts)
-            .partitionBy(*span_part_cols)
-            .parquet(substring_index_dir)
-        )
-        if metrics:
-            t2 = time.time()
-            input_fp = _input_fingerprint(raw_fp_frame, id_col, text_col)
-            _write_batch_metrics(
-                spark,
-                accepted_dir.rstrip("/") + "_metrics",
-                "curation",
-                batch_id,
-                int(input_fp.split(":")[0]),
-                accepted.count(),
-                stored_docs is not None,
-                t1 - t0,
-                t2 - t1,
-                input_fp,
-            )
-    finally:
-        new.unpersist()
+        return accepted, [
+            (accepted, accepted_dir, ["ingest_batch"]),
+            (
+                _minhash_bands(accepted, **mh),
+                minhash_index_dir,
+                ["ingest_batch", "band"],
+            ),
+            (pin(line_delta), line_index_dir, ["ingest_batch"]),
+            (pin(span_delta), substring_index_dir, span_part_cols),
+        ]
+
+    # stage 0 is the runner's keep filter (batch-chain order: BEFORE
+    # the dedup gate — rejected rows never touch any stored index)
+    _run_ingest_batch(
+        batch, batch_id, "curation",
+        [accepted_dir, minhash_index_dir, line_index_dir, substring_index_dir],
+        id_col, text_col, decide, metrics, keep=quality_rules,
+    )
 
 
 def ingest_dedup_stream_curation(
@@ -2177,19 +1987,11 @@ def ingest_dedup_stream_curation(
     """Composed-curation counterpart of :func:`ingest_dedup_stream` —
     wire a streaming document source into the gate → line → substring
     curation loop."""
-
-    def _dispatch(df: DataFrame, batch_id: int) -> None:
-        process_ingest_batch_curation(
-            df, batch_id, accepted_dir, minhash_index_dir,
-            line_index_dir, substring_index_dir, **kernel_kwargs
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(_dispatch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        stream_docs, checkpoint_dir, available_now,
+        process_ingest_batch_curation, accepted_dir, minhash_index_dir,
+        line_index_dir, substring_index_dir, **kernel_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def process_ingest_batch_pq_codes(
@@ -2245,8 +2047,8 @@ def process_ingest_batch_pq_codes(
     partitions). Adopt either layout explicitly with
     :func:`rebuild_pq_codes`.
 
-    Same idempotency / replay-manifest / compaction contract as every
-    face. Per-batch cost: one Arrow encode scan of the batch (m·sub
+    The idempotency and replay contract is :func:`_run_ingest_batch`'s.
+    Per-batch cost: one Arrow encode scan of the batch (m·sub
     dot products per vector) + one partitioned append — never a
     corpus-sized job. The consumer half is
     :func:`process_serve_batch_ann` (a query stream answered off this
@@ -2257,102 +2059,97 @@ def process_ingest_batch_pq_codes(
         pq_encode,
     )
 
-    _check_batch_id(batch_id)
-    spark = batch.sparkSession
-    stored_codes = _stored_prefix(spark, codes_dir, batch_id)
-    fp = codebooks_fingerprint(codebooks)
-    fp_path = codes_dir.rstrip("/") + "/_codebooks_fingerprint"
-    stored_fp = _read_small_text(spark, fp_path)
-    if stored_fp is not None and stored_fp.strip() != fp:
-        raise ValueError(
-            "pq-codes ingest: the codebooks frame does not match the "
-            f"codebooks the stored codes in {codes_dir!r} were encoded "
-            f"with (stored fingerprint {stored_fp.strip()[:16]}…, got "
-            f"{fp[:16]}…). Codes from different codebooks are mutually "
-            "meaningless — re-train means re-encode (rebuild_pq_codes)."
+    def guard(spark, stored_codes):
+        fp = codebooks_fingerprint(codebooks)
+        stamp_codebooks = _check_sidecar(
+            spark, codes_dir, "_codebooks_fingerprint", fp, lambda s: (
+                "pq-codes ingest: the codebooks frame does not match the "
+                f"codebooks the stored codes in {codes_dir!r} were encoded "
+                f"with (stored fingerprint {s[:16]}…, got "
+                f"{fp[:16]}…). Codes from different codebooks are mutually "
+                "meaningless — re-train means re-encode (rebuild_pq_codes)."
+            ),
         )
-    has_rows = stored_codes is not None and bool(
-        stored_codes.limit(1).take(1)
-    )
-    if stored_fp is None and has_rows:
-        raise ValueError(
-            f"pq-codes ingest: {codes_dir!r} holds codes but no "
-            "_codebooks_fingerprint — cannot verify the codebooks match "
-            "them. Adopt a frame explicitly with rebuild_pq_codes "
-            "(re-encodes the table AND stamps its fingerprint)."
+        has_rows = stored_codes is not None and bool(
+            stored_codes.limit(1).take(1)
         )
-    # the cells frame is frozen EXACTLY like the codebooks (advisor
-    # r11): a drifted cells frame across batches silently mixes _cell
-    # partition semantics in the one table ivf_pq_topk partition-prunes
-    # by — any reader pruning on _cell would then read wrong partitions
-    stored_has_cell = (
-        stored_codes is not None and "_cell" in stored_codes.columns
-    )
-    if has_rows and stored_has_cell and cells is None:
-        raise ValueError(
-            f"pq-codes ingest: {codes_dir!r} is _cell-partitioned but "
-            "this batch passed no cells frame — appending un-celled "
-            "rows would fork the table layout. Pass the same frozen "
-            "cells frame, or rebuild_pq_codes without cells."
-        )
-    if has_rows and not stored_has_cell and cells is not None:
-        raise ValueError(
-            f"pq-codes ingest: {codes_dir!r} has no _cell layout but "
-            "this batch passed a cells frame — adopt the celled layout "
-            "explicitly with rebuild_pq_codes(cells=...)."
-        )
-    # vec co-location is frozen exactly like the celled-ness: mixing
-    # vec'd and vec-less partitions in one table would silently hand
-    # the pruned exact re-rank a corpus with holes
-    stored_has_vec = (
-        stored_codes is not None and vec_col in stored_codes.columns
-    )
-    if has_rows and stored_has_vec and not store_vectors:
-        raise ValueError(
-            f"pq-codes ingest: {codes_dir!r} co-locates vectors "
-            f"({vec_col!r} column) but this batch passed "
-            "store_vectors=False — appending vec-less rows would fork "
-            "the layout. Pass store_vectors=True, or rebuild_pq_codes "
-            "without store_vectors."
-        )
-    if has_rows and not stored_has_vec and store_vectors:
-        raise ValueError(
-            f"pq-codes ingest: {codes_dir!r} has no vector column but "
-            "this batch passed store_vectors=True — adopt the "
-            "co-located layout explicitly with "
-            "rebuild_pq_codes(store_vectors=True)."
-        )
-    stored_cfp = None
-    cfp = None
-    if cells is not None:
-        cfp = cells_fingerprint(cells)
-        cfp_path = codes_dir.rstrip("/") + "/_cells_fingerprint"
-        stored_cfp = _read_small_text(spark, cfp_path)
-        if stored_cfp is not None and stored_cfp.strip() != cfp:
+        if stamp_codebooks is not None and has_rows:
             raise ValueError(
-                "pq-codes ingest: the cells frame does not match the "
-                f"centroids the stored codes in {codes_dir!r} were "
-                f"celled with (stored fingerprint {stored_cfp.strip()[:16]}…, "
-                f"got {cfp[:16]}…). A re-clustered frame silently "
-                "re-partitions future rows under different cells — "
-                "re-cluster means re-encode (rebuild_pq_codes)."
+                f"pq-codes ingest: {codes_dir!r} holds codes but no "
+                "_codebooks_fingerprint — cannot verify the codebooks match "
+                "them. Adopt a frame explicitly with rebuild_pq_codes "
+                "(re-encodes the table AND stamps its fingerprint)."
             )
-        if stored_cfp is None and has_rows:
-            raise ValueError(
-                f"pq-codes ingest: {codes_dir!r} holds cell-partitioned "
-                "codes but no _cells_fingerprint — cannot verify the "
-                "cells frame matches them. Adopt a frame explicitly "
-                "with rebuild_pq_codes(cells=...)."
-            )
-    if _was_compacted(stored_codes, batch_id):
-        _assert_true_replay(
-            spark, codes_dir, "pq_codes", batch_id, batch, id_col,
-            _input_fingerprint(batch, id_col, vec_col),
+        # the cells frame is frozen EXACTLY like the codebooks (advisor
+        # r11): a drifted cells frame across batches silently mixes _cell
+        # partition semantics in the one table ivf_pq_topk partition-prunes
+        # by — any reader pruning on _cell would then read wrong partitions
+        stored_has_cell = (
+            stored_codes is not None and "_cell" in stored_codes.columns
         )
-        return
-    t0 = time.time()
-    new = batch.select(id_col, vec_col).persist()
-    try:
+        if has_rows and stored_has_cell and cells is None:
+            raise ValueError(
+                f"pq-codes ingest: {codes_dir!r} is _cell-partitioned but "
+                "this batch passed no cells frame — appending un-celled "
+                "rows would fork the table layout. Pass the same frozen "
+                "cells frame, or rebuild_pq_codes without cells."
+            )
+        if has_rows and not stored_has_cell and cells is not None:
+            raise ValueError(
+                f"pq-codes ingest: {codes_dir!r} has no _cell layout but "
+                "this batch passed a cells frame — adopt the celled layout "
+                "explicitly with rebuild_pq_codes(cells=...)."
+            )
+        # vec co-location is frozen exactly like the celled-ness: mixing
+        # vec'd and vec-less partitions in one table would silently hand
+        # the pruned exact re-rank a corpus with holes
+        stored_has_vec = (
+            stored_codes is not None and vec_col in stored_codes.columns
+        )
+        if has_rows and stored_has_vec and not store_vectors:
+            raise ValueError(
+                f"pq-codes ingest: {codes_dir!r} co-locates vectors "
+                f"({vec_col!r} column) but this batch passed "
+                "store_vectors=False — appending vec-less rows would fork "
+                "the layout. Pass store_vectors=True, or rebuild_pq_codes "
+                "without store_vectors."
+            )
+        if has_rows and not stored_has_vec and store_vectors:
+            raise ValueError(
+                f"pq-codes ingest: {codes_dir!r} has no vector column but "
+                "this batch passed store_vectors=True — adopt the "
+                "co-located layout explicitly with "
+                "rebuild_pq_codes(store_vectors=True)."
+            )
+        stamp_cells = None
+        if cells is not None:
+            cfp = cells_fingerprint(cells)
+            stamp_cells = _check_sidecar(
+                spark, codes_dir, "_cells_fingerprint", cfp, lambda s: (
+                    "pq-codes ingest: the cells frame does not match the "
+                    f"centroids the stored codes in {codes_dir!r} were "
+                    f"celled with (stored fingerprint {s[:16]}…, "
+                    f"got {cfp[:16]}…). A re-clustered frame silently "
+                    "re-partitions future rows under different cells — "
+                    "re-cluster means re-encode (rebuild_pq_codes)."
+                ),
+            )
+            if stamp_cells is not None and has_rows:
+                raise ValueError(
+                    f"pq-codes ingest: {codes_dir!r} holds cell-partitioned "
+                    "codes but no _cells_fingerprint — cannot verify the "
+                    "cells frame matches them. Adopt a frame explicitly "
+                    "with rebuild_pq_codes(cells=...)."
+                )
+
+        def stamp():
+            for s in (stamp_codebooks, stamp_cells):
+                if s is not None:
+                    s()
+
+        return stamp
+
+    def decide(new, stored_codes, pin):
         rows = pq_encode(new, codebooks, id_col, vec_col)
         part_cols = ["ingest_batch"]
         if cells is not None:
@@ -2366,41 +2163,13 @@ def process_ingest_batch_pq_codes(
             # is already persisted, so this is an id equi-join against
             # batch-sized sides, not a second source scan
             rows = rows.join(new, id_col)
-        rows = (
-            rows.withColumn("src_batch", F.lit(int(batch_id)))
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-            .localCheckpoint(eager=True)
-        )
-        t1 = time.time()
-        (
-            rows.write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy(*part_cols)
-            .parquet(codes_dir)
-        )
-        if stored_fp is None:
-            _write_small_text(spark, fp_path, fp)
-        if cells is not None and stored_cfp is None:
-            _write_small_text(
-                spark, codes_dir.rstrip("/") + "/_cells_fingerprint", cfp
-            )
-        if metrics:
-            t2 = time.time()
-            input_fp = _input_fingerprint(new, id_col, vec_col)
-            _write_batch_metrics(
-                spark,
-                codes_dir.rstrip("/") + "_metrics",
-                "pq_codes",
-                batch_id,
-                int(input_fp.split(":")[0]),
-                rows.count(),
-                stored_codes is not None,
-                t1 - t0,
-                t2 - t1,
-                input_fp,
-            )
-    finally:
-        new.unpersist()
+        rows = pin(rows)
+        return rows, [(rows, codes_dir, part_cols)]
+
+    _run_ingest_batch(
+        batch, batch_id, "pq_codes", [codes_dir], id_col, vec_col, decide,
+        metrics, guard=guard,
+    )
 
 
 def ingest_pq_codes_stream(
@@ -2415,18 +2184,10 @@ def ingest_pq_codes_stream(
     streaming vector source into the codes-table maintenance loop.
     The serving twin (a QUERY stream answered off this table) is
     :func:`ann_query_stream`."""
-
-    def _dispatch(df: DataFrame, batch_id: int) -> None:
-        process_ingest_batch_pq_codes(
-            df, batch_id, codes_dir, codebooks, **kernel_kwargs
-        )
-
-    writer = stream_vecs.writeStream.foreachBatch(_dispatch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        stream_vecs, checkpoint_dir, available_now,
+        process_ingest_batch_pq_codes, codes_dir, codebooks, **kernel_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def rebuild_pq_codes(
@@ -2460,8 +2221,8 @@ def rebuild_pq_codes(
             f"rebuild_pq_codes: no accepted corpus at {accepted_dir!r}"
         )
     rows = pq_encode(accepted.select(id_col, vec_col), codebooks, id_col, vec_col)
-    part_cols = ["ingest_batch"]
-    sub_sort: list[str] = []
+    sub: list[str] = []
+    sidecars = [("_codebooks_fingerprint", codebooks_fingerprint(codebooks))]
     if cells is not None:
         rows = rows.join(
             _assign_cells(
@@ -2470,43 +2231,15 @@ def rebuild_pq_codes(
             ),
             id_col,
         )
-        part_cols.append("_cell")
-        sub_sort.append("_cell")
-    src = (
-        accepted.select(
-            id_col,
-            F.coalesce(
-                F.col("src_batch"), F.lit(COMPACTED_BATCH_ID)
-            ).alias("src_batch"),
-        )
-        if "src_batch" in accepted.columns
-        else accepted.select(
-            id_col, F.lit(COMPACTED_BATCH_ID).alias("src_batch")
-        )
-    )
-    rows = rows.join(src, id_col).withColumn(
-        "ingest_batch", F.lit(COMPACTED_BATCH_ID)
+        sub.append("_cell")
+        sidecars.append(("_cells_fingerprint", cells_fingerprint(cells)))
+    rows = rows.join(
+        accepted.select(id_col, _src_batch(accepted).alias("src_batch")),
+        id_col,
     )
     if store_vectors:
         rows = rows.join(accepted.select(id_col, vec_col), id_col)
-    base = codes_dir.rstrip("/")
-    tmp = base + ".compact.tmp"
-    nparts = max(1, spark.sparkContext.defaultParallelism)
-    (
-        rows.repartition(nparts)
-        .sortWithinPartitions(*sub_sort, "src_batch")
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(tmp)
-    )
-    _write_small_text(
-        spark, tmp + "/_codebooks_fingerprint", codebooks_fingerprint(codebooks)
-    )
-    if cells is not None:
-        _write_small_text(
-            spark, tmp + "/_cells_fingerprint", cells_fingerprint(cells)
-        )
-    _swap_live(spark, base, tmp, keep_backup, copy_sidecars=False)
+    _write_compacted(spark, codes_dir, rows, sub, keep_backup, sidecars)
     return codes_dir
 
 
@@ -2650,29 +2383,26 @@ def process_serve_batch_ann(
     from ..operators.similarity import ivf_pq_topk
 
     _check_compacting_marker(spark, codes_dir)
-    base = codes_dir.rstrip("/")
-    stored_fp = _read_small_text(spark, base + "/_codebooks_fingerprint")
     fp = codebooks_fp or codebooks_fingerprint(codebooks)
-    if stored_fp is None or stored_fp.strip() != fp:
-        raise ValueError(
+    _check_sidecar(
+        spark, codes_dir, "_codebooks_fingerprint", fp, lambda s: (
             "ann serve: the codebooks frame does not match the stored "
-            f"codes table at {codes_dir!r} (sidecar "
-            f"{(stored_fp or '<missing>').strip()[:16]}…, got {fp[:16]}…)"
-            " — ADC against foreign codes scores garbage silently. "
-            "Serve with the frame the ingest face froze, or "
+            f"codes table at {codes_dir!r} (sidecar {s[:16]}…, got "
+            f"{fp[:16]}…) — ADC against foreign codes scores garbage "
+            "silently. Serve with the frame the ingest face froze, or "
             "rebuild_pq_codes first."
-        )
-    stored_cfp = _read_small_text(spark, base + "/_cells_fingerprint")
+        ), required=True,
+    )
     cfp = cells_fp or cells_fingerprint(cells)
-    if stored_cfp is None or stored_cfp.strip() != cfp:
-        raise ValueError(
+    _check_sidecar(
+        spark, codes_dir, "_cells_fingerprint", cfp, lambda s: (
             "ann serve: the cells frame does not match the stored codes "
-            f"table at {codes_dir!r} (sidecar "
-            f"{(stored_cfp or '<missing>').strip()[:16]}…, got "
+            f"table at {codes_dir!r} (sidecar {s[:16]}…, got "
             f"{cfp[:16]}…) — probing under foreign centroids reads "
             "wrong partitions. Serve with the frozen cells frame, or "
             "rebuild_pq_codes(cells=...) first."
-        )
+        ), required=True,
+    )
     # cheap-default reads (module doctrine: per-batch probes must not
     # footer-merge 10⁵ files): _cell/ingest_batch are PARTITION columns
     # (always in the inferred schema), and the data columns consumed
@@ -2916,21 +2646,12 @@ def ann_query_stream(
     batch (the frames cannot drift inside one stream), so the
     per-batch verification cost is two sidecar reads + string
     compares, not two collect jobs."""
-    fp = codebooks_fingerprint(codebooks)
-    cfp = cells_fingerprint(cells)
-
-    def _dispatch(df: DataFrame, batch_id: int) -> None:
-        process_serve_batch_ann(
-            df, batch_id, results_dir, cells, codebooks, codes_dir,
-            corpus_dir, codebooks_fp=fp, cells_fp=cfp, **kernel_kwargs
-        )
-
-    writer = stream_queries.writeStream.foreachBatch(_dispatch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        stream_queries, checkpoint_dir, available_now,
+        process_serve_batch_ann, results_dir, cells, codebooks, codes_dir,
+        corpus_dir, codebooks_fp=codebooks_fingerprint(codebooks),
+        cells_fp=cells_fingerprint(cells), **kernel_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ingest_dedup_stream_semantic(
@@ -2944,15 +2665,8 @@ def ingest_dedup_stream_semantic(
 ):
     """Semantic counterpart of :func:`ingest_dedup_stream` — wire a
     streaming embedding source into the SemDeDup ingest loop."""
-
-    def _dispatch(df: DataFrame, batch_id: int) -> None:
-        process_ingest_batch_semantic(
-            df, batch_id, accepted_dir, assign_dir, cells, **kernel_kwargs
-        )
-
-    writer = stream_vecs.writeStream.foreachBatch(_dispatch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        stream_vecs, checkpoint_dir, available_now,
+        process_ingest_batch_semantic, accepted_dir, assign_dir, cells,
+        **kernel_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -2759,3 +2759,104 @@ def test_ann_ingest_then_serve_cadence(spark):
         } == got0
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def _persisted_rdd_ids(spark) -> set:
+    return {int(k) for k in spark._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _pin_release_case(spark, face: str, work: str):
+    """→ (run(batch_df, batch_id), output dirs, first batch, second
+    batch) for one ingest face: the second batch holds a near-dup of
+    the first, a repeated line and a repeated span, so every stage
+    decides against a non-empty stored prefix."""
+    import numpy as np
+
+    from garden_net_backend_spark.operators.similarity import pq_train_codebooks
+    from garden_net_backend_spark.streaming import ingest
+
+    if face in ("minhash", "substring", "line", "curation"):
+        def words(tag, n):
+            return " ".join(f"{tag}{j:02d}" for j in range(n))
+
+        boiler = "subscribe to our newsletter today please"
+        span = words("span", 8)
+        rows = [
+            [(0, f"{boiler}\n{words('alpha', 30)}"),
+             (1, f"{words('bravo', 30)}\n{span} tail one")],
+            [(2, f"{boiler}\n{words('alpha', 28)} mut1 mut2"),
+             (3, f"{words('charl', 30)}\n{span} tail two")],
+        ]
+        b0, b1 = (
+            spark.createDataFrame(r, "doc_id long, text string") for r in rows
+        )
+        mh = dict(threshold=0.7, ngram=3, shingle="word", num_hashes=64, bands=16)
+        acc, idx = f"{work}/acc", f"{work}/idx"
+        if face == "minhash":
+            return (lambda df, b: ingest.process_ingest_batch(
+                df, b, acc, idx, **mh), [acc, idx], b0, b1)
+        if face == "substring":
+            return (lambda df, b: ingest.process_ingest_batch_substring(
+                df, b, acc, idx, min_tokens=5), [acc, idx], b0, b1)
+        if face == "line":
+            return (lambda df, b: ingest.process_ingest_batch_lines(
+                df, b, acc, idx), [acc, idx], b0, b1)
+        outs = [acc, f"{work}/mh", f"{work}/lidx", f"{work}/widx"]
+        return (lambda df, b: ingest.process_ingest_batch_curation(
+            df, b, *outs, min_tokens=5, **mh), outs, b0, b1)
+
+    rng = np.random.default_rng(3)
+    dirs = rng.standard_normal((4, 16))
+    dirs /= np.linalg.norm(dirs, axis=1, keepdims=True)
+
+    def vec(k, eps):
+        v = dirs[k] + rng.standard_normal(16) * eps
+        return (v / np.linalg.norm(v)).tolist()
+
+    schema = "vec_id long, embedding array<float>"
+    b0 = spark.createDataFrame([(0, vec(0, 0.0)), (1, vec(1, 0.0))], schema)
+    b1 = spark.createDataFrame([(2, vec(0, 1e-3)), (3, vec(2, 0.0))], schema)
+    cells = spark.createDataFrame(
+        [(i, dirs[i].tolist()) for i in range(4)],
+        "cell_id long, centroid array<float>",
+    )
+    if face == "semantic":
+        acc, asg = f"{work}/acc", f"{work}/asg"
+        return (lambda df, b: ingest.process_ingest_batch_semantic(
+            df, b, acc, asg, cells), [acc, asg], b0, b1)
+    cb = pq_train_codebooks(b0.unionByName(b1), m=4, n_codes=2, refine_iters=1)
+    codes = f"{work}/codes"
+    return (lambda df, b: ingest.process_ingest_batch_pq_codes(
+        df, b, codes, cb, cells=cells), [codes], b0, b1)
+
+
+@pytest.mark.parametrize(
+    "face", ["minhash", "substring", "line", "semantic", "curation", "pq_codes"]
+)
+def test_ingest_face_releases_its_pins(spark, face):
+    """Every ingest face releases what it persisted and checkpointed
+    once its batch ends — a first batch, a batch against a stored
+    prefix and a compacted replay each leave no persisted RDD behind
+    (locally-checkpointed blocks held past their batch grow the heap
+    of a long-running stream without bound). Compared by RDD id, so
+    RDDs another test left behind and a GC dropping them mid-call
+    cannot move the verdict."""
+    from garden_net_backend_spark.streaming.ingest import compact_ingest_index
+
+    work = tempfile.mkdtemp(prefix=f"pins_{face}_")
+    try:
+        run, outputs, b0, b1 = _pin_release_case(spark, face, work)
+
+        def step(what, df, batch_id):
+            before = _persisted_rdd_ids(spark)
+            run(df, batch_id)
+            left = _persisted_rdd_ids(spark) - before
+            assert not left, f"{face} {what}: {len(left)} RDDs left persisted"
+
+        step("first batch", b0, 0)
+        step("batch against a stored prefix", b1, 1)
+        for d in outputs:
+            compact_ingest_index(spark, d)
+        step("compacted replay", b1, 1)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
