@@ -297,16 +297,13 @@ BENCH_NOTES = {
     "tree union and runs ONE hoisted re-rank (no per-chunk corpus "
     "scans), and ivf_pq_topk partition-prunes the codes scan on "
     "_cell when the stored table carries it (the bench passes an "
-    "in-memory codes frame, so neither changes this number). The "
-    "task-5 re-rank consolidation (ann_shared_rerank) was built, "
-    "equivalence-tested, MEASURED — and left out of the gate: A/B at "
-    "sf0.1 quiet reads per-arm 6.1s vs shared 7.2s for the pq+ivfpq "
-    "pair, because the shared tail's eager materialization barrier "
-    "serializes the cross-arm stage concurrency the lazy 4-arm union "
-    "exploits, while the fetch it dedupes costs ~0.2s at a 2k-row "
-    "corpus. It becomes the right tail when the candidate vector "
-    "fetch dominates (serving-scale corpora); q38 keeps concurrent "
-    "per-arm re-rank tails. What DID land (round 12): the four arms' "
+    "in-memory codes frame, so neither changes this number). A "
+    "shared candidate-union re-rank tail for the pq+ivfpq pair "
+    "measured slower in an A/B at sf0.1 (per-arm 6.1s vs shared "
+    "7.2s: its eager materialization barrier serialized the "
+    "cross-arm stage concurrency the lazy 4-arm union exploits) and "
+    "was deleted; q38 keeps concurrent per-arm re-rank tails. What "
+    "DID land (round 12): the four arms' "
     "property gates fused into ONE tagged pipeline "
     "(_ann_property_gate_tagged — one rescore join + two broadcast "
     "lookups + one (gate,query_id) window/agg instead of four of "

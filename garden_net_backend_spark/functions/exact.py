@@ -42,7 +42,8 @@ def exact_corr(x: Column, y: Column) -> Column:
     The five moment sums are decimal-exact; the final combination is a
     fixed sequence of double ops — bit-identical on any engine. Used for
     ChAS (reference chaser::chas, see SURVEY.md G11) and any corr() the
-    oracle checks.
+    oracle checks. A constant side (zero denominator) gives null, as
+    R's ``cor`` gives NA, instead of an ANSI divide-by-zero error.
     """
     n = F.count(F.when(x.isNotNull() & y.isNotNull(), 1)).cast("double")
     sx = F.sum(F.when(y.isNotNull(), x).cast(_DEC)).cast("double")
@@ -52,7 +53,7 @@ def exact_corr(x: Column, y: Column) -> Column:
     sxy = F.sum((x * y).cast(_DEC)).cast("double")
     num = n * sxy - sx * sy
     den = F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
-    return num / den
+    return F.try_divide(num, den)
 
 
 def oracle_dsum(expr: str) -> str:

@@ -106,7 +106,9 @@ def chas(
     sxy = fold2("_sxy", "_sxy")
     num = n * sxy - sx * sx
     den = F.sqrt(n * sxx - sx * sx) * F.sqrt(n * sxx - sx * sx)
-    return agg.select("feature", (num / den).alias("chas"))
+    # a feature with no variance has den == 0: its ChAs is null (R's
+    # cor gives NA), where ANSI division would fail the whole job
+    return agg.select("feature", F.try_divide(num, den).alias("chas"))
 
 
 def feature_abundance(

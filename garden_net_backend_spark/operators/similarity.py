@@ -1,19 +1,26 @@
 """Similarity search over embedding columns (north-star extension).
 
-Two paths, same answer shape:
+Every top-k operator is filter-and-refine: a filter picks each query's
+candidates, and one exact refine (:func:`_exact_topk`) ranks them.
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Query side is broadcast; the corpus scan is embarrassingly parallel;
-  per-query top-k via window row_number. O(|Q|·|C|) — right when |Q| is
-  small or as the verifier for the ANN path.
-- ``lsh_cosine_topk``: random-hyperplane LSH — the 100 TB path.
-  Deterministic integer pseudo-hyperplanes (no RNG state), sign-bit
-  bucket per band, candidates = bucket collisions in any band, exact
-  re-rank of candidates only. Recall < 1 by construction (documented);
-  cost is linear in corpus + candidates.
+- ``cosine_topk``: no filter — every (query, corpus) pair is a
+  candidate. The correctness baseline, O(|Q|·|C|).
+- ``lsh_cosine_topk``: random-hyperplane LSH buckets (deterministic
+  pseudo-hyperplanes, candidates = bucket collisions in any band),
+  narrowed to k per query by a numpy cosine.
+- ``ivf_cosine_topk``: the members of the ``nprobe`` nearest IVF cells
+  (:func:`_ivf_probes` selects the cells).
+- ``pq_topk`` / ``ivf_pq_topk``: the best ADC (product-quantization)
+  scores over the codes table, or over the probed cells' codes. Both
+  share one query front-end (:func:`_pq_prefilter`,
+  :func:`_pq_queries`, :func:`_pq_passes`) and one LUT build
+  (:func:`_pq_luts`).
 
+The ANN filters have recall < 1 by construction; the refine is exact.
 Dot products use exact decimal accumulation (functions/exact.py
-rationale) so scores are bit-stable across partitionings and engines.
+rationale) so scores are bit-stable across partitionings and engines;
+a float64 numpy cosine only ever narrows a candidate set, within
+:data:`_EXACT_TOPK_MARGIN` of the exact-decimal one.
 """
 
 from __future__ import annotations
@@ -121,13 +128,63 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     )
 
 
-#: numpy-vs-decimal agreement margin for the exact-top-k prescreen.
+#: The one float64-numpy-vs-exact-decimal agreement margin: every
+#: numpy cosine that narrows a candidate set (a dedup prescreen, an IVF
+#: probe choice) keeps or defers anything within it of the cut.
 #: Budget: float64 cosine differs from the exact-decimal cosine by
 #: ~1e-13 (64-element dot, values in [-1, 1]); 9-dp rounding moves a
 #: score by ≤5e-10. Any pair that could influence the final ROUNDED
 #: ranking therefore sits within ~1e-9 of the k-th decimal score;
 #: 1e-6 leaves three orders of magnitude of slack.
 _EXACT_TOPK_MARGIN = 1e-6
+
+
+def _np_stack(values):
+    """n × dim float64 matrix from an iterable of float arrays."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype=np.float64) for v in values])
+
+
+def _np_rowwise_cosine(pdf, a_col: str, b_col: str):
+    """Float64 cosine of each row's two vector columns. A zero vector on
+    either side scores 0 — the guarded exact cosine's value — never
+    nan, which would poison any sort over the scores."""
+    import numpy as np
+
+    a = np.stack(pdf[a_col].values).astype(np.float64)
+    b = np.stack(pdf[b_col].values).astype(np.float64)
+    return (a * b).sum(axis=1) / np.maximum(
+        np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1), 1e-300
+    )
+
+
+def _exact_topk(
+    pairs: DataFrame,
+    k: int,
+    qid: str,
+    cid: str,
+    vec_col: str,
+    qvec_col: str,
+    id_out: str | None = None,
+) -> DataFrame:
+    """The exact refine every top-k operator ends in: score each
+    (query, candidate) row of ``pairs`` with the 9-dp exact-decimal
+    cosine of ``vec_col`` and ``qvec_col``, and keep each query's ``k``
+    best under (cosine desc, id asc) → (qid, id_out, cosine, rank).
+    ``id_out`` renames the candidate id column (default: ``cid``).
+    Rounding before ranking keeps the stored (cosine, id) columns
+    consistent with the stored rank."""
+    id_out = id_out or cid
+    scored = pairs.select(
+        qid,
+        cid if id_out == cid else F.col(cid).alias(id_out),
+        F.round(cosine_similarity(vec_col, qvec_col), 9).alias("cosine"),
+    )
+    w = W.partitionBy(qid).orderBy(F.desc("cosine"), F.asc(id_out))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def cosine_topk(
@@ -138,117 +195,15 @@ def cosine_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    prescreen: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors per query → (query_id, vec_id, cosine,
     rank). Ties broken by vec_id asc (total order ⇒ deterministic).
     Self-matches (same id) are NOT excluded — filter upstream if needed.
-
-    ``prescreen=True`` (round 13, guide §1.2/§4.2): phase 1 scores
-    every pair with an Arrow-batched numpy cosine and keeps, per query,
-    every pair within ``_EXACT_TOPK_MARGIN`` of the k-th numpy score;
-    phase 2 rescores only those survivors with the exact-decimal cosine
-    and takes the final top-k under the (cosine desc, id asc) order.
-    Output is IDENTICAL to the one-phase decimal scan: a pair outside
-    the margin is strictly below the k-th rounded decimal score (see
-    ``_EXACT_TOPK_MARGIN``'s error budget), so it can never enter the
-    final top-k, while every potential entrant is rescored exactly —
-    same scores, same ties, same tie-breaks. The per-batch partial cut
-    keeps the window input at ~n_partitions·(k+ties)·|Q| rows, never
-    the corpus (the global k-th numpy score is ≥ every batch's k-th,
-    so each batch's margin-keep is a superset of the global one
-    restricted to that batch). Corpus ids must be unique — already
-    implied by the "ties broken by vec_id asc" contract (a duplicated
-    id makes that tie-break ill-defined), and the phase-2 join-back
-    relies on it.
-
-    Default OFF after A/B at sf0.1 (round 13): the prescreen replaces
-    the |Q|·|C| interpreted decimal folds with a matmul but ADDS a
-    Python stage, a ranking window and a survivor join-back — at bench
-    scale (20k pairs) those fixed stages cost ~1s MORE than the folds
-    they save (q37 0.78s → 1.72s measured), while the decimal scan is
-    already sub-second. The two-phase shape is the right one when
-    |C| grows (the fold cost is linear in pairs, the stage overhead
-    constant) — flip it on for corpus-scale exact baselines.
-    """
+    Query side broadcast, corpus scan embarrassingly parallel."""
     q = F.broadcast(queries.select(query_id_col, query_vec_col))
     base = ensure_min_partitions(corpus.select(id_col, vec_col))
-    if not prescreen:
-        scored = base.crossJoin(q).select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_similarity(vec_col, query_vec_col), 9
-            ).alias("cosine"),
-        )
-        w = W.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    import numpy as np
-    import pandas as pd
-
-    margin = _EXACT_TOPK_MARGIN
-    qid_t = queries.schema[query_id_col].dataType.simpleString()
-    id_t = corpus.schema[id_col].dataType.simpleString()
-
-    def _np_screen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.stack(pdf[vec_col].values).astype(np.float64)
-            b = np.stack(pdf[query_vec_col].values).astype(np.float64)
-            # zero vectors: cos := 0 (matches the guarded exact cosine)
-            cos = (a * b).sum(axis=1) / np.maximum(
-                np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1),
-                1e-300,
-            )
-            qv = pdf[query_id_col].values
-            iv = pdf[id_col].values
-            out_q, out_i, out_c = [], [], []
-            for qid in np.unique(qv):
-                mask = qv == qid
-                c, ids = cos[mask], iv[mask]
-                if len(c) > k:
-                    kth = np.partition(c, -k)[-k]
-                    keep = c >= kth - margin
-                    c, ids = c[keep], ids[keep]
-                out_q.extend([qid] * len(c))
-                out_i.extend(ids)
-                out_c.extend(c)
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_i, "_np": out_c}
-            )
-
-    approx = base.crossJoin(q).mapInPandas(
-        _np_screen, schema=f"{query_id_col} {qid_t}, {id_col} {id_t}, _np double"
-    )
-    wq = W.partitionBy(query_id_col)
-    ranked = approx.withColumn(
-        "_rn", F.row_number().over(wq.orderBy(F.desc("_np"), F.asc(id_col)))
-    )
-    kth = F.max(F.when(F.col("_rn") == k, F.col("_np"))).over(wq)
-    surv = (
-        ranked.withColumn("_kth", kth)
-        .filter(F.col("_kth").isNull() | (F.col("_np") >= F.col("_kth") - margin))
-        .select(query_id_col, id_col)
-    )
-    exact = (
-        surv.join(corpus.select(id_col, vec_col), id_col)
-        .join(q, query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_similarity(vec_col, query_vec_col), 9
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _exact_topk(
+        base.crossJoin(q), k, query_id_col, id_col, vec_col, query_vec_col
     )
 
 
@@ -369,9 +324,7 @@ def _lsh_bucket_rows_local(
         ids = [r[id_col] for r in rows]
         if not ids or len(set(ids)) != len(ids) or any(i is None for i in ids):
             return None
-        x = np.stack(
-            [np.asarray(r[vec_col], dtype=np.float64) for r in rows]
-        )
+        x = _np_stack(r[vec_col] for r in rows)
         if x.ndim != 2 or x.shape[1] != dim:
             return None
         planes, weights, _ = _np_bucket_planes(bands, bits, 0, dim)
@@ -595,7 +548,6 @@ def lsh_cosine_topk(
     computing the exact frame concurrently (the q38 suite runs the
     exact collect as a pool task) overlaps that job with this
     operator's own construction instead of serializing ahead of it."""
-    import numpy as np
     import pandas as pd
 
     cb = lsh_assign_buckets(corpus, id_col, vec_col, bands, bits, dim)
@@ -672,18 +624,11 @@ def lsh_cosine_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a = np.stack(pdf["_cv"].values).astype(np.float64)
-            b = np.stack(pdf["_qv"].values).astype(np.float64)
-            # zero vectors: cos := 0 (matches the guarded exact
-            # cosine), never nan - nan would poison the prescreen sort
-            cos = (a * b).sum(axis=1) / np.maximum(
-                np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1), 1e-300
-            )
             yield pd.DataFrame(
                 {
                     query_id_col: pdf[query_id_col].values,
                     id_col: pdf[id_col].values,
-                    "_np_cos": cos,
+                    "_np_cos": _np_rowwise_cosine(pdf, "_cv", "_qv"),
                 }
             )
 
@@ -696,20 +641,11 @@ def lsh_cosine_topk(
         .filter(F.col("rank") <= k)
         .select(query_id_col, id_col)
     )
-    exact = (
-        topk.join(corpus.select(id_col, vec_col), id_col)
-        .join(queries.select(query_id_col, query_vec_col), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_similarity(vec_col, query_vec_col), 9
-            ).alias("cosine"),
-        )
-    )
-    wf = W.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return exact.withColumn("rank", F.row_number().over(wf)).filter(
-        F.col("rank") <= k
+    return _exact_topk(
+        topk.join(corpus.select(id_col, vec_col), id_col).join(
+            queries.select(query_id_col, query_vec_col), query_id_col
+        ),
+        k, query_id_col, id_col, vec_col, query_vec_col,
     )
 
 
@@ -734,7 +670,7 @@ def _ivf_assign(
 
     cent = sorted(cent_rows)  # by centroid_id asc → argmax tie-break
     ids = np.array([c for c, _ in cent], dtype=np.int64)
-    m = np.stack([np.asarray(v, dtype=np.float64) for _, v in cent])
+    m = _np_stack(v for _, v in cent)
     m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
 
     def _assign(batches):
@@ -877,119 +813,157 @@ def ivf_cosine_topk(
     :func:`ivf_pq_topk` probe shape): a caller that ALREADY holds the
     query rows driver-side (the q38 suite collects them once for all
     arms) passes them here and the probe selection runs in numpy on
-    the driver via :func:`_np_probe_rows` — one Exchange + Window +
-    |Q|·K decimal-cosine folds removed from the plan. The rows must be
-    exactly ``queries``'s (query_id, query_vec) rows; when they carry
-    a duplicated query id, or any query's cosine gap at the nprobe
-    boundary falls inside the numpy/decimal disagreement margin, the
-    original Spark probe window runs instead — the probed SET per
-    query is provably the exact-decimal selection either way (probes
-    feed joins, so only the set matters)."""
+    the driver — one Exchange + Window + |Q|·K decimal-cosine folds
+    removed from the plan, the same probed set (:func:`_ivf_probes`).
+    The rows must be exactly ``queries``'s (query_id, query_vec)
+    rows. ``index``'s centroid side may also be those rows already
+    collected."""
     centroids, assignments = index if index is not None else ivf_build_index(
         corpus, n_centroids, id_col, vec_col, seed, refine_iters
     )
-    # the centroid side of a prebuilt index may arrive as an
-    # already-collected row list (round 14): a suite probing several
-    # arms against ONE index collects the centroid table once and
-    # hands the rows to each arm — same pattern as _pq_codebook_rows.
-    # The Spark-window fallback below (margin-ambiguous probes,
-    # malformed queries) recreates the frame from the rows.
-    centroid_rows = centroids if isinstance(centroids, list) else None
-    if centroid_rows is not None:
-        centroids = None
-    probes = None
-    if collected_queries is not None:
-        import numpy as np
+    probes, _ = _ivf_probes(
+        queries.sparkSession, queries.schema, centroids, nprobe,
+        query_id_col, query_vec_col, query_id_col,
+        qrows=collected_queries, queries=queries,
+    )
+    cand = probes.join(assignments, "centroid_id").select(query_id_col, id_col)
+    return _exact_topk(
+        cand.join(corpus.select(id_col, vec_col), id_col).join(
+            queries.select(query_id_col, query_vec_col), query_id_col
+        ),
+        k, query_id_col, id_col, vec_col, query_vec_col,
+    )
 
-        # guarded end-to-end (ADVICE r13): malformed query rows (null /
-        # ragged vectors) must fall back to the Spark probe window —
-        # its guarded cosine and null ordering own the error semantics
+
+def _np_probe_rows(cent_rows, qids, Q_raw, nprobe):
+    """Driver-side IVF probe selection: (query_id, centroid_id) rows of
+    each query's ``nprobe`` nearest centroids by guarded cosine, or
+    ``None`` when any query's cosine gap at the nprobe boundary is
+    within ``_EXACT_TOPK_MARGIN`` of the numpy/decimal disagreement
+    budget — the caller then re-derives the selection with the
+    exact-decimal Spark probe window, keeping the probed SET provably
+    identical to the decimal order in every case (ties inside the top
+    nprobe don't matter: probes have set semantics)."""
+    import numpy as np
+
+    if not cent_rows:
+        return []
+    cids = [r["centroid_id"] for r in cent_rows]
+    C = _np_stack(r["centroid_vec"] for r in cent_rows)
+    denom = np.maximum(
+        np.linalg.norm(Q_raw, axis=1)[:, None] * np.linalg.norm(C, axis=1)[None, :],
+        1e-300,
+    )
+    cos = (Q_raw @ C.T) / denom  # zero vectors → 0, the guarded cosine
+    rows = []
+    n_c = len(cids)
+    take = min(nprobe, n_c)
+    for i, qid in enumerate(qids):
+        # sort by (cosine desc, centroid_id asc) — the probe window's
+        # total order
+        idx = sorted(range(n_c), key=lambda j: (-cos[i, j], cids[j]))
+        if n_c > nprobe:
+            gap = cos[i, idx[nprobe - 1]] - cos[i, idx[nprobe]]
+            if gap <= _EXACT_TOPK_MARGIN:
+                return None
+        rows.extend((qid, cids[j]) for j in idx[:take])
+    return rows
+
+
+def _ivf_probes(
+    spark,
+    q_schema,
+    centroids: "DataFrame | list",
+    nprobe: int,
+    query_id_col: str,
+    query_vec_col: str,
+    qid_out: str,
+    qrows: "list | None" = None,
+    queries: DataFrame | None = None,
+    collect: bool = False,
+) -> "tuple[DataFrame, list | None]":
+    """The IVF probe selector → ``(probes, rows)``: ``probes`` holds
+    (qid_out, centroid_id) for each query's ``nprobe`` nearest
+    centroids under the exact-decimal cosine order (centroid_id asc
+    breaks ties); ``rows`` is the same selection as a driver-side list,
+    or ``None`` when it was left as a lazy Spark window.
+
+    ``centroids``: a (centroid_id, centroid_vec) frame, or those rows
+    already collected — a suite probing several arms against one index
+    collects the centroid table once (the ``_pq_codebook_rows``
+    pattern). The queries are the ``queries`` frame, the ``qrows``
+    already collected, or both (then the rows must be exactly the
+    frame's); ``q_schema`` types their columns. With rows the
+    selection runs in numpy (:func:`_np_probe_rows`) instead of a
+    crossJoin + decimal-cosine window. Equivalence: probes feed joins,
+    so only the probed SET per query matters, and numpy agrees with the
+    exact-decimal cosine to ~1e-13; so whenever every query's cosine
+    gap at the nprobe boundary exceeds :data:`_EXACT_TOPK_MARGIN` the
+    numpy set IS the decimal set. A gap inside the margin, a duplicated
+    query id or malformed rows (null / ragged vectors, whose error
+    semantics the guarded window owns) take the exact-decimal window
+    instead, for ALL queries. ``collect=True`` collects that window's
+    rows (callers that need the probed cell ids driver-side)."""
+    centroid_rows = centroids if isinstance(centroids, list) else None
+    rows = None
+    if qrows is not None:
         try:
-            qids = [r[query_id_col] for r in collected_queries]
+            qids = [r[query_id_col] for r in qrows]
             if qids and len(set(qids)) == len(qids):
-                Q_raw = np.stack(
-                    [
-                        np.asarray(r[query_vec_col], dtype=np.float64)
-                        for r in collected_queries
-                    ]
-                )
-                probe_rows = _np_probe_rows(
+                rows = _np_probe_rows(
                     centroid_rows
                     if centroid_rows is not None
                     else centroids.select(
                         "centroid_id", "centroid_vec"
                     ).collect(),
                     qids,
-                    Q_raw,
+                    _np_stack(r[query_vec_col] for r in qrows),
                     nprobe,
                 )
-            else:
-                probe_rows = None
         except Exception:
-            probe_rows = None
-        if probe_rows is not None:
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            q_schema = queries.select(
-                query_id_col, query_vec_col
-            ).schema
-            probes = queries.sparkSession.createDataFrame(
-                probe_rows,
-                StructType(
-                    [
-                        StructField(
-                            query_id_col,
-                            q_schema[query_id_col].dataType,
-                            True,
-                        ),
-                        StructField(
-                            "centroid_id",
-                            LongType()
-                            if centroid_rows is not None
-                            else centroids.schema["centroid_id"].dataType,
-                            True,
-                        ),
-                    ]
-                ),
-            )
-    if probes is None:
-        if centroids is None:
-            centroids = queries.sparkSession.createDataFrame(
+            rows = None
+    if rows is None:
+        if centroid_rows is not None:
+            centroids = spark.createDataFrame(
                 centroid_rows, "centroid_id long, centroid_vec array<double>"
             )
+        if queries is None:
+            queries = spark.createDataFrame(qrows, q_schema)
         qc = (
             queries.select(query_id_col, query_vec_col)
             .crossJoin(F.broadcast(centroids))
             .select(
-                query_id_col,
+                query_id_col
+                if qid_out == query_id_col
+                else F.col(query_id_col).alias(qid_out),
                 "centroid_id",
                 cosine_similarity(query_vec_col, "centroid_vec").alias("_cos"),
             )
         )
-        w = W.partitionBy(query_id_col).orderBy(
-            F.desc("_cos"), F.asc("centroid_id")
-        )
+        w = W.partitionBy(qid_out).orderBy(F.desc("_cos"), F.asc("centroid_id"))
         probes = (
             qc.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= nprobe)
-            .select(query_id_col, "centroid_id")
+            .select(qid_out, "centroid_id")
         )
-    cand = probes.join(assignments, "centroid_id").select(query_id_col, id_col)
-    scored = (
-        cand.join(corpus.select(id_col, vec_col), id_col)
-        .join(queries.select(query_id_col, query_vec_col), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_similarity(vec_col, query_vec_col), 9
-            ).alias("cosine"),
-        )
+        if not collect:
+            return probes, None
+        rows = [(r[qid_out], r["centroid_id"]) for r in probes.collect()]
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType(
+        [
+            StructField(qid_out, q_schema[query_id_col].dataType, True),
+            StructField(
+                "centroid_id",
+                LongType()
+                if centroid_rows is not None
+                else centroids.schema["centroid_id"].dataType,
+                True,
+            ),
+        ]
     )
-    wr = W.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(wr)).filter(
-        F.col("rank") <= k
-    )
+    return spark.createDataFrame(rows, schema), rows
 
 # --- embedding-cosine near-duplicate detection -----------------------
 #
@@ -1027,30 +1001,21 @@ def _pair_vectors(
 def _prescreen_pairs(pair_vecs: DataFrame, threshold: float) -> DataFrame:
     """Arrow-batched numpy cosine prescreen over candidate pairs.
 
-    Drops pairs whose float64 cosine is below ``threshold − 1e-6``: the
-    numpy and exact-decimal cosines agree to ~1e-13, so no pair the
-    exact filter would keep can be lost — the margin makes the
-    prescreen a pure performance move (decimal HOF folds are
-    interpreted per element; the matmul path is ~60× cheaper), never a
-    semantic one. Survivor rows keep their vector payloads so the exact
-    stage needs no re-join."""
-    import numpy as np
-
-    margin = threshold - 1e-6
+    Drops pairs whose float64 cosine is below ``threshold −
+    _EXACT_TOPK_MARGIN``: the numpy and exact-decimal cosines agree to
+    ~1e-13, so no pair the exact filter would keep can be lost — the
+    margin makes the prescreen a pure performance move (decimal HOF
+    folds are interpreted per element; the matmul path is ~60×
+    cheaper), never a semantic one. Survivor rows keep their vector
+    payloads so the exact stage needs no re-join."""
+    margin = threshold - _EXACT_TOPK_MARGIN
 
     def _screen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 yield pdf
                 continue
-            a = np.stack(pdf["_va"].values).astype(np.float64)
-            b = np.stack(pdf["_vb"].values).astype(np.float64)
-            # zero vectors: cos := 0 (matches the guarded exact
-            # cosine), never nan - nan would poison the prescreen sort
-            cos = (a * b).sum(axis=1) / np.maximum(
-                np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1), 1e-300
-            )
-            yield pdf.loc[cos >= margin]
+            yield pdf.loc[_np_rowwise_cosine(pdf, "_va", "_vb") >= margin]
 
     return pair_vecs.mapInPandas(_screen, schema=pair_vecs.schema)
 
@@ -1083,8 +1048,8 @@ def embedding_dup_pairs(
     Arrow scan of the corpus with the other side held as a broadcast
     numpy matrix — each batch scores its rows against every corpus
     vector in a single float64 matmul and emits only id pairs within
-    the standard prescreen margin (threshold − 1e-6, the
-    ``_prescreen_pairs`` error budget); phase 2 joins the (few)
+    the standard prescreen margin (threshold − ``_EXACT_TOPK_MARGIN``,
+    the ``_prescreen_pairs`` error budget); phase 2 joins the (few)
     survivor pairs back to their vectors and scores them with the
     exact-decimal cosine. Output identical to the nested-loop form —
     the margin provably cannot drop a pair the exact filter keeps.
@@ -1116,7 +1081,7 @@ def embedding_dup_pairs(
         else np.zeros((0, 1))
     )
     nrm = np.linalg.norm(mat, axis=1)
-    margin = threshold - 1e-6
+    margin = threshold - _EXACT_TOPK_MARGIN
     idt = corpus.schema[id_col].dataType.simpleString()
     bc = base.sparkSession.sparkContext.broadcast((ids, mat, nrm))
 
@@ -2116,24 +2081,90 @@ def _dedup_query_rows(qrows, id_name: str, vec_name: str, fn: str):
     return out
 
 
-def _chunked_query_union(
-    qrows, id_name: str, query_batch_size: int, run_chunk
+def _pq_prefilter(k: int, prefilter: "int | None", query_batch_size: int) -> int:
+    """Check ``query_batch_size`` and size R, the ADC survivors kept
+    per query for the exact refine: ``prefilter`` (default 4·k), never
+    below k."""
+    if query_batch_size < 1:
+        raise ValueError(
+            f"query_batch_size must be >= 1 (got {query_batch_size})"
+        )
+    return int(max(4 * k if prefilter is None else prefilter, k))
+
+
+def _pq_queries(
+    queries: DataFrame, collected_queries, query_id_col: str,
+    query_vec_col: str, fn: str,
+):
+    """The query rows the LUTs are built from: ``collected_queries``
+    when the caller already holds them driver-side (the q38 suite
+    collects once for all arms; they must be exactly ``queries``'s
+    (query_id, query_vec) rows — the ivf_cosine_topk trust contract),
+    else one collect. Raises on an empty frame; duplicates collapse
+    (:func:`_dedup_query_rows`)."""
+    qrows = (
+        collected_queries
+        if collected_queries is not None
+        else queries.select(query_id_col, query_vec_col).collect()
+    )
+    if not qrows:
+        raise ValueError(f"{fn}: empty query frame")
+    return _dedup_query_rows(qrows, query_id_col, query_vec_col, fn)
+
+
+def _pq_passes(
+    qrows, query_id_col: str, query_batch_size: int, run, pin
 ) -> DataFrame:
-    """Split an already-collected, already-DEDUPED query list into
-    ``query_batch_size`` chunks, run ``run_chunk(rows)`` (one
-    candidate pass against a shared prebuilt index) on each, and fold
-    the per-chunk frames with a balanced tree union. Per-query output
-    rows are independent across queries, so the union equals one
-    unchunked run; the chunking bounds the driver/LUT footprint at
-    batch_size·m·n_codes for ANY input frame — duplicate rows are
-    collapsed upstream (:func:`_dedup_query_rows`), so no chunk is
-    ever boundary-extended past the batch size (advisor r11)."""
-    qrows = sorted(qrows, key=lambda r: r[id_name])
-    parts = [
-        run_chunk(qrows[i : i + query_batch_size])
-        for i in range(0, len(qrows), query_batch_size)
-    ]
-    return _tree_union(parts)
+    """Run the ADC pass ``run(rows)`` over the deduped query rows: once
+    when they fit ``query_batch_size``, else once per id-sorted chunk
+    of that size, after ``pin()`` has pinned any inline-built (lazy)
+    index so the chunks probe one materialized index instead of each
+    re-running the corpus-wide build scans (review r11). Per-chunk
+    frames fold through :func:`_tree_union`; per-query rows are
+    independent across queries, so the union equals one unchunked run.
+    The chunking bounds the driver/LUT footprint at
+    batch_size·m·n_codes for ANY input frame — duplicates were
+    collapsed upstream, so no chunk is ever boundary-extended past the
+    batch size (advisor r11)."""
+    if len(qrows) <= query_batch_size:
+        return run(qrows)
+    pin()
+    qrows = sorted(qrows, key=lambda r: r[query_id_col])
+    return _tree_union(
+        [
+            run(qrows[i : i + query_batch_size])
+            for i in range(0, len(qrows), query_batch_size)
+        ]
+    )
+
+
+def _pq_luts(cb: "list[list[list[float]]]", qrows, query_vec_col: str):
+    """Per-query ADC lookup tables over the codebooks: lut[q, j, c] =
+    <q̂_j, cb[j][c]>, the inner product of the normalized query's j-th
+    subvector with code c — on normalized vectors, ADC ≈ cosine."""
+    import numpy as np
+
+    Q = _np_stack(r[query_vec_col] for r in qrows)
+    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
+    sub = len(cb[0][0])
+    return np.stack(
+        [Q[:, j * sub : (j + 1) * sub] @ np.asarray(cb[j]).T for j in range(len(cb))],
+        axis=1,
+    )
+
+
+_ADC_SCHEMA = "query_id long, _cid long, adc double"
+
+
+def _adc_top_r(scored: DataFrame, R: int) -> DataFrame:
+    """Each query's R best ADC scores under (adc desc, _cid asc) →
+    (query_id, _cid, adc)."""
+    wq = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("_cid"))
+    return (
+        scored.withColumn("_rn", F.row_number().over(wq))
+        .filter(F.col("_rn") <= R)
+        .select("query_id", "_cid", "adc")
+    )
 
 
 def pq_topk(
@@ -2149,28 +2180,26 @@ def pq_topk(
     seed: int = 42,
     refine_iters: int = 2,
     prefilter: int | None = None,
-    rerank: bool = True,
     index: tuple[DataFrame, DataFrame] | None = None,
     query_batch_size: int = 4096,
-    return_candidates: bool = False,
     collected_queries: "list | None" = None,
 ) -> DataFrame:
     """PQ ANN top-k: ADC-scan the codes table (asymmetric distance —
     per-query lookup tables over the codebooks, m lookups per corpus
     vector), keep the ``prefilter`` best per query (default 4·k), then
-    exact-decimal cosine re-rank of the survivors → same output schema
-    as ``cosine_topk`` (query_id, id, cosine, rank). ``rerank=False``
-    returns the raw ADC ordering with an ``adc`` column instead of
-    exact cosines (scores are then APPROXIMATE by construction).
+    exact-decimal cosine re-rank of the survivors → (query_id, id,
+    cosine, rank), the ``cosine_topk`` shape with the query column
+    always named ``query_id``.
 
     Self-retrieval is hard-guaranteed for corpus-member queries: the
     query's own id always joins the candidate set before the re-rank
     (the faiss IndexRefine idiom) — ADC quantization noise alone
     cannot promise it, and a serving layer must.
 
-    Queries are driver-collected to build the LUTs — exact duplicate
-    (id, vec) rows are collapsed first and a query id carrying two
-    DIFFERENT vectors raises (:func:`_dedup_query_rows`, advisor r11).
+    Queries are driver-collected to build the LUTs (or handed in as
+    ``collected_queries``) — exact duplicate (id, vec) rows are
+    collapsed first and a query id carrying two DIFFERENT vectors
+    raises (:func:`_dedup_query_rows`, advisor r11).
     ``query_batch_size`` bounds the driver/LUT footprint IN CODE, not
     just by contract (judge r10 task 3): a larger query frame is
     chunked, each chunk runs ONE ADC scan against the shared prebuilt
@@ -2184,71 +2213,30 @@ def pq_topk(
     codes-table scan per chunk — the right trade when |Q| outgrows
     driver memory. The per-batch partial top-R runs inside the Arrow
     scan, so the global window sees n_partitions·R rows per query,
-    never the corpus.
-
-    ``return_candidates=True`` skips the re-rank and returns the raw
-    ADC survivor frame (query_id, _cid, adc) — the hand-off shape for
-    :func:`ann_shared_rerank` when several arms share one exact tail."""
-    if query_batch_size < 1:
-        raise ValueError(
-            f"query_batch_size must be >= 1 (got {query_batch_size})"
-        )
-    if prefilter is None:
-        prefilter = max(4 * k, k)
-    prefilter = max(prefilter, k)
+    never the corpus."""
+    R = _pq_prefilter(k, prefilter, query_batch_size)
     codebooks, codes = index if index is not None else pq_build_index(
         corpus, m, n_codes, id_col, vec_col, seed, refine_iters
     )
     cb = _pq_codebook_rows(codebooks)
-    # ``collected_queries`` (round 14, guide §1.2 step 1): the LUT
-    # build needs the query rows driver-side anyway — a caller that
-    # already holds them (the q38 suite collects once for all arms)
-    # skips this collect job. The rows must be exactly ``queries``'s
-    # (query_id, query_vec) rows — same trust contract as
-    # ivf_cosine_topk(collected_queries=).
-    qrows = (
-        collected_queries
-        if collected_queries is not None
-        else queries.select(query_id_col, query_vec_col).collect()
+    qrows = _pq_queries(
+        queries, collected_queries, query_id_col, query_vec_col, "pq_topk"
     )
-    if not qrows:
-        raise ValueError("pq_topk: empty query frame")
-    qrows = _dedup_query_rows(qrows, query_id_col, query_vec_col, "pq_topk")
-    R = int(prefilter)
-    if len(qrows) > query_batch_size:
+
+    def pin():
+        # inline-built codes are LAZY; codebooks are driver-built rows,
+        # already cheap to re-create
+        nonlocal codes
         if index is None:
-            # inline-built codes are LAZY — pin them before the fan-out
-            # or every chunk re-runs the full-corpus encode scan
-            # (review r11); codebooks are driver-built rows, already
-            # cheap to re-create
             codes = codes.localCheckpoint(eager=True)
-        top_r = _chunked_query_union(
-            qrows,
-            query_id_col,
-            query_batch_size,
-            lambda rows: _pq_adc_top_r(
-                codes, cb, rows, id_col, query_id_col, query_vec_col, R
-            ),
-        )
-    else:
-        top_r = _pq_adc_top_r(
-            codes, cb, qrows, id_col, query_id_col, query_vec_col, R
-        )
-    if return_candidates:
-        return top_r
-    if not rerank:
-        return (
-            top_r.withColumn(
-                "rank",
-                F.row_number().over(
-                    W.partitionBy("query_id").orderBy(
-                        F.desc("adc"), F.asc("_cid")
-                    )
-                ),
-            )
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col("_cid").alias(id_col), "adc", "rank")
-        )
+
+    top_r = _pq_passes(
+        qrows, query_id_col, query_batch_size,
+        lambda rows: _pq_adc_top_r(
+            codes, cb, rows, id_col, query_id_col, query_vec_col, R
+        ),
+        pin,
+    )
     return _pq_exact_rerank(
         corpus,
         queries.sparkSession.createDataFrame(
@@ -2273,22 +2261,8 @@ def _pq_adc_top_r(
     import numpy as np
     import pandas as pd
 
-    m_eff = len(cb)
-    sub = len(cb[0][0])
     qids = np.array([r[query_id_col] for r in qrows], dtype=np.int64)
-    Q = np.stack(
-        [np.asarray(r[query_vec_col], dtype=np.float64) for r in qrows]
-    )
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    # lut[q, j, c] = <q_subvec_j, codebook[j][c]> — inner-product ADC on
-    # normalized vectors ≈ cosine
-    lut = np.stack(
-        [
-            Q[:, j * sub : (j + 1) * sub] @ np.asarray(cb[j]).T
-            for j in range(m_eff)
-        ],
-        axis=1,
-    )
+    lut = _pq_luts(cb, qrows, query_vec_col)
 
     def _scan(batches):
         for pdf in batches:
@@ -2297,7 +2271,7 @@ def _pq_adc_top_r(
             C = np.stack(pdf["codes"].values).astype(np.int64)
             ids = pdf[id_col].values
             scores = np.zeros((len(qids), len(pdf)))
-            for j in range(m_eff):
+            for j in range(lut.shape[1]):
                 scores += lut[:, j, :][:, C[:, j]]
             r = min(R, len(pdf))
             qq, ii, ss = [], [], []
@@ -2314,14 +2288,9 @@ def _pq_adc_top_r(
             yield pd.DataFrame({"query_id": qq, "_cid": ii, "adc": ss})
 
     partial = ensure_min_partitions(codes.select(id_col, "codes")).mapInPandas(
-        _scan, schema="query_id long, _cid long, adc double"
+        _scan, schema=_ADC_SCHEMA
     )
-    wq = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("_cid"))
-    return (
-        partial.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= R)
-        .select("query_id", F.col("_cid"), "adc")
-    )
+    return _adc_top_r(partial, R)
 
 
 def _pq_exact_rerank(
@@ -2336,8 +2305,7 @@ def _pq_exact_rerank(
 ) -> DataFrame:
     """Shared PQ re-rank tail: ADC survivors ∪ the query's own id
     (corpus-member queries — the IndexRefine idiom that makes
-    self-retrieval structural), exact-decimal cosine, per-query
-    top-k."""
+    self-retrieval structural), then the exact refine."""
     selfc = (
         queries.select(F.col(query_id_col).alias("query_id"))
         .join(
@@ -2348,121 +2316,20 @@ def _pq_exact_rerank(
         .select("query_id", "_cid")
     )
     cand = top_r.select("query_id", "_cid").unionByName(selfc).distinct()
-    scored = (
+    return _exact_topk(
         cand.join(
             corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col)),
             "_cid",
-        )
-        .join(
+        ).join(
             F.broadcast(
                 queries.select(
                     F.col(query_id_col).alias("query_id"), query_vec_col
                 )
             ),
             "query_id",
-        )
-        .select(
-            "query_id",
-            F.col("_cid").alias(id_col),
-            F.round(
-                cosine_similarity(vec_col, query_vec_col), 9
-            ).alias("cosine"),
-        )
+        ),
+        k, "query_id", "_cid", vec_col, query_vec_col, id_out=id_col,
     )
-    wr = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(wr)).filter(
-        F.col("rank") <= k
-    )
-
-
-def ann_shared_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    arm_top_r: "dict[str, DataFrame]",
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> "dict[str, DataFrame]":
-    """Shared exact re-rank tail for SEVERAL ANN arms over the same
-    (corpus, queries, k) — judge r11 task 5: ``pq_topk`` and
-    ``ivf_pq_topk`` each used to end in their own
-    :func:`_pq_exact_rerank`, i.e. one candidate-sized corpus vector
-    fetch PER ARM against the same corpus. Here the arms hand in their
-    raw ADC survivor frames (``return_candidates=True``), the
-    candidate UNION ∪ self-ids is scored with ONE corpus fetch
-    (materialized via eager localCheckpoint so each arm reads the
-    scored rows, not the plan), and each arm's per-query top-k window
-    runs over a semi-join back onto ITS OWN candidate set ∪ self-ids —
-    row-identical to the standalone re-rank (pinned in tests), at one
-    corpus scan total instead of len(arms).
-
-    Query rows are deduped exactly like the producers dedupe theirs
-    (``_dedup_query_rows`` — exact duplicates collapse, conflicting
-    duplicates raise): a duplicated query row would otherwise double
-    every scored candidate through the broadcast join and the per-arm
-    top-k would emit each neighbor twice (review r12). The arm
-    survivor frames and the self-id join are materialized ONCE
-    (candidate-sized eager checkpoints) so each arm's ADC plan runs a
-    single time — it feeds both the union being scored and that arm's
-    own semi-join candidate set (review r12: the lazy frames were
-    evaluated in both places)."""
-    qrows = _dedup_query_rows(
-        queries.select(query_id_col, query_vec_col).collect(),
-        query_id_col, query_vec_col, "ann_shared_rerank",
-    )
-    queries = queries.sparkSession.createDataFrame(
-        qrows, queries.select(query_id_col, query_vec_col).schema
-    )
-    arm_top_r = {
-        arm: t.select("query_id", "_cid").localCheckpoint(eager=True)
-        for arm, t in arm_top_r.items()
-    }
-    selfc = (
-        queries.select(F.col(query_id_col).alias("query_id"))
-        .join(
-            corpus.select(F.col(id_col).alias("_cid")),
-            F.col("query_id") == F.col("_cid"),
-            "inner",
-        )
-        .select("query_id", "_cid")
-        .localCheckpoint(eager=True)
-    )
-    all_cand = _tree_union(list(arm_top_r.values()) + [selfc]).distinct()
-    scored = (
-        all_cand.join(
-            corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col)),
-            "_cid",
-        )
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(query_id_col).alias("query_id"), query_vec_col
-                )
-            ),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            "_cid",
-            F.round(
-                cosine_similarity(vec_col, query_vec_col), 9
-            ).alias("cosine"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    out = {}
-    for arm, top_r in arm_top_r.items():
-        cand = top_r.unionByName(selfc).distinct()
-        out[arm] = (
-            scored.join(cand, ["query_id", "_cid"], "left_semi")
-            .select("query_id", F.col("_cid").alias(id_col), "cosine")
-            .withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= k)
-        )
-    return out
 
 
 def ivf_pq_topk(
@@ -2499,9 +2366,9 @@ def ivf_pq_topk(
     carries a ``_cell`` column — the layout
     ``process_ingest_batch_pq_codes(cells=...)`` maintains on disk,
     partitioned by (ingest_batch, _cell) — the probed cell ids (driver-
-    known from the probe window) become an ``isin`` filter on ``_cell``
-    BEFORE the candidate id join, so the parquet scan feeding the join
-    reads only the nprobe/n_centroids probed partitions
+    known from the probe selection) become an ``isin`` filter on
+    ``_cell`` BEFORE the candidate id join, so the parquet scan feeding
+    the join reads only the nprobe/n_centroids probed partitions
     (PartitionFilters on the stored table), never the whole codes
     table. The id join is kept for exact membership. CONTRACT: the
     ``_cell`` values must be assignments under the SAME centroids as
@@ -2531,11 +2398,11 @@ def ivf_pq_topk(
     chunk against the shared prebuilt indexes, per-chunk ADC survivor
     frames fold through a balanced tree union, and ONE shared re-rank
     runs over the unioned survivors (judge r11 task 2) — identical
-    output to the unchunked run. ``return_candidates=True`` returns
-    the raw ADC survivor frame (query_id, _cid, adc) for
-    :func:`ann_shared_rerank` — one of the two modes that accept
-    ``corpus=None`` (index-only serving: both indexes prebuilt, no
-    re-rank, the corpus never touched).
+    output to the unchunked run. ``return_candidates=True`` skips the
+    re-rank and returns the raw ADC survivor frame (query_id, _cid,
+    adc) — the index-only serving path (the ANN serving face's
+    ``mode="adc"``), one of the two modes that accept ``corpus=None``
+    (both indexes prebuilt, the corpus never touched).
 
     **Pruned exact re-rank (round 13, judge r12 task 1).** When the
     stored codes table CO-LOCATES the raw vectors with the codes
@@ -2560,10 +2427,7 @@ def ivf_pq_topk(
     ``rerank_vecs="auto"`` (default) keeps the caller's corpus frame
     when one is passed and switches to the codes fetch only for
     ``corpus=None`` — existing callers are byte-stable."""
-    if query_batch_size < 1:
-        raise ValueError(
-            f"query_batch_size must be >= 1 (got {query_batch_size})"
-        )
+    R = _pq_prefilter(k, prefilter, query_batch_size)
     if rerank_vecs not in ("auto", "corpus", "codes"):
         raise ValueError(
             "ivf_pq_topk: rerank_vecs must be 'auto', 'corpus' or "
@@ -2584,9 +2448,6 @@ def ivf_pq_topk(
             "a store_vectors=True codes table (rerank_vecs='codes'), "
             "or return_candidates=True for the index-only ADC path."
         )
-    if prefilter is None:
-        prefilter = max(4 * k, k)
-    prefilter = max(prefilter, k)
     centroids, assignments = (
         ivf_index
         if ivf_index is not None
@@ -2609,19 +2470,9 @@ def ivf_pq_topk(
             "column (the process_ingest_batch_pq_codes(cells=...) "
             "layout); this codes frame has none."
         )
-    # collected_queries: skip the collect job when the caller already
-    # holds the rows (same trust contract as pq_topk / ivf_cosine_topk)
-    qrows = (
-        collected_queries
-        if collected_queries is not None
-        else queries.select(query_id_col, query_vec_col).collect()
+    qrows = _pq_queries(
+        queries, collected_queries, query_id_col, query_vec_col, "ivf_pq_topk"
     )
-    if not qrows:
-        raise ValueError("ivf_pq_topk: empty query frame")
-    qrows = _dedup_query_rows(
-        qrows, query_id_col, query_vec_col, "ivf_pq_topk"
-    )
-    R = int(prefilter)
     spark = queries.sparkSession
     q_schema = queries.select(query_id_col, query_vec_col).schema
     use_cells = prune_cells and "_cell" in codes.columns
@@ -2642,34 +2493,26 @@ def ivf_pq_topk(
             f"store_vectors=True) layout) with prune_cells on — {why}."
         )
     # probed cell ids accumulate across query chunks (driver-known from
-    # each chunk's collected probe window) — they define the pruned
-    # re-rank fetch below
+    # each chunk's probe selection) — they define the pruned re-rank
+    # fetch below
     probed_acc: "set[int]" = set()
-    if len(qrows) > query_batch_size:
-        # pin any INLINE-built stored tables before the fan-out so the
-        # per-chunk runs probe one materialized index instead of
-        # re-running the corpus-wide assignment/encode scans per chunk
-        # (review r11)
+
+    def pin():
+        nonlocal assignments, codes
         if ivf_index is None:
             assignments = assignments.localCheckpoint(eager=True)
         if pq_index is None:
             codes = codes.localCheckpoint(eager=True)
-        top_r = _chunked_query_union(
-            qrows,
-            query_id_col,
-            query_batch_size,
-            lambda rows: _ivf_pq_adc_top_r(
-                spark, rows, q_schema, centroids, assignments, codes, cb,
-                nprobe, id_col, query_id_col, query_vec_col, R, use_cells,
-                probed_out=probed_acc,
-            ),
-        )
-    else:
-        top_r = _ivf_pq_adc_top_r(
-            spark, qrows, q_schema, centroids, assignments, codes, cb,
+
+    top_r = _pq_passes(
+        qrows, query_id_col, query_batch_size,
+        lambda rows: _ivf_pq_adc_top_r(
+            spark, rows, q_schema, centroids, assignments, codes, cb,
             nprobe, id_col, query_id_col, query_vec_col, R, use_cells,
-            probed_out=probed_acc,
-        )
+            probed_acc,
+        ),
+        pin,
+    )
     if return_candidates:
         return top_r
     if use_codes_vecs:
@@ -2710,49 +2553,12 @@ def ivf_pq_topk(
     )
 
 
-def _np_probe_rows(cent_rows, qids, Q_raw, nprobe):
-    """Driver-side IVF probe selection: (query_id, centroid_id) rows of
-    each query's ``nprobe`` nearest centroids by guarded cosine, or
-    ``None`` when any query's cosine gap at the nprobe boundary is
-    within ``_EXACT_TOPK_MARGIN`` of the numpy/decimal disagreement
-    budget — the caller then re-derives the selection with the
-    exact-decimal Spark probe window, keeping the probed SET provably
-    identical to the decimal order in every case (ties inside the top
-    nprobe don't matter: probes have set semantics)."""
-    import numpy as np
-
-    if not cent_rows:
-        return []
-    cids = [r["centroid_id"] for r in cent_rows]
-    C = np.stack(
-        [np.asarray(r["centroid_vec"], dtype=np.float64) for r in cent_rows]
-    )
-    denom = np.maximum(
-        np.linalg.norm(Q_raw, axis=1)[:, None] * np.linalg.norm(C, axis=1)[None, :],
-        1e-300,
-    )
-    cos = (Q_raw @ C.T) / denom  # zero vectors → 0, the guarded cosine
-    rows = []
-    n_c = len(cids)
-    take = min(nprobe, n_c)
-    for i, qid in enumerate(qids):
-        # sort by (cosine desc, centroid_id asc) — the probe window's
-        # total order
-        idx = sorted(range(n_c), key=lambda j: (-cos[i, j], cids[j]))
-        if n_c > nprobe:
-            gap = cos[i, idx[nprobe - 1]] - cos[i, idx[nprobe]]
-            if gap <= _EXACT_TOPK_MARGIN:
-                return None
-        rows.extend((qid, cids[j]) for j in idx[:take])
-    return rows
-
-
 def _ivf_pq_adc_top_r(
     spark,
     qrows,
     q_schema,
-    centroids: DataFrame,
-    assignments: DataFrame,
+    centroids: "DataFrame | list",
+    assignments: DataFrame | None,
     codes: DataFrame,
     cb: "list[list[list[float]]]",
     nprobe: int,
@@ -2761,103 +2567,27 @@ def _ivf_pq_adc_top_r(
     query_vec_col: str,
     R: int,
     use_cells: bool,
-    probed_out: "set[int] | None" = None,
+    probed_out: "set[int]",
 ) -> DataFrame:
-    """One IVF-probed ADC pass for ≤ batch_size collected queries:
-    probe window → (with ``use_cells``) ``_cell isin(probed)`` filter
-    on the codes frame so the stored-table scan is partition-pruned to
-    the probed cells → candidate join (via the assignment table, or —
-    ``assignments=None`` — directly on the codes frame's ``_cell``,
-    the inverted-list shape) → Arrow LUT scoring → top-R window →
+    """One IVF-probed ADC pass for ≤ batch_size collected queries
+    (``qrows``, typed by ``q_schema``): probe selection
+    (:func:`_ivf_probes`) → (with ``use_cells``) ``_cell isin(probed)``
+    filter on the codes frame so the stored-table scan is
+    partition-pruned to the probed cells, whose ids are added to
+    ``probed_out`` → candidate join (via the assignment table, or —
+    ``assignments=None`` — directly on the codes frame's ``_cell``, the
+    inverted-list shape) → Arrow LUT scoring → top-R window →
     (query_id, _cid, adc)."""
     import numpy as np
     import pandas as pd
 
-    m_eff = len(cb)
-    sub = len(cb[0][0])
-    qids = [r[query_id_col] for r in qrows]
-    Q_raw = np.stack(
-        [np.asarray(r[query_vec_col], dtype=np.float64) for r in qrows]
-    )
-    Q = Q_raw / np.maximum(
-        np.linalg.norm(Q_raw, axis=1, keepdims=True), 1e-300
-    )
-    lut = np.stack(
-        [
-            Q[:, j * sub : (j + 1) * sub] @ np.asarray(cb[j]).T
-            for j in range(m_eff)
-        ],
-        axis=1,
-    )
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    # the centroid side may arrive as an already-collected row list
-    # (round 14): a suite probing several arms against ONE index
-    # collects the centroid table once — the _pq_codebook_rows pattern
-    centroid_rows = centroids if isinstance(centroids, list) else None
-    # nprobe nearest centroids per query under the exact-decimal cosine
-    # order. Round 13 (guide §1.2 step 1 — remove a whole pass): the
-    # queries are ALREADY driver-collected (the LUT needs them) and the
-    # centroid table is index-sized, so the probe selection is computed
-    # here in numpy instead of a crossJoin + decimal-cosine window +
-    # collect Spark job per chunk. Equivalence: probes feed joins, so
-    # only the probed-cell SET per query matters; numpy and the
-    # exact-decimal cosine agree to ~1e-13, so whenever the cosine gap
-    # at the nprobe boundary exceeds the margin the numpy set IS the
-    # decimal set. A query whose boundary gap is inside the margin
-    # (never observed on real corpora) falls back to the original
-    # Spark probe window for ALL queries of the chunk — selection
-    # provably identical to the round-12 path either way.
-    probe_rows = _np_probe_rows(
-        centroid_rows
-        if centroid_rows is not None
-        else centroids.select("centroid_id", "centroid_vec").collect(),
-        qids,
-        Q_raw,
-        nprobe,
-    )
-    if probe_rows is None:
-        if centroid_rows is not None:
-            centroids = spark.createDataFrame(
-                centroid_rows, "centroid_id long, centroid_vec array<double>"
-            )
-        q_chunk = spark.createDataFrame(qrows, q_schema)
-        qc = q_chunk.crossJoin(F.broadcast(centroids)).select(
-            F.col(query_id_col).alias("query_id"),
-            "centroid_id",
-            cosine_similarity(
-                query_vec_col, "centroid_vec"
-            ).alias("_cos"),
-        )
-        wp = W.partitionBy("query_id").orderBy(
-            F.desc("_cos"), F.asc("centroid_id")
-        )
-        probe_rows = [
-            (r["query_id"], r["centroid_id"])
-            for r in (
-                qc.withColumn("_rn", F.row_number().over(wp))
-                .filter(F.col("_rn") <= nprobe)
-                .select("query_id", "centroid_id")
-                .collect()
-            )
-        ]
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    probes = spark.createDataFrame(
-        probe_rows,
-        StructType(
-            [
-                StructField(
-                    "query_id", q_schema[query_id_col].dataType, True
-                ),
-                StructField(
-                    "centroid_id",
-                    LongType()
-                    if centroid_rows is not None
-                    else centroids.schema["centroid_id"].dataType,
-                    True,
-                ),
-            ]
-        ),
+    lut = _pq_luts(cb, qrows, query_vec_col)
+    qpos = {int(r[query_id_col]): i for i, r in enumerate(qrows)}
+    # collected: the probed cell ids must be driver-known for the
+    # partition filter and the pruned re-rank fetch
+    probes, probe_rows = _ivf_probes(
+        spark, q_schema, centroids, nprobe, query_id_col, query_vec_col,
+        "query_id", qrows=qrows, collect=True,
     )
     if use_cells:
         # the probed cell ids become a LITERAL partition filter on the
@@ -2865,8 +2595,7 @@ def _ivf_pq_adc_top_r(
         # parquet layout the scan reads nprobe/n_centroids of the table
         # instead of all of it (judge r11 task 1)
         probed_cells = sorted({c for _, c in probe_rows})
-        if probed_out is not None:
-            probed_out.update(probed_cells)
+        probed_out.update(probed_cells)
         codes_src = codes.filter(F.col("_cell").isin(probed_cells))
     else:
         codes_src = codes
@@ -2896,7 +2625,7 @@ def _ivf_pq_adc_top_r(
                 [qpos[int(q)] for q in pdf["query_id"].values], dtype=np.int64
             )
             s = np.zeros(len(pdf))
-            for j in range(m_eff):
+            for j in range(lut.shape[1]):
                 s += lut[qi, j, C[:, j]]
             yield pd.DataFrame(
                 {
@@ -2907,11 +2636,6 @@ def _ivf_pq_adc_top_r(
             )
 
     scored = ensure_min_partitions(cand_codes).mapInPandas(
-        _score, schema="query_id long, _cid long, adc double"
+        _score, schema=_ADC_SCHEMA
     )
-    wq = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("_cid"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= R)
-        .select("query_id", "_cid", "adc")
-    )
+    return _adc_top_r(scored, R)

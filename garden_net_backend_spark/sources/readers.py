@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import schemas
 
@@ -86,6 +87,9 @@ _FEATURE_SCHEMAS = {
 }
 
 
+_COORDS = ("start", "end")
+
+
 def _strip_chr_prefix(col):
     return F.regexp_replace(col, "^chr", "")
 
@@ -118,11 +122,21 @@ def read_feature(
     feature_name = feature_name or default_name
     if fmt not in _FEATURE_SCHEMAS:
         raise ValueError(f"unknown feature format: {fmt}")
+    # coordinates are read as text and cast under ANSI: a coordinate
+    # that is not a number fails the read instead of becoming a null
+    # interval that silently matches no node; a missing one stays null
+    text_coords = T.StructType(
+        [
+            T.StructField(f.name, T.StringType()) if f.name in _COORDS else f
+            for f in _FEATURE_SCHEMAS[fmt].fields
+        ]
+    )
     raw = (
         spark.read.option("sep", "\t")
         .option("header", False)
-        .schema(_FEATURE_SCHEMAS[fmt])
+        .schema(text_coords)
         .csv(path)
+        .withColumns({c: F.col(c).cast("long") for c in _COORDS})
     )
     chr_col = _strip_chr_prefix(F.col("chr")).alias("chr")
     if fmt == "bed3":

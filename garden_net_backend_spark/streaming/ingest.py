@@ -2472,100 +2472,103 @@ def process_serve_batch_ann(
     clean = qcols.join(
         conflicted, query_id_col, "left_anti"
     ).localCheckpoint(eager=True)
-    n_served_ids = clean.count()
-    if n_served_ids:
-        kw = dict(
-            k=k,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            ivf_index=(centroids, None),
-            pq_index=(codebooks, stored_codes),
-            query_batch_size=query_batch_size,
-        )
-        if mode == "exact":
-            if codes_have_vecs:
-                # pruned exact path (round 13): the re-rank's (id, vec)
-                # fetch reads the SAME probed-_cell partitions as the
-                # candidate scan (plus an id-pushdown point lookup for
-                # self-ids) — corpus_dir is never read, and the request
-                # path carries no corpus-sized term in either mode
-                result = ivf_pq_topk(
-                    None, clean, rerank_vecs="codes", **kw
-                )
+    try:
+        n_served_ids = clean.count()
+        if n_served_ids:
+            kw = dict(
+                k=k,
+                nprobe=nprobe,
+                id_col=id_col,
+                vec_col=vec_col,
+                query_id_col=query_id_col,
+                query_vec_col=query_vec_col,
+                ivf_index=(centroids, None),
+                pq_index=(codebooks, stored_codes),
+                query_batch_size=query_batch_size,
+            )
+            if mode == "exact":
+                if codes_have_vecs:
+                    # pruned exact path (round 13): the re-rank's (id, vec)
+                    # fetch reads the SAME probed-_cell partitions as the
+                    # candidate scan (plus an id-pushdown point lookup for
+                    # self-ids) — corpus_dir is never read, and the request
+                    # path carries no corpus-sized term in either mode
+                    result = ivf_pq_topk(
+                        None, clean, rerank_vecs="codes", **kw
+                    )
+                else:
+                    result = ivf_pq_topk(
+                        corpus.select(id_col, vec_col), clean, **kw
+                    )
             else:
-                result = ivf_pq_topk(
-                    corpus.select(id_col, vec_col), clean, **kw
+                # index-only: prefilter=k makes the ADC pass itself the
+                # top-k; corpus is never touched with return_candidates
+                # (both indexes are handed in, and the re-rank is skipped)
+                from pyspark.sql import Window as _W
+
+                top = ivf_pq_topk(
+                    None, clean, prefilter=k, return_candidates=True, **kw
+                )
+                # rank over the ROUNDED score so the stored (adc_score,
+                # vec_id) columns reproduce the stored rank exactly — the
+                # same round-then-rank discipline as _pq_exact_rerank
+                # (review r12: ranking on raw adc but storing 9-decimal
+                # adc_score let the stored order contradict the rank). NOT
+                # a duplicate of the window inside ivf_pq_topk: that one
+                # cuts the top-R candidate set under the RAW score and is
+                # shared with the exact path; this one is the auditable
+                # output order of the adc mode.
+                wq = _W.partitionBy("query_id").orderBy(
+                    F.desc("adc_score"), F.asc("_cid")
+                )
+                result = (
+                    top.withColumn("adc_score", F.round("adc", 9))
+                    .withColumn("rank", F.row_number().over(wq))
+                    .filter(F.col("rank") <= k)
+                    .select(
+                        "query_id",
+                        F.col("_cid").alias(id_col),
+                        "adc_score",
+                        "rank",
+                    )
+                )
+            result = result.withColumn("serve_batch", F.lit(int(batch_id)))
+            t1 = time.time()
+            (
+                result.write.mode("overwrite")
+                .options(partitionOverwriteMode="dynamic")
+                .partitionBy("serve_batch")
+                .parquet(results_dir)
+            )
+            if retain_batches is not None:
+                # anchored to THIS batch id (not the stored max) so a
+                # replayed batch re-runs the identical sweep — idempotent
+                expire_serve_results(
+                    spark, results_dir, retain_batches, through_batch=batch_id
                 )
         else:
-            # index-only: prefilter=k makes the ADC pass itself the
-            # top-k; corpus is never touched with return_candidates
-            # (both indexes are handed in, and the re-rank is skipped)
-            from pyspark.sql import Window as _W
-
-            top = ivf_pq_topk(
-                None, clean, prefilter=k, return_candidates=True, **kw
+            t1 = time.time()
+        if metrics:
+            t2 = time.time()
+            input_fp = _input_fingerprint(batch, query_id_col, query_vec_col)
+            # n_in counts DISTINCT query ids in; n_accepted counts ids
+            # served (k result rows each) — the delta is the conflicted
+            # ids this batch rejected
+            n_in = qcols.select(query_id_col).distinct().count()
+            _write_batch_metrics(
+                spark,
+                results_dir.rstrip("/") + "_metrics",
+                "ann_serve",
+                batch_id,
+                n_in,
+                n_served_ids,
+                True,
+                t1 - t0,
+                t2 - t1,
+                input_fp,
             )
-            # rank over the ROUNDED score so the stored (adc_score,
-            # vec_id) columns reproduce the stored rank exactly — the
-            # same round-then-rank discipline as _pq_exact_rerank
-            # (review r12: ranking on raw adc but storing 9-decimal
-            # adc_score let the stored order contradict the rank). NOT
-            # a duplicate of the window inside ivf_pq_topk: that one
-            # cuts the top-R candidate set under the RAW score and is
-            # shared with the exact path; this one is the auditable
-            # output order of the adc mode.
-            wq = _W.partitionBy("query_id").orderBy(
-                F.desc("adc_score"), F.asc("_cid")
-            )
-            result = (
-                top.withColumn("adc_score", F.round("adc", 9))
-                .withColumn("rank", F.row_number().over(wq))
-                .filter(F.col("rank") <= k)
-                .select(
-                    "query_id",
-                    F.col("_cid").alias(id_col),
-                    "adc_score",
-                    "rank",
-                )
-            )
-        result = result.withColumn("serve_batch", F.lit(int(batch_id)))
-        t1 = time.time()
-        (
-            result.write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("serve_batch")
-            .parquet(results_dir)
-        )
-        if retain_batches is not None:
-            # anchored to THIS batch id (not the stored max) so a
-            # replayed batch re-runs the identical sweep — idempotent
-            expire_serve_results(
-                spark, results_dir, retain_batches, through_batch=batch_id
-            )
-    else:
-        t1 = time.time()
-    if metrics:
-        t2 = time.time()
-        input_fp = _input_fingerprint(batch, query_id_col, query_vec_col)
-        # n_in counts DISTINCT query ids in; n_accepted counts ids
-        # served (k result rows each) — the delta is the conflicted
-        # ids this batch rejected
-        n_in = qcols.select(query_id_col).distinct().count()
-        _write_batch_metrics(
-            spark,
-            results_dir.rstrip("/") + "_metrics",
-            "ann_serve",
-            batch_id,
-            n_in,
-            n_served_ids,
-            True,
-            t1 - t0,
-            t2 - t1,
-            input_fp,
-        )
+    finally:
+        _release(clean)
 
 
 def expire_serve_results(

@@ -137,3 +137,19 @@ def test_feature_metadata_bundle(spark, network):
         nodes, edges, feats_long, n_random=3, n_random_po=3, seed=1
     )
     assert meta == meta2
+
+
+def test_feature_metadata_constant_feature_is_null(spark, network):
+    """A feature with no variance (every node 0, which is what a plain
+    three-column BED becomes after the missing fill) has no defined
+    correlation: its ChAs and its random interval read null, as R's
+    cor gives NA, instead of failing the job on a zero denominator."""
+    nodes, edges = network
+    flat = spark.createDataFrame(
+        [(f, "FLAT", 0.0) for f in ("1_100_200", "1_300_400", "1_500_600", "2_100_200")],
+        "fragment string, feature string, value double",
+    )
+    meta = feature_metadata(nodes, edges, flat, n_random=2, n_random_po=2, seed=1)
+    assert meta["net"]["Abundance"]["FLAT"] == 0.0
+    assert meta["net"]["ChAs"]["FLAT"] is None
+    assert meta["net"]["Random ChAs interval"]["FLAT"] is None

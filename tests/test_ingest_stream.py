@@ -2860,3 +2860,34 @@ def test_ingest_face_releases_its_pins(spark, face):
         step("compacted replay", b1, 1)
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+@pytest.mark.parametrize("mode", ["exact", "adc"])
+def test_serve_face_releases_its_pin(spark, mode):
+    """The ANN serving face releases its checkpointed query frame once
+    its batch ends: a served batch leaves no persisted RDD behind.
+    Compared by RDD id, as in test_ingest_face_releases_its_pins."""
+    from garden_net_backend_spark.streaming.ingest import (
+        process_ingest_batch_pq_codes,
+        process_serve_batch_ann,
+    )
+
+    corpus, _cents, _assign, cb, cells = _ann_fixture(spark)
+    work = tempfile.mkdtemp(prefix=f"serve_pin_{mode}_")
+    codes_dir, corpus_dir = f"{work}/codes", f"{work}/corpus"
+    try:
+        process_ingest_batch_pq_codes(corpus, 0, codes_dir, cb, cells=cells)
+        corpus.write.parquet(corpus_dir)
+        queries = corpus.filter(F.col("vec_id").isin([0, 17, 34])).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+        before = _persisted_rdd_ids(spark)
+        process_serve_batch_ann(
+            queries, 0, f"{work}/results", cells, cb, codes_dir,
+            corpus_dir if mode == "exact" else None, k=5, nprobe=2, mode=mode,
+        )
+        left = _persisted_rdd_ids(spark) - before
+        assert not left, f"serve {mode}: {len(left)} RDDs left persisted"
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

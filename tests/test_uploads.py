@@ -80,6 +80,20 @@ def test_process_upload_writes_results_and_status(spark, network, tmp_path):
     assert (st["state"], st["percentage"]) == ("SUCCESS", 100)
 
 
+def test_process_upload_plain_bed3_succeeds(spark, network, tmp_path):
+    """A plain three-column BED has no signal column, so every node
+    reads 0 after the missing fill. The upload still succeeds, with a
+    null ChAs for the constant feature."""
+    nodes, edges = network
+    out = str(tmp_path / "out")
+    p = _mkfile(str(tmp_path), "plain.bed", ["chr1\t150\t350", "chr1\t380\t550"])
+    meta = process_upload(spark, p, nodes, edges, out, n_random=1, n_random_po=2)
+    assert meta["net"]["ChAs"]["plain"] is None
+    with open(os.path.join(out, "_status", "plain.status.json")) as fh:
+        st = json.load(fh)
+    assert (st["state"], st["percentage"]) == ("SUCCESS", 100)
+
+
 def test_process_upload_failure_status(spark, network, tmp_path):
     nodes, edges = network
     out = str(tmp_path / "out")

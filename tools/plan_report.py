@@ -179,14 +179,10 @@ CASES = [
         "broadcast lookups, one (gate, query_id) window/agg — the arm "
         "plans stay concurrent under the union while ~3 pipelines of "
         "fixed stage overhead disappear (quiet A/B row-identical, "
-        "8.6-12.4s -> 8.5-8.8s). The pq/ivfpq arms keep their per-arm "
-        "re-rank tails ON PURPOSE (judge r11 task 5 measured, not "
-        "wired: the shared candidate-union tail — ann_shared_rerank, "
-        "equivalence-tested — is ~1s slower at this scale because its "
-        "eager barrier serializes the cross-arm stage concurrency this "
-        "lazy union exploits, while the fetch it dedupes costs ~0.2s "
-        "on a 2k-row corpus; it is the serving-scale shape, where the "
-        "candidate vector fetch dominates). "
+        "8.6-12.4s -> 8.5-8.8s). Each arm ends in its own exact "
+        "re-rank tail, so the arm plans stay concurrent under the "
+        "union (a shared candidate-union tail measured ~1s slower at "
+        "this scale and was deleted). "
         "The BroadcastNestedLoopJoins are all the nprobe centroid "
         "probes — a 32-row centroid dim broadcast keylessly against the "
         "10-query frame (dim×|Q|, never data×data; the ivf/ivfpq probe "
