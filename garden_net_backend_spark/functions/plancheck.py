@@ -29,8 +29,54 @@ def plan_string(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+# The node counts ROADMAP's plan fingerprint records: shuffles,
+# broadcasts, nested-loop joins, window operators and leaf scans.
+FINGERPRINT_NODES = (
+    "Exchange",
+    "BroadcastExchange",
+    "BroadcastNestedLoopJoin",
+    "Window",
+    "Scan",
+)
+
+# The operator name that begins a plan-tree line: after the tree
+# drawing (``+-``, ``:-``, ``:``, indentation) and an optional
+# whole-stage-codegen marker ``*(n)``.
+_NODE = re.compile(r"^[\s:+\-|]*(?:\*\(\d+\)\s+)?([A-Za-z]\w*)")
+
+
+def _plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """``(operator name, line)`` of every node of a plan string, in
+    print order. A name is read only as the token that begins a
+    plan-tree line, so a column or literal that spells an operator
+    name (``Window_x``) is never counted."""
+    return [
+        (m.group(1), ln)
+        for ln in plan.splitlines()
+        if (m := _NODE.match(ln))
+    ]
+
+
+def _is_node(name: str, node: str) -> bool:
+    # every leaf scan spells its name with a "Scan" suffix (FileScan,
+    # LocalTableScan, InMemoryTableScan) or as "Scan <source>"
+    return node == name or (name == "Scan" and node.endswith("Scan"))
+
+
+def plan_fingerprint(df: DataFrame) -> dict[str, int]:
+    """Counts of the :data:`FINGERPRINT_NODES` operators in the
+    pre-execution physical plan of ``df`` — the structural signature
+    two builds of one query are compared by. A ``ReusedExchange``
+    reads an earlier shuffle and counts as no Exchange."""
+    nodes = _plan_nodes(plan_string(df))
+    return {
+        name: sum(_is_node(name, n) for n, _ in nodes)
+        for name in FINGERPRINT_NODES
+    }
+
+
 def count_exchanges(plan: str) -> int:
-    return len(re.findall(r"\bExchange\b", plan))
+    return sum(_is_node("Exchange", n) for n, _ in _plan_nodes(plan))
 
 
 def assert_scalable_plan(
@@ -50,10 +96,11 @@ def assert_scalable_plan(
         ["BroadcastNestedLoopJoin"] if forbid_bnlj else []
     )
     for op in hazards:
-        if op in plan:
-            line = next(
-                (ln.strip()[:160] for ln in plan.splitlines() if op in ln), op
-            )
+        line = next(
+            (ln.strip()[:160] for n, ln in _plan_nodes(plan) if _is_node(op, n)),
+            None,
+        )
+        if line is not None:
             raise ScaleHazard(f"forbidden operator {op} in plan: {line}")
     if max_exchanges is not None:
         n = count_exchanges(plan)

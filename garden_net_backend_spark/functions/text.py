@@ -20,6 +20,14 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
+def whitespace_tokens(text: Column) -> Column:
+    """Whitespace tokens: split on ``\\s+`` of the trimmed text, empty
+    tokens dropped (empty or whitespace-only text → ``[]``, NULL →
+    NULL). The one tokenizer of the dedup, chunking, mixing, BPE and
+    quality operators."""
+    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
+
+
 def token_count(text: Column) -> Column:
     """Whitespace token count (size of split on ``\\s+`` of trimmed text;
     empty text → 0)."""
@@ -139,7 +147,7 @@ def gopher_rules(text: Column) -> Column:
     ratios rounded to 9 decimals so the SQL oracle compares exactly.
     Zero-word documents fail ``keep`` with 0-valued ratios.
     """
-    toks = F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(text)
     nw = F.size(toks)
     nw_safe = F.greatest(nw, F.lit(1))
     # length minus whitespace-count == length of the whitespace-stripped
@@ -293,9 +301,7 @@ def chunk_tokens(
     if overlap >= max_tokens:
         raise ValueError("overlap must be < max_tokens")
     stride = max_tokens - overlap
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = whitespace_tokens(F.col(text_col))
     # chunk starts: 0, stride, 2*stride, … while start < n_tokens.
     # Filter on the TOKEN count, not trim(text): F.trim strips only
     # spaces, so a "\t"-only doc would pass a text filter with zero
@@ -395,9 +401,7 @@ def repetition_topgram(
     doc; no window sort. Documents with fewer than ``n`` tokens emit
     nothing.
     """
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = whitespace_tokens(F.col(text_col))
     base = df.filter(F.trim(F.col(text_col)) != "").select(
         F.col(id_col),
         F.length(text_col).alias("_nchars"),

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import whitespace_tokens
+
 _EOW = "</w>"
 
 
@@ -69,12 +71,7 @@ def train_bpe_merges(
     """
     sized = docs.select(
         F.col(text_col).alias("_text"),
-        F.size(
-            F.filter(
-                F.split(F.trim(F.col(text_col)), r"\s+"),
-                lambda t: t != "",
-            )
-        ).alias("_n"),
+        F.size(whitespace_tokens(F.col(text_col))).alias("_n"),
         F.xxhash64(F.col(id_col), F.lit(seed)).alias("_h"),
     ).filter(F.col("_n") > 0)
     mean_n = sized.agg(F.avg("_n")).collect()[0][0]

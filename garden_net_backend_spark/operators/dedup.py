@@ -1,18 +1,22 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families, each a different cost/recall point (north-star extension;
-designed for the ~100 TB regime, exercised on the `documents` table):
+Six families, each a different cost/recall point (designed for the
+~100 TB regime, exercised on the `documents` table). Every family has
+the same shape: candidates, then ONE exact check — a verify for the
+pair emitters, a first-occurrence index for the cutters — then, for
+the cutters, ONE per-document rebuild.
 
 - exact:        hash-groupBy on normalized text — one shuffle.
-- n-gram Jaccard: exact set-similarity via shingle inverted index —
-                deterministic, oracle-checkable; O(Σ pairs sharing a
-                shingle), with a document-frequency cap to kill the
-                quadratic hot-shingle blowup.
-- MinHash+LSH:  probabilistic candidate generation (band-hash equi-join)
-                + exact verification — the scale path: cost linear in
-                docs + candidates, never all-pairs.
-- SimHash:      64-bit fingerprint; near-dups = small Hamming distance,
-                banded for blocking.
+- n-gram Jaccard: exact set-similarity. Candidates come from a shingle
+                inverted index (``ngram_jaccard_pairs``, counting
+                join) or from rare-shingle prefixes
+                (``ngram_jaccard_pairs_prefix``, AllPairs/PPJoin).
+- MinHash+LSH:  candidates from banded signatures (band-hash
+                equi-join), the scale path: cost linear in docs +
+                candidates, never all-pairs. The incremental kernel
+                probes a stored banded index.
+- SimHash:      64-bit fingerprint; candidates share a 16-bit block,
+                verified by Hamming distance.
 - embedding cosine: near-dup = cosine ≥ τ over an embedding column —
                 implemented in similarity.py (`embedding_dup_pairs`
                 exact baseline; `embedding_dup_pairs_lsh` LSH-blocked
@@ -22,6 +26,24 @@ designed for the ~100 TB regime, exercised on the `documents` table):
                 `excise_duplicate_spans` first-occurrence-keeps
                 removal) — window fingerprinting, the Spark-shaped
                 answer to the single-node suffix-array formulation.
+- line:         C4/CCNet-style duplicated lines (`line_dedup`).
+
+The shared steps, each written once:
+
+- :func:`_verify_jaccard` — the exact Jaccard check of candidate
+  pairs (prefix, MinHash batch and incremental);
+- :func:`_first_occurrence_index` / :func:`_merge_index` — the stored
+  ``(key, n_occurrences, first_id, first_pos)`` index of the window
+  and line families, built from a batch and merged with a shard's;
+- :func:`_mark_first` — the same first occurrence as window
+  aggregates, marking each row (batch and incremental cutters);
+- :func:`_joined_text` / :func:`_doc_rows` — the per-document rebuild
+  of the cutters, anchored on the input so every document (NULL text
+  included) gets exactly one row.
+
+Batch and incremental kernels stay separate: the batch kernels serve
+whole corpora and first ingests, the incremental ones probe a stored
+index with a shard (reuse of stored state across successive requests).
 
 All hashing is ``xxhash64`` seeded — deterministic across runs,
 partitionings, and cluster sizes.
@@ -33,7 +55,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.partitioning import ensure_min_partitions
-from ..functions.text import with_shingles
+from ..functions.text import whitespace_tokens, with_shingles
 
 # Mersenne prime 2^31-1: modulus for the MinHash universal-hash family.
 # 31-bit (not 61-bit) so x*a+b stays within a 64-bit long — Spark runs
@@ -41,6 +63,10 @@ from ..functions.text import with_shingles
 # space is ample for shingle minhashing (collisions only blur Jaccard
 # estimates, and candidates are exactly verified afterwards).
 _MERSENNE = (1 << 31) - 1
+
+# SimHash blocking: 4 chunks of 16 bits. Pigeonhole: Hamming ≤ 3 ⇒
+# some chunk equal, so blocking recall at the default bound is exact.
+_SIMHASH_BLOCKS = 4
 
 
 def _local_checkpoint(df: DataFrame) -> DataFrame:
@@ -55,6 +81,48 @@ def normalize_text(col):
     """Canonical text form for exact dedup: lower, collapse whitespace,
     strip."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+
+
+def _verify_jaccard(
+    cands: DataFrame, grams: DataFrame, threshold: float
+) -> DataFrame:
+    """The exact check of every pair emitter: candidate pairs
+    ``(id_a, id_b)`` joined on both sides to ``grams`` — an ``(id,
+    array)`` frame of distinct grams per doc — → ``(id_a, id_b,
+    jaccard)`` with ``|A∩B| / |A∪B| ≥ threshold``, rounded to 9
+    places."""
+    ga = grams.toDF("id_a", "_ga")
+    gb = grams.toDF("id_b", "_gb")
+    return (
+        cands.join(ga, "id_a")
+        .join(gb, "id_b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("_ga", "_gb"))
+            / F.size(F.array_union("_ga", "_gb")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 9).alias("jaccard"))
+    )
+
+
+def _hashed_grams(grams: DataFrame, id_col) -> DataFrame:
+    """``(id_col, _grams[, _hg])`` → ``(id, _hg)``: the xxhash64 of each
+    gram, taken from a precomputed ``_hg`` column when the caller's
+    shared checkpoint carries one.
+
+    Verifying over hashed arrays: intersecting arrays of longs is far
+    cheaper than intersecting n-gram strings (candidate count × avg doc size
+    dominates the verify), and |A∩B| over 64-bit-hashed distinct
+    shingles equals the string intersection up to a 2⁻⁶⁴ per-pair
+    collision — the same fingerprint trade as the window dedup; sizes
+    are exact either way."""
+    hg = (
+        F.col("_hg")
+        if "_hg" in grams.columns
+        else F.transform(F.col("_grams"), lambda g: F.xxhash64(g))
+    )
+    return grams.select(id_col, hg.alias("_hg"))
 
 
 def exact_dedup(
@@ -82,7 +150,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 5,
     threshold: float = 0.5,
-    max_shingle_df: int | None = None,
     shingle: str = "char",
     hash_keys: bool = False,
 ) -> DataFrame:
@@ -108,10 +175,8 @@ def ngram_jaccard_pairs(
     document frequency. Small-vocabulary corpora make char n-grams
     near-universal (measured: 26× slower than word trigrams on the
     synthetic documents table at sf0.1); prefer word shingles there,
-    and/or set ``max_shingle_df`` to drop boilerplate shingles with
-    document frequency above the cap (changes the similarity measure
-    deterministically; both sides of any comparison must use the same
-    cap).
+    or :func:`ngram_jaccard_pairs_prefix`, whose candidates skip the
+    hot shingles with the same output.
     """
     sh = with_shingles(
         ensure_min_partitions(docs), text_col, "_grams", n, shingle
@@ -119,22 +184,13 @@ def ngram_jaccard_pairs(
     if hash_keys:
         sh = sh.select("_id", F.xxhash64("_sh").alias("_sh"))
     # round 13 (guide §2.4): the inverted-index self-join plus the size
-    # aggregate consume this exploded frame three times (four with the
-    # df-cap), and Spark plans each consumer as its own full
-    # text→shingle→explode pipeline (no exchange reuse across self-join
-    # sides). Checkpoint the (id, shingle) rows once — corpus-token-
-    # sized blocks, the same materialized-inverted-index trade every
-    # posting-list system makes; dropped by the ContextCleaner with the
-    # frame.
+    # aggregate consume this exploded frame three times, and Spark
+    # plans each consumer as its own full text→shingle→explode pipeline
+    # (no exchange reuse across self-join sides). Checkpoint the (id,
+    # shingle) rows once — corpus-token-sized blocks, the same
+    # materialized-inverted-index trade every posting-list system
+    # makes; dropped by the ContextCleaner with the frame.
     sh = sh.localCheckpoint(eager=True)
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("_sh")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_shingle_df)
-            .select("_sh")
-        )
-        sh = sh.join(hot, "_sh", "left_anti")
     sizes = sh.groupBy("_id").agg(F.count("*").alias("_sz"))
     a = sh.select(F.col("_id").alias("id_a"), "_sh")
     b = sh.select(F.col("_id").alias("id_b"), "_sh")
@@ -144,7 +200,7 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("_inter"))
     )
-    out = (
+    return (
         inter.join(sizes.withColumnsRenamed({"_id": "id_a", "_sz": "_sza"}), "id_a")
         .join(sizes.withColumnsRenamed({"_id": "id_b", "_sz": "_szb"}), "id_b")
         .withColumn(
@@ -155,7 +211,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 9).alias("jaccard"))
     )
-    return out
 
 
 def ngram_jaccard_pairs_prefix(
@@ -182,15 +237,15 @@ def ngram_jaccard_pairs_prefix(
     touches only rare-shingle collisions while the hot boilerplate
     shingles sit outside every prefix. A length filter
     (τ·|a| ≤ |b| ≤ |a|/τ) prunes candidates before verification, and
-    candidates are verified with the exact set intersection — recall
-    is provably 100%, precision exact, so callers can swap this in for
-    the baseline emitter with identical results (property-tested).
+    candidates are verified with the exact set intersection
+    (:func:`_verify_jaccard` over hashed grams) — recall is provably
+    100%, precision exact, so callers can swap this in for the
+    baseline emitter with identical results (property-tested).
 
     Extra cost vs the baseline: one df aggregation and one per-doc
     window sort (both combinable / spill-backed); the win is the
-    candidate set collapsing from Σ df² to Σ prefix-df². The df-cap
-    knob on the baseline kills hot shingles too but CHANGES the
-    measure; prefix filtering does not.
+    candidate set collapsing from Σ df² to Σ prefix-df², without
+    changing the measure.
 
     Regime (measured on a boilerplate-skewed sf0.1 corpus, 80% of
     docs sharing a 32-token header/footer): at τ=0.8 — the practical
@@ -204,24 +259,22 @@ def ngram_jaccard_pairs_prefix(
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
     # ``grams``: optional precomputed (id_col, _grams) distinct-shingle
-    # frame (with_shingles output, usually checkpointed) — lets a suite
-    # running several emitters over one corpus pay the text→shingle
-    # normalization once instead of per arm. CONTRACT: when grams is
-    # given, ``n``/``shingle`` are IGNORED — the frame must have been
-    # built with the settings the caller intends, or the Jaccard
-    # values are silently computed over the wrong shingle measure
+    # frame (with_shingles output, usually checkpointed, optionally
+    # with a hashed ``_hg`` column) — lets a suite running several
+    # emitters over one corpus pay the text→shingle normalization once
+    # instead of per arm. CONTRACT: when grams is given, ``n``/
+    # ``shingle`` are IGNORED — the frame must have been built with the
+    # settings the caller intends, or the Jaccard values are silently
+    # computed over the wrong shingle measure
     if grams is None:
         grams = with_shingles(
             ensure_min_partitions(docs), text_col, "_grams", n, shingle
-        ).select(F.col(id_col).alias("_id"), "_grams")
-    else:
-        grams = grams.select(
-            F.col(id_col).alias("_id"),
-            "_grams",
-            # reuse a precomputed hashed-gram column when the caller's
-            # shared checkpoint carries one (round 13)
-            *(["_hg"] if "_hg" in grams.columns else []),
         )
+    grams = grams.select(
+        F.col(id_col).alias("_id"),
+        "_grams",
+        *(["_hg"] if "_hg" in grams.columns else []),
+    )
     sh = grams.select("_id", F.explode("_grams").alias("_sh"))
     dfreq = sh.groupBy("_sh").agg(F.count("*").alias("_df"))
     ranked = sh.join(dfreq, "_sh")
@@ -251,32 +304,7 @@ def ngram_jaccard_pairs_prefix(
         .select("id_a", "id_b")
         .distinct()
     )
-    # verify over HASHED gram arrays: array_intersect on longs is far
-    # cheaper than on n-gram strings (the candidate count × avg doc
-    # size dominates this stage), and |A∩B| over 64-bit-hashed
-    # distinct shingles equals the string intersection up to a 2⁻⁶⁴
-    # per-pair collision — the same fingerprint trade as the window
-    # dedup above; sizes are exact either way
-    if "_hg" in grams.columns:
-        hgrams = grams.select("_id", "_hg")
-    else:
-        hgrams = grams.select(
-            "_id",
-            F.transform(F.col("_grams"), lambda g: F.xxhash64(g)).alias("_hg"),
-        )
-    ga = hgrams.withColumnsRenamed({"_id": "id_a", "_hg": "_ga"})
-    gb = hgrams.withColumnsRenamed({"_id": "id_b", "_hg": "_gb"})
-    return (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_ga", "_gb"))
-            / F.size(F.array_union("_ga", "_gb")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 9).alias("jaccard"))
-    )
+    return _verify_jaccard(cands, _hashed_grams(grams, "_id"), threshold)
 
 
 def minhash_signatures(
@@ -317,13 +345,14 @@ def minhash_signatures(
     if grams is None:
         grams = with_shingles(
             ensure_min_partitions(docs), text_col, "_grams", ngram, shingle
-        ).select(F.col(id_col).alias("id"), "_grams")
-    else:
-        grams = grams.select(F.col(id_col).alias("id"), "_grams")
-    sh = grams.select(
-        "id", F.explode("_grams").alias("_g")
-    ).select(
-        "id", F.pmod(F.xxhash64(F.col("_g"), F.lit(seed)), F.lit(_MERSENNE)).alias("_x")
+        )
+    sh = (
+        grams.select(F.col(id_col).alias("id"), "_grams")
+        .select("id", F.explode("_grams").alias("_g"))
+        .select(
+            "id",
+            F.pmod(F.xxhash64(F.col("_g"), F.lit(seed)), F.lit(_MERSENNE)).alias("_x"),
+        )
     )
     mins = sh.groupBy("id").agg(
         *[
@@ -409,53 +438,23 @@ def minhash_dedup_pairs(
     min-aggregates per side — Spark does not reuse the exchange across
     self-join sides); the |docs|-row signature frame is checkpointed
     once instead. Verification intersects xxhash64-hashed shingle
-    arrays rather than the n-gram strings — 8-byte fixed elements
-    instead of variable-length text, the same fingerprint trade
-    :func:`ngram_jaccard_pairs_prefix` has always used (identical
-    Jaccard up to a ~2⁻⁶⁴ per-pair collision; sizes are exact either
-    way). ``checkpoint`` takes that signature checkpoint.
+    arrays (:func:`_hashed_grams`), the same trade as
+    :func:`ngram_jaccard_pairs_prefix`. ``checkpoint`` takes that
+    signature checkpoint.
     """
-    rows_per_band = num_hashes // bands
     sigs = checkpoint(minhash_signatures(
         docs, text_col, id_col, num_hashes, ngram, seed, shingle, grams=grams
     ))
-    cands = minhash_lsh_candidates(sigs, bands, rows_per_band)
+    cands = minhash_lsh_candidates(sigs, bands, num_hashes // bands)
     if grams is None:
-        shing = with_shingles(docs, text_col, "_grams", ngram, shingle).select(
-            F.col(id_col).alias("id"), "_grams"
-        )
-    else:
-        shing = grams.select(
-            F.col(id_col).alias("id"),
-            *(["_grams"] if "_hg" not in grams.columns else ["_hg"]),
-        )
-    if "_hg" not in shing.columns:
-        shing = shing.select(
-            "id",
-            F.transform(F.col("_grams"), lambda g: F.xxhash64(g)).alias("_hg"),
-        )
-    else:
-        shing = shing.select("id", "_hg")
-    ga = shing.withColumnsRenamed({"id": "id_a", "_hg": "_ga"})
-    gb = shing.withColumnsRenamed({"id": "id_b", "_hg": "_gb"})
-    verified = (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_ga", "_gb"))
-            / F.size(F.array_union("_ga", "_gb")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 9).alias("jaccard"))
-    )
-    return verified
+        grams = with_shingles(docs, text_col, "_grams", ngram, shingle)
+    shing = _hashed_grams(grams, F.col(id_col).alias("id"))
+    return _verify_jaccard(cands, shing, threshold)
 
 
 def minhash_dedup_incremental(
     new_docs: DataFrame,
     corpus_docs: DataFrame,
-    corpus_sigs: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
@@ -472,22 +471,16 @@ def minhash_dedup_incremental(
     assumed handled when the corpus was ingested — they are filtered
     out, not recomputed).
 
-    This is the actual 100 TB ingest workflow: signatures are the
-    stored index (64 longs per doc — pass ``corpus_sigs`` from the
-    signature table written at ingest), so an incoming shard costs
-    shingling the SHARD only, one band join against the corpus index,
-    and exact verification of candidates. Without ``corpus_sigs`` the
-    corpus is re-signed (correct, but the full-rescan cost this
-    operator exists to avoid — a warning-grade fallback for tests and
-    first ingest). Signatures are a pure function of (text, seed), so
-    index reuse is bit-safe across runs.
-
-    ``corpus_bands``: the pre-BANDED index (``band_signatures``
-    output — (id, band, bhash)) — the deepest reuse tier: the corpus
-    side skips even the per-batch band hashing, and when the table is
+    This is the actual 100 TB ingest workflow: the stored index is the
+    pre-BANDED corpus signatures (``band_signatures`` output — (id,
+    band, bhash)), passed as ``corpus_bands``, so an incoming shard
+    costs shingling the SHARD only, one band join against the corpus
+    index, and exact verification of candidates; when the table is
     stored partitioned by ``band`` the probe join partition-prunes.
-    Takes precedence over ``corpus_sigs`` for candidate generation
-    (both may be passed; they must describe the same corpus).
+    Without ``corpus_bands`` the corpus is re-signed (correct, but the
+    full-rescan cost this operator exists to avoid — a fallback for
+    tests and first ingest). Signatures are a pure function of (text,
+    seed), so index reuse is bit-safe across runs.
 
     Doc ids must be globally unique across shard and corpus.
     """
@@ -498,11 +491,13 @@ def minhash_dedup_incremental(
     if corpus_bands is not None:
         corpus_banded = corpus_bands.select("id", "band", "bhash")
     else:
-        if corpus_sigs is None:
-            corpus_sigs = minhash_signatures(
+        corpus_banded = band_signatures(
+            minhash_signatures(
                 corpus_docs, text_col, id_col, num_hashes, ngram, seed, shingle
-            )
-        corpus_banded = band_signatures(corpus_sigs, bands, rows_per_band)
+            ),
+            bands,
+            rows_per_band,
+        )
     banded = corpus_banded.withColumn("_new", F.lit(False)).unionByName(
         band_signatures(new_sigs, bands, rows_per_band).withColumn(
             "_new", F.lit(True)
@@ -518,7 +513,8 @@ def minhash_dedup_incremental(
     )
     # exact verification shingles ONLY candidate members (semi-join
     # pushdown) — corpus text is touched for the few docs a band hit,
-    # not re-scanned
+    # not re-scanned. Unlike the batch emitters it verifies over the
+    # gram STRINGS, not their hashes.
     cand_ids = (
         cands.select(F.col("id_a").alias(id_col))
         .union(cands.select(F.col("id_b").alias(id_col)))
@@ -530,21 +526,9 @@ def minhash_dedup_incremental(
         .join(cand_ids, id_col, "left_semi")
     )
     shing = with_shingles(union_docs, text_col, "_grams", ngram, shingle).select(
-        F.col(id_col).alias("id"), "_grams"
+        id_col, "_grams"
     )
-    ga = shing.withColumnsRenamed({"id": "id_a", "_grams": "_ga"})
-    gb = shing.withColumnsRenamed({"id": "id_b", "_grams": "_gb"})
-    return (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_ga", "_gb"))
-            / F.size(F.array_union("_ga", "_gb")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 9).alias("jaccard"))
-    )
+    return _verify_jaccard(cands, shing, threshold)
 
 
 def simhash(
@@ -569,7 +553,9 @@ def simhash(
     conditional-sum aggregates (map-side combinable), then assemble the
     fingerprint from the 64 signs. (The per-row higher-order-function
     form re-evaluates the token pipeline per bit — measured ~10× slower.)
-    Docs with zero tokens keep fingerprint 0 via the left join back.
+    Docs with zero tokens — NULL, empty and whitespace-only text — keep
+    fingerprint 0 via the left join back, so :func:`simhash_near_pairs`
+    pairs them with each other at Hamming 0.
     """
     if hash_fn == "xxhash64":
         h64 = F.xxhash64(F.col("_t"), F.lit(seed))
@@ -582,9 +568,7 @@ def simhash(
         raise ValueError(f"unknown hash_fn: {hash_fn!r}")
     th = ensure_min_partitions(docs).select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
-        ).alias("_t"),
+        F.explode(whitespace_tokens(F.lower(F.col(text_col)))).alias("_t"),
     ).select("id", h64.alias("_h"))
     # sign of Σ(±1) per bit == (2·set-bit-count > n_tokens): sum raw bit
     # extractions + one count instead of 64 branched ±1 sums (branchless
@@ -612,18 +596,17 @@ def simhash(
     )
 
 
-def simhash_near_pairs(
-    fingerprints: DataFrame, max_hamming: int = 3, blocks: int = 4
-) -> DataFrame:
-    """Near-dup pairs by SimHash: block on ``blocks`` 16-bit chunks
-    (pigeonhole: hamming ≤ blocks−1 ⇒ some chunk equal; with ≤3 and 4
-    blocks recall is exact), verify Hamming ≤ max_hamming →
+def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs by SimHash: block on ``_SIMHASH_BLOCKS`` (4)
+    16-bit chunks (pigeonhole: hamming ≤ 3 ⇒ some chunk equal, so
+    recall is exact up to ``max_hamming=3``; a larger bound only finds
+    the pairs that share a chunk), verify Hamming ≤ max_hamming →
     (id_a, id_b, hamming)."""
-    width = 64 // blocks
+    width = 64 // _SIMHASH_BLOCKS
     chunks = F.array(
         *[
             F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit((1 << width) - 1))
-            for b in range(blocks)
+            for b in range(_SIMHASH_BLOCKS)
         ]
     )
     chunked = fingerprints.select(
@@ -644,6 +627,109 @@ def simhash_near_pairs(
     )
 
 
+def _first_occurrence_index(
+    rows: DataFrame, key: str, counts: str | None = None
+) -> DataFrame:
+    """The stored index of the window and line families: ``(key, id,
+    pos)`` rows grouped by ``key`` → ``(key, n_occurrences, first_id,
+    first_pos)``, how often each key occurs and its first occurrence
+    (min ``(id, pos)``). With ``counts`` the rows are partial index
+    rows and that column is summed instead of counting rows (see
+    :func:`_merge_index`)."""
+    n = F.count("*") if counts is None else F.sum(counts)
+    return (
+        rows.groupBy(key)
+        .agg(
+            n.alias("n_occurrences"),
+            F.min(F.struct("id", "pos")).alias("_first"),
+        )
+        .select(
+            key,
+            "n_occurrences",
+            F.col("_first.id").alias("first_id"),
+            F.col("_first.pos").alias("first_pos"),
+        )
+    )
+
+
+def _merge_index(index: DataFrame, shard_index: DataFrame, key: str) -> DataFrame:
+    """A stored index merged with a shard's: occurrence counts add up,
+    the earlier first occurrence wins. A union + re-aggregate on
+    ``key`` — corpus-index-sized, so store the index BUCKETED by
+    ``key``: both inputs then arrive co-partitioned and the
+    re-aggregate runs shuffle-free; without bucketing each merge pays
+    one full index shuffle."""
+    return _first_occurrence_index(
+        index.unionByName(shard_index).select(
+            key,
+            "n_occurrences",
+            F.col("first_id").alias("id"),
+            F.col("first_pos").alias("pos"),
+        ),
+        key,
+        counts="n_occurrences",
+    )
+
+
+def _mark_first(rows: DataFrame, keys: list[str], *cols) -> DataFrame:
+    """``cols`` of ``(id, pos, *keys)`` rows, plus per row: ``_n``, how
+    many rows share its ``keys``; ``_first``, their first occurrence
+    (min ``(id, pos)`` struct); ``_is_first``, whether the row is it.
+
+    Window aggregates over ``partitionBy(keys)`` (round 13, guide
+    §2.2/§2.4): a groupBy + equi-join back consumes the rows twice,
+    and Spark plans each consumer as its own full scan of the rows
+    (no exchange reuse across self-join sides); the window reads them
+    once, behind one Exchange on the keys."""
+    w = W.partitionBy(*keys)
+    return rows.select(
+        *cols,
+        "id",
+        "pos",
+        F.count("*").over(w).alias("_n"),
+        F.min(F.struct("id", "pos")).over(w).alias("_first"),
+    ).withColumn(
+        "_is_first",
+        (F.col("_first.id") == F.col("id"))
+        & (F.col("_first.pos") == F.col("pos")),
+    )
+
+
+def _joined_text(parts, field: str, joiner: str):
+    """The rebuild of one document: the ``field`` of its collected
+    ``parts`` structs, in order of their first field (the position),
+    joined by ``joiner`` → ``clean_text``. ``collect_list`` skips NULL
+    parts, so a part masked to NULL is left out."""
+    return F.array_join(
+        F.transform(F.array_sort(F.collect_list(parts)), lambda s: s[field]),
+        joiner,
+    ).alias("clean_text")
+
+
+def _doc_rows(
+    anchor: DataFrame, per_doc: DataFrame, id_col: str, unit: str
+) -> DataFrame:
+    """The output rows of the cutting families → ``(id_col,
+    clean_text, n_kept_<unit>, n_cut_<unit>)``, one per row of
+    ``anchor`` (``id`` and the doc's unit count ``_n``, which may come
+    with ``per_doc`` instead), left-joined to ``per_doc`` (``id``,
+    ``clean_text``, ``n_kept_<unit>``).
+
+    Anchored on the INPUT documents, not on their exploded units: a
+    NULL text explodes to zero units, and anchoring on the explode
+    silently dropped such docs from the output — and therefore from
+    the ingest faces' accepted corpora (review r10 pass 2). A doc
+    without kept units gets ``clean_text`` "" and a NULL count is 0,
+    so NULL-text docs emit ``("", 0, 0)``, same as empty docs."""
+    n_kept = F.coalesce(f"n_kept_{unit}", F.lit(0))
+    return anchor.join(per_doc, "id", "left").select(
+        F.col("id").alias(id_col),
+        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
+        n_kept.cast("long").alias(f"n_kept_{unit}"),
+        (F.coalesce("_n", F.lit(0)) - n_kept).cast("long").alias(f"n_cut_{unit}"),
+    )
+
+
 def _window_fingerprints(
     docs: DataFrame,
     text_col: str,
@@ -659,11 +745,9 @@ def _window_fingerprints(
     projection, so the doc's hash array is never duplicated per window
     row; cost is O(tokens · L) hashing, embarrassingly parallel, zero
     shuffle."""
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
     base = ensure_min_partitions(docs).select(
-        F.col(id_col).alias("id"), F.explode(F.array(toks)).alias("_toks")
+        F.col(id_col).alias("id"),
+        F.explode(F.array(whitespace_tokens(F.col(text_col)))).alias("_toks"),
     )
     # per-token hashes behind a second Generate barrier so projection
     # collapsing cannot re-inline the token split per hash element
@@ -684,49 +768,6 @@ def _window_fingerprints(
     return hbase.select("id", F.posexplode(wkeys).alias("pos", "wkey"))
 
 
-def _dup_window_positions(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    min_tokens: int,
-    seed: int,
-) -> DataFrame:
-    """Positions of every DUPLICATED ``min_tokens``-token window →
-    ``(id, pos, first_id, first_pos)`` where ``(first_id, first_pos)``
-    is the corpus-wide canonical first occurrence (min by (id, pos))
-    of that window's content.
-
-    Corpus-wide occurrence count and first occurrence run as WINDOW
-    aggregates over ``partitionBy(wkey)`` (round 13, guide §2.2/§2.4):
-    the old groupBy + equi-join-back consumed the fingerprint frame
-    twice, and Spark planned each consumer as its own full token-hash
-    window scan (the dominant cost; no exchange reuse across self-join
-    sides). One scan + one Exchange on ``wkey`` now — identical rows
-    (the join kept exactly the wins rows of >1-occurrence keys, which
-    is the ``_cnt > 1`` filter).
-    A fingerprint collision (2⁻⁶⁴ per window pair) would merge two
-    window groups — the standard fingerprint trade, same as the LSH
-    band hashing above.
-    """
-    wins = _window_fingerprints(docs, text_col, id_col, min_tokens, seed)
-    wk = W.partitionBy("wkey")
-    return (
-        wins.select(
-            "id",
-            "pos",
-            F.count("*").over(wk).alias("_cnt"),
-            F.min(F.struct("id", "pos")).over(wk).alias("_first"),
-        )
-        .filter(F.col("_cnt") > 1)
-        .select(
-            "id",
-            "pos",
-            F.col("_first.id").alias("first_id"),
-            F.col("_first.pos").alias("first_pos"),
-        )
-    )
-
-
 def duplicated_window_positions(
     docs: DataFrame,
     text_col: str = "text",
@@ -734,13 +775,34 @@ def duplicated_window_positions(
     min_tokens: int = 50,
     seed: int = 42,
 ) -> DataFrame:
-    """Public precompute seam for :func:`duplicated_spans` /
-    :func:`excise_duplicate_spans`: both consume the same duplicated-
-    window position frame, so a caller running detection AND excision
-    (the normal pipeline) should compute it once, ``persist()`` it, and
-    pass it to both via ``positions=`` — the fingerprint scan is the
-    dominant cost and runs once instead of per consumer."""
-    return _dup_window_positions(docs, text_col, id_col, min_tokens, seed)
+    """Positions of every DUPLICATED ``min_tokens``-token window →
+    ``(id, pos, first_id, first_pos)`` where ``(first_id, first_pos)``
+    is the corpus-wide canonical first occurrence (min by (id, pos))
+    of that window's content — marked by :func:`_mark_first` over
+    ``wkey``, one scan and one Exchange.
+
+    The precompute seam of :func:`duplicated_spans` /
+    :func:`excise_duplicate_spans`: both consume this frame, so a
+    caller running detection AND excision (the normal pipeline)
+    should compute it once, checkpoint it, and pass it to both via
+    ``positions=`` — the fingerprint scan is the dominant cost and
+    runs once instead of per consumer.
+
+    A fingerprint collision (2⁻⁶⁴ per window pair) would merge two
+    window groups — the standard fingerprint trade, same as the LSH
+    band hashing above.
+    """
+    wins = _window_fingerprints(docs, text_col, id_col, min_tokens, seed)
+    return (
+        _mark_first(wins, ["wkey"])
+        .filter(F.col("_n") > 1)
+        .select(
+            "id",
+            "pos",
+            F.col("_first.id").alias("first_id"),
+            F.col("_first.pos").alias("first_pos"),
+        )
+    )
 
 
 def duplicated_spans(
@@ -763,10 +825,9 @@ def duplicated_spans(
     distinct documents. The reference suffix-array formulation is a
     single-node sort over the whole corpus; the Spark-first
     re-expression is window fingerprinting — linear scan, one
-    map-side-combinable count per fingerprint, one equi-join back, and
-    a per-document interval merge. No pair join, no quadratic term:
-    a window duplicated a million times costs its occurrence count,
-    not count².
+    occurrence count per fingerprint, and a per-document interval
+    merge. No pair join, no quadratic term: a window duplicated a
+    million times costs its occurrence count, not count².
 
     Span merge: duplicated windows at offsets p cover [p, p+L); a new
     span starts when a window's offset exceeds the running coverage
@@ -777,7 +838,7 @@ def duplicated_spans(
     dpos = (
         positions
         if positions is not None
-        else _dup_window_positions(docs, text_col, id_col, min_tokens, seed)
+        else duplicated_window_positions(docs, text_col, id_col, min_tokens, seed)
     )
     w = W.partitionBy("id").orderBy("pos")
     prev_end = F.max(F.col("pos") + min_tokens).over(
@@ -816,7 +877,8 @@ def excise_duplicate_spans(
 ) -> DataFrame:
     """Remove duplicated substrings, keeping the corpus-wide FIRST
     occurrence → ``(id_col, clean_text, n_kept_tokens,
-    n_cut_tokens)``, one row per input document.
+    n_cut_tokens, oversize)``, one row per input document (NULL text
+    included: ``("", 0, 0, false)``).
 
     A token is cut iff it is covered by a duplicated window whose
     content's canonical first occurrence (min (id, pos)) is some OTHER
@@ -847,7 +909,7 @@ def excise_duplicate_spans(
     dpos = (
         positions
         if positions is not None
-        else _dup_window_positions(docs, text_col, id_col, min_tokens, seed)
+        else duplicated_window_positions(docs, text_col, id_col, min_tokens, seed)
     )
     cut_windows = dpos.filter(
         ~(
@@ -866,34 +928,25 @@ def _excise_by_cut_windows(
     text_col: str,
     id_col: str,
     min_tokens: int,
-    max_tokens_per_doc: int | None = 2_000_000,
+    max_tokens_per_doc: int | None,
 ) -> DataFrame:
-    """Shared rebuild stage: given ``(id, pos)`` windows to cut, remove
-    their token coverage and reassemble every document →
-    ``(id_col, clean_text, n_kept_tokens, n_cut_tokens, oversize)``.
+    """Shared rebuild stage of the substring family: given ``(id,
+    pos)`` windows to cut, remove their token coverage and reassemble
+    every document → ``(id_col, clean_text, n_kept_tokens,
+    n_cut_tokens, oversize)``. NULL text counts as zero tokens.
     Documents whose token count exceeds ``max_tokens_per_doc`` bypass
     the rebuild (see :func:`excise_duplicate_spans`)."""
-    toks_of = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
+    # the token array is split once per doc, behind a Generate barrier
+    # (explode of a one-element array keeps every doc, NULL text too)
+    base = docs.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.array(whitespace_tokens(F.col(text_col)))).alias("_toks"),
+    ).withColumn("_n", F.coalesce(F.size("_toks"), F.lit(0)))
+    small = (
+        base
+        if max_tokens_per_doc is None
+        else base.filter(F.col("_n") <= max_tokens_per_doc)
     )
-    if max_tokens_per_doc is not None:
-        sized = docs.withColumn("_ntok", F.size(toks_of))
-        small = sized.filter(F.col("_ntok") <= max_tokens_per_doc).drop("_ntok")
-        big = sized.filter(F.col("_ntok") > max_tokens_per_doc)
-        rebuilt_small = _excise_by_cut_windows(
-            small, cut_windows, text_col, id_col, min_tokens, None
-        )
-        # pass-through is a row-local select: the normalized text is
-        # one value the corpus already stores — no per-token explode,
-        # no groupBy, no task-sized array for the monster doc
-        passthrough = big.select(
-            F.col(id_col),
-            F.array_join(toks_of, " ").alias("clean_text"),
-            F.col("_ntok").cast("long").alias("n_kept_tokens"),
-            F.lit(0).cast("long").alias("n_cut_tokens"),
-            F.lit(True).alias("oversize"),
-        )
-        return rebuilt_small.unionByName(passthrough)
     cuts = (
         cut_windows.select(
             "id",
@@ -903,42 +956,31 @@ def _excise_by_cut_windows(
         )
         .distinct()
     )
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
-    tokpos = docs.select(
-        F.col(id_col).alias("id"), F.explode(F.array(toks)).alias("_toks")
-    ).select("id", F.posexplode("_toks").alias("p", "tok"))
     rebuilt = (
-        tokpos.join(cuts, ["id", "p"], "left_anti")
+        small.select("id", F.posexplode("_toks").alias("p", "tok"))
+        .join(cuts, ["id", "p"], "left_anti")
         .groupBy("id")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("p", "tok"))),
-                    lambda s: s["tok"],
-                ),
-                " ",
-            ).alias("clean_text"),
+            _joined_text(F.struct("p", "tok"), "tok", " "),
             F.count("*").alias("n_kept_tokens"),
         )
     )
-    n_tok = F.size(toks)
-    return (
-        docs.select(F.col(id_col), n_tok.alias("_n"))
-        .join(rebuilt.withColumnRenamed("id", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept_tokens", F.lit(0)).cast("long").alias(
-                "n_kept_tokens"
-            ),
-            (F.col("_n") - F.coalesce("n_kept_tokens", F.lit(0)))
-            .cast("long")
-            .alias("n_cut_tokens"),
-            F.lit(False).alias("oversize"),
-        )
+    out = _doc_rows(small, rebuilt, id_col, "tokens").withColumn(
+        "oversize", F.lit(False)
     )
+    if max_tokens_per_doc is None:
+        return out
+    # pass-through is a row-local select: the normalized text is one
+    # value the corpus already stores — no per-token explode, no
+    # groupBy, no task-sized array for the monster doc
+    passthrough = base.filter(F.col("_n") > max_tokens_per_doc).select(
+        F.col("id").alias(id_col),
+        F.array_join("_toks", " ").alias("clean_text"),
+        F.col("_n").cast("long").alias("n_kept_tokens"),
+        F.lit(0).cast("long").alias("n_cut_tokens"),
+        F.lit(True).alias("oversize"),
+    )
+    return out.unionByName(passthrough)
 
 
 def window_index(
@@ -962,15 +1004,8 @@ def window_index(
     count — the same order as any suffix-structure over the corpus,
     but flat, mergeable, and hash-partitioned.
     """
-    wins = _window_fingerprints(docs, text_col, id_col, min_tokens, seed)
-    return wins.groupBy("wkey").agg(
-        F.count("*").alias("n_occurrences"),
-        F.min(F.struct("id", "pos")).alias("_first"),
-    ).select(
-        "wkey",
-        "n_occurrences",
-        F.col("_first.id").alias("first_id"),
-        F.col("_first.pos").alias("first_pos"),
+    return _first_occurrence_index(
+        _window_fingerprints(docs, text_col, id_col, min_tokens, seed), "wkey"
     )
 
 
@@ -1003,12 +1038,7 @@ def excise_duplicate_spans_incremental(
 
     The updated index counts shard occurrences into ``n_occurrences``
     and keeps the earliest ``(first_id, first_pos)`` per window, so
-    chained ingests stay exact. The merge is a union + re-aggregate on
-    ``wkey`` — corpus-index-sized, so store the index BUCKETED by
-    ``wkey`` (S9-style): both merge inputs then arrive co-partitioned
-    and the re-aggregate runs shuffle-free, writing only changed
-    buckets; without bucketing each ingest pays one full index
-    shuffle.
+    chained ingests stay exact (:func:`_merge_index`).
     """
     # round 13 (guide §2.4): both the index probe and the shard-index
     # merge consume the shard fingerprints — checkpoint once (shard-
@@ -1022,50 +1052,15 @@ def excise_duplicate_spans_incremental(
         "wkey",
         "left",
     )
-    w = W.partitionBy("wkey")
-    shard_first = F.min(F.struct("id", "pos")).over(w)
-    shard_cnt = F.count("*").over(w)
-    marked = joined.select(
-        "wkey",
-        "id",
-        "pos",
-        "n_occurrences",
-        shard_cnt.alias("_scnt"),
-        shard_first.alias("_sfirst"),
-    )
+    marked = _mark_first(joined, ["wkey"], "n_occurrences")
     in_corpus = F.col("n_occurrences").isNotNull()
-    is_shard_first = (F.col("_sfirst.id") == F.col("id")) & (
-        F.col("_sfirst.pos") == F.col("pos")
-    )
     cut_windows = marked.filter(
-        in_corpus | ((F.col("_scnt") > 1) & ~is_shard_first)
+        in_corpus | ((F.col("_n") > 1) & ~F.col("_is_first"))
     ).select("id", "pos")
     cleaned = _excise_by_cut_windows(
         shard, cut_windows, text_col, id_col, min_tokens, max_tokens_per_doc
     )
-    shard_index = wins.groupBy("wkey").agg(
-        F.count("*").alias("n_occurrences"),
-        F.min(F.struct("id", "pos")).alias("_first"),
-    ).select(
-        "wkey",
-        "n_occurrences",
-        F.col("_first.id").alias("first_id"),
-        F.col("_first.pos").alias("first_pos"),
-    )
-    updated = (
-        index.unionByName(shard_index)
-        .groupBy("wkey")
-        .agg(
-            F.sum("n_occurrences").alias("n_occurrences"),
-            F.min(F.struct(F.col("first_id").alias("id"), F.col("first_pos").alias("pos"))).alias("_first"),
-        )
-        .select(
-            "wkey",
-            "n_occurrences",
-            F.col("_first.id").alias("first_id"),
-            F.col("_first.pos").alias("first_pos"),
-        )
-    )
+    updated = _merge_index(index, _first_occurrence_index(wins, "wkey"), "wkey")
     return cleaned, updated
 
 
@@ -1111,66 +1106,23 @@ def line_dedup(
     8-byte keys, not bodies (the q29 oracle regroups on the STRINGS,
     so the gate also pins hash grouping == content grouping).
 
-    Round 13 (guide §2.2/§2.4): the corpus-wide stats run as WINDOW
-    aggregates over ``partitionBy(_k)`` instead of a groupBy + join
-    back — the old shape consumed the exploded-lines frame four times
-    (stats, the join probe, the non-qualifying union branch, and the
-    per-doc total), and Spark planned each consumer as its own full
-    split+normalize+hash pipeline (no exchange reuse across self-join
-    sides). Now the explode is computed ONCE: one Exchange on ``_k``
-    for the window, one on ``id`` for the regroup, and both per-doc
-    counts (kept + total) fold into the same aggregate. A non-
-    qualifying line never matches a qualifying group (same content ⇒
-    same length ⇒ same ``_qual``), so gating ``cut`` on ``_qual``
-    reproduces the old qualifying-only stats exactly.
+    The explode is computed ONCE: one Exchange on ``_k`` for the
+    first-occurrence window (:func:`_mark_first`), one on ``id`` for
+    the regroup, and both per-doc counts (kept + total) fold into the
+    same aggregate. A non-qualifying line never matches a qualifying
+    group (same content ⇒ same length ⇒ same ``_qual``), so gating
+    ``cut`` on ``_qual`` reproduces qualifying-only stats exactly.
     """
     lines = _line_rows(docs, text_col, id_col, sep, min_chars, normalize)
-    wk = W.partitionBy("_qual", "_k")
-    marked = lines.select(
-        "id",
-        "pos",
-        "line",
-        "_qual",
-        F.count("*").over(wk).alias("_c"),
-        F.min(F.struct("id", "pos")).over(wk).alias("_first"),
-    )
-    cut = (
-        F.col("_qual")
-        & (F.col("_c") >= min_count)
-        & ~(
-            (F.col("_first.id") == F.col("id"))
-            & (F.col("_first.pos") == F.col("pos"))
-        )
-    )
+    marked = _mark_first(lines, ["_qual", "_k"], "line", "_qual")
+    cut = F.col("_qual") & (F.col("_n") >= min_count) & ~F.col("_is_first")
     per_doc = marked.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.when(~cut, F.struct("pos", "line")))
-                ),
-                lambda s: s["line"],
-            ),
-            joiner,
-        ).alias("clean_text"),
+        _joined_text(F.when(~cut, F.struct("pos", "line")), "line", joiner),
         F.sum(F.when(~cut, 1).otherwise(0)).alias("n_kept_lines"),
         F.count("*").alias("_n"),
     )
-    return (
-        docs.select(F.col(id_col).alias("id"))
-        .join(per_doc, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept_lines", F.lit(0)).cast("long").alias(
-                "n_kept_lines"
-            ),
-            (
-                F.coalesce("_n", F.lit(0))
-                - F.coalesce("n_kept_lines", F.lit(0))
-            )
-            .cast("long")
-            .alias("n_cut_lines"),
-        )
+    return _doc_rows(
+        docs.select(F.col(id_col).alias("id")), per_doc, id_col, "lines"
     )
 
 
@@ -1186,11 +1138,7 @@ def _line_rows(
     line: ``(id, pos, line, _qual, _k)`` where ``_k`` is the xxhash64
     of the normalized content (the 8-byte shuffle/index key) and
     ``_qual`` marks lines long enough to count toward duplication."""
-    norm_of = (
-        F.trim(F.regexp_replace(F.lower(F.col("line")), r"\s+", " "))
-        if normalize
-        else F.col("line")
-    )
+    norm_of = normalize_text(F.col("line")) if normalize else F.col("line")
     return (
         docs.select(
             F.col(id_col).alias("id"),
@@ -1200,51 +1148,6 @@ def _line_rows(
         .withColumn("_qual", F.length("_norm") >= min_chars)
         .withColumn("_k", F.xxhash64("_norm"))
         .drop("_norm")
-    )
-
-
-def _rebuild_lines(
-    docs: DataFrame,
-    lines: DataFrame,
-    kept: DataFrame,
-    id_col: str,
-    joiner: str,
-) -> DataFrame:
-    """Shared reassembly stage: surviving lines → one row per input
-    doc ``(id_col, clean_text, n_kept_lines, n_cut_lines)``. Anchored
-    on the INPUT frame, not the exploded one: a NULL ``text`` explodes
-    to zero line rows, and anchoring on the explode silently dropped
-    such docs from the output — and therefore from the line ingest
-    face's accepted corpus (review r10 pass 2). NULL-text docs emit
-    ``("", 0, 0)``, same as empty docs."""
-    rebuilt = kept.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda s: s["line"],
-            ),
-            joiner,
-        ).alias("clean_text"),
-        F.count("*").alias("n_kept_lines"),
-    )
-    totals = docs.select(F.col(id_col).alias("id")).join(
-        lines.groupBy("id").agg(F.count("*").alias("_n")), "id", "left"
-    )
-    return (
-        totals.join(rebuilt, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept_lines", F.lit(0)).cast("long").alias(
-                "n_kept_lines"
-            ),
-            (
-                F.coalesce("_n", F.lit(0))
-                - F.coalesce("n_kept_lines", F.lit(0))
-            )
-            .cast("long")
-            .alias("n_cut_lines"),
-        )
     )
 
 
@@ -1262,19 +1165,8 @@ def line_index(
     An incoming shard pays one equi-join against it instead of
     re-splitting the corpus (:func:`line_dedup_incremental`)."""
     rows = _line_rows(docs, text_col, id_col, sep, min_chars, normalize)
-    return (
-        rows.filter("_qual")
-        .groupBy(F.col("_k").alias("lkey"))
-        .agg(
-            F.count("*").alias("n_occurrences"),
-            F.min(F.struct("id", "pos")).alias("_first"),
-        )
-        .select(
-            "lkey",
-            "n_occurrences",
-            F.col("_first.id").alias("first_id"),
-            F.col("_first.pos").alias("first_pos"),
-        )
+    return _first_occurrence_index(
+        rows.filter("_qual").withColumnRenamed("_k", "lkey"), "lkey"
     )
 
 
@@ -1315,67 +1207,29 @@ def line_dedup_incremental(
     rows = checkpoint(_line_rows(
         shard, text_col, id_col, sep, min_chars, normalize
     ))
-    qual = rows.filter("_qual")
+    qual = rows.filter("_qual").withColumnRenamed("_k", "lkey")
     joined = qual.join(
-        index.select(
-            F.col("lkey").alias("_k"),
-            F.col("n_occurrences").alias("_stored_n"),
-        ),
-        "_k",
+        index.select("lkey", F.col("n_occurrences").alias("_stored_n")),
+        "lkey",
         "left",
     )
-    w = W.partitionBy("_k")
-    marked = joined.select(
-        "id",
-        "pos",
-        "line",
-        "_stored_n",
-        F.count("*").over(w).alias("_scnt"),
-        F.min(F.struct("id", "pos")).over(w).alias("_sfirst"),
-    )
-    total = F.coalesce(F.col("_stored_n"), F.lit(0)) + F.col("_scnt")
-    is_global_first = F.col("_stored_n").isNull() & (
-        (F.col("_sfirst.id") == F.col("id"))
-        & (F.col("_sfirst.pos") == F.col("pos"))
-    )
+    marked = _mark_first(joined, ["lkey"], "line", "_stored_n")
+    total = F.coalesce(F.col("_stored_n"), F.lit(0)) + F.col("_n")
+    is_global_first = F.col("_stored_n").isNull() & F.col("_is_first")
     kept = (
         marked.filter(~((total >= min_count) & ~is_global_first))
         .select("id", "pos", "line")
         .unionByName(rows.filter(~F.col("_qual")).select("id", "pos", "line"))
     )
-    cleaned = _rebuild_lines(shard, rows, kept, id_col, joiner)
-    shard_index = (
-        qual.groupBy(F.col("_k").alias("lkey"))
-        .agg(
-            F.count("*").alias("n_occurrences"),
-            F.min(F.struct("id", "pos")).alias("_first"),
-        )
-        .select(
-            "lkey",
-            "n_occurrences",
-            F.col("_first.id").alias("first_id"),
-            F.col("_first.pos").alias("first_pos"),
-        )
+    rebuilt = kept.groupBy("id").agg(
+        _joined_text(F.struct("pos", "line"), "line", joiner),
+        F.count("*").alias("n_kept_lines"),
     )
-    updated = (
-        index.unionByName(shard_index)
-        .groupBy("lkey")
-        .agg(
-            F.sum("n_occurrences").alias("n_occurrences"),
-            F.min(
-                F.struct(
-                    F.col("first_id").alias("id"),
-                    F.col("first_pos").alias("pos"),
-                )
-            ).alias("_first"),
-        )
-        .select(
-            "lkey",
-            "n_occurrences",
-            F.col("_first.id").alias("first_id"),
-            F.col("_first.pos").alias("first_pos"),
-        )
+    totals = shard.select(F.col(id_col).alias("id")).join(
+        rows.groupBy("id").agg(F.count("*").alias("_n")), "id", "left"
     )
+    cleaned = _doc_rows(totals, rebuilt, id_col, "lines")
+    updated = _merge_index(index, _first_occurrence_index(qual, "lkey"), "lkey")
     return cleaned, updated
 
 

@@ -33,13 +33,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import exact
+from ..functions.text import whitespace_tokens
 
 
 def _tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+    toks = whitespace_tokens(F.lower(F.col(text_col)))
     return docs.select(
         F.col(id_col).alias("_id"), F.explode(toks).alias("_t")
     )

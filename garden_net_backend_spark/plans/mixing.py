@@ -15,14 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import whitespace_tokens
+
 # tokenization shared with chunk_tokens / the q45 oracle arms:
 # whitespace split, empty tokens dropped
 def _n_tokens(text_col: str):
-    return F.size(
-        F.filter(
-            F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-        )
-    )
+    return F.size(whitespace_tokens(F.col(text_col)))
 
 
 def weighted_sample_by_source(

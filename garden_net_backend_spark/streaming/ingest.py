@@ -932,7 +932,6 @@ def process_ingest_batch_substring(
     min_tokens: int = 50,
     seed: int = 42,
     metrics: bool = True,
-    n_buckets: int | None = None,
 ) -> None:
     """The SUBSTRING (span-excision) face of the ingest loop —
     completes the 3×3 dedup-family matrix (MinHash / substring /
@@ -966,23 +965,6 @@ def process_ingest_batch_substring(
     excision restricted to each shard (equivalence-tested). The
     metrics row counts every doc as accepted (excised, not dropped);
     its ``stored_prefix`` reports the window index."""
-    if n_buckets is not None:
-        import warnings
-
-        # accepted-and-ignored for one deprecation cycle: the wbucket
-        # layout was retired in r10 and the modulus, where an old index
-        # still carries the column, is now derived from the stored
-        # layout itself. Dropping the kwarg outright broke existing
-        # callers forwarding it via ingest_dedup_stream_substring
-        # (**kernel_kwargs) with a TypeError (ADVICE r10).
-        warnings.warn(
-            "process_ingest_batch_substring: n_buckets is deprecated and "
-            "ignored — the wbucket layout column was retired; indexes that "
-            "still carry it derive the modulus from the stored layout.",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-
     def decide(new, stored_acc, stored_idx, pin):
         cleaned, delta = _substring_stage(
             new, stored_idx, pin, text_col, id_col, min_tokens, seed

@@ -1953,8 +1953,7 @@ def test_curation_substring_index_wbucket_compat_and_derived_modulus(spark):
     wbucket layout column exactly like the standalone substring face —
     and BOTH faces now derive the modulus from the stored layout
     instead of hardcoding 64 (ADVICE r10), so an old index written
-    with modulus 16 keeps a single bucket semantics. The deprecated
-    n_buckets kwarg warns and is ignored instead of raising."""
+    with modulus 16 keeps a single bucket semantics."""
     from garden_net_backend_spark.streaming.ingest import (
         process_ingest_batch_curation,
         process_ingest_batch_substring,
@@ -1993,12 +1992,10 @@ def test_curation_substring_index_wbucket_compat_and_derived_modulus(spark):
         assert new_rows  # doc 10's fresh prefix windows
         # modulus derived from the stored layout (16), not hardcoded 64
         assert all(r["wbucket"] == r["wkey"] % 16 for r in new_rows)
-        # deprecated kwarg on the standalone face: warns, ignored
         b2 = spark.createDataFrame([mk(20, 6)], schema)
-        with pytest.warns(DeprecationWarning, match="n_buckets"):
-            process_ingest_batch_substring(
-                b2, 0, f"{work}/acc2", f"{work}/idx2", n_buckets=8, **kw
-            )
+        process_ingest_batch_substring(
+            b2, 0, f"{work}/acc2", f"{work}/idx2", **kw
+        )
         assert spark.read.parquet(f"{work}/acc2").count() == 1
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -2889,5 +2886,37 @@ def test_serve_face_releases_its_pin(spark, mode):
         )
         left = _persisted_rdd_ids(spark) - before
         assert not left, f"serve {mode}: {len(left)} RDDs left persisted"
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_substring_face_keeps_null_text_docs(spark):
+    """The substring face drops nothing: over two batches with NULL-text
+    docs every batch id lands in the accepted corpus, the NULL ones
+    with clean_text "" and nothing cut."""
+    from garden_net_backend_spark.streaming.ingest import (
+        process_ingest_batch_substring,
+    )
+
+    span = " ".join(f"ss{j:02d}" for j in range(6))
+    schema = "doc_id long, text string, source string"
+    batches = [
+        [(1, "a1 a2 " + span, "c"), (2, None, "c"), (3, "", "c")],
+        [(4, "b1 " + span + " b2", "c"), (5, None, "c")],
+    ]
+    work = tempfile.mkdtemp(prefix="sub_null_")
+    acc, idx = f"{work}/acc", f"{work}/idx"
+    try:
+        for b, rows in enumerate(batches):
+            process_ingest_batch_substring(
+                spark.createDataFrame(rows, schema), b, acc, idx, min_tokens=5
+            )
+        got = {
+            r["doc_id"]: (r["clean_text"], r["n_cut_tokens"])
+            for r in spark.read.parquet(acc).collect()
+        }
+        assert set(got) == {1, 2, 3, 4, 5}
+        assert got[2] == got[5] == ("", 0)
+        assert got[4] == ("b1 b2", 6)
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -75,3 +75,45 @@ def test_entire_catalog_is_cartesian_free(spark):
         except ScaleHazard as e:
             hazards.append(f"{name}: {e}")
     assert not hazards, "\n".join(hazards)
+
+
+def test_plan_fingerprint_counts_line_leading_nodes(spark):
+    """plan_fingerprint counts Exchange / BroadcastExchange / BNLJ /
+    Window / Scan nodes by the operator name that begins a plan line:
+    columns named after operators (Window_x, Exchange, Scan) are not
+    nodes, and count_exchanges / assert_scalable_plan read the same."""
+    from pyspark.sql import Window as W
+
+    from garden_net_backend_spark.functions.plancheck import (
+        count_exchanges,
+        plan_fingerprint,
+        plan_string,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        F.col("doc_id").alias("Exchange"), F.lit(1).alias("Scan")
+    )
+    ranked = docs.select(
+        "Exchange",
+        "Scan",
+        F.row_number()
+        .over(W.partitionBy(F.col("Exchange") % 3).orderBy("Exchange"))
+        .alias("Window_x"),
+    )
+    small = spark.range(4).withColumnRenamed("id", "CartesianProduct")
+    df = ranked.join(
+        F.broadcast(small), F.col("Window_x") > F.col("CartesianProduct")
+    )
+    assert plan_fingerprint(df) == {
+        "Exchange": 1,
+        "BroadcastExchange": 1,
+        "BroadcastNestedLoopJoin": 1,
+        "Window": 1,
+        "Scan": 1,
+    }
+    plan = plan_string(df)
+    assert "Window_x" in plan and count_exchanges(plan) == 1
+    # the decoy column is no CartesianProduct node; the BNLJ is one
+    assert_scalable_plan(df, forbid_bnlj=False)
+    with pytest.raises(ScaleHazard, match="BroadcastNestedLoopJoin"):
+        assert_scalable_plan(df)
