@@ -16,6 +16,9 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..session import local_path
+from .plancheck import _plan_nodes
+
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 _DEFAULT_OPEN_COST_BYTES = 4 * 1024 * 1024
 
@@ -26,9 +29,12 @@ _SIZE_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 #: exchange (explicit repartition, join/aggregate/window shuffle, or a
 #: distinct), not from the scan's file splits, so the file-based
 #: estimate below would be wrong (it would look THROUGH the exchange at
-#: the raw files and re-repartition an already-fanned-out frame).
+#: the raw files and re-repartition an already-fanned-out frame). A
+#: name counts only as the operator that begins a plan-tree line, never
+#: as a substring, so a column named ``Joined_x`` is not a join.
 _DISTRIBUTED_NODES = (
-    "Repartition",  # Repartition + RepartitionByExpression
+    "Repartition",
+    "RepartitionByExpression",
     "Join",
     "Aggregate",
     "Window",
@@ -96,7 +102,7 @@ def _estimated_scan_partitions(df: DataFrame) -> "int | None":
         analyzed = df._jdf.queryExecution().analyzed().toString()
     except Exception:
         return None
-    if any(node in analyzed for node in _DISTRIBUTED_NODES):
+    if any(node in _DISTRIBUTED_NODES for node, _ in _plan_nodes(analyzed)):
         return None
     files = df.inputFiles()
     if not files:
@@ -109,13 +115,8 @@ def _estimated_scan_partitions(df: DataFrame) -> "int | None":
     )
     sizes = []
     for uri in files:
-        path = uri
-        if path.startswith("file:"):
-            path = path[len("file:"):]
-            while path.startswith("//"):  # file:///x -> /x
-                path = path[1:]
         try:
-            sizes.append(os.path.getsize(path))
+            sizes.append(os.path.getsize(local_path(uri)))
         except OSError:
             sizes.append(mpb)  # unknown size: one full split
     total = sum(sizes) + open_cost * len(sizes)

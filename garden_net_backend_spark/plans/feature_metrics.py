@@ -27,12 +27,22 @@ generate_features_metadata, network_generator_lib.R:534-566):
   round to 2 decimals, the random interval rounds to 3 and serializes
   as a ``"min,max"`` string (network_generator_lib.R:554,560,566).
 
+Execution: the inputs are built once and the metadata is collected
+once. The upload pins its dense grid (streaming/uploads.py); each
+subnet pins one ``features ⋈ degrees(subset edges)`` frame, which every
+metric of that subnet reads; and the metrics of every subnet are one
+union, collected once. The whole multi-metric pipeline is planned as
+one statement, the operator-fusion model of *Machine Learning Inference
+Pipeline Execution Using Pure SQL Based on Operator Fusion* (ICDE 2025).
+
 The Celery/Redis/FIFO plumbing around it is API-layer, not engine
 (SURVEY §3.3): submit this plan on a scheduler pool and surface
 progress via SparkListener stage counts.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,11 +51,11 @@ from ..functions.exact import exact_corr
 from ..operators.chas import (
     chas,
     feature_abundance,
-    feature_mean_degree,
     randomize_edges_distance_matched,
 )
 from ..operators.graph import degrees, subset_edges_by_nodesets
 from ..operators.interval import overlap_aggregate
+from ..session import pin, release
 
 
 def merge_features(
@@ -74,31 +84,19 @@ def merge_features(
     return out
 
 
-def _endpoint_nodes(sub_edges: DataFrame) -> DataFrame:
-    """Node set of a subset chromnet = endpoints of its edge list
-    (chaser subset_chromnet rebuilds the network from the subset
-    edges)."""
-    return (
-        sub_edges.select(F.col("src").alias("fragment"))
-        .union(sub_edges.select(F.col("dst").alias("fragment")))
-        .distinct()
-    )
-
-
-def _random_chas_interval(
+def _random_chas_bounds(
     nodes: DataFrame,
     sub_edges: DataFrame,
-    features_sub: DataFrame,
+    frame: DataFrame,
     n_random: int,
     seed: int,
     dist_match: bool,
-) -> dict:
-    """{feature: "min,max"} across ``n_random`` randomizations of the
-    SUBSET edge list (chaser randomize(subnet); SURVEY A6/G12) — all
-    runs evaluated in ONE job via the run-id fan-out, not the
-    reference's serial loop. Interval bounds round to 3 decimals and
-    encode as the reference's 'min,max' string
-    (network_generator_lib.R:554)."""
+) -> DataFrame:
+    """(feature, lo, hi): the random-ChAs interval across ``n_random``
+    randomizations of the SUBSET edge list (chaser randomize(subnet);
+    SURVEY A6/G12) — all runs evaluated in one plan via the run-id
+    fan-out, not the reference's serial loop. Bounds round to 3
+    decimals (network_generator_lib.R:554)."""
     rand_edges = randomize_edges_distance_matched(
         sub_edges, nodes, n_random=n_random, seed=seed, dist_match=dist_match
     )
@@ -107,10 +105,10 @@ def _random_chas_interval(
             "run", F.col("dst").alias("src"), F.col("src").alias("dst")
         )
     )
-    f_src = features_sub.select(
+    f_src = frame.select(
         F.col("fragment").alias("src"), "feature", F.col("value").alias("x")
     )
-    f_dst = features_sub.select(
+    f_dst = frame.select(
         F.col("fragment").alias("dst"), "feature", F.col("value").alias("y")
     )
     per_run = (
@@ -121,54 +119,57 @@ def _random_chas_interval(
         .groupBy("run", "feature")
         .agg(exact_corr(F.col("x"), F.col("y")).alias("chas"))
     )
-    bounds = per_run.groupBy("feature").agg(
+    return per_run.groupBy("feature").agg(
         F.round(F.min("chas"), 3).alias("lo"), F.round(F.max("chas"), 3).alias("hi")
     )
-    return {
-        r["feature"]: (
-            f"{r['lo']},{r['hi']}"
-            if r["lo"] is not None and r["hi"] is not None
-            else None
-        )
-        for r in bounds.collect()
-    }
 
 
-def _metrics_for_subset(
+def _subset_metrics(
     nodes: DataFrame,
-    features_long: DataFrame,
     sub_edges: DataFrame,
+    frame: DataFrame,
     n_random: int,
     seed: int,
     dist_match: bool,
-) -> dict:
+) -> dict[str, DataFrame]:
     """One generate_features_metadata call (reference
-    network_generator_lib.R:534-566) over a (sub)network: features
-    restricted to the subnet's node set, degrees recomputed from the
-    subnet's edges, Abundance/mean degree rounded to 2 decimals."""
-    features_sub = features_long.join(
-        _endpoint_nodes(sub_edges), "fragment", "left_semi"
-    )
-    deg = degrees(sub_edges.select("src", "dst"))
-    ab = {
-        r["feature"]: r["abundance"]
-        for r in feature_abundance(features_sub, decimals=2).collect()
+    network_generator_lib.R:534-566) over a (sub)network, as
+    ``{metric: (feature, lo, hi)}`` frames — ``hi`` is the random
+    interval's upper bound and null for the other metrics.
+
+    ``frame`` is the subnet's ``(fragment, feature, value, degree)``:
+    the features of its nodes joined to its degrees, recomputed from
+    its edges. Abundance and mean degree round to 2 decimals; the mean
+    degree of a feature's positive nodes is their mean ``degree``, the
+    same exact-decimal mean ``feature_abundance`` takes of ``value``."""
+    no_hi = F.lit(None).cast("double").alias("hi")
+    out = {
+        "Abundance": feature_abundance(frame, decimals=2).select(
+            "feature", F.col("abundance").alias("lo"), no_hi
+        ),
+        "ChAs": chas(sub_edges, frame, broadcast_features=True).select(
+            "feature", F.col("chas").alias("lo"), no_hi
+        ),
     }
-    ch = {
-        r["feature"]: (round(r["chas"], 6) if r["chas"] is not None else None)
-        for r in chas(sub_edges, features_sub, broadcast_features=True).collect()
-    }
-    md = {
-        r["feature"]: r["mean_degree"]
-        for r in feature_mean_degree(features_sub, deg, decimals=2).collect()
-    }
-    out = {"Abundance": ab, "ChAs": ch}
     if n_random > 0:
-        out["Random ChAs interval"] = _random_chas_interval(
-            nodes, sub_edges, features_sub, n_random, seed, dist_match
+        out["Random ChAs interval"] = _random_chas_bounds(
+            nodes, sub_edges, frame, n_random, seed, dist_match
         )
-    out["Mean degree"] = md
+    out["Mean degree"] = feature_abundance(
+        frame.filter(F.col("value") != 0), value_col="degree", decimals=2
+    ).select("feature", F.col("abundance").alias("lo"), no_hi)
     return out
+
+
+def _encode(metric: str, lo, hi):
+    """A metric value as features_metadata.json holds it: ChAs rounded
+    to 6 decimals, the random interval as the reference's ``"lo,hi"``
+    string (network_generator_lib.R:554), null when undefined."""
+    if metric == "ChAs":
+        return round(lo, 6) if lo is not None else None
+    if metric == "Random ChAs interval":
+        return f"{lo},{hi}" if lo is not None and hi is not None else None
+    return lo
 
 
 def feature_metadata(
@@ -188,29 +189,48 @@ def feature_metadata(
     once with distance matching (merge_features.R:79,91); po uses
     ``preserve.distances = F`` and generate_features_metadata's
     default of 50 randomizations (merge_features.R:103).
+
+    Each subnet's inputs are built once: one pinned
+    ``features ⋈ degrees(subset edges)`` frame (its node set is the
+    key set of its degree table) feeds every metric. Every metric of
+    every subnet is then read by ONE collect of their union, and the
+    pins are released after it.
     """
     e = edges.select("src", "dst")
-    out: dict = {
-        "net": _metrics_for_subset(
-            nodes, features_long, e, n_random, seed, dist_match=True
+    subsets = [("net", e, n_random, True)]
+    if not skip_pp_po:
+        baits = nodes.filter(F.col("type") == "P").select(
+            F.col("fragment").alias("node")
         )
-    }
-
-    if skip_pp_po:
-        out["pp"] = None
-        out["po"] = None
-        return out
-
-    baits = nodes.filter(F.col("type") == "P").select(
-        F.col("fragment").alias("node")
-    )
-    oes = nodes.filter(F.col("type") == "O").select(F.col("fragment").alias("node"))
-    pp_edges = subset_edges_by_nodesets(e, baits)
-    po_edges = subset_edges_by_nodesets(e, baits, oes)
-    out["pp"] = _metrics_for_subset(
-        nodes, features_long, pp_edges, n_random, seed, dist_match=True
-    )
-    out["po"] = _metrics_for_subset(
-        nodes, features_long, po_edges, n_random_po, seed, dist_match=False
-    )
+        oes = nodes.filter(F.col("type") == "O").select(
+            F.col("fragment").alias("node")
+        )
+        subsets += [
+            ("pp", subset_edges_by_nodesets(e, baits), n_random, True),
+            ("po", subset_edges_by_nodesets(e, baits, oes), n_random_po, False),
+        ]
+    out: dict = {"net": None, "pp": None, "po": None}
+    parts: list[DataFrame] = []
+    pins: list[DataFrame] = []
+    try:
+        for name, sub_edges, n, dist_match in subsets:
+            deg = degrees(sub_edges).withColumnRenamed("node", "fragment")
+            pins.append(pin(features_long.join(deg, "fragment")))
+            metrics = _subset_metrics(nodes, sub_edges, pins[-1], n, seed, dist_match)
+            out[name] = {metric: {} for metric in metrics}
+            parts += [
+                df.select(
+                    F.lit(name).alias("subset"), F.lit(metric).alias("metric"),
+                    "feature", "lo", "hi",
+                )
+                for metric, df in metrics.items()
+            ]
+        rows = reduce(DataFrame.union, parts).collect()
+    finally:
+        for p in pins:
+            release(p)
+    for r in rows:
+        out[r["subset"]][r["metric"]][r["feature"]] = _encode(
+            r["metric"], r["lo"], r["hi"]
+        )
     return out

@@ -1,4 +1,7 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, plus the helpers every
+face shares: pinning a frame that is read more than once
+(:func:`pin`, :func:`release`) and turning the file URI Spark reports
+into a local path (:func:`local_path`).
 
 Local testing runs on local[N]; the same config block is what we'd ship
 to a 1000-executor cluster (AQE on, skew-join handling on, Arrow on).
@@ -9,8 +12,9 @@ from __future__ import annotations
 
 import os
 import re
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # At 100 TB these would be set per-job by the scheduler; AQE coalescing
 # makes the static shuffle-partition count a ceiling, not a constant.
@@ -82,3 +86,37 @@ def get_session(app_name: str = "garden_net_spark", shuffle_partitions: int | No
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """``df`` eagerly local-checkpointed: computed once, its blocks held
+    until :func:`release`. Local checkpointing registers the RDD as
+    persisted before it is computed, so a computation that fails leaves
+    it registered; here it is released before the error propagates."""
+    pinned = df.localCheckpoint(eager=False)
+    try:
+        pinned._jdf.queryExecution().logical().rdd().count()
+    except BaseException:
+        release(pinned)
+        raise
+    return pinned
+
+
+def release(pinned: DataFrame) -> None:
+    """Drop the blocks of an eagerly local-checkpointed frame. Its
+    logical plan is the LogicalRDD over the checkpointed RDD, which
+    stays registered as persisted, blocks held, until it is unpersisted
+    here: dropping the Python frame and a JVM GC do not release it."""
+    pinned._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def local_path(uri: str) -> str:
+    """The local path of a file URI as Spark reports it
+    (``input_file_name()``, ``inputFiles()``): ``file:///a%20b/x`` →
+    ``/a b/x``. Spark percent-escapes the path, so stripping the scheme
+    by hand leaves ``%20`` in a name that does not exist. A bare path
+    passes through unchanged."""
+    parsed = urlparse(uri)
+    if parsed.scheme != "file":
+        return uri
+    return unquote(parsed.path)

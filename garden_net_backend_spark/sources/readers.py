@@ -89,6 +89,10 @@ _FEATURE_SCHEMAS = {
 
 _COORDS = ("start", "end")
 
+#: the UCSC BED header lines a feature file may open with: ``track …``,
+#: ``browser …`` and ``#`` comments (a Java and a Python regex alike)
+HEADER_LINE = r"^(#|(track|browser)(\s|$))"
+
 
 def _strip_chr_prefix(col):
     return F.regexp_replace(col, "^chr", "")
@@ -124,7 +128,9 @@ def read_feature(
         raise ValueError(f"unknown feature format: {fmt}")
     # coordinates are read as text and cast under ANSI: a coordinate
     # that is not a number fails the read instead of becoming a null
-    # interval that silently matches no node; a missing one stays null
+    # interval that silently matches no node; a missing one stays null.
+    # Header lines land whole in the first column and are dropped
+    # before the cast, so only a data line can fail it.
     text_coords = T.StructType(
         [
             T.StructField(f.name, T.StringType()) if f.name in _COORDS else f
@@ -136,6 +142,7 @@ def read_feature(
         .option("header", False)
         .schema(text_coords)
         .csv(path)
+        .filter(~F.coalesce(F.col("chr").rlike(HEADER_LINE), F.lit(False)))
         .withColumns({c: F.col(c).cast("long") for c in _COORDS})
     )
     chr_col = _strip_chr_prefix(F.col("chr")).alias("chr")

@@ -104,6 +104,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin as _pin, release
+
 #: reserved ingest_batch id for rows folded together by compaction —
 #: never a real foreachBatch id (those are >= 0)
 COMPACTED_BATCH_ID = -1
@@ -533,14 +535,6 @@ def _write_batch_metrics(
     )
 
 
-def _release(pinned: DataFrame) -> None:
-    """Drop the blocks of an eagerly local-checkpointed frame. Its
-    logical plan is the LogicalRDD over the checkpointed RDD, which
-    stays registered as persisted, blocks held, until it is unpersisted
-    here: dropping the Python frame and a JVM GC do not release it."""
-    pinned._jdf.queryExecution().logical().rdd().unpersist(False)
-
-
 def _run_ingest_batch(
     batch: DataFrame,
     batch_id: int,
@@ -571,9 +565,9 @@ def _run_ingest_batch(
     5. persist the input projection ``(id_col, content_col)``, filtered
        by ``keep(content Column)`` when given;
     6. ``decide(new, *prefixes, pin)`` → ``(accepted, writes)``, timed
-       as ``decide_sec``: ``pin`` is the eager ``localCheckpoint`` every
-       face takes through the runner, ``writes`` lists
-       ``(frame, dir, partition columns)``;
+       as ``decide_sec``: ``pin`` is the eager local checkpoint
+       (``session.pin``) every face takes through the runner,
+       ``writes`` lists ``(frame, dir, partition columns)``;
     7. write each frame in order, tagged with ``src_batch`` and
        ``ingest_batch``, as a dynamic partition overwrite, then run the
        stamp — timed as ``write_sec``;
@@ -601,7 +595,7 @@ def _run_ingest_batch(
     pins: list[DataFrame] = []
 
     def pin(df: DataFrame) -> DataFrame:
-        pins.append(df.localCheckpoint(eager=True))
+        pins.append(_pin(df))
         return pins[-1]
 
     try:
@@ -637,7 +631,7 @@ def _run_ingest_batch(
             )
     finally:
         for df in pins:
-            _release(df)
+            release(df)
         new.unpersist()
 
 
@@ -2451,9 +2445,7 @@ def process_serve_batch_ann(
         .filter(F.col("count") > 1)
         .select(query_id_col)
     )
-    clean = qcols.join(
-        conflicted, query_id_col, "left_anti"
-    ).localCheckpoint(eager=True)
+    clean = _pin(qcols.join(conflicted, query_id_col, "left_anti"))
     try:
         n_served_ids = clean.count()
         if n_served_ids:
@@ -2550,7 +2542,7 @@ def process_serve_batch_ann(
                 input_fp,
             )
     finally:
-        _release(clean)
+        release(clean)
 
 
 def expire_serve_results(

@@ -38,6 +38,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_path, pin, release
+from ..sources.readers import HEADER_LINE
+
 _FORMATS = ("features_on_nodes", "features_table", "chromhmm", "macs2", "bed6", "bed3")
 
 _FRAGMENT_KEY = re.compile(r"^chr[^\t]*_\d+(_\d+)?$")
@@ -53,7 +56,8 @@ def infer_feature_format(path: str) -> str:
     1. explicit ``.<fmt>.`` token in the filename
        (``h3k27.macs2.tsv`` → macs2);
     2. first column matches the fragment-key shape → features_on_nodes;
-    3. column count: 6 → bed6, ≥9 → macs2 (narrowPeak),
+    3. column count of the first line that is not a BED header line
+       (``track``, ``browser``, ``#``): 6 → bed6, ≥9 → macs2 (narrowPeak),
        4 with non-numeric 4th column → chromhmm,
        4 with numeric 4th → bed3 (bedgraph callers should declare
        ``features_table`` explicitly — same ambiguity the reference
@@ -65,7 +69,9 @@ def infer_feature_format(path: str) -> str:
         if f".{fmt}." in base or base.endswith(f".{fmt}"):
             return fmt
     with open(path) as fh:
-        first = fh.readline().rstrip("\n")
+        first = next(
+            (ln for ln in fh if not re.match(HEADER_LINE, ln)), ""
+        ).rstrip("\n")
     cells = first.split("\t")
     if cells and _FRAGMENT_KEY.match(cells[0]):
         return "features_on_nodes"
@@ -129,6 +135,7 @@ def process_upload(
     upload = os.path.basename(path).split(".")[0]
     status = _Status(os.path.join(out_dir, "_status"), upload)
     status.write("PROGRESS", 10, "reading feature file")
+    grid = None
     try:
         fmt = infer_feature_format(path)
         if fmt == "features_on_nodes":
@@ -150,13 +157,16 @@ def process_upload(
             intervals = read_feature(spark, path, fmt)
             status.write("PROGRESS", 40, f"merging as {fmt} ({agg})")
             dense = merge_features(nodes, intervals, agg=agg)
+        # the metadata and the parquet write both read the grid: build
+        # it once
+        grid = pin(dense)
         status.write("PROGRESS", 70, "computing ChAS metadata")
         meta = feature_metadata(
-            nodes, edges, dense, n_random=n_random,
+            nodes, edges, grid, n_random=n_random,
             n_random_po=n_random_po, skip_pp_po=skip_pp_po,
         )
         dest = os.path.join(out_dir, upload)
-        dense.write.mode("overwrite").parquet(
+        grid.write.mode("overwrite").parquet(
             os.path.join(dest, "features.parquet")
         )
         with open(os.path.join(dest, "features_metadata.json"), "w") as fh:
@@ -166,6 +176,9 @@ def process_upload(
     except Exception as e:  # mirror Celery FAILURE state, then re-raise
         status.write("FAILURE", 100, f"{type(e).__name__}: {e}")
         raise
+    finally:
+        if grid is not None:
+            release(grid)
 
 
 def watch_feature_uploads(
@@ -196,7 +209,7 @@ def watch_feature_uploads(
             ).distinct().collect()
         ]
         for uri in sorted(files):
-            local = uri.removeprefix("file://") or uri
+            local = local_path(uri)
             # at-least-once guard: a replayed batch (crash between
             # process_upload and the checkpoint commit) skips uploads
             # already finished, instead of briefly regressing their

@@ -153,3 +153,34 @@ def test_feature_metadata_constant_feature_is_null(spark, network):
     assert meta["net"]["Abundance"]["FLAT"] == 0.0
     assert meta["net"]["ChAs"]["FLAT"] is None
     assert meta["net"]["Random ChAs interval"]["FLAT"] is None
+
+
+def test_read_feature_skips_bed_header_lines(spark):
+    """UCSC BED header lines (``track …``, ``browser …``, ``#…``) are
+    dropped before the coordinate cast; the data lines read as usual."""
+    p = _write(
+        "hdr.bed",
+        [
+            'track name=hdr description="signal track"',
+            "browser position chr1:100-600",
+            "#chrom\tstart\tend\tsignal",
+            "chr1\t150\t350\t2.0",
+            "chr1\t380\t550\t4.0",
+        ],
+    )
+    rows = sorted(
+        (r["chr"], r["start"], r["end"], r["value"])
+        for r in read_feature(spark, p, "bed3").collect()
+    )
+    assert rows == [("1", 150, 350, 2.0), ("1", 380, 550, 4.0)]
+
+
+def test_read_feature_non_numeric_coordinate_fails(spark):
+    """Any other line whose coordinate is not a number still fails the
+    read: only the header lines are skipped."""
+    p = _write(
+        "badcoord.bed",
+        ["track name=bad", "chr1\t150\t350\t2.0", "trackX\tabc\t10\t1.0"],
+    )
+    with pytest.raises(Exception):
+        read_feature(spark, p, "bed3").collect()

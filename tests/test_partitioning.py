@@ -89,3 +89,31 @@ def test_no_rdd_call_in_helper_source():
     tree = ast.parse(inspect.getsource(mod))
     attrs = {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
     assert "rdd" not in attrs and "getNumPartitions" not in attrs
+
+
+def test_local_path_decodes_file_uris():
+    """Spark reports input files as percent-escaped URIs; the local
+    path is the decoded one, and a bare path passes through."""
+    from garden_net_backend_spark.session import local_path
+
+    assert local_path("file:///data/a%20b/u1.bed") == "/data/a b/u1.bed"
+    assert local_path("file:/data/a%20b/u1.bed") == "/data/a b/u1.bed"
+    assert local_path("/data/a b/u1.bed") == "/data/a b/u1.bed"
+    assert local_path("hdfs://nn/x%20y") == "hdfs://nn/x%20y"
+
+
+def test_operator_named_column_under_spaced_dir_fans_out(spark, tmp_path):
+    """A plain file scan is fanned out even when a column is named like
+    a distributed operator (``Joined_x``, ``Window_n``) and its file
+    lies under a directory whose name holds a space: plan nodes are
+    matched as the operator that begins a plan line, not as a
+    substring, and the file's size is read from its decoded path."""
+    path = str(tmp_path / "a b" / "scan.parquet")
+    spark.createDataFrame(
+        [(i, i * 2) for i in range(50)], "Joined_x long, Window_n long"
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    est = _estimated_scan_partitions(df)
+    assert est == df.rdd.getNumPartitions()
+    target = spark.sparkContext.defaultParallelism + 4
+    assert ensure_min_partitions(df, target).rdd.getNumPartitions() == target

@@ -131,3 +131,124 @@ def test_watcher_end_to_end(spark, network, tmp_path):
     )
     assert q2.awaitTermination(420), "upload watcher restart did not drain"
     assert os.path.getmtime(os.path.join(out, "u1", "features_metadata.json")) == m1
+
+
+def _persisted_rdd_ids(spark) -> set:
+    return {int(k) for k in spark._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def test_process_upload_releases_its_pins(spark, network, tmp_path):
+    """An upload pins its dense grid and one frame per subnet; a
+    successful upload and a failing one both leave no persisted RDD
+    behind. Compared by RDD id, as in
+    test_ingest_face_releases_its_pins."""
+    nodes, edges = network
+    out = str(tmp_path / "out")
+    ok = _mkfile(str(tmp_path), "pins.bed", ["chr1\t150\t350\t2.0", "chr1\t380\t550\t4.0"])
+    bad = _mkfile(str(tmp_path), "pinsbad.bed6", ["chr1\tnot_a_number\t2\tx\t5\t+"])
+    before = _persisted_rdd_ids(spark)
+    process_upload(spark, ok, nodes, edges, out, n_random=1, n_random_po=2)
+    left = _persisted_rdd_ids(spark) - before
+    assert not left, f"successful upload: {len(left)} RDDs left persisted"
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(Exception):
+        process_upload(spark, bad, nodes, edges, out)
+    left = _persisted_rdd_ids(spark) - before
+    assert not left, f"failing upload: {len(left)} RDDs left persisted"
+
+
+def test_process_upload_reference_defaults_match_operators(spark, network, tmp_path):
+    """With the reference defaults (pp and po computed), each subnet's
+    Abundance, ChAs and mean degree equal what the public operators give
+    on that subnet's endpoint-restricted features. The chromhmm upload
+    has three states; E3 lies off the network, so it reads 0 on every
+    node after the fill: Abundance 0, a null ChAs and no mean degree."""
+    from pyspark.sql import functions as F
+
+    from garden_net_backend_spark.operators.chas import (
+        chas,
+        feature_abundance,
+        feature_mean_degree,
+    )
+    from garden_net_backend_spark.operators.graph import (
+        degrees,
+        subset_edges_by_nodesets,
+    )
+
+    nodes, edges = network
+    out = str(tmp_path / "out")
+    p = _mkfile(
+        str(tmp_path),
+        "states.chromhmm.bed",
+        [
+            "chr1\t100\t250\tE1",
+            "chr1\t500\t600\tE1",
+            "chr1\t300\t400\tE2",
+            "chr2\t100\t200\tE2",
+            "chr1\t550\t600\tE2",
+            "chr9\t1\t100\tE3",
+        ],
+    )
+    meta = process_upload(spark, p, nodes, edges, out, n_random=2, n_random_po=3)
+    dense = spark.read.parquet(os.path.join(out, "states", "features.parquet"))
+    e = edges.select("src", "dst")
+    baits = nodes.filter(F.col("type") == "P").select(F.col("fragment").alias("node"))
+    oes = nodes.filter(F.col("type") == "O").select(F.col("fragment").alias("node"))
+    subsets = {
+        "net": e,
+        "pp": subset_edges_by_nodesets(e, baits),
+        "po": subset_edges_by_nodesets(e, baits, oes),
+    }
+    for name, sub in subsets.items():
+        ends = sub.select(F.col("src").alias("fragment")).union(
+            sub.select(F.col("dst").alias("fragment"))
+        ).distinct()
+        feats = dense.join(ends, "fragment", "left_semi")
+        want_ab = {r[0]: r[1] for r in feature_abundance(feats, decimals=2).collect()}
+        want_ch = {
+            r[0]: (round(r[1], 6) if r[1] is not None else None)
+            for r in chas(sub, feats).collect()
+        }
+        want_md = {
+            r[0]: r[1]
+            for r in feature_mean_degree(feats, degrees(sub), decimals=2).collect()
+        }
+        got = meta[name]
+        assert got["Abundance"] == want_ab, name
+        assert got["ChAs"] == want_ch, name
+        assert got["Mean degree"] == want_md, name
+        assert set(got["Random ChAs interval"]) == set(want_ab), name
+        assert got["Abundance"]["E3"] == 0.0, name
+        assert got["ChAs"]["E3"] is None, name
+        assert got["Random ChAs interval"]["E3"] is None, name
+        assert "E3" not in got["Mean degree"], name
+    assert set(meta["net"]["Abundance"]) == {"E1", "E2", "E3"}
+
+
+def test_watcher_uploads_dir_with_space(spark, network, tmp_path):
+    """The watcher processes uploads whose directory name holds a
+    space: Spark reports the file as a percent-escaped URI, and the
+    upload is read from its decoded path."""
+    nodes, edges = network
+    uploads = str(tmp_path / "my uploads")
+    out = str(tmp_path / "out")
+    os.makedirs(uploads)
+    _mkfile(uploads, "sp1.bed", ["chr1\t150\t350\t2.0"])
+    q = watch_feature_uploads(
+        spark, uploads, nodes, edges, out, str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    assert q.awaitTermination(420), "upload watcher did not drain"
+    assert os.path.exists(os.path.join(out, "sp1", "features_metadata.json"))
+    with open(os.path.join(out, "_status", "sp1.status.json")) as fh:
+        assert json.load(fh)["state"] == "SUCCESS"
+
+
+def test_format_inference_skips_bed_header_lines(tmp_path):
+    """Format inference reads the first line that is not a UCSC BED
+    header line (``track``, ``browser``, ``#``)."""
+    d = str(tmp_path)
+    header = ['track name=h3k27 description="H3K27ac"', "browser position chr1:1-1000",
+              "#chrom\tstart\tend\tname\tscore\tstrand"]
+    assert infer_feature_format(_mkfile(d, "h.bed", header + ["chr1\t1\t2\tp\t5\t+"])) == "bed6"
+    assert infer_feature_format(_mkfile(d, "s.bed", header[:1] + ["chr1\t1\t2\tE9"])) == "chromhmm"
