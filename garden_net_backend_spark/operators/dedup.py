@@ -13,8 +13,8 @@ the cutters, ONE per-document rebuild.
                 (``ngram_jaccard_pairs_prefix``, AllPairs/PPJoin).
 - MinHash+LSH:  candidates from banded signatures (band-hash
                 equi-join), the scale path: cost linear in docs +
-                candidates, never all-pairs. The incremental kernel
-                probes a stored banded index.
+                candidates, never all-pairs. Given a stored corpus,
+                the same kernel probes its banded index.
 - SimHash:      64-bit fingerprint; candidates share a 16-bit block,
                 verified by Hamming distance.
 - embedding cosine: near-dup = cosine ≥ τ over an embedding column —
@@ -31,19 +31,22 @@ the cutters, ONE per-document rebuild.
 The shared steps, each written once:
 
 - :func:`_verify_jaccard` — the exact Jaccard check of candidate
-  pairs (prefix, MinHash batch and incremental);
-- :func:`_first_occurrence_index` / :func:`_merge_index` — the stored
-  ``(key, n_occurrences, first_id, first_pos)`` index of the window
-  and line families, built from a batch and merged with a shard's;
+  pairs over hashed grams (prefix and MinHash emitters);
+- :func:`_first_occurrence_index` — the stored ``(key,
+  n_occurrences, first_id, first_pos)`` index of the window and line
+  families (:func:`window_index`, :func:`line_index`);
 - :func:`_mark_first` — the same first occurrence as window
-  aggregates, marking each row (batch and incremental cutters);
+  aggregates, marking each row (the cutters);
 - :func:`_joined_text` / :func:`_doc_rows` — the per-document rebuild
   of the cutters, anchored on the input so every document (NULL text
   included) gets exactly one row.
 
-Batch and incremental kernels stay separate: the batch kernels serve
-whole corpora and first ingests, the incremental ones probe a stored
-index with a shard (reuse of stored state across successive requests).
+One kernel per family serves both a whole corpus and an arriving
+shard: the shard case passes the stored state (``index=`` for the
+cutters, ``corpus_docs=``/``corpus_bands=`` for MinHash), and the
+first request is the degenerate case with none, which runs the batch
+plan unchanged. The stored indexes are append-only: an ingest loop
+appends each shard's first-seen keys and never merges counts.
 
 All hashing is ``xxhash64`` seeded — deterministic across runs,
 partitionings, and cluster sizes.
@@ -70,7 +73,7 @@ _SIMHASH_BLOCKS = 4
 
 
 def _local_checkpoint(df: DataFrame) -> DataFrame:
-    """The default ``checkpoint`` of the operators that take one: an
+    """The default ``checkpoint`` of :func:`minhash_dedup_pairs`: an
     eager localCheckpoint. A caller that must release the blocks when
     its unit of work ends (the streaming ingest runner's ``pin``)
     passes its own."""
@@ -420,6 +423,8 @@ def minhash_dedup_pairs(
     shingle: str = "char",
     grams: DataFrame | None = None,
     checkpoint=_local_checkpoint,
+    corpus_docs: DataFrame | None = None,
+    corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded
     candidates → **exact** Jaccard verification of candidates only →
@@ -441,93 +446,68 @@ def minhash_dedup_pairs(
     arrays (:func:`_hashed_grams`), the same trade as
     :func:`ngram_jaccard_pairs_prefix`. ``checkpoint`` takes that
     signature checkpoint.
+
+    ``corpus_docs``: an already-deduplicated corpus the NEW ``docs``
+    arrive against (the ingest shard). Only pairs touching at least
+    one new doc are emitted; corpus-vs-corpus pairs were handled when
+    the corpus was ingested. ``corpus_bands`` is the corpus's stored
+    index, the pre-BANDED signatures (:func:`band_signatures` output,
+    (id, band, bhash)), so a shard costs signing the SHARD only and
+    one band join of its bands against the stored ones ∪ its own;
+    stored partitioned by ``band``, the join partition-prunes.
+    Without ``corpus_bands`` the corpus is re-signed (correct, but the
+    full-rescan cost the stored index exists to avoid). The verify
+    shingles only the candidate members of shard ∪ corpus (semi-join
+    pushdown), so corpus text is touched for the few docs a band hit.
+    Signatures are a pure function of (text, seed), so index reuse is
+    bit-safe across runs; doc ids must be unique across shard and
+    corpus. This mode takes no signature checkpoint and no ``grams``.
     """
-    sigs = checkpoint(minhash_signatures(
-        docs, text_col, id_col, num_hashes, ngram, seed, shingle, grams=grams
-    ))
-    cands = minhash_lsh_candidates(sigs, bands, num_hashes // bands)
+    rows_per_band = num_hashes // bands
+    if corpus_docs is None:
+        if corpus_bands is not None:
+            raise ValueError("corpus_bands= needs corpus_docs= to verify")
+        sigs = checkpoint(minhash_signatures(
+            docs, text_col, id_col, num_hashes, ngram, seed, shingle, grams=grams
+        ))
+        cands = minhash_lsh_candidates(sigs, bands, rows_per_band)
+    else:
+        if grams is not None:
+            raise ValueError("grams= covers docs only, not corpus_docs=")
+
+        def banded(d):
+            sigs = minhash_signatures(
+                d, text_col, id_col, num_hashes, ngram, seed, shingle
+            )
+            return band_signatures(sigs, bands, rows_per_band)
+
+        new = banded(docs)
+        if corpus_bands is None:
+            corpus_bands = banded(corpus_docs)
+        every = corpus_bands.select("id", "band", "bhash").unionByName(new)
+        cands = (
+            new.withColumnRenamed("id", "_i")
+            .join(every.withColumnRenamed("id", "_j"), ["band", "bhash"])
+            .filter(F.col("_i") != F.col("_j"))
+            .select(
+                F.least("_i", "_j").alias("id_a"),
+                F.greatest("_i", "_j").alias("id_b"),
+            )
+            .distinct()
+        )
+        cand_ids = (
+            cands.select(F.col("id_a").alias(id_col))
+            .union(cands.select(F.col("id_b").alias(id_col)))
+            .distinct()
+        )
+        docs = (
+            docs.select(id_col, text_col)
+            .unionByName(corpus_docs.select(id_col, text_col))
+            .join(cand_ids, id_col, "left_semi")
+        )
     if grams is None:
         grams = with_shingles(docs, text_col, "_grams", ngram, shingle)
     shing = _hashed_grams(grams, F.col(id_col).alias("id"))
-    return _verify_jaccard(cands, shing, threshold)
-
-
-def minhash_dedup_incremental(
-    new_docs: DataFrame,
-    corpus_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    ngram: int = 5,
-    seed: int = 42,
-    shingle: str = "char",
-    corpus_bands: DataFrame | None = None,
-) -> DataFrame:
-    """Incremental near-dup detection: a NEW shard against an already-
-    signed corpus plus itself → (id_a, id_b, jaccard), every pair
-    touching at least one new document (corpus-vs-corpus pairs are
-    assumed handled when the corpus was ingested — they are filtered
-    out, not recomputed).
-
-    This is the actual 100 TB ingest workflow: the stored index is the
-    pre-BANDED corpus signatures (``band_signatures`` output — (id,
-    band, bhash)), passed as ``corpus_bands``, so an incoming shard
-    costs shingling the SHARD only, one band join against the corpus
-    index, and exact verification of candidates; when the table is
-    stored partitioned by ``band`` the probe join partition-prunes.
-    Without ``corpus_bands`` the corpus is re-signed (correct, but the
-    full-rescan cost this operator exists to avoid — a fallback for
-    tests and first ingest). Signatures are a pure function of (text,
-    seed), so index reuse is bit-safe across runs.
-
-    Doc ids must be globally unique across shard and corpus.
-    """
-    rows_per_band = num_hashes // bands
-    new_sigs = minhash_signatures(
-        new_docs, text_col, id_col, num_hashes, ngram, seed, shingle
-    )
-    if corpus_bands is not None:
-        corpus_banded = corpus_bands.select("id", "band", "bhash")
-    else:
-        corpus_banded = band_signatures(
-            minhash_signatures(
-                corpus_docs, text_col, id_col, num_hashes, ngram, seed, shingle
-            ),
-            bands,
-            rows_per_band,
-        )
-    banded = corpus_banded.withColumn("_new", F.lit(False)).unionByName(
-        band_signatures(new_sigs, bands, rows_per_band).withColumn(
-            "_new", F.lit(True)
-        )
-    )
-    a = banded.select(F.col("id").alias("id_a"), F.col("_new").alias("_na"), "band", "bhash")
-    b = banded.select(F.col("id").alias("id_b"), F.col("_new").alias("_nb"), "band", "bhash")
-    cands = (
-        a.join(b, ["band", "bhash"])
-        .filter((F.col("id_a") < F.col("id_b")) & (F.col("_na") | F.col("_nb")))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # exact verification shingles ONLY candidate members (semi-join
-    # pushdown) — corpus text is touched for the few docs a band hit,
-    # not re-scanned. Unlike the batch emitters it verifies over the
-    # gram STRINGS, not their hashes.
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    union_docs = (
-        new_docs.select(F.col(id_col), F.col(text_col))
-        .unionByName(corpus_docs.select(F.col(id_col), F.col(text_col)))
-        .join(cand_ids, id_col, "left_semi")
-    )
-    shing = with_shingles(union_docs, text_col, "_grams", ngram, shingle).select(
-        id_col, "_grams"
-    )
     return _verify_jaccard(cands, shing, threshold)
 
 
@@ -627,20 +607,15 @@ def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3) -> DataFra
     )
 
 
-def _first_occurrence_index(
-    rows: DataFrame, key: str, counts: str | None = None
-) -> DataFrame:
+def _first_occurrence_index(rows: DataFrame, key: str) -> DataFrame:
     """The stored index of the window and line families: ``(key, id,
     pos)`` rows grouped by ``key`` → ``(key, n_occurrences, first_id,
     first_pos)``, how often each key occurs and its first occurrence
-    (min ``(id, pos)``). With ``counts`` the rows are partial index
-    rows and that column is summed instead of counting rows (see
-    :func:`_merge_index`)."""
-    n = F.count("*") if counts is None else F.sum(counts)
+    (min ``(id, pos)``)."""
     return (
         rows.groupBy(key)
         .agg(
-            n.alias("n_occurrences"),
+            F.count("*").alias("n_occurrences"),
             F.min(F.struct("id", "pos")).alias("_first"),
         )
         .select(
@@ -649,25 +624,6 @@ def _first_occurrence_index(
             F.col("_first.id").alias("first_id"),
             F.col("_first.pos").alias("first_pos"),
         )
-    )
-
-
-def _merge_index(index: DataFrame, shard_index: DataFrame, key: str) -> DataFrame:
-    """A stored index merged with a shard's: occurrence counts add up,
-    the earlier first occurrence wins. A union + re-aggregate on
-    ``key`` — corpus-index-sized, so store the index BUCKETED by
-    ``key``: both inputs then arrive co-partitioned and the
-    re-aggregate runs shuffle-free; without bucketing each merge pays
-    one full index shuffle."""
-    return _first_occurrence_index(
-        index.unionByName(shard_index).select(
-            key,
-            "n_occurrences",
-            F.col("first_id").alias("id"),
-            F.col("first_pos").alias("pos"),
-        ),
-        key,
-        counts="n_occurrences",
     )
 
 
@@ -874,6 +830,7 @@ def excise_duplicate_spans(
     seed: int = 42,
     positions: DataFrame | None = None,
     max_tokens_per_doc: int | None = 2_000_000,
+    index: DataFrame | None = None,
 ) -> DataFrame:
     """Remove duplicated substrings, keeping the corpus-wide FIRST
     occurrence → ``(id_col, clean_text, n_kept_tokens,
@@ -905,20 +862,46 @@ def excise_duplicate_spans(
     stage; route flagged docs to a chunk-split pre-pass if their spans
     matter. ``None`` disables the guard. All rows carry the
     ``oversize`` column.
+
+    ``index``: the stored :func:`window_index` of an already-excised
+    corpus that ``docs`` (an arriving shard) extends. The corpus is
+    never re-read: a shard window is cut iff its content is in the
+    index (the corpus holds the first occurrence) or it repeats
+    within the shard and is not the shard's own first occurrence —
+    one equi-join against the index on ``wkey``, then the same
+    rebuild. Contract: document ids grow monotonically across shards,
+    so the stored first occurrence is the global ``(id, pos)`` minimum
+    and the shard's excision equals the batch excision of corpus +
+    shard restricted to shard rows (equivalence-tested). Decisions
+    read key EXISTENCE only, so the index may hold just the first-seen
+    keys of each shard. ``positions`` describes the whole corpus, so
+    it cannot be combined with ``index``.
     """
-    dpos = (
-        positions
-        if positions is not None
-        else duplicated_window_positions(docs, text_col, id_col, min_tokens, seed)
-    )
-    cut_windows = dpos.filter(
-        ~(
-            (F.col("id") == F.col("first_id"))
-            & (F.col("pos") == F.col("first_pos"))
+    if index is None:
+        dpos = (
+            positions
+            if positions is not None
+            else duplicated_window_positions(docs, text_col, id_col, min_tokens, seed)
         )
-    ).select("id", "pos")
+        cut_windows = dpos.filter(
+            ~(
+                (F.col("id") == F.col("first_id"))
+                & (F.col("pos") == F.col("first_pos"))
+            )
+        )
+    elif positions is not None:
+        raise ValueError("positions= and index= are exclusive")
+    else:
+        wins = _window_fingerprints(
+            docs, text_col, id_col, min_tokens, seed
+        ).join(index.select("wkey", "n_occurrences"), "wkey", "left")
+        cut_windows = _mark_first(wins, ["wkey"], "n_occurrences").filter(
+            F.col("n_occurrences").isNotNull()
+            | ((F.col("_n") > 1) & ~F.col("_is_first"))
+        )
     return _excise_by_cut_windows(
-        docs, cut_windows, text_col, id_col, min_tokens, max_tokens_per_doc
+        docs, cut_windows.select("id", "pos"), text_col, id_col, min_tokens,
+        max_tokens_per_doc,
     )
 
 
@@ -994,7 +977,7 @@ def window_index(
     fingerprint in the corpus → ``(wkey, n_occurrences, first_id,
     first_pos)``. An incoming shard pays one equi-join against it
     instead of re-fingerprinting the corpus (see
-    :func:`excise_duplicate_spans_incremental`); the ingest loop
+    :func:`excise_duplicate_spans`' ``index``); the ingest loop
     broadcast-semi-join-prunes the stored side to shard-touched keys
     (a ``pmod(wkey, K)`` partition layout was once recommended here
     and is retired: window hashes scatter uniformly, so no
@@ -1002,66 +985,11 @@ def window_index(
 
     Size: one 8-byte key + counts per distinct window ≈ corpus token
     count — the same order as any suffix-structure over the corpus,
-    but flat, mergeable, and hash-partitioned.
+    but flat, appendable, and hash-partitioned.
     """
     return _first_occurrence_index(
         _window_fingerprints(docs, text_col, id_col, min_tokens, seed), "wkey"
     )
-
-
-def excise_duplicate_spans_incremental(
-    shard: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_tokens: int = 50,
-    seed: int = 42,
-    max_tokens_per_doc: int | None = 2_000_000,
-    checkpoint=_local_checkpoint,
-) -> tuple[DataFrame, DataFrame]:
-    """Substring-excise an incoming SHARD against an already-indexed
-    corpus → ``(cleaned_shard, updated_index)``.
-
-    The 100 TB ingest workflow (mirror of
-    :func:`minhash_dedup_incremental`): the corpus is never re-read —
-    a shard window is cut iff its content already exists in the corpus
-    index (the corpus holds the canonical first occurrence) OR it
-    repeats within the shard and is not the shard's own first
-    occurrence. Cost: fingerprint the shard, one equi-join against the
-    index on ``wkey``, the shared cut/rebuild stage, and one
-    merge-aggregate to produce the updated index. Contract (same as
-    the MinHash incremental path): document ids are assigned
-    monotonically across shards, so the corpus-side first occurrence
-    is also the global (id, pos) minimum and incremental excision
-    equals the batch excision of corpus+shard restricted to shard rows
-    (equivalence-tested).
-
-    The updated index counts shard occurrences into ``n_occurrences``
-    and keeps the earliest ``(first_id, first_pos)`` per window, so
-    chained ingests stay exact (:func:`_merge_index`).
-    """
-    # round 13 (guide §2.4): both the index probe and the shard-index
-    # merge consume the shard fingerprints — checkpoint once (shard-
-    # sized, the ingest unit) so the token-hash scan runs once, not
-    # twice
-    wins = checkpoint(_window_fingerprints(
-        shard, text_col, id_col, min_tokens, seed
-    ))
-    joined = wins.join(
-        index.select("wkey", "n_occurrences", "first_id", "first_pos"),
-        "wkey",
-        "left",
-    )
-    marked = _mark_first(joined, ["wkey"], "n_occurrences")
-    in_corpus = F.col("n_occurrences").isNotNull()
-    cut_windows = marked.filter(
-        in_corpus | ((F.col("_n") > 1) & ~F.col("_is_first"))
-    ).select("id", "pos")
-    cleaned = _excise_by_cut_windows(
-        shard, cut_windows, text_col, id_col, min_tokens, max_tokens_per_doc
-    )
-    updated = _merge_index(index, _first_occurrence_index(wins, "wkey"), "wkey")
-    return cleaned, updated
 
 
 def line_dedup(
@@ -1073,6 +1001,7 @@ def line_dedup(
     min_chars: int = 1,
     normalize: bool = True,
     joiner: str = "\n",
+    index: DataFrame | None = None,
 ) -> DataFrame:
     """LINE-level exact dedup across the corpus (the C4 / RefinedWeb /
     CCNet curation step): split every document on ``sep`` (a regex), and
@@ -1112,10 +1041,40 @@ def line_dedup(
     same aggregate. A non-qualifying line never matches a qualifying
     group (same content ⇒ same length ⇒ same ``_qual``), so gating
     ``cut`` on ``_qual`` reproduces qualifying-only stats exactly.
+
+    ``index``: the stored :func:`line_index` of an already-deduplicated
+    corpus that ``docs`` (an arriving shard) extends; the rows
+    left-join it on the line key, so the corpus is never re-split. A
+    shard line is cut iff its stored + within-shard occurrence count
+    reaches ``min_count`` and it is not the global first occurrence
+    (absent from the index and first within the shard) — the same
+    contract as :func:`excise_duplicate_spans`' ``index``: monotonic
+    doc ids across shards, so chained ingests equal the batch
+    ``line_dedup`` restricted to each shard (equivalence-tested). With
+    the default ``min_count=2`` the decision reads index EXISTENCE
+    only, so an ingest loop may append just each batch's first-seen
+    lines; for ``min_count > 2`` it reads the stored counts, so the
+    index must count every occurrence. ``sep`` / ``min_chars`` /
+    ``normalize`` must match the values the index was built with
+    (parameter drift shows up in ``audit_ingest_index`` as wholesale
+    key disagreement).
     """
     lines = _line_rows(docs, text_col, id_col, sep, min_chars, normalize)
-    marked = _mark_first(lines, ["_qual", "_k"], "line", "_qual")
-    cut = F.col("_qual") & (F.col("_n") >= min_count) & ~F.col("_is_first")
+    n, first, stored = F.col("_n"), F.col("_is_first"), []
+    if index is not None:
+        lines = lines.join(
+            index.select(
+                F.col("lkey").alias("_k"),
+                F.col("n_occurrences").alias("_stored_n"),
+            ),
+            "_k",
+            "left",
+        )
+        n = F.coalesce("_stored_n", F.lit(0)) + n
+        first = F.col("_stored_n").isNull() & first
+        stored = ["_stored_n"]
+    marked = _mark_first(lines, ["_qual", "_k"], "line", "_qual", *stored)
+    cut = F.col("_qual") & (n >= min_count) & ~first
     per_doc = marked.groupBy("id").agg(
         _joined_text(F.when(~cut, F.struct("pos", "line")), "line", joiner),
         F.sum(F.when(~cut, 1).otherwise(0)).alias("n_kept_lines"),
@@ -1163,74 +1122,11 @@ def line_index(
     line content → ``(lkey, n_occurrences, first_id, first_pos)`` —
     the exact analogue of :func:`window_index` for the line family.
     An incoming shard pays one equi-join against it instead of
-    re-splitting the corpus (:func:`line_dedup_incremental`)."""
+    re-splitting the corpus (:func:`line_dedup`' ``index``)."""
     rows = _line_rows(docs, text_col, id_col, sep, min_chars, normalize)
     return _first_occurrence_index(
         rows.filter("_qual").withColumnRenamed("_k", "lkey"), "lkey"
     )
-
-
-def line_dedup_incremental(
-    shard: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = r"\n",
-    min_count: int = 2,
-    min_chars: int = 1,
-    normalize: bool = True,
-    joiner: str = "\n",
-    checkpoint=_local_checkpoint,
-) -> tuple[DataFrame, DataFrame]:
-    """Line-dedup an incoming SHARD against an already-indexed corpus →
-    ``(cleaned_shard, updated_index)`` — the line-family mirror of
-    :func:`excise_duplicate_spans_incremental`.
-
-    A shard line is cut iff its content already exists in the corpus
-    index (the corpus holds the canonical first occurrence — monotonic
-    doc ids across shards, same contract as every incremental path
-    here) or its total occurrence count (stored + within-shard)
-    reaches ``min_count`` and it is not the global first. With the
-    default ``min_count=2`` the decision reads index EXISTENCE only,
-    so an ingest loop may append just each batch's first-seen-line
-    DELTA and chained ingests equal the batch :func:`line_dedup`
-    restricted to each shard (equivalence-tested); for ``min_count >
-    2`` the decision reads the stored counts, so the loop must persist
-    the merged ``updated_index`` instead. ``sep`` / ``min_chars`` /
-    ``normalize`` must match the values the index was built with
-    (parameter drift shows up in ``audit_ingest_index`` as wholesale
-    key disagreement)."""
-    # round 13 (guide §2.4): the index probe, the non-qualifying union
-    # branch, the rebuild totals, and the shard-index delta all consume
-    # the exploded line rows — checkpoint once (shard-sized, the ingest
-    # unit) so the split+normalize+hash scan runs once, not four times
-    rows = checkpoint(_line_rows(
-        shard, text_col, id_col, sep, min_chars, normalize
-    ))
-    qual = rows.filter("_qual").withColumnRenamed("_k", "lkey")
-    joined = qual.join(
-        index.select("lkey", F.col("n_occurrences").alias("_stored_n")),
-        "lkey",
-        "left",
-    )
-    marked = _mark_first(joined, ["lkey"], "line", "_stored_n")
-    total = F.coalesce(F.col("_stored_n"), F.lit(0)) + F.col("_n")
-    is_global_first = F.col("_stored_n").isNull() & F.col("_is_first")
-    kept = (
-        marked.filter(~((total >= min_count) & ~is_global_first))
-        .select("id", "pos", "line")
-        .unionByName(rows.filter(~F.col("_qual")).select("id", "pos", "line"))
-    )
-    rebuilt = kept.groupBy("id").agg(
-        _joined_text(F.struct("pos", "line"), "line", joiner),
-        F.count("*").alias("n_kept_lines"),
-    )
-    totals = shard.select(F.col(id_col).alias("id")).join(
-        rows.groupBy("id").agg(F.count("*").alias("_n")), "id", "left"
-    )
-    cleaned = _doc_rows(totals, rebuilt, id_col, "lines")
-    updated = _merge_index(index, _first_occurrence_index(qual, "lkey"), "lkey")
-    return cleaned, updated
 
 
 def dedup_representatives(

@@ -1119,7 +1119,6 @@ def embedding_dup_pairs_lsh(
     bits: int = 8,
     dim: int = 64,
     max_bucket_size: int | None = None,
-    prescreen: bool = True,
     hot_mode: str = "drop",
     split_reserve_bits: int = 16,
     center: bool = False,
@@ -1242,9 +1241,9 @@ def embedding_dup_pairs_lsh(
         .select("id_a", "id_b")
         .distinct()
     )
-    pair_vecs = _pair_vectors(cand, base, id_col, vec_col)
-    if prescreen:
-        pair_vecs = _prescreen_pairs(pair_vecs, threshold)
+    pair_vecs = _prescreen_pairs(
+        _pair_vectors(cand, base, id_col, vec_col), threshold
+    )
     return _exact_pair_scores(pair_vecs, threshold)
 
 
@@ -1323,7 +1322,6 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cells: DataFrame | None = None,
-    prescreen: bool = True,
     assign: str = "exact",
     max_cell_size: int | None = None,
     hot_mode: str = "split",
@@ -1417,8 +1415,7 @@ def semantic_dedup_pairs(
         raise ValueError(f"unknown assign mode: {assign!r}")
     tagged = base.join(cell_of, id_col)
     return _semantic_cell_pairs(
-        tagged, cells, id_col, vec_col, threshold, prescreen,
-        max_cell_size, hot_mode,
+        tagged, cells, id_col, vec_col, threshold, max_cell_size, hot_mode,
     )
 
 
@@ -1489,7 +1486,6 @@ def semantic_dedup_incremental(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     assign: str = "arrow",
-    prescreen: bool = True,
     max_cell_size: int | None = None,
     hot_mode: str = "split",
 ) -> DataFrame:
@@ -1498,9 +1494,9 @@ def semantic_dedup_incremental(
     threshold), every pair touching at least one new vector
     (stored-vs-stored pairs are assumed handled when the corpus was
     ingested — they are filtered out, not recomputed). The semantic
-    counterpart of :func:`dedup.minhash_dedup_incremental` and the
-    window-fingerprint index — with this, all three dedup families
-    have an ingest-shard path.
+    counterpart of :func:`dedup.minhash_dedup_pairs`' ``corpus_docs``
+    mode and of the window and line indexes — with this, every dedup
+    family has an ingest-shard path.
 
     ``corpus_assign``: the stored (id, cell) assignment table —
     ``ivf_build_index`` writes exactly this shape at ingest (at 100 TB
@@ -1543,8 +1539,8 @@ def semantic_dedup_incremental(
     )
     tagged = new_tagged.unionByName(corpus_tagged)
     return _semantic_cell_pairs(
-        tagged, cells, id_col, vec_col, threshold, prescreen,
-        max_cell_size, hot_mode, new_col="_new",
+        tagged, cells, id_col, vec_col, threshold, max_cell_size, hot_mode,
+        new_col="_new",
     )
 
 
@@ -1554,7 +1550,6 @@ def _semantic_cell_pairs(
     id_col: str,
     vec_col: str,
     threshold: float,
-    prescreen: bool,
     max_cell_size: int | None,
     hot_mode: str,
     new_col: str | None = None,
@@ -1645,9 +1640,9 @@ def _semantic_cell_pairs(
                 # matches on both keys
                 .distinct()
             )
-            pair_vecs = _pair_vectors(cand, base, id_col, vec_col)
-            if prescreen:
-                pair_vecs = _prescreen_pairs(pair_vecs, threshold)
+            pair_vecs = _prescreen_pairs(
+                _pair_vectors(cand, base, id_col, vec_col), threshold
+            )
             return _exact_pair_scores(pair_vecs, threshold)
     a = tagged.select(
         F.col("_cell"), F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
@@ -1662,9 +1657,7 @@ def _semantic_cell_pairs(
         pair_vecs = pair_vecs.filter(
             touch_new(F.col("_na"), F.col("_nb"))
         ).drop("_na", "_nb")
-    if prescreen:
-        pair_vecs = _prescreen_pairs(pair_vecs, threshold)
-    return _exact_pair_scores(pair_vecs, threshold)
+    return _exact_pair_scores(_prescreen_pairs(pair_vecs, threshold), threshold)
 
 
 def quantize_embeddings_int8(

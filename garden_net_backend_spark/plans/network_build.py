@@ -579,9 +579,7 @@ def assign_grid_positions(
     )
 
 
-def cytoscape_elements(
-    nodes: DataFrame, edges: DataFrame, searched: DataFrame | None = None
-) -> DataFrame:
+def cytoscape_elements(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Cytoscape.js elements as one JSON string per row (reference
     generate_cytoscape_json, network_generator_lib.R:242-275; SURVEY S10).
 
@@ -591,22 +589,17 @@ def cytoscape_elements(
     reference needs a sed to unquote, backend.py:83-85 — we emit typed
     JSON directly), never scientific notation (LongType start/end).
     Distributed: ``df.write.text`` streams it; small graphs collect.
+
+    ``searched`` is the nodes' own column when they carry one (a
+    ``search_subnetwork`` result), else "false"; it is always the last
+    data field.
     """
     n = nodes
-    if searched is not None:
-        n = n.join(
-            searched.select(F.col("fragment"), F.lit("true").alias("searched")),
-            "fragment",
-            "left",
-        ).withColumn("searched", F.coalesce(F.col("searched"), F.lit("false")))
-    else:
+    if "searched" not in n.columns:
         n = n.withColumn("searched", F.lit("false"))
     has_pos = "x" in n.columns and "y" in n.columns
-    extra = [
-        c
-        for c in n.columns
-        if c not in {"fragment", "gene_names", "chr", "start", "end", "x", "y"}
-    ]
+    fixed = {"fragment", "gene_names", "chr", "start", "end", "x", "y", "searched"}
+    extra = [c for c in n.columns if c not in fixed] + ["searched"]
     node_struct = F.struct(
         F.col("fragment").alias("id"),
         F.col("gene_names").alias("names"),
@@ -646,13 +639,11 @@ def cytoscape_elements(
     )
 
 
-def to_cytoscape_json(
-    nodes: DataFrame, edges: DataFrame, searched: DataFrame | None = None
-) -> str:
+def to_cytoscape_json(nodes: DataFrame, edges: DataFrame) -> str:
     """Collected form for interactive (small) subnetworks; "{}" when the
     network is empty (reference empty-result sentinel,
     network_generator.R:88-92; SURVEY S13)."""
-    elems = [r["element"] for r in cytoscape_elements(nodes, edges, searched).collect()]
+    elems = [r["element"] for r in cytoscape_elements(nodes, edges).collect()]
     if not elems:
         return "{}"
     return '{"elements": [' + ",".join(elems) + "]}"

@@ -138,9 +138,6 @@ def serve_search(
         pinned_sym=pinned_sym,
         pin_policy=pin_policy,
     )
-    from pyspark.sql import functions as F
-
-    seeds = sub_nodes.filter(F.col("searched") == "true").select("fragment")
-    result = to_cytoscape_json(sub_nodes.drop("searched"), sub_edges, searched=seeds)
+    result = to_cytoscape_json(sub_nodes, sub_edges)
     cache.put(key, result)
     return result, False

@@ -106,8 +106,14 @@ def release(pinned: DataFrame) -> None:
     """Drop the blocks of an eagerly local-checkpointed frame. Its
     logical plan is the LogicalRDD over the checkpointed RDD, which
     stays registered as persisted, blocks held, until it is unpersisted
-    here: dropping the Python frame and a JVM GC do not release it."""
-    pinned._jdf.queryExecution().logical().rdd().unpersist(False)
+    here: dropping the Python frame and a JVM GC do not release it.
+
+    The context drops the RDD by id, which is what ``RDD.unpersist``
+    does after it logs a "lineage has been truncated" WARN for every
+    locally checkpointed RDD; the frame is dead after its release, so
+    that warning says nothing here."""
+    rdd = pinned._jdf.queryExecution().logical().rdd()
+    rdd.context().unpersistRDD(rdd.id(), False)
 
 
 def local_path(uri: str) -> str:

@@ -1,5 +1,5 @@
 """Continuous corpus ingest with near-dup gating (north-star
-extension): the streaming face of the incremental dedup family —
+extension): the streaming face of the dedup kernels' shard mode —
 all four families: MinHash (:func:`process_ingest_batch`), substring
 span-excision (:func:`process_ingest_batch_substring`), line-level
 (:func:`process_ingest_batch_lines`) and semantic
@@ -13,9 +13,10 @@ against BOTH itself and everything accepted so far, survivors are
 appended to the accepted corpus and their BANDED MinHash index rows
 (band_signatures output, partitioned by band) to the stored index — so
 the next batch pays one partition-prunable equi-join against the
-index, never a corpus rescan or even a corpus-side band hash (operators/dedup.minhash_dedup_incremental is
-the per-batch kernel; this module is the ``foreachBatch`` loop that
-feeds and maintains its index).
+index, never a corpus rescan or even a corpus-side band hash
+(operators/dedup.minhash_dedup_pairs with ``corpus_docs`` /
+``corpus_bands`` is the per-batch kernel; this module is the
+``foreachBatch`` loop that feeds and maintains its index).
 
 Decision rule per batch (documented, batch-replayable):
 
@@ -77,7 +78,7 @@ prefix it doesn't own. Scale out INSIDE the batch (executors), not by
 multiplying writers; multiple feeds union into one source.
 
 100 TB shape: the stream moves file names; the batch work is the
-incremental kernel's one band join (stored side touched only for
+MinHash kernel's one band join (stored side touched only for
 candidate members via semi-join pushdown) + two partitioned appends.
 State is Spark's file-source checkpoint; the index is data, not
 driver state. Per-batch partition accumulation is bounded by
@@ -697,20 +698,16 @@ def _minhash_gate(
     the keep-id frame of :func:`_ingest_decide`. ``mh`` holds the
     text/id columns and MinHash parameters :func:`_minhash_bands`
     takes."""
-    from ..operators.dedup import minhash_dedup_incremental, minhash_dedup_pairs
+    from ..operators.dedup import minhash_dedup_pairs
 
-    kw = dict(mh, threshold=threshold)
-    if stored_docs is None:
-        pairs = minhash_dedup_pairs(new, checkpoint=pin, **kw)
-    else:
-        pairs = minhash_dedup_incremental(
-            new,
-            stored_docs.select(mh["id_col"], mh["text_col"]),
-            corpus_bands=stored_bands.select("id", "band", "bhash")
-            if stored_bands is not None
-            else None,
-            **kw,
-        )
+    pairs = minhash_dedup_pairs(
+        new,
+        threshold=threshold,
+        checkpoint=pin,
+        corpus_docs=stored_docs,
+        corpus_bands=stored_bands if stored_docs is not None else None,
+        **mh,
+    )
     return _ingest_decide(pairs, new, stored_docs, mh["id_col"], pin)
 
 
@@ -746,13 +743,13 @@ def _first_seen_stage(
     key: str,
     index,
     dedup,
-    dedup_incremental,
 ) -> tuple[DataFrame, DataFrame]:
     """The line and substring stage, shared by their standalone faces
     and the curation face: cut content whose corpus-wide first
-    occurrence is elsewhere → (cleaned docs, index DELTA). ``index``,
-    ``dedup`` and ``dedup_incremental`` are the family's kernels over
-    ``docs``; ``key`` is its index key column.
+    occurrence is elsewhere → (cleaned docs, index DELTA). ``index``
+    builds the family's index of ``docs`` and ``dedup(docs,
+    index)`` its one kernel (``index=None`` on the first batch);
+    ``key`` is the index key column.
 
     The delta holds only keys never seen before: decisions read key
     EXISTENCE + first occurrence only, so it reproduces batch
@@ -761,37 +758,35 @@ def _first_seen_stage(
     shard's keys broadcast into a semi-join that prunes the
     corpus-sized index map-side (the batch side is micro-batch-sized
     by the streaming contract), the shard-sized survivor set is
-    pinned, and both the dedup join and the delta anti-join run
+    pinned, and both the kernel's join and the delta anti-join run
     against THAT. The previous shape shuffled the whole stored index
     twice per batch (once for the kernel's left join, once for the
     delta anti-join) — corpus-sized per-batch work at exactly the
     scale this loop exists for (review r10)."""
     if stored_idx is None:
-        return dedup(docs), index(docs)
+        return dedup(docs, None), index(docs)
     shard = pin(index(docs))
     touched = pin(
         stored_idx.select(key, "n_occurrences", "first_id", "first_pos").join(
             F.broadcast(shard.select(key)), key, "left_semi"
         )
     )
-    cleaned, _ = dedup_incremental(docs, touched)
     delta = shard.join(F.broadcast(touched.select(key)), key, "left_anti")
-    return cleaned, delta
+    return dedup(docs, touched), delta
 
 
 def _line_stage(
     docs, stored_idx, pin, text_col, id_col, sep, min_chars, normalize, joiner
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`_first_seen_stage` over lines (lkey)."""
-    from ..operators.dedup import line_dedup, line_dedup_incremental, line_index
+    from ..operators.dedup import line_dedup, line_index
 
     kw = dict(sep=sep, min_chars=min_chars, normalize=normalize)
     return _first_seen_stage(
         docs, stored_idx, pin, "lkey",
         lambda d: line_index(d, text_col, id_col, **kw),
-        lambda d: line_dedup(d, text_col, id_col, joiner=joiner, **kw),
-        lambda d, idx: line_dedup_incremental(
-            d, idx, text_col, id_col, joiner=joiner, checkpoint=pin, **kw
+        lambda d, idx: line_dedup(
+            d, text_col, id_col, joiner=joiner, index=idx, **kw
         ),
     )
 
@@ -800,18 +795,13 @@ def _substring_stage(
     docs, stored_idx, pin, text_col, id_col, min_tokens, seed
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`_first_seen_stage` over ``min_tokens`` windows (wkey)."""
-    from ..operators.dedup import (
-        excise_duplicate_spans,
-        excise_duplicate_spans_incremental,
-        window_index,
-    )
+    from ..operators.dedup import excise_duplicate_spans, window_index
 
     return _first_seen_stage(
         docs, stored_idx, pin, "wkey",
         lambda d: window_index(d, text_col, id_col, min_tokens, seed),
-        lambda d: excise_duplicate_spans(d, text_col, id_col, min_tokens, seed),
-        lambda d, idx: excise_duplicate_spans_incremental(
-            d, idx, text_col, id_col, min_tokens, seed, checkpoint=pin
+        lambda d, idx: excise_duplicate_spans(
+            d, text_col, id_col, min_tokens, seed, index=idx
         ),
     )
 
@@ -933,7 +923,7 @@ def process_ingest_batch_substring(
     the reject/accept faces nothing is dropped: every doc lands in the
     accepted corpus with duplicated passages ≥ ``min_tokens`` CUT
     (corpus-wide first occurrence survives — Lee et al. 2022,
-    operators/dedup.excise_duplicate_spans_incremental is the
+    operators/dedup.excise_duplicate_spans with ``index`` is the
     per-batch kernel), carrying ``clean_text`` / ``n_cut_tokens`` /
     ``oversize`` next to the original text.
 
@@ -953,7 +943,7 @@ def process_ingest_batch_substring(
     The scan is the floor for exact substring dedup without an
     external KV store; everything above it is shard-sized.
 
-    Contract inherited from the incremental kernel: doc ids assigned
+    Contract inherited from the kernel's index mode: doc ids assigned
     monotonically across batches, so the stored first occurrence is
     the global (id, pos) minimum and chained ingests equal the batch
     excision restricted to each shard (equivalence-tested). The

@@ -156,9 +156,6 @@ def test_minhash_dedup_incremental(spark):
     """New-shard ingest against a stored signature index: pairs touching
     the shard are found (shard-vs-corpus AND shard-vs-shard), already-
     handled corpus-vs-corpus pairs are NOT re-emitted."""
-    from garden_net_backend_spark.operators.dedup import (
-        minhash_dedup_incremental,
-    )
 
     base = " ".join(f"tok{i:02d}" for i in range(60))
     corpus = spark.createDataFrame(
@@ -180,7 +177,7 @@ def test_minhash_dedup_incremental(spark):
     kw = dict(threshold=0.7, shingle="word", ngram=3)
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in minhash_dedup_incremental(shard, corpus, **kw).collect()
+        for r in minhash_dedup_pairs(shard, corpus_docs=corpus, **kw).collect()
     }
     assert (10, 11) in pairs                     # shard-vs-shard
     assert (0, 10) in pairs and (0, 11) in pairs  # shard-vs-corpus
@@ -413,10 +410,10 @@ def test_incremental_span_excision_equals_batch(spark):
     """Ingest workflow: shard excised against the stored window index
     must equal batch excision of corpus+shard restricted to the shard,
     for every duplication mode (corpus↔shard, shard-internal, novel).
-    Chained: the updated index makes a SECOND shard exact too."""
+    Chained: the index over corpus+shard makes a SECOND shard exact
+    too."""
     from garden_net_backend_spark.operators.dedup import (
         excise_duplicate_spans,
-        excise_duplicate_spans_incremental,
         window_index,
     )
 
@@ -439,9 +436,7 @@ def test_incremental_span_excision_equals_batch(spark):
         "doc_id long, text string",
     )
     idx = window_index(corpus, min_tokens=L).persist()
-    cleaned, updated = excise_duplicate_spans_incremental(
-        shard, idx, min_tokens=L
-    )
+    cleaned = excise_duplicate_spans(shard, min_tokens=L, index=idx)
     got = {
         r["doc_id"]: (r["clean_text"], r["n_kept_tokens"], r["n_cut_tokens"])
         for r in cleaned.collect()
@@ -455,23 +450,13 @@ def test_incremental_span_excision_equals_batch(spark):
     assert got == want
     # the corpus passage is gone from the shard but intact in doc 0
     assert "p1" not in got[10][0] and got[12][0].startswith("novel")
-    # updated index == index built from scratch over corpus+shard
-    fresh = {
-        r["wkey"]: (r["n_occurrences"], r["first_id"], r["first_pos"])
-        for r in window_index(both, min_tokens=L).collect()
-    }
-    upd = {
-        r["wkey"]: (r["n_occurrences"], r["first_id"], r["first_pos"])
-        for r in updated.collect()
-    }
-    assert upd == fresh
-    # chained ingest: a second shard against the updated index
+    # chained ingest: a second shard against the index of corpus+shard
     shard2 = spark.createDataFrame(
         [(20, "w1 w2 " + passage), (21, "q1 q2 q3 q4 done")],
         "doc_id long, text string",
     )
-    cleaned2, _ = excise_duplicate_spans_incremental(
-        shard2, updated, min_tokens=L
+    cleaned2 = excise_duplicate_spans(
+        shard2, min_tokens=L, index=window_index(both, min_tokens=L)
     )
     got2 = {
         r["doc_id"]: (r["clean_text"], r["n_kept_tokens"], r["n_cut_tokens"])
@@ -486,13 +471,46 @@ def test_incremental_span_excision_equals_batch(spark):
     assert got2 == want2
 
 
+def test_stored_state_modes_refuse_conflicting_inputs(docs_df):
+    """A kernel's stored-state input cannot be combined with an input
+    that describes the shard alone or the whole corpus: substring
+    ``positions`` with ``index``; MinHash ``grams`` with a corpus, and
+    ``corpus_bands`` without the corpus docs to verify against."""
+    from garden_net_backend_spark.operators.dedup import (
+        band_signatures,
+        duplicated_window_positions,
+        excise_duplicate_spans,
+        minhash_signatures,
+        window_index,
+    )
+    from garden_net_backend_spark.functions.text import with_shingles
+
+    with pytest.raises(ValueError, match="positions= and index="):
+        excise_duplicate_spans(
+            docs_df,
+            min_tokens=4,
+            positions=duplicated_window_positions(docs_df, min_tokens=4),
+            index=window_index(docs_df, min_tokens=4),
+        )
+    with pytest.raises(ValueError, match="grams="):
+        minhash_dedup_pairs(
+            docs_df,
+            grams=with_shingles(docs_df, "text", "_grams", 5, "char"),
+            corpus_docs=docs_df,
+        )
+    with pytest.raises(ValueError, match="corpus_bands="):
+        minhash_dedup_pairs(
+            docs_df,
+            corpus_bands=band_signatures(minhash_signatures(docs_df)),
+        )
+
+
 def test_minhash_incremental_banded_index_tier(spark, docs_df):
     """The two index tiers — none (re-sign corpus) and the round-9
     corpus_bands (stored band_signatures output) — must produce the
     identical pair set; bands are a pure function of sigs."""
     from garden_net_backend_spark.operators.dedup import (
         band_signatures,
-        minhash_dedup_incremental,
         minhash_signatures,
     )
 
@@ -500,14 +518,20 @@ def test_minhash_incremental_banded_index_tier(spark, docs_df):
     shard = docs_df.filter(F.col("doc_id") % 2 == 1)
     kw = dict(threshold=0.3, ngram=3, shingle="word", num_hashes=64, bands=16)
     base = sorted(
-        map(tuple, minhash_dedup_incremental(shard, corpus, **kw).collect())
+        map(
+            tuple,
+            minhash_dedup_pairs(shard, corpus_docs=corpus, **kw).collect(),
+        )
     )
     sigs = minhash_signatures(corpus, ngram=3, shingle="word")
     via_bands = sorted(
         map(
             tuple,
-            minhash_dedup_incremental(
-                shard, corpus, corpus_bands=band_signatures(sigs, 16, 4), **kw
+            minhash_dedup_pairs(
+                shard,
+                corpus_docs=corpus,
+                corpus_bands=band_signatures(sigs, 16, 4),
+                **kw,
             ).collect(),
         )
     )
@@ -577,11 +601,10 @@ def test_line_dedup_first_occurrence_keeps(spark):
 def test_line_dedup_incremental_matches_batch(spark):
     """Chained per-shard line dedup against a stored line_index must
     equal the batch line_dedup over the whole corpus restricted to
-    each shard (monotonic-id contract), and the merged updated index
-    must equal a fresh index over the union."""
+    each shard (monotonic-id contract); each next index is built over
+    the shards seen so far."""
     from garden_net_backend_spark.operators.dedup import (
         line_dedup,
-        line_dedup_incremental,
         line_index,
     )
 
@@ -601,30 +624,19 @@ def test_line_dedup_incremental_matches_batch(spark):
     assert truth[11] == ("", 1)
     assert truth[20] == ("delta only", 2)
     idx = None
+    seen = []
     got = {}
     for rows in shards:
         shard = spark.createDataFrame(rows, schema)
-        if idx is None:
-            cleaned = line_dedup(shard)
-            idx = line_index(shard)
-        else:
-            cleaned, idx = line_dedup_incremental(shard, idx)
+        cleaned = line_dedup(shard, index=idx)
+        seen += rows
+        idx = line_index(spark.createDataFrame(seen, schema))
         idx = idx.localCheckpoint(eager=True)
         got.update(
             (r["doc_id"], (r["clean_text"], r["n_cut_lines"]))
             for r in cleaned.collect()
         )
     assert got == truth
-    # merged index == fresh index over the union
-    fresh = {
-        r["lkey"]: (r["n_occurrences"], r["first_id"], r["first_pos"])
-        for r in line_index(all_docs).collect()
-    }
-    merged = {
-        r["lkey"]: (r["n_occurrences"], r["first_id"], r["first_pos"])
-        for r in idx.collect()
-    }
-    assert merged == fresh
 
 
 def test_line_dedup_null_text_docs_survive(spark):
@@ -633,7 +645,6 @@ def test_line_dedup_null_text_docs_survive(spark):
     inner-joins on the output, so a dropped row is silent data loss)."""
     from garden_net_backend_spark.operators.dedup import (
         line_dedup,
-        line_dedup_incremental,
         line_index,
     )
 
@@ -650,7 +661,7 @@ def test_line_dedup_null_text_docs_survive(spark):
     shard = spark.createDataFrame(
         [(10, None), (11, "nav  bar\nfresh")], "doc_id long, text string"
     )
-    cleaned, _ = line_dedup_incremental(shard, idx)
+    cleaned = line_dedup(shard, index=idx)
     got2 = {r["doc_id"]: r for r in cleaned.collect()}
     assert set(got2) == {10, 11}
     assert got2[10]["clean_text"] == "" and got2[10]["n_cut_lines"] == 0
@@ -718,12 +729,8 @@ def edge_docs(spark):
 
 
 def _edge_minhash_incremental(docs):
-    from garden_net_backend_spark.operators.dedup import (
-        minhash_dedup_incremental,
-    )
-
-    return minhash_dedup_incremental(
-        docs.filter("doc_id > 0"), docs.filter("doc_id = 0"),
+    return minhash_dedup_pairs(
+        docs.filter("doc_id > 0"), corpus_docs=docs.filter("doc_id = 0"),
         ngram=2, shingle="word",
     )
 
@@ -734,24 +741,22 @@ def _edge_simhash_pairs(docs):
 
 def _edge_excise_incremental(docs, guard=2_000_000):
     from garden_net_backend_spark.operators.dedup import (
-        excise_duplicate_spans_incremental,
+        excise_duplicate_spans,
         window_index,
     )
 
     idx = window_index(docs.filter("doc_id = 0"), min_tokens=3)
-    return excise_duplicate_spans_incremental(
-        docs.filter("doc_id > 0"), idx, min_tokens=3, max_tokens_per_doc=guard
-    )[0]
+    return excise_duplicate_spans(
+        docs.filter("doc_id > 0"), min_tokens=3, max_tokens_per_doc=guard,
+        index=idx,
+    )
 
 
 def _edge_line_incremental(docs):
-    from garden_net_backend_spark.operators.dedup import (
-        line_dedup_incremental,
-        line_index,
-    )
+    from garden_net_backend_spark.operators.dedup import line_dedup, line_index
 
     idx = line_index(docs.filter("doc_id = 0"))
-    return line_dedup_incremental(docs.filter("doc_id > 0"), idx)[0]
+    return line_dedup(docs.filter("doc_id > 0"), index=idx)
 
 
 def _edge_case(name):

@@ -5,8 +5,17 @@ round-trip through serve_search, sentinel caching, eviction."""
 import json
 import tempfile
 
-from garden_net_backend_spark.plans.network_build import build_network
-from garden_net_backend_spark.plans.search import build_token_index
+import pytest
+from pyspark.sql import functions as F
+
+from garden_net_backend_spark.plans.network_build import (
+    build_network,
+    to_cytoscape_json,
+)
+from garden_net_backend_spark.plans.search import (
+    build_token_index,
+    search_subnetwork,
+)
 from garden_net_backend_spark.plans.serving import (
     ResultCache,
     cache_key,
@@ -77,6 +86,39 @@ def test_serve_search_memoizes(spark):
     # the cache is queryable as a table
     rows = {r["key"] for r in cache.as_dataframe(spark).collect()}
     assert cache_key("Gene12", "", "ESC") in rows
+
+
+@pytest.mark.parametrize(
+    "search,nearest",
+    [("Gene12", False), ("1:2100", True), ("1:1000-2600", False)],
+    ids=["gene", "nearest", "range"],
+)
+def test_serve_search_miss_serializes_its_own_searched_flag(
+    spark, search, nearest
+):
+    """A miss serializes search_subnetwork's own ``searched`` column.
+    Its bytes equal the two-step form: drop the flag, left-join the
+    seeds back as "true", default "false", flag last."""
+    nodes, edges = _network(spark)
+    idx = build_token_index(nodes)
+    cache = ResultCache(tempfile.mkdtemp(prefix="rescache_"))
+    out, hit = serve_search(
+        cache, nodes, edges, search, nearest=nearest, token_index=idx
+    )
+    sub_nodes, sub_edges = search_subnetwork(
+        nodes, edges, search, nearest=nearest, token_index=idx
+    )
+    seeds = sub_nodes.filter(F.col("searched") == "true").select(
+        "fragment", F.lit("true").alias("searched")
+    )
+    rejoined = (
+        sub_nodes.drop("searched")
+        .join(seeds, "fragment", "left")
+        .withColumn("searched", F.coalesce(F.col("searched"), F.lit("false")))
+    )
+    assert not hit
+    assert '"searched":"true"' in out
+    assert out == to_cytoscape_json(rejoined, sub_edges)
 
 
 def test_empty_sentinel_cached(spark):
