@@ -461,7 +461,12 @@ def minhash_dedup_pairs(
     pushdown), so corpus text is touched for the few docs a band hit.
     Signatures are a pure function of (text, seed), so index reuse is
     bit-safe across runs; doc ids must be unique across shard and
-    corpus. This mode takes no signature checkpoint and no ``grams``.
+    corpus. This mode takes no ``grams``. ``checkpoint`` takes two
+    shard-sized frames here: the shard's banded signatures (read by
+    both sides of the band join) and the distinct candidate pairs
+    (read by the candidate-id semi-join and by the verify), so the
+    verify plan reads two pins instead of re-expanding the signing
+    pipeline once per reference.
     """
     rows_per_band = num_hashes // bands
     if corpus_docs is None:
@@ -481,11 +486,11 @@ def minhash_dedup_pairs(
             )
             return band_signatures(sigs, bands, rows_per_band)
 
-        new = banded(docs)
+        new = checkpoint(banded(docs))
         if corpus_bands is None:
             corpus_bands = banded(corpus_docs)
         every = corpus_bands.select("id", "band", "bhash").unionByName(new)
-        cands = (
+        cands = checkpoint(
             new.withColumnRenamed("id", "_i")
             .join(every.withColumnRenamed("id", "_j"), ["band", "bhash"])
             .filter(F.col("_i") != F.col("_j"))
@@ -831,6 +836,7 @@ def excise_duplicate_spans(
     positions: DataFrame | None = None,
     max_tokens_per_doc: int | None = 2_000_000,
     index: DataFrame | None = None,
+    rows: DataFrame | None = None,
 ) -> DataFrame:
     """Remove duplicated substrings, keeping the corpus-wide FIRST
     occurrence → ``(id_col, clean_text, n_kept_tokens,
@@ -875,9 +881,14 @@ def excise_duplicate_spans(
     shard restricted to shard rows (equivalence-tested). Decisions
     read key EXISTENCE only, so the index may hold just the first-seen
     keys of each shard. ``positions`` describes the whole corpus, so
-    it cannot be combined with ``index``.
+    it cannot be combined with ``index``. ``rows``, with ``index``
+    only: the shard's window fingerprints (:func:`window_index` reads
+    the same ``rows``), precomputed by a caller that reads them twice —
+    the ingest stage pins them and derives its shard index from them.
     """
     if index is None:
+        if rows is not None:
+            raise ValueError("rows= needs index=")
         dpos = (
             positions
             if positions is not None
@@ -892,9 +903,9 @@ def excise_duplicate_spans(
     elif positions is not None:
         raise ValueError("positions= and index= are exclusive")
     else:
-        wins = _window_fingerprints(
-            docs, text_col, id_col, min_tokens, seed
-        ).join(index.select("wkey", "n_occurrences"), "wkey", "left")
+        if rows is None:
+            rows = _window_fingerprints(docs, text_col, id_col, min_tokens, seed)
+        wins = rows.join(index.select("wkey", "n_occurrences"), "wkey", "left")
         cut_windows = _mark_first(wins, ["wkey"], "n_occurrences").filter(
             F.col("n_occurrences").isNotNull()
             | ((F.col("_n") > 1) & ~F.col("_is_first"))
@@ -972,6 +983,7 @@ def window_index(
     id_col: str = "doc_id",
     min_tokens: int = 50,
     seed: int = 42,
+    rows: DataFrame | None = None,
 ) -> DataFrame:
     """The stored substring-dedup index: one row per DISTINCT window
     fingerprint in the corpus → ``(wkey, n_occurrences, first_id,
@@ -985,11 +997,13 @@ def window_index(
 
     Size: one 8-byte key + counts per distinct window ≈ corpus token
     count — the same order as any suffix-structure over the corpus,
-    but flat, appendable, and hash-partitioned.
+    but flat, appendable, and hash-partitioned. ``rows``: the window
+    fingerprints of ``docs``, when the caller already has them (see
+    :func:`excise_duplicate_spans`).
     """
-    return _first_occurrence_index(
-        _window_fingerprints(docs, text_col, id_col, min_tokens, seed), "wkey"
-    )
+    if rows is None:
+        rows = _window_fingerprints(docs, text_col, id_col, min_tokens, seed)
+    return _first_occurrence_index(rows, "wkey")
 
 
 def line_dedup(
@@ -1002,6 +1016,7 @@ def line_dedup(
     normalize: bool = True,
     joiner: str = "\n",
     index: DataFrame | None = None,
+    rows: DataFrame | None = None,
 ) -> DataFrame:
     """LINE-level exact dedup across the corpus (the C4 / RefinedWeb /
     CCNet curation step): split every document on ``sep`` (a regex), and
@@ -1058,8 +1073,15 @@ def line_dedup(
     ``normalize`` must match the values the index was built with
     (parameter drift shows up in ``audit_ingest_index`` as wholesale
     key disagreement).
+
+    ``rows``: the split lines of ``docs`` (:func:`line_index` reads the
+    same ``rows``), precomputed by a caller that reads them twice — the
+    ingest stage pins them and derives its shard index from them.
     """
-    lines = _line_rows(docs, text_col, id_col, sep, min_chars, normalize)
+    lines = (
+        rows if rows is not None
+        else _line_rows(docs, text_col, id_col, sep, min_chars, normalize)
+    )
     n, first, stored = F.col("_n"), F.col("_is_first"), []
     if index is not None:
         lines = lines.join(
@@ -1117,13 +1139,17 @@ def line_index(
     sep: str = r"\n",
     min_chars: int = 1,
     normalize: bool = True,
+    rows: DataFrame | None = None,
 ) -> DataFrame:
     """The stored line-dedup index: one row per DISTINCT qualifying
     line content → ``(lkey, n_occurrences, first_id, first_pos)`` —
     the exact analogue of :func:`window_index` for the line family.
     An incoming shard pays one equi-join against it instead of
-    re-splitting the corpus (:func:`line_dedup`' ``index``)."""
-    rows = _line_rows(docs, text_col, id_col, sep, min_chars, normalize)
+    re-splitting the corpus (:func:`line_dedup`' ``index``).
+    ``rows``: the split lines of ``docs``, when the caller already has
+    them (see :func:`line_dedup`)."""
+    if rows is None:
+        rows = _line_rows(docs, text_col, id_col, sep, min_chars, normalize)
     return _first_occurrence_index(
         rows.filter("_qual").withColumnRenamed("_k", "lkey"), "lkey"
     )

@@ -159,6 +159,33 @@ def _forest_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return edges.select(src, dst).mapInPandas(gen, schema=schema)
 
 
+def limit_probe(df: DataFrame, collect_threshold: int):
+    """At most ``collect_threshold + 1`` rows of ``df`` as a pandas
+    frame, in one fully-parallel job: more than ``collect_threshold``
+    rows means "too big to solve on the driver", and otherwise the
+    probe already holds all of ``df``.
+
+    CollectLimit default-scans partitions in incremental waves (1, 4,
+    16, …) — on an expensive emitter that SERIALIZES the final stage
+    (measured: q29's 10× big corpus 70.5s → 92.2s).
+    initialNumPartitions = defaultParallelism makes the probe one
+    fully-parallel job; per-partition LocalLimit still caps the driver
+    pull at nparts·(threshold+1) rows worst-case. The conf is
+    session-global while the probe runs (see
+    :func:`connected_components`)."""
+    spark = df.sparkSession
+    key = "spark.sql.limit.initialNumPartitions"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return df.limit(collect_threshold + 1).toPandas()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -218,23 +245,7 @@ def connected_components(
     a dedicated session (``spark.newSession()`` gives a private conf).
     """
     e = edges.select(src, dst).filter(F.col(src) != F.col(dst))
-    # CollectLimit default-scans partitions in incremental waves
-    # (1, 4, 16, …) — on an expensive emitter that SERIALIZES the
-    # final stage (measured: q29's 10× big corpus 70.5s → 92.2s).
-    # initialNumPartitions = defaultParallelism makes the probe one
-    # fully-parallel job; per-partition LocalLimit still caps the
-    # driver pull at nparts·(threshold+1) rows worst-case.
-    spark = edges.sparkSession
-    _LIM_KEY = "spark.sql.limit.initialNumPartitions"
-    prev = spark.conf.get(_LIM_KEY, None)
-    spark.conf.set(_LIM_KEY, str(spark.sparkContext.defaultParallelism))
-    try:
-        probe = e.limit(collect_threshold + 1).toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset(_LIM_KEY)
-        else:
-            spark.conf.set(_LIM_KEY, prev)
+    probe = limit_probe(e, collect_threshold)
     if len(probe) <= collect_threshold:
         return _cc_solve_bounded(probe, nodes, node_col, src, dst)
     del probe
@@ -270,12 +281,9 @@ def connected_components(
     return _cc_pointer_jumping(nodes, e, node_col, src, dst, max_iter)
 
 
-def _cc_solve_bounded(
-    pdf, nodes: DataFrame, node_col: str, src: str, dst: str
-) -> DataFrame:
-    """Driver-side union-find over a ≤collect_threshold edge list →
-    (node, component) joined back over the full node set (nodes absent
-    from every edge keep themselves as component)."""
+def min_roots(edges) -> dict:
+    """Driver-side union-find over an iterable of ``(a, b)`` edges →
+    ``{node: min node of its component}`` for every node on an edge."""
     parent: dict = {}
 
     def find(x):
@@ -286,17 +294,24 @@ def _cc_solve_bounded(
             parent[x], x = r, parent[x]
         return r
 
-    for a, b in zip(pdf[src].values, pdf[dst].values):
-        a = a.item() if hasattr(a, "item") else a
-        b = b.item() if hasattr(b, "item") else b
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    mapping = [(k, find(k)) for k in parent]
+    return {k: find(k) for k in parent}
+
+
+def _cc_solve_bounded(
+    pdf, nodes: DataFrame, node_col: str, src: str, dst: str
+) -> DataFrame:
+    """Driver-side union-find over a ≤collect_threshold edge list →
+    (node, component) joined back over the full node set (nodes absent
+    from every edge keep themselves as component)."""
+    mapping = list(min_roots(
+        zip(pdf[src].values.tolist(), pdf[dst].values.tolist())
+    ).items())
     spark = nodes.sparkSession
     node_type = nodes.schema[node_col].dataType
     from pyspark.sql.types import StructField, StructType

@@ -55,6 +55,23 @@ def _read_meminfo() -> str | None:
         return None
 
 
+#: the directory holding this package — on every Python worker's path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def ensure_package_on_pythonpath(env=os.environ) -> None:
+    """Put the directory holding this package first on ``PYTHONPATH``
+    in ``env`` (once). Python workers inherit PYTHONPATH from the
+    JVM's environment at launch, and a Python UDF (q56) unpickles
+    functions that import this package inside the worker: a tool that
+    put the package on ``sys.path`` itself, run from another
+    directory, reaches only the driver, and its workers fail with
+    ``ModuleNotFoundError``."""
+    prev = env.get("PYTHONPATH", "")
+    if _PACKAGE_PARENT not in prev.split(os.pathsep):
+        env["PYTHONPATH"] = _PACKAGE_PARENT + (os.pathsep + prev if prev else "")
+
+
 def get_session(app_name: str = "garden_net_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Return (or create) the engine's SparkSession.
 
@@ -62,16 +79,17 @@ def get_session(app_name: str = "garden_net_spark", shuffle_partitions: int | No
     ``SPARK_GRAFT_DRIVER_MEM`` sets the driver memory; unset, it is sized
     from the host (:func:`driver_memory`).
     """
-    # make google.protobuf importable (vendored shim) BEFORE the JVM
-    # starts: python workers inherit PYTHONPATH from the JVM's env
-    # snapshot, and the transformWithStateInPandas state client imports
-    # the generated proto module inside the worker
+    # make google.protobuf (vendored shim) and this package importable
+    # BEFORE the JVM starts: python workers inherit PYTHONPATH from the
+    # JVM's env snapshot, and the transformWithStateInPandas state
+    # client imports the generated proto module inside the worker
     from ._vendor import ensure_protobuf_shim
 
     try:
         ensure_protobuf_shim()
     except Exception:
         pass  # shim is best-effort; TWS tests skip if absent
+    ensure_package_on_pythonpath()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(_read_meminfo())
     builder = (

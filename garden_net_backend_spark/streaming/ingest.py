@@ -80,8 +80,14 @@ multiplying writers; multiple feeds union into one source.
 100 TB shape: the stream moves file names; the batch work is the
 MinHash kernel's one band join (stored side touched only for
 candidate members via semi-join pushdown) + two partitioned appends.
-State is Spark's file-source checkpoint; the index is data, not
-driver state. Per-batch partition accumulation is bounded by
+The accept decision runs on the driver over the batch's verified
+pairs, which are near-dups only: one bounded collect of the pairs, one
+collect of their ids' batch/stored tags, and a keep set that is the
+batch minus a broadcast drop set no larger than the batch
+(:func:`_ingest_decide`; past ``collect_threshold`` pairs it falls
+back to joins and connected components' contraction). State is
+Spark's file-source checkpoint; the index is data, not driver state.
+Per-batch partition accumulation is bounded by
 :func:`compact_ingest_index` (run it periodically on a quiesced or
 committed prefix); per-batch observability lands as one metrics row
 per batch beside the corpus (``<accepted_dir>_metrics``).
@@ -741,15 +747,19 @@ def _first_seen_stage(
     stored_idx: DataFrame | None,
     pin,
     key: str,
+    row_key: str,
+    rows_of,
     index,
     dedup,
 ) -> tuple[DataFrame, DataFrame]:
     """The line and substring stage, shared by their standalone faces
     and the curation face: cut content whose corpus-wide first
-    occurrence is elsewhere → (cleaned docs, index DELTA). ``index``
-    builds the family's index of ``docs`` and ``dedup(docs,
-    index)`` its one kernel (``index=None`` on the first batch);
-    ``key`` is the index key column.
+    occurrence is elsewhere → (cleaned docs, index DELTA).
+    ``rows_of(docs)`` splits the batch into the family's keyed rows,
+    ``index(docs, rows)`` builds the family's index and ``dedup(docs,
+    index, rows)`` runs its one kernel (``index=None`` and
+    ``rows=None`` on the first batch); ``key`` is the index key
+    column and ``row_key`` the same key in the rows.
 
     The delta holds only keys never seen before: decisions read key
     EXISTENCE + first occurrence only, so it reproduces batch
@@ -762,31 +772,36 @@ def _first_seen_stage(
     against THAT. The previous shape shuffled the whole stored index
     twice per batch (once for the kernel's left join, once for the
     delta anti-join) — corpus-sized per-batch work at exactly the
-    scale this loop exists for (review r10)."""
+    scale this loop exists for (review r10). The batch is split once:
+    its rows are pinned, and the shard index and the kernel both read
+    that pin."""
     if stored_idx is None:
-        return dedup(docs, None), index(docs)
-    shard = pin(index(docs))
+        return dedup(docs, None, None), index(docs, None)
+    rows = pin(rows_of(docs))
     touched = pin(
         stored_idx.select(key, "n_occurrences", "first_id", "first_pos").join(
-            F.broadcast(shard.select(key)), key, "left_semi"
+            F.broadcast(rows.select(F.col(row_key).alias(key))), key, "left_semi"
         )
     )
-    delta = shard.join(F.broadcast(touched.select(key)), key, "left_anti")
-    return dedup(docs, touched), delta
+    delta = index(docs, rows).join(
+        F.broadcast(touched.select(key)), key, "left_anti"
+    )
+    return dedup(docs, touched, rows), delta
 
 
 def _line_stage(
     docs, stored_idx, pin, text_col, id_col, sep, min_chars, normalize, joiner
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`_first_seen_stage` over lines (lkey)."""
-    from ..operators.dedup import line_dedup, line_index
+    from ..operators.dedup import _line_rows, line_dedup, line_index
 
     kw = dict(sep=sep, min_chars=min_chars, normalize=normalize)
     return _first_seen_stage(
-        docs, stored_idx, pin, "lkey",
-        lambda d: line_index(d, text_col, id_col, **kw),
-        lambda d, idx: line_dedup(
-            d, text_col, id_col, joiner=joiner, index=idx, **kw
+        docs, stored_idx, pin, "lkey", "_k",
+        lambda d: _line_rows(d, text_col, id_col, **kw),
+        lambda d, rows: line_index(d, text_col, id_col, rows=rows, **kw),
+        lambda d, idx, rows: line_dedup(
+            d, text_col, id_col, joiner=joiner, index=idx, rows=rows, **kw
         ),
     )
 
@@ -795,13 +810,19 @@ def _substring_stage(
     docs, stored_idx, pin, text_col, id_col, min_tokens, seed
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`_first_seen_stage` over ``min_tokens`` windows (wkey)."""
-    from ..operators.dedup import excise_duplicate_spans, window_index
+    from ..operators.dedup import (
+        _window_fingerprints,
+        excise_duplicate_spans,
+        window_index,
+    )
 
+    args = (text_col, id_col, min_tokens, seed)
     return _first_seen_stage(
-        docs, stored_idx, pin, "wkey",
-        lambda d: window_index(d, text_col, id_col, min_tokens, seed),
-        lambda d, idx: excise_duplicate_spans(
-            d, text_col, id_col, min_tokens, seed, index=idx
+        docs, stored_idx, pin, "wkey", "wkey",
+        lambda d: _window_fingerprints(d, *args),
+        lambda d, rows: window_index(d, *args, rows=rows),
+        lambda d, idx, rows: excise_duplicate_spans(
+            d, *args, index=idx, rows=rows
         ),
     )
 
@@ -812,54 +833,110 @@ def _ingest_decide(
     stored_docs: DataFrame | None,
     id_col: str,
     pin,
+    collect_threshold: int = 2_000_000,
 ) -> DataFrame:
     """The family-independent accept decision → keep-id frame.
 
     Rule 1: a new doc with a pair to a STORED id is rejected
     (first-accepted wins). Rule 2: within-batch clusters among the
-    survivors collapse via connected components to the min id. The
-    decision logic references the pair set ~5 times (both reject
-    sides, batch restriction, CC, keep set) — materialize the
-    dup-sized frame ONCE (``pin``) or every branch re-expands the whole
-    emitter chain inside one plan (measured: 249s → ~15s on a 5-doc
-    batch)."""
-    from ..operators.dedup import dedup_representatives
+    survivors collapse to the min id (connected components). A pair
+    end counts as new when it is an id of ``new`` and as stored when
+    it is an id of ``stored_docs`` — both at once on a cross-feed id
+    collision. NULL ids never pair, and are never kept.
 
-    pairs = pin(pairs)
-    vs_stored = None
-    if stored_docs is not None:
-        stored_ids = stored_docs.select(F.col(id_col).alias("_sid"))
-        vs_stored = (
-            pairs.join(
-                stored_ids, pairs["id_a"] == F.col("_sid"), "left_semi"
+    The verified pairs are near-dups only, so the decision runs on the
+    driver: the pairs are collected once by a ``collect_threshold + 1``
+    limit probe (:func:`limit_probe`, one job over the pair plan),
+    their ids are tagged new or stored by one collect of a broadcast
+    semi-join, both rules run as a union-find over that edge list, and
+    the keep ids are ``new`` minus a broadcast drop set. Those two
+    collects are all the jobs the decision runs. Above the threshold
+    the pairs are pinned and the same rules run as joins over them,
+    with rule 2 through :func:`connected_components`' contraction
+    path. The drop set is at most the batch's size on either path."""
+    from ..operators.graph import connected_components, limit_probe, min_roots
+
+    spark = new.sparkSession
+    id_schema = new.select(id_col).schema
+    pairs = pairs.select("id_a", "id_b")
+    probe = limit_probe(pairs, collect_threshold)
+
+    def sides(ends: DataFrame) -> DataFrame:
+        """(id, _new) for each pair end found among the batch's ids
+        (True) or the stored ids (False)."""
+        tagged = new.select(id_col, F.lit(True).alias("_new"))
+        if stored_docs is not None:
+            tagged = tagged.unionByName(
+                stored_docs.select(id_col, F.lit(False).alias("_new"))
             )
-            .select(F.col("id_b").alias(id_col))
+        return tagged.join(ends, id_col, "left_semi")
+
+    if len(probe) <= collect_threshold:
+        edges = list(zip(probe["id_a"].tolist(), probe["id_b"].tolist()))
+        ends = {v for e in edges for v in e}
+        fresh, held = set(), set()
+        if ends:
+            ends_df = spark.createDataFrame([(v,) for v in ends], id_schema)
+            for r in sides(F.broadcast(ends_df)).collect():
+                (fresh if r["_new"] else held).add(r[id_col])
+        rejected = {b for a, b in edges if a in held and b in fresh} | {
+            a for a, b in edges if b in held and a in fresh
+        }
+        survivors = fresh - rejected
+        roots = min_roots(
+            (a, b) for a, b in edges if a in survivors and b in survivors
+        )
+        drop = spark.createDataFrame(
+            [(v,) for v in rejected | {k for k, r in roots.items() if k != r}],
+            id_schema,
+        )
+    else:
+        pairs = pin(pairs)
+        ends = pairs.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
+        flags = pin(
+            sides(ends).groupBy(id_col).agg(
+                F.max("_new").alias("_n"), F.max(~F.col("_new")).alias("_h")
+            )
+        )
+
+        def end(c: str) -> DataFrame:
+            return flags.select(
+                F.col(id_col).alias(c), F.col("_n").alias(c + "_n"),
+                F.col("_h").alias(c + "_h"),
+            )
+
+        tagged = pairs.join(end("id_a"), "id_a").join(end("id_b"), "id_b")
+        rejected = pin(
+            tagged.filter("id_a_h AND id_b_n").select(F.col("id_b").alias(id_col))
             .unionByName(
-                pairs.join(
-                    stored_ids, pairs["id_b"] == F.col("_sid"), "left_semi"
-                ).select(F.col("id_a").alias(id_col))
+                tagged.filter("id_b_h AND id_a_n")
+                .select(F.col("id_a").alias(id_col))
             )
             .distinct()
-            # a stored id can appear as the NEW side only if ids
-            # collide across feeds — keep the filter to new ids
-            .join(new.select(id_col), id_col, "left_semi")
         )
-    survivors = (
-        new.join(vs_stored, id_col, "left_anti")
-        if vs_stored is not None
-        else new
-    )
-    batch_pairs = (
-        pairs.join(
-            survivors.select(F.col(id_col).alias("id_a")), "id_a", "left_semi"
-        ).join(
-            survivors.select(F.col(id_col).alias("id_b")), "id_b", "left_semi"
+        within = tagged.filter("id_a_n AND id_b_n")
+        for c in ("id_a", "id_b"):
+            within = within.join(
+                rejected.select(F.col(id_col).alias(c)), c, "left_anti"
+            )
+        within = pin(
+            within.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
+        nodes = within.select(
+            F.explode(F.array("src", "dst")).alias("node")
+        ).distinct()
+        comps = connected_components(
+            nodes, within, collect_threshold=collect_threshold
+        )
+        drop = rejected.unionByName(
+            comps.filter(F.col("node") != F.col("component"))
+            .select(F.col("node").alias(id_col))
+        )
+    return (
+        new.select(id_col)
+        .filter(F.col(id_col).isNotNull())
+        .join(F.broadcast(drop), id_col, "left_anti")
     )
-    reps = dedup_representatives(survivors, batch_pairs, id_col=id_col)
-    # reps covers exactly the survivors (rule-1 rejects are already
-    # out), so the keep set is one semi-join back to the full batch
-    return reps.filter(F.col(id_col) == F.col("representative")).select(id_col)
 
 
 def process_ingest_batch(

@@ -1,7 +1,13 @@
-"""Driver-memory sizing from the host's /proc/meminfo text (pure: no
-Spark session)."""
+"""Driver-memory sizing from the host's /proc/meminfo text, and the
+worker PYTHONPATH the session sets up (pure: no Spark session)."""
 
-from garden_net_backend_spark.session import driver_memory
+import os
+
+import garden_net_backend_spark
+from garden_net_backend_spark.session import (
+    driver_memory,
+    ensure_package_on_pythonpath,
+)
 
 _MEMINFO = """MemTotal:       {kb} kB
 MemFree:         1234567 kB
@@ -26,3 +32,16 @@ def test_driver_memory_without_meminfo_keeps_48g():
     assert driver_memory(None) == "48g"
     assert driver_memory("") == "48g"
     assert driver_memory("MemFree: 1 kB\n") == "48g"
+
+
+def test_package_parent_goes_first_on_pythonpath_once():
+    parent = os.path.dirname(
+        os.path.dirname(os.path.abspath(garden_net_backend_spark.__file__))
+    )
+    env = {}
+    ensure_package_on_pythonpath(env)
+    assert env["PYTHONPATH"] == parent
+    env = {"PYTHONPATH": os.pathsep.join(["/a", "/b"])}
+    ensure_package_on_pythonpath(env)
+    ensure_package_on_pythonpath(env)
+    assert env["PYTHONPATH"].split(os.pathsep) == [parent, "/a", "/b"]
