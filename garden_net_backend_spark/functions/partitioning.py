@@ -125,10 +125,10 @@ def _estimated_scan_partitions(df: DataFrame) -> "int | None":
     return sum(max(1, math.ceil(s / max_split)) for s in sizes)
 
 
-def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition ``df`` to ``min_partitions`` (default:
-    ``defaultParallelism``) when its input scan is estimated to produce
-    fewer partitions than that; no-op otherwise.
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` to ``defaultParallelism`` when its
+    input scan is estimated to produce fewer partitions than that;
+    no-op otherwise.
 
     The decision is made from the scan's FILE METADATA
     (:func:`_estimated_scan_partitions`), never from ``df.rdd`` — the
@@ -138,8 +138,7 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> D
     checkpointed lineage) are returned unchanged — their layout does
     not come from file splits.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     est = _estimated_scan_partitions(df)
     if est is not None and est < target:
         return df.repartition(target)

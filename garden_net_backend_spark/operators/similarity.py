@@ -260,86 +260,6 @@ def lsh_bucket(
     return bucket
 
 
-def _np_bucket_planes(bands: int, bits: int, extra_bits: int, dim: int):
-    """(planes, weights, sub_weights) numpy triple shared by the Arrow
-    executor closure and the driver-side bucketing of collected query
-    rows — ONE code path computes the bucket math everywhere, so the
-    two are identical by construction."""
-    import numpy as np
-
-    nb = bits + extra_bits
-    planes = np.array(
-        [
-            _plane_vector(band * 64 + bit, dim)
-            for band in range(bands)
-            for bit in range(nb)
-        ]
-    ).T  # dim × (bands·nb)
-    weights = np.array([1 << b for b in range(bits)], dtype=np.int64)
-    sub_weights = np.array([1 << b for b in range(extra_bits)], dtype=np.int64)
-    return planes, weights, sub_weights
-
-
-def _np_bucket_cols(
-    ids, x, bands, bits, extra_bits, planes, weights, sub_weights, mu=None
-):
-    """Bucket columns for a batch of vectors (n × dim float64) — the
-    single implementation of the sign-LSH bucket math (see
-    :func:`_np_bucket_planes`)."""
-    import numpy as np
-
-    if mu is not None:
-        x = x - mu
-    signs = (x @ planes) > 0  # n × bands·(bits+extra)
-    n = len(ids)
-    nb = bits + extra_bits
-    grouped = signs.reshape(n, bands, nb)
-    buckets = grouped[:, :, :bits] @ weights  # n × bands
-    cols = {
-        "id": np.repeat(ids, bands),
-        "band": np.tile(np.arange(bands), n),
-        "bucket": buckets.reshape(-1),
-    }
-    if extra_bits:
-        cols["sub"] = (grouped[:, :, bits:] @ sub_weights).reshape(-1)
-    return cols
-
-
-def _lsh_bucket_rows_local(
-    rows, id_col: str, vec_col: str, bands: int, bits: int, dim: int
-) -> "list[tuple[int, int, int]] | None":
-    """Driver-side bucket assignment for a SMALL collected row list
-    (round 14, guide §1.2 step 1): the q38 suite already holds its 10
-    query rows driver-side, so the query-side ``lsh_assign_buckets``
-    Arrow scan (a mapInPandas plan branch + its executor stage, built
-    and run per suite execution) is replaced by one numpy call over
-    |Q|·bands values. Returns ``None`` on any malformed input (null /
-    ragged vectors, duplicate ids) — the caller falls back to the
-    Spark path, which owns the error semantics (ADVICE r13 pattern).
-    Bit-identical to the Arrow path: both call :func:`_np_bucket_cols`
-    on the same :func:`_np_bucket_planes` constants."""
-    import numpy as np
-
-    try:
-        ids = [r[id_col] for r in rows]
-        if not ids or len(set(ids)) != len(ids) or any(i is None for i in ids):
-            return None
-        x = _np_stack(r[vec_col] for r in rows)
-        if x.ndim != 2 or x.shape[1] != dim:
-            return None
-        planes, weights, _ = _np_bucket_planes(bands, bits, 0, dim)
-        cols = _np_bucket_cols(
-            np.asarray(ids, dtype=np.int64), x, bands, bits, 0,
-            planes, weights, None,
-        )
-    except Exception:
-        return None
-    return [
-        (int(i), int(b), int(k))
-        for i, b, k in zip(cols["id"], cols["band"], cols["bucket"])
-    ]
-
-
 def lsh_assign_buckets(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -349,22 +269,10 @@ def lsh_assign_buckets(
     dim: int = 64,
     use_arrow: bool = True,
     extra_bits: int = 0,
-    center_vec: list[float] | None = None,
 ) -> DataFrame:
     """Bucket assignment → (id, band, bucket[, sub]). The corpus-side
     index build: one parallel scan, writeable as a bucketed table so
     query lookups are shuffle-free.
-
-    ``center_vec``: subtract this (corpus-mean) vector before hashing.
-    Sign-LSH degenerates on anisotropic corpora — when one direction
-    dominates every vector, sign(plane·v) ≈ sign(plane·μ) for ALL
-    vectors, so the whole corpus piles into one bucket per band while
-    pairwise cosines stay moderate (measured on the 100× drill corpus:
-    max bucket 7k of 200k vectors, unsplittable because members agree
-    on every further hyperplane too). Centering removes the shared
-    component; truly near-identical vectors stay near-identical, so
-    near-dup blocking survives while crowds disperse. Blocking-only:
-    exact re-checks downstream always use the ORIGINAL vectors.
 
     ``extra_bits > 0`` additionally emits a ``sub`` column — a reserve
     of per-band sign bits from FURTHER hyperplanes (seeds offset past
@@ -386,20 +294,30 @@ def lsh_assign_buckets(
         import numpy as np
         import pandas as pd
 
-        planes, weights, sub_weights = _np_bucket_planes(
-            bands, bits, extra_bits, dim
-        )
-        mu = np.asarray(center_vec, dtype=np.float64) if center_vec is not None else None
+        nb = bits + extra_bits
+        planes = np.array(
+            [
+                _plane_vector(band * 64 + bit, dim)
+                for band in range(bands)
+                for bit in range(nb)
+            ]
+        ).T  # dim × (bands·nb)
+        weights = np.array([1 << b for b in range(bits)], dtype=np.int64)
+        sub_weights = np.array([1 << b for b in range(extra_bits)], dtype=np.int64)
 
         def _assign(batches):
             for pdf in batches:
                 x = np.stack(pdf[vec_col].values).astype(np.float64)  # n × dim
-                yield pd.DataFrame(
-                    _np_bucket_cols(
-                        pdf[id_col].values, x, bands, bits, extra_bits,
-                        planes, weights, sub_weights, mu,
-                    )
-                )
+                n = len(pdf)
+                grouped = ((x @ planes) > 0).reshape(n, bands, nb)
+                cols = {
+                    "id": np.repeat(pdf[id_col].values, bands),
+                    "band": np.tile(np.arange(bands), n),
+                    "bucket": (grouped[:, :, :bits] @ weights).reshape(-1),
+                }
+                if extra_bits:
+                    cols["sub"] = (grouped[:, :, bits:] @ sub_weights).reshape(-1)
+                yield pd.DataFrame(cols)
 
         schema = "id long, band int, bucket long" + (
             ", sub long" if extra_bits else ""
@@ -408,12 +326,6 @@ def lsh_assign_buckets(
             _assign, schema=schema
         )
     vec_expr = F.col(vec_col)
-    if center_vec is not None:
-        vec_expr = F.zip_with(
-            vec_expr,
-            F.lit([float(x) for x in center_vec]),
-            lambda x, m: x.cast("double") - m,
-        )
     cols = [
         lsh_bucket(vec_expr, band, bits, dim).alias(f"_b{band}")
         for band in range(bands)
@@ -497,25 +409,14 @@ def lsh_cosine_topk(
     bands: int = 8,
     bits: int = 8,
     dim: int = 64,
-    exact_fallback: bool = True,
     fallback_exact: DataFrame | None = None,
-    collected_queries: "list | None" = None,
 ) -> DataFrame:
     """ANN top-k: candidates = corpus vectors sharing ≥1 band-bucket
     with the query, two-phase re-rank of candidates → same schema as
     ``cosine_topk``, always exactly k rows per query (see fallback).
 
-    ``collected_queries`` (round 14, guide §1.2 step 1): a caller that
-    ALREADY holds the query rows driver-side (the q38 suite collects
-    them once for all arms) passes them here and the query-side bucket
-    assignment runs in numpy on the driver — the qb ``mapInPandas``
-    plan branch (built per execution, run as its own Arrow stage) is
-    replaced by a |Q|·bands-row local frame. Bit-identical buckets:
-    the driver path calls the same ``_np_bucket_cols`` math on the
-    same ``_np_bucket_planes`` constants the Arrow closure uses. The
-    rows must be exactly ``queries``'s (query_id, query_vec) rows;
-    malformed rows (nulls, ragged vectors, duplicate ids) fall back to
-    the Spark bucket scan, which owns the error semantics.
+    Corpus and queries are bucketed by the same ``lsh_assign_buckets``
+    Arrow scan.
 
     Phase 1 ranks ALL candidates on an Arrow-batched numpy cosine
     (cheap); phase 2 rescoring touches only the k·|Q| survivors with
@@ -524,7 +425,7 @@ def lsh_cosine_topk(
     ~1e-13, so a phase-1 rank flip needs two candidates closer than
     that — far below the ANN contract's recall tolerance.
 
-    ``exact_fallback`` (default on): a query whose buckets hold fewer
+    Always-k fallback: a query whose buckets hold fewer
     than k collisions gets its top-k from an exact scan instead — the
     standard ANN-service contract ("always k results"). Deficient
     queries are detected with one count over the candidate set; the
@@ -551,19 +452,7 @@ def lsh_cosine_topk(
     import pandas as pd
 
     cb = lsh_assign_buckets(corpus, id_col, vec_col, bands, bits, dim)
-    qb = None
-    if collected_queries is not None:
-        q_bucket_rows = _lsh_bucket_rows_local(
-            collected_queries, query_id_col, query_vec_col, bands, bits, dim
-        )
-        if q_bucket_rows is not None:
-            qb = queries.sparkSession.createDataFrame(
-                q_bucket_rows, "id long, band int, bucket long"
-            )
-    if qb is None:
-        qb = lsh_assign_buckets(
-            queries, query_id_col, query_vec_col, bands, bits, dim
-        )
+    qb = lsh_assign_buckets(queries, query_id_col, query_vec_col, bands, bits, dim)
     cand = (
         cb.join(
             qb.withColumnRenamed("id", "_qid"), ["band", "bucket"]
@@ -571,48 +460,47 @@ def lsh_cosine_topk(
         .select(F.col("_qid").alias(query_id_col), F.col("id").alias(id_col))
         .distinct()
     )
-    if exact_fallback:
-        # the candidate set feeds BOTH the deficiency count and the
-        # survivor stream; checkpoint it so the bucket-join scan runs
-        # once (it is |collisions|-sized, not corpus-sized). LAZY since
-        # round 13: the eager form was a blocking job serializing ahead
-        # of everything downstream; lazy keeps compute-once (first
-        # consumer materializes, blocks reused) with no barrier.
-        cand = cand.localCheckpoint(eager=False)
-        deficient = (
-            queries.join(
-                cand.groupBy(query_id_col).agg(F.count("*").alias("_nc")),
-                query_id_col,
-                "left",
-            )
-            .filter(F.coalesce(F.col("_nc"), F.lit(0)) < k)
-            .select(query_id_col, query_vec_col)
+    # the candidate set feeds BOTH the deficiency count and the
+    # survivor stream; checkpoint it so the bucket-join scan runs
+    # once (it is |collisions|-sized, not corpus-sized). LAZY since
+    # round 13: the eager form was a blocking job serializing ahead
+    # of everything downstream; lazy keeps compute-once (first
+    # consumer materializes, blocks reused) with no barrier.
+    cand = cand.localCheckpoint(eager=False)
+    deficient = (
+        queries.join(
+            cand.groupBy(query_id_col).agg(F.count("*").alias("_nc")),
+            query_id_col,
+            "left",
         )
-        if fallback_exact is not None and not isinstance(
-            fallback_exact, DataFrame
-        ):
-            fallback_exact = fallback_exact()  # deferred frame (round 14)
-        if fallback_exact is not None:
-            fb = (
-                fallback_exact.filter(F.col("rank") <= k)
-                .join(
-                    deficient.select(query_id_col), query_id_col, "left_semi"
-                )
-                .select(query_id_col, id_col)
+        .filter(F.coalesce(F.col("_nc"), F.lit(0)) < k)
+        .select(query_id_col, query_vec_col)
+    )
+    if fallback_exact is not None and not isinstance(
+        fallback_exact, DataFrame
+    ):
+        fallback_exact = fallback_exact()  # deferred frame (round 14)
+    if fallback_exact is not None:
+        fb = (
+            fallback_exact.filter(F.col("rank") <= k)
+            .join(
+                deficient.select(query_id_col), query_id_col, "left_semi"
             )
-        else:
-            fb = cosine_topk(
-                corpus,
-                deficient,
-                k=k,
-                id_col=id_col,
-                vec_col=vec_col,
-                query_id_col=query_id_col,
-                query_vec_col=query_vec_col,
-            ).select(query_id_col, id_col)
-        cand = cand.join(
-            deficient.select(query_id_col), query_id_col, "left_anti"
-        ).unionByName(fb)
+            .select(query_id_col, id_col)
+        )
+    else:
+        fb = cosine_topk(
+            corpus,
+            deficient,
+            k=k,
+            id_col=id_col,
+            vec_col=vec_col,
+            query_id_col=query_id_col,
+            query_vec_col=query_vec_col,
+        ).select(query_id_col, id_col)
+    cand = cand.join(
+        deficient.select(query_id_col), query_id_col, "left_anti"
+    ).unionByName(fb)
     pair_vecs = cand.join(
         corpus.select(id_col, F.col(vec_col).alias("_cv")), id_col
     ).join(
@@ -685,6 +573,37 @@ def _ivf_assign(
     )
 
 
+def _lloyd_means(member: DataFrame, keys: "list[str]", vec_col: str) -> dict:
+    """One Lloyd mean update, shared by the IVF and PQ trainers: the
+    element-wise mean of ``vec_col`` over each ``keys`` group of
+    ``member`` → {key tuple: [mean per position]}. One posexplode
+    aggregation (map-side combinable, shuffle keyed (keys…, pos)) with
+    exact decimal sums, so the means are deterministic under any
+    partitioning, and one collect. A group with no members has no
+    entry: the caller keeps its previous vector."""
+    means = (
+        member.select(*keys, F.posexplode(vec_col).alias("pos", "_x"))
+        .groupBy(*keys, "pos")
+        .agg(
+            F.sum(F.col("_x").cast("double").cast("decimal(32,12)")).alias("_sx"),
+            F.count("*").alias("_n"),
+        )
+        .select(
+            *keys, "pos", (F.col("_sx").cast("double") / F.col("_n")).alias("_m")
+        )
+    )
+    newc = means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "_m"))),
+            lambda s: s["_m"],
+        ).alias("_vec")
+    )
+    return {
+        tuple(r[c] for c in keys): [float(x) for x in r["_vec"]]
+        for r in newc.collect()
+    }
+
+
 def ivf_build_index(
     corpus: DataFrame,
     n_centroids: int = 32,
@@ -747,32 +666,9 @@ def ivf_build_index(
     for _ in range(refine_iters):
         assign = _ivf_assign(train, cent_rows, id_col, vec_col)
         member = train.select(id_col, vec_col).join(assign, id_col)
-        ex = member.select(
-            "centroid_id", F.posexplode(vec_col).alias("pos", "_x")
-        )
-        means = (
-            ex.groupBy("centroid_id", "pos")
-            .agg(
-                F.sum(F.col("_x").cast("double").cast("decimal(32,12)")).alias("_sx"),
-                F.count("*").alias("_n"),
-            )
-            .select(
-                "centroid_id",
-                "pos",
-                (F.col("_sx").cast("double") / F.col("_n")).alias("_m"),
-            )
-        )
-        newc = means.groupBy("centroid_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "_m"))),
-                lambda s: s["_m"],
-            ).alias("centroid_vec")
-        )
-        # empty clusters keep their previous centroid
-        updated = {r["centroid_id"]: r["centroid_vec"] for r in newc.collect()}
+        updated = _lloyd_means(member, ["centroid_id"], vec_col)
         cent_rows = [
-            (cid, [float(x) for x in updated.get(cid, vec)])
-            for cid, vec in cent_rows
+            (cid, updated.get((cid,), vec)) for cid, vec in cent_rows
         ]
     if pinned:
         train.unpersist()
@@ -817,7 +713,10 @@ def ivf_cosine_topk(
     removed from the plan, the same probed set (:func:`_ivf_probes`).
     The rows must be exactly ``queries``'s (query_id, query_vec)
     rows. ``index``'s centroid side may also be those rows already
-    collected."""
+    collected. Kept on measurement: in an interleaved A/B of
+    ``tools/ab_q38.py`` at sf0.1 (5 pairs, 4 cores, 15.7 GB, the run's
+    min of 5 samples) the q38 median was 10.18 s with this path and
+    10.40 s with the Spark probe window (with-path IQR 0.16 s)."""
     centroids, assignments = index if index is not None else ivf_build_index(
         corpus, n_centroids, id_col, vec_col, seed, refine_iters
     )
@@ -1121,7 +1020,6 @@ def embedding_dup_pairs_lsh(
     max_bucket_size: int | None = None,
     hot_mode: str = "drop",
     split_reserve_bits: int = 16,
-    center: bool = False,
 ) -> DataFrame:
     """LSH-blocked near-dup pairs → (id_a, id_b, cosine); the 100 TB
     path: one linear bucket-assignment scan, candidates only from
@@ -1155,14 +1053,6 @@ def embedding_dup_pairs_lsh(
       Σ min(sz, cap·k)² instead of Σ sz² — bounded, recall degraded
       only for borderline pairs inside hot buckets, precision still
       exact. This is the default recommendation at scale.
-
-    ``center=True`` subtracts the corpus mean before hashing (blocking
-    only; scores stay exact on original vectors) — REQUIRED when the
-    corpus is anisotropic, where sign-LSH otherwise piles everything
-    into one bucket per band and neither the cap nor the split can
-    help (hot-bucket members agree on every further hyperplane too).
-    The 100× drill's corpus is exactly this shape. Off by default to
-    keep the seeded bucket assignments of existing gates stable.
     """
     if hot_mode not in ("drop", "split"):
         # a typo ('Split') must not silently fall back to drop
@@ -1170,17 +1060,6 @@ def embedding_dup_pairs_lsh(
         raise ValueError(f"hot_mode must be 'drop' or 'split', got {hot_mode!r}")
     base = corpus.select(id_col, vec_col)
     split = max_bucket_size is not None and hot_mode == "split"
-    center_vec = None
-    if center:
-        # corpus mean (dim floats — driver-sized by construction), one
-        # combinable pass; see lsh_assign_buckets on why centering is
-        # the fix for anisotropic corpora
-        center_vec = [
-            float(v)
-            for v in base.agg(
-                *[F.avg(F.col(vec_col)[i]).alias(str(i)) for i in range(dim)]
-            ).collect()[0]
-        ]
     buckets = lsh_assign_buckets(
         base,
         id_col,
@@ -1189,7 +1068,6 @@ def embedding_dup_pairs_lsh(
         bits,
         dim,
         extra_bits=split_reserve_bits if split else 0,
-        center_vec=center_vec,
     ).localCheckpoint(eager=True)
     # ^ round 13 (guide §2.4): the candidate self-join (and the
     # hot-bucket size aggregate when the guard is on) consume the
@@ -1326,6 +1204,8 @@ def semantic_dedup_pairs(
     max_cell_size: int | None = None,
     hot_mode: str = "split",
     assignments: DataFrame | None = None,
+    corpus_vecs: DataFrame | None = None,
+    corpus_assign: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style cluster-blocked near-dup pairs → (id_a, id_b,
     cosine ≥ threshold), comparing ONLY vectors that share a Voronoi
@@ -1377,15 +1257,50 @@ def semantic_dedup_pairs(
       TRANSITIVELY connected and connected-components dedup
       (dedup_representatives) recovers the full cluster. Rank-chunking
       is deliberately NOT the LSH reserve-sign-bit split: near-dups
-      agree on every further hyperplane (the anisotropy failure noted
-      at embedding_dup_pairs_lsh), so sign bits cannot shatter a
+      agree on every further hyperplane, so sign bits cannot shatter a
       duplicate-mass mega-cell, while rank chunks always can. The rank
       window sorts each cell in one task (O(sz·log sz), not sz²) —
-      fine far past the point the unguarded join would DNF."""
+      fine far past the point the unguarded join would DNF.
+
+    ``assignments``: a prebuilt (id, cell) table of ``corpus`` —
+    ``ivf_build_index``'s assignments frame, or a stored serving table;
+    at 100 TB this skips the whole assignment scan. The caller owns its
+    consistency with ``cells`` (only the split guard reads the centroid
+    vectors). Rows for ids outside ``corpus`` are dropped by the join.
+
+    **Shard mode.** ``corpus_vecs`` is the stored, already-deduplicated
+    side, and ``corpus`` the arriving shard: the result then holds only
+    pairs that touch at least one shard vector (stored-vs-stored pairs
+    were handled when the stored side was ingested — filtered, not
+    recomputed). The semantic counterpart of
+    :func:`dedup.minhash_dedup_pairs`' ``corpus_docs`` mode; without
+    ``corpus_vecs`` the kernel is the batch path, the degenerate case
+    of an empty stored side. ``corpus_assign`` is the stored side's
+    (id, cell) table — the shape ``ivf_build_index`` writes at ingest,
+    at 100 TB partitioned by cell; without it the stored side is
+    re-assigned (correct, but the full rescan this mode exists to
+    avoid). The stored side is pruned to the cells the shard landed in
+    (left-semi on _cell — partition pruning on a cell-partitioned
+    table) BEFORE its vectors are joined, so the pair join reads
+    shard-cell-sized data. The ``max_cell_size`` guard applies over
+    the union of shard and stored members, so a flood shard into one
+    stored cell stays bounded exactly like the batch path. Shard mode
+    needs ``cells``: they must be the frame the stored side was
+    assigned with, and a shard's own lowest-id seed cells are not."""
     if hot_mode not in ("drop", "split"):
         # mirror embedding_dup_pairs_lsh: a typo must not silently
         # change recall semantics
         raise ValueError(f"hot_mode must be 'drop' or 'split', got {hot_mode!r}")
+    if corpus_vecs is None and corpus_assign is not None:
+        raise ValueError(
+            "semantic_dedup_pairs: corpus_assign= is the stored side's "
+            "assignment table and needs corpus_vecs="
+        )
+    if corpus_vecs is not None and cells is None:
+        raise ValueError(
+            "semantic_dedup_pairs: corpus_vecs= needs cells= — the "
+            "frame the stored side was assigned with"
+        )
     base = corpus.select(id_col, vec_col)
     if cells is None:
         cells = (
@@ -1397,177 +1312,31 @@ def semantic_dedup_pairs(
         )
     else:
         cells = _alias_cells(cells)
-    if assignments is not None:
-        # prebuilt (id, cell) table — ivf_build_index's assignments
-        # frame, or a stored serving table; at 100 TB this skips the
-        # whole assignment scan. Caller owns consistency with ``cells``
-        # (only the split guard reads the centroid vectors).
-        cell_of = _alias_assignments(assignments, id_col)
-    elif assign == "arrow":
-        cent_rows = [(r["_cell"], list(r["_cvec"])) for r in cells.collect()]
-        cell_of = _ivf_assign(base, cent_rows, id_col, vec_col)
-        cell_of = cell_of.select(id_col, F.col("centroid_id").alias("_cell"))
-    elif assign == "exact":
-        cell_of = assign_nearest_cell(
-            base, cells, id_col, vec_col, "_cell", "_cvec"
-        )
-    else:
-        raise ValueError(f"unknown assign mode: {assign!r}")
+    cell_of = (
+        _alias_assignments(assignments, id_col)
+        if assignments is not None
+        else _assign_cells(base, cells, id_col, vec_col, assign)
+    )
     tagged = base.join(cell_of, id_col)
-    return _semantic_cell_pairs(
-        tagged, cells, id_col, vec_col, threshold, max_cell_size, hot_mode,
-    )
-
-
-def _alias_assignments(assignments: DataFrame, id_col: str) -> DataFrame:
-    """Normalize a stored (id, cell) assignment frame to (id_col,
-    _cell) — accepts the vocabularies the operators emit (_cell,
-    cell_id, centroid_id) or a bare second column."""
-    cols = assignments.columns
-    cell_c = next(
-        (c for c in ("_cell", "cell_id", "centroid_id") if c in cols),
-        None,
-    )
-    if cell_c is None:
-        others = [c for c in cols if c != id_col]
-        if len(cols) != 2 or not others:
-            raise ValueError(
-                "assignments frame must carry a _cell/cell_id/centroid_id "
-                f"column next to {id_col!r}; got {cols}"
-            )
-        cell_c = others[0]
-    return assignments.select(id_col, F.col(cell_c).alias("_cell"))
-
-
-def _alias_cells(cells: DataFrame) -> DataFrame:
-    """Normalize a centroid frame to (_cell, _cvec), binding by NAME
-    when the frame uses a known vocabulary (ivf_build_index emits
-    centroid_id/centroid_vec; assign_nearest_cell's defaults are
-    cell_id/centroid); positional binding only for bare two-column
-    frames — a wider frame with unknown names would silently mis-bind
-    id and vector, so it is rejected instead (ADVICE r8)."""
-    names = set(cells.columns)
-    if {"centroid_id", "centroid_vec"} <= names:
-        idc, vc = "centroid_id", "centroid_vec"
-    elif {"cell_id", "centroid"} <= names:
-        idc, vc = "cell_id", "centroid"
-    elif len(cells.columns) == 2:
-        idc, vc = cells.columns
-    else:
-        raise ValueError(
-            "cells frame must have columns (centroid_id, centroid_vec) "
-            "or (cell_id, centroid), or exactly two columns "
-            f"(id, vector); got {cells.columns}"
+    new_col = None
+    if corpus_vecs is not None:
+        new_col = "_new"
+        stored = corpus_vecs.select(id_col, vec_col)
+        stored_cells = (
+            _alias_assignments(corpus_assign, id_col)
+            if corpus_assign is not None
+            else _assign_cells(stored, cells, id_col, vec_col, assign)
         )
-    return cells.select(F.col(idc).alias("_cell"), F.col(vc).alias("_cvec"))
-
-
-def _assign_cells(
-    base: DataFrame, cells: DataFrame, id_col: str, vec_col: str, assign: str
-) -> DataFrame:
-    """(id, _cell) assignment under the chosen mode — 'exact' is the
-    oracle-reproducible decimal argmax, 'arrow' the production numpy
-    matmul (see semantic_dedup_pairs docstring)."""
-    if assign == "arrow":
-        cent_rows = [(r["_cell"], list(r["_cvec"])) for r in cells.collect()]
-        cell_of = _ivf_assign(base, cent_rows, id_col, vec_col)
-        return cell_of.select(id_col, F.col("centroid_id").alias("_cell"))
-    if assign == "exact":
-        return assign_nearest_cell(base, cells, id_col, vec_col, "_cell", "_cvec")
-    raise ValueError(f"unknown assign mode: {assign!r}")
-
-
-def semantic_dedup_incremental(
-    new_vecs: DataFrame,
-    corpus_vecs: DataFrame,
-    cells: DataFrame,
-    corpus_assign: DataFrame | None = None,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign: str = "arrow",
-    max_cell_size: int | None = None,
-    hot_mode: str = "split",
-) -> DataFrame:
-    """Incremental SemDeDup: a NEW shard of embeddings against an
-    already-indexed corpus plus itself → (id_a, id_b, cosine ≥
-    threshold), every pair touching at least one new vector
-    (stored-vs-stored pairs are assumed handled when the corpus was
-    ingested — they are filtered out, not recomputed). The semantic
-    counterpart of :func:`dedup.minhash_dedup_pairs`' ``corpus_docs``
-    mode and of the window and line indexes — with this, every dedup
-    family has an ingest-shard path.
-
-    ``corpus_assign``: the stored (id, cell) assignment table —
-    ``ivf_build_index`` writes exactly this shape at ingest (at 100 TB
-    it is the table partitioned by centroid_id). Without it the corpus
-    is re-assigned (correct, but the full-rescan cost this operator
-    exists to avoid — a fallback for tests and first ingest).
-
-    100 TB shape: the shard is assigned in one Arrow scan; the corpus
-    side is pre-filtered to the cells the shard actually landed in
-    (left-semi on _cell — with a cell-partitioned assignment table
-    that is partition pruning, so the pair join reads shard-cell-sized
-    data, never the corpus). The ``max_cell_size`` guard applies over
-    the UNION of shard and stored members, so a flood shard into one
-    stored cell stays bounded exactly like the batch path. Cells must
-    be the SAME frame the corpus was assigned with, or stored
-    assignments are silently inconsistent with the shard's.
-    """
-    if hot_mode not in ("drop", "split"):
-        raise ValueError(f"hot_mode must be 'drop' or 'split', got {hot_mode!r}")
-    cells = _alias_cells(cells)
-    new_base = new_vecs.select(id_col, vec_col)
-    corpus_base = corpus_vecs.select(id_col, vec_col)
-    new_tagged = new_base.join(
-        _assign_cells(new_base, cells, id_col, vec_col, assign), id_col
-    ).withColumn("_new", F.lit(True))
-    if corpus_assign is None:
-        corpus_cells = _assign_cells(
-            corpus_base, cells, id_col, vec_col, assign
+        tagged = tagged.withColumn(new_col, F.lit(True))
+        # prune the stored side to cells the shard touches BEFORE
+        # joining vectors — shard-cell-sized reads, never corpus-sized
+        shard_cells = tagged.select("_cell").distinct()
+        tagged = tagged.unionByName(
+            stored.join(
+                stored_cells.join(shard_cells, "_cell", "left_semi"), id_col
+            ).withColumn(new_col, F.lit(False))
         )
-    else:
-        corpus_cells = _alias_assignments(corpus_assign, id_col)
-    # prune the stored side to cells the shard touches BEFORE joining
-    # vectors — shard-cell-sized reads, never corpus-sized
-    shard_cells = new_tagged.select("_cell").distinct()
-    corpus_tagged = (
-        corpus_base.join(
-            corpus_cells.join(shard_cells, "_cell", "left_semi"), id_col
-        )
-        .withColumn("_new", F.lit(False))
-    )
-    tagged = new_tagged.unionByName(corpus_tagged)
-    return _semantic_cell_pairs(
-        tagged, cells, id_col, vec_col, threshold, max_cell_size, hot_mode,
-        new_col="_new",
-    )
-
-
-def _semantic_cell_pairs(
-    tagged: DataFrame,
-    cells: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    max_cell_size: int | None,
-    hot_mode: str,
-    new_col: str | None = None,
-) -> DataFrame:
-    """Shared within-cell pairing tail for the batch
-    (:func:`semantic_dedup_pairs`) and incremental
-    (:func:`semantic_dedup_incremental`) semantic-dedup paths.
-
-    ``tagged``: (id_col, vec_col, _cell[, new_col]) — every member with
-    its Voronoi cell. ``cells``: the aliased (_cell, _cvec) centroid
-    frame (used only by the split guard's ordering cosine). When
-    ``new_col`` is given, only pairs touching at least one row where it
-    is true are emitted (the incremental contract: stored-vs-stored
-    pairs were handled at ingest)."""
-    base = tagged.select(id_col, vec_col)
-    touch_new = (
-        (lambda a, b: a | b) if new_col is not None else None
-    )
+    members = tagged.select(id_col, vec_col)
     if max_cell_size is not None:
         sizes = tagged.groupBy("_cell").agg(F.count("*").alias("_sz"))
         if hot_mode == "drop":
@@ -1627,9 +1396,9 @@ def _semantic_cell_pairs(
                 .join(keyed.alias("r"), ["_cell", "_key"])
                 .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
             )
-            if touch_new is not None:
+            if new_col is not None:
                 cand = cand.filter(
-                    touch_new(F.col(f"l.{new_col}"), F.col(f"r.{new_col}"))
+                    F.col(f"l.{new_col}") | F.col(f"r.{new_col}")
                 )
             cand = (
                 cand.select(
@@ -1641,7 +1410,7 @@ def _semantic_cell_pairs(
                 .distinct()
             )
             pair_vecs = _prescreen_pairs(
-                _pair_vectors(cand, base, id_col, vec_col), threshold
+                _pair_vectors(cand, members, id_col, vec_col), threshold
             )
             return _exact_pair_scores(pair_vecs, threshold)
     a = tagged.select(
@@ -1653,11 +1422,69 @@ def _semantic_cell_pairs(
         *([F.col(new_col).alias("_nb")] if new_col is not None else []),
     )
     pair_vecs = a.join(b, "_cell").filter(F.col("id_a") < F.col("id_b"))
-    if touch_new is not None:
-        pair_vecs = pair_vecs.filter(
-            touch_new(F.col("_na"), F.col("_nb"))
-        ).drop("_na", "_nb")
+    if new_col is not None:
+        pair_vecs = pair_vecs.filter(F.col("_na") | F.col("_nb")).drop(
+            "_na", "_nb"
+        )
     return _exact_pair_scores(_prescreen_pairs(pair_vecs, threshold), threshold)
+
+
+def _alias_assignments(assignments: DataFrame, id_col: str) -> DataFrame:
+    """Normalize a stored (id, cell) assignment frame to (id_col,
+    _cell) — accepts the vocabularies the operators emit (_cell,
+    cell_id, centroid_id) or a bare second column."""
+    cols = assignments.columns
+    cell_c = next(
+        (c for c in ("_cell", "cell_id", "centroid_id") if c in cols),
+        None,
+    )
+    if cell_c is None:
+        others = [c for c in cols if c != id_col]
+        if len(cols) != 2 or not others:
+            raise ValueError(
+                "assignments frame must carry a _cell/cell_id/centroid_id "
+                f"column next to {id_col!r}; got {cols}"
+            )
+        cell_c = others[0]
+    return assignments.select(id_col, F.col(cell_c).alias("_cell"))
+
+
+def _alias_cells(cells: DataFrame) -> DataFrame:
+    """Normalize a centroid frame to (_cell, _cvec), binding by NAME
+    when the frame uses a known vocabulary (ivf_build_index emits
+    centroid_id/centroid_vec; assign_nearest_cell's defaults are
+    cell_id/centroid); positional binding only for bare two-column
+    frames — a wider frame with unknown names would silently mis-bind
+    id and vector, so it is rejected instead (ADVICE r8)."""
+    names = set(cells.columns)
+    if {"centroid_id", "centroid_vec"} <= names:
+        idc, vc = "centroid_id", "centroid_vec"
+    elif {"cell_id", "centroid"} <= names:
+        idc, vc = "cell_id", "centroid"
+    elif len(cells.columns) == 2:
+        idc, vc = cells.columns
+    else:
+        raise ValueError(
+            "cells frame must have columns (centroid_id, centroid_vec) "
+            "or (cell_id, centroid), or exactly two columns "
+            f"(id, vector); got {cells.columns}"
+        )
+    return cells.select(F.col(idc).alias("_cell"), F.col(vc).alias("_cvec"))
+
+
+def _assign_cells(
+    base: DataFrame, cells: DataFrame, id_col: str, vec_col: str, assign: str
+) -> DataFrame:
+    """(id, _cell) assignment under the chosen mode — 'exact' is the
+    oracle-reproducible decimal argmax, 'arrow' the production numpy
+    matmul (see semantic_dedup_pairs docstring)."""
+    if assign == "arrow":
+        cent_rows = [(r["_cell"], list(r["_cvec"])) for r in cells.collect()]
+        cell_of = _ivf_assign(base, cent_rows, id_col, vec_col)
+        return cell_of.select(id_col, F.col("centroid_id").alias("_cell"))
+    if assign == "exact":
+        return assign_nearest_cell(base, cells, id_col, vec_col, "_cell", "_cvec")
+    raise ValueError(f"unknown assign mode: {assign!r}")
 
 
 def quantize_embeddings_int8(
@@ -1829,36 +1656,10 @@ def pq_train_codebooks(
         )
         cb = _pq_codebook_rows(init)
         for _ in range(refine_iters):
-            ex = _pq_assign_subcodes(subs, cb, carry_vec=True)
-            means = (
-                ex.select(
-                    "subspace", "code",
-                    F.posexplode("sub_vec").alias("pos", "_x"),
-                )
-                .groupBy("subspace", "code", "pos")
-                .agg(
-                    F.sum(
-                        F.col("_x").cast("double").cast("decimal(32,12)")
-                    ).alias("_sx"),
-                    F.count("*").alias("_n"),
-                )
-                .select(
-                    "subspace",
-                    "code",
-                    "pos",
-                    (F.col("_sx").cast("double") / F.col("_n")).alias("_m"),
-                )
+            updated = _lloyd_means(
+                _pq_assign_subcodes(subs, cb),
+                ["subspace", "code"], "sub_vec",
             )
-            newc = means.groupBy("subspace", "code").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "_m"))),
-                    lambda s: s["_m"],
-                ).alias("sub_vec")
-            )
-            updated = {
-                (r["subspace"], r["code"]): [float(x) for x in r["sub_vec"]]
-                for r in newc.collect()
-            }
             cb = [
                 [updated.get((j, c), cb[j][c]) for c in range(n_codes)]
                 for j in range(m)
@@ -1875,16 +1676,11 @@ def pq_train_codebooks(
     )
 
 
-def _pq_assign_subcodes(
-    subs: DataFrame, cb, carry_vec: bool = False
-) -> DataFrame:
-    """(_id, subspace, sub_vec) → (_id, subspace, code): argmin L2 to
-    the subspace's codebook, Arrow-batched (codebooks ship in the
-    closure — m·n_codes·sub doubles, tiny). Ties break to the lowest
-    code (argmin returns the first index). ``carry_vec`` passes
-    sub_vec through the closure so the refine loop's mean aggregation
-    reads it directly instead of shuffle-joining it back on
-    (_id, subspace) — half the per-iteration wall in the r11 profile.
+def _pq_nearest(cb):
+    """→ ``nearest(j, X)``: the argmin-L2 code in subspace ``j`` of
+    each row of ``X``, over the codebook rows ``cb`` — the one PQ
+    argmin, shared by training and encoding. Ties break to the lowest
+    code (argmin returns the first index).
 
     The argmin uses the expansion ‖x−c‖² = ‖x‖² − 2x·c + ‖c‖²: ‖x‖² is
     constant per row so argmin_c ‖x−c‖² = argmin_c (‖c‖² − 2x·c) — one
@@ -1895,10 +1691,28 @@ def _pq_assign_subcodes(
     under any partitioning; an exact tie (duplicate codebook entries)
     produces exactly equal scores either way and still breaks low."""
     import numpy as np
-    import pandas as pd
 
     mats = [np.asarray(rows, dtype=np.float64) for rows in cb]
     c2 = [(mat * mat).sum(axis=1) for mat in mats]
+
+    def nearest(j: int, X):
+        return np.argmin(c2[j][None, :] - 2.0 * (X @ mats[j].T), axis=1)
+
+    return nearest
+
+
+def _pq_assign_subcodes(subs: DataFrame, cb) -> DataFrame:
+    """(_id, subspace, sub_vec) → (_id, subspace, code, sub_vec):
+    argmin L2 to the subspace's codebook (:func:`_pq_nearest`),
+    Arrow-batched (codebooks ship in the closure — m·n_codes·sub
+    doubles, tiny). sub_vec passes through the closure so the refine
+    loop's mean aggregation reads it directly instead of
+    shuffle-joining it back on (_id, subspace) — half the
+    per-iteration wall in the r11 profile."""
+    import numpy as np
+    import pandas as pd
+
+    nearest = _pq_nearest(cb)
 
     def _assign(batches):
         for pdf in batches:
@@ -1909,23 +1723,21 @@ def _pq_assign_subcodes(
             X = np.stack(pdf["sub_vec"].values).astype(np.float64)
             for j in np.unique(sp):
                 mask = sp == j
-                d2 = c2[int(j)][None, :] - 2.0 * (X[mask] @ mats[int(j)].T)
-                out_code[mask] = np.argmin(d2, axis=1)
-            out = {
-                "_id": pdf["_id"].values,
-                "subspace": sp,
-                "code": out_code,
-            }
-            if carry_vec:
-                out["sub_vec"] = pdf["sub_vec"].values
-            yield pd.DataFrame(out)
+                out_code[mask] = nearest(int(j), X[mask])
+            yield pd.DataFrame(
+                {
+                    "_id": pdf["_id"].values,
+                    "subspace": sp,
+                    "code": out_code,
+                    "sub_vec": pdf["sub_vec"].values,
+                }
+            )
 
-    schema = "_id long, subspace int, code int"
-    if carry_vec:
-        schema += ", sub_vec array<double>"
     return ensure_min_partitions(
         subs.select("_id", "subspace", "sub_vec")
-    ).mapInPandas(_assign, schema=schema)
+    ).mapInPandas(
+        _assign, schema="_id long, subspace int, code int, sub_vec array<double>"
+    )
 
 
 def pq_encode(
@@ -1973,8 +1785,7 @@ def pq_encode(
             f"(m={m} subspaces × {sub} dims) — codebooks were trained "
             "on a different embedding dimension"
         )
-    mats = [np.asarray(rows, dtype=np.float64) for rows in cb]
-    c2 = [(mat * mat).sum(axis=1) for mat in mats]
+    nearest = _pq_nearest(cb)
 
     def _encode(batches):
         for pdf in batches:
@@ -1986,10 +1797,7 @@ def pq_encode(
             )
             codes = np.empty((len(pdf), m), dtype=np.int32)
             for j in range(m):
-                xs = X[:, j * sub : (j + 1) * sub]
-                # same matmul-identity argmin as _pq_assign_subcodes
-                d2 = c2[j][None, :] - 2.0 * (xs @ mats[j].T)
-                codes[:, j] = np.argmin(d2, axis=1)
+                codes[:, j] = nearest(j, X[:, j * sub : (j + 1) * sub])
             yield pd.DataFrame(
                 {id_col: pdf[id_col].values, "codes": list(codes)}
             )
@@ -2343,9 +2151,7 @@ def ivf_pq_topk(
     ivf_index: tuple[DataFrame, DataFrame | None] | None = None,
     pq_index: tuple[DataFrame, DataFrame] | None = None,
     query_batch_size: int = 4096,
-    prune_cells: bool = True,
     return_candidates: bool = False,
-    rerank_vecs: str = "auto",
     collected_queries: "list | None" = None,
 ) -> DataFrame:
     """IVF-PQ composition — the at-scale serving shape both tiers
@@ -2367,9 +2173,8 @@ def ivf_pq_topk(
     ``_cell`` values must be assignments under the SAME centroids as
     ``ivf_index`` — the ingest face enforces this with a
     ``_cells_fingerprint`` sidecar; a mismatched ``_cell`` column would
-    silently prune true candidates. ``prune_cells=False`` opts out
-    (e.g. for a codes frame whose ``_cell`` is known stale);
-    without a ``_cell`` column the scan is corpus-wide as before.
+    silently prune true candidates. Without a ``_cell`` column the
+    scan is corpus-wide.
 
     **Membership from the codes table (round 12).** Passing
     ``ivf_index=(centroids, None)`` derives cell membership from the
@@ -2402,7 +2207,7 @@ def ivf_pq_topk(
     (``process_ingest_batch_pq_codes(store_vectors=True)`` — the
     table already pays a row per corpus vector; the vec column makes
     it the id-addressed point store the re-rank needs),
-    ``rerank_vecs="codes"`` sources the exact re-rank's ``(id, vec)``
+    ``corpus=None`` sources the exact re-rank's ``(id, vec)``
     fetch from the codes table itself instead of a corpus-wide column
     scan: every ADC survivor lives in a PROBED cell by construction,
     so the fetch is the same ``_cell``-partition-pruned scan the
@@ -2415,17 +2220,10 @@ def ivf_pq_topk(
     the same floats the ingest batch carried — with one membership
     nuance: "corpus member" (the self-id union) then means *present
     in the codes table*, i.e. the index is the authority on what is
-    retrievable. Requires a celled codes frame carrying ``vec_col``
-    with ``prune_cells`` on, and accepts ``corpus=None``.
-    ``rerank_vecs="auto"`` (default) keeps the caller's corpus frame
-    when one is passed and switches to the codes fetch only for
-    ``corpus=None`` — existing callers are byte-stable."""
+    retrievable. Requires a celled codes frame carrying ``vec_col``.
+    A caller that passes a corpus frame gets the re-rank fetched from
+    it."""
     R = _pq_prefilter(k, prefilter, query_batch_size)
-    if rerank_vecs not in ("auto", "corpus", "codes"):
-        raise ValueError(
-            "ivf_pq_topk: rerank_vecs must be 'auto', 'corpus' or "
-            f"'codes' (got {rerank_vecs!r})"
-        )
     if corpus is None and not (
         ivf_index is not None and pq_index is not None
     ):
@@ -2433,13 +2231,6 @@ def ivf_pq_topk(
             "ivf_pq_topk: corpus=None requires BOTH ivf_index and "
             "pq_index prebuilt — the inline index builds need the "
             "corpus frame."
-        )
-    if corpus is None and not return_candidates and rerank_vecs == "corpus":
-        raise ValueError(
-            "ivf_pq_topk: corpus=None with rerank_vecs='corpus' cannot "
-            "run the exact re-rank — pass the corpus frame, serve from "
-            "a store_vectors=True codes table (rerank_vecs='codes'), "
-            "or return_candidates=True for the index-only ADC path."
         )
     centroids, assignments = (
         ivf_index
@@ -2468,22 +2259,20 @@ def ivf_pq_topk(
     )
     spark = queries.sparkSession
     q_schema = queries.select(query_id_col, query_vec_col).schema
-    use_cells = prune_cells and "_cell" in codes.columns
-    use_codes_vecs = not return_candidates and (
-        rerank_vecs == "codes" or (rerank_vecs == "auto" and corpus is None)
-    )
+    use_cells = "_cell" in codes.columns
+    use_codes_vecs = corpus is None and not return_candidates
     if use_codes_vecs and not (use_cells and vec_col in codes.columns):
-        if "_cell" not in codes.columns:
-            why = "this codes frame has no _cell column"
-        elif not prune_cells:
-            why = "prune_cells=False disables the probed-cell fetch"
-        else:
-            why = f"this codes frame has no {vec_col!r} column"
+        why = (
+            f"this codes frame has no {vec_col!r} column"
+            if use_cells
+            else "this codes frame has no _cell column"
+        )
         raise ValueError(
-            "ivf_pq_topk: the codes-table re-rank fetch "
-            "(rerank_vecs='codes') needs a celled codes frame carrying "
-            f"the raw vectors (the process_ingest_batch_pq_codes("
-            f"store_vectors=True) layout) with prune_cells on — {why}."
+            "ivf_pq_topk: corpus=None re-ranks from the codes table, "
+            "which needs a celled codes frame carrying the raw vectors "
+            "(the process_ingest_batch_pq_codes(store_vectors=True) "
+            f"layout) — {why}; pass the corpus frame, or "
+            "return_candidates=True for the index-only ADC path."
         )
     # probed cell ids accumulate across query chunks (driver-known from
     # each chunk's probe selection) — they define the pruned re-rank

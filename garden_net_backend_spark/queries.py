@@ -1933,18 +1933,14 @@ def q38_suite_impl(
         fut_exact = pool.submit(_b_exact)
 
         def _b_lsh():
-            # collected_queries: the query-side bucket assignment runs
-            # in numpy on the driver (round 14) — one mapInPandas plan
-            # branch + its Arrow stage fewer per execution,
-            # bit-identical buckets. fallback_exact is a CALLABLE: the
-            # operator resolves it only when it assembles the fallback
-            # branch, so the exact-baseline job (running on its own
-            # pool task above) overlaps this arm's candidate-checkpoint
-            # construction instead of serializing ahead of it.
+            # fallback_exact is a CALLABLE: the operator resolves it
+            # only when it assembles the fallback branch, so the
+            # exact-baseline job (running on its own pool task above)
+            # overlaps this arm's candidate-checkpoint construction
+            # instead of serializing ahead of it.
             return lsh_cosine_topk(
                 emb, queries, k=5,
                 fallback_exact=lambda: fut_exact.result(),
-                collected_queries=q_rows,
             ).select(F.lit("lsh").alias("gate"), "*")
 
         def _b_ivf():
@@ -3142,7 +3138,7 @@ _Q56_SEM_SQL = f"""
     "scan, the pair join shuffles on cell_id (k ≈ √N keeps cells "
     "executor-sized; hot cells cap/split via max_cell_size — round-9 "
     "guard, mega-cell drill in SCALING.md). 'seminc' arm (round 9) — "
-    "the INGEST-SHARD path (semantic_dedup_incremental): vec_id%16==0 "
+    "the INGEST-SHARD path (semantic_dedup_pairs(corpus_vecs=)): vec_id%16==0 "
     "rows arrive as a new shard against the rest as the stored corpus, "
     "same seed cells; the oracle is the batch SemDeDup pair set "
     "restricted to pairs touching a shard id — exactly the incremental "
@@ -3154,7 +3150,6 @@ def q56_embedding_dup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import (
         embedding_dup_pairs,
         embedding_dup_pairs_lsh,
-        semantic_dedup_incremental,
         semantic_dedup_pairs,
     )
 
@@ -3178,7 +3173,8 @@ def q56_embedding_dup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two semantic arms share ONE exact Voronoi assignment of the
     # same base slice against the same 8 seed cells (lazy checkpoint:
     # the decimal argmax scan runs once per execution, not three times
-    # across semdedup's own assign + seminc's shard/stored splits)
+    # across semdedup's own assign + seminc's shard/stored splits);
+    # each arm's inner joins restrict it to its own ids
     from .operators.similarity import assign_nearest_cell
 
     seeds = (
@@ -3196,19 +3192,15 @@ def q56_embedding_dup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         base800, threshold=0.3, cells=seeds, assignments=assign_all
     ).select(F.lit("semdedup").alias("gate"), "id_a", "id_b", "cosine")
     # seminc: same seed cells, vec_id%16==0 rows as the arriving shard,
-    # the rest as the stored (already-ingested) corpus whose stored
-    # assignment table is the shared frame — see the doc above for the
-    # oracle contract
-    shard = base800.filter(F.col("vec_id") % 16 == 0)
-    seminc = semantic_dedup_incremental(
-        shard,
-        base800.filter(F.col("vec_id") % 16 != 0),
-        seeds,
-        corpus_assign=assign_all.join(
-            shard.select("vec_id"), "vec_id", "left_anti"
-        ),
+    # the rest as the stored (already-ingested) corpus — see the doc
+    # above for the oracle contract
+    seminc = semantic_dedup_pairs(
+        base800.filter(F.col("vec_id") % 16 == 0),
         threshold=0.3,
-        assign="exact",
+        cells=seeds,
+        assignments=assign_all,
+        corpus_vecs=base800.filter(F.col("vec_id") % 16 != 0),
+        corpus_assign=assign_all,
     ).select(F.lit("seminc").alias("gate"), "id_a", "id_b", "cosine")
     return exact.unionByName(lsh).unionByName(sem).unionByName(seminc)
 

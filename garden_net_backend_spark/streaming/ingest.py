@@ -1782,7 +1782,8 @@ def process_ingest_batch_semantic(
 ) -> None:
     """The SEMANTIC (embedding) face of the ingest loop: same accept
     decision as :func:`process_ingest_batch`, with
-    ``semantic_dedup_incremental`` as the pair emitter and the stored
+    ``semantic_dedup_pairs`` as the pair emitter (its shard mode from
+    the second batch on, ``corpus_vecs=`` the stored docs) and the stored
     (id, cell) ASSIGNMENT table as the index — the shape
     ``ivf_build_index`` persists, partitioned by cell so the shard's
     probe partition-prunes. ``cells`` must be the same frozen centroid
@@ -1800,7 +1801,6 @@ def process_ingest_batch_semantic(
     from ..operators.similarity import (
         _alias_cells,
         _assign_cells,
-        semantic_dedup_incremental,
         semantic_dedup_pairs,
     )
 
@@ -1850,18 +1850,17 @@ def process_ingest_batch_semantic(
     )
 
     def decide(new, stored_docs, stored_assign, pin):
-        if stored_docs is None:
-            pairs = semantic_dedup_pairs(new, cells=cells, **kw)
-        else:
-            pairs = semantic_dedup_incremental(
-                new,
-                stored_docs.select(id_col, vec_col),
-                cells,
-                corpus_assign=stored_assign.select(id_col, "_cell")
-                if stored_assign is not None
-                else None,
-                **kw,
-            )
+        pairs = semantic_dedup_pairs(
+            new,
+            cells=cells,
+            corpus_vecs=None
+            if stored_docs is None
+            else stored_docs.select(id_col, vec_col),
+            corpus_assign=None
+            if stored_docs is None or stored_assign is None
+            else stored_assign.select(id_col, "_cell"),
+            **kw,
+        )
         keep_ids = _ingest_decide(pairs, new, stored_docs, id_col, pin)
         # same self-referential read-overwrite hazard as the MinHash
         # loop: pin the decision before replacing partitions
@@ -2534,9 +2533,7 @@ def process_serve_batch_ann(
                     # candidate scan (plus an id-pushdown point lookup for
                     # self-ids) — corpus_dir is never read, and the request
                     # path carries no corpus-sized term in either mode
-                    result = ivf_pq_topk(
-                        None, clean, rerank_vecs="codes", **kw
-                    )
+                    result = ivf_pq_topk(None, clean, **kw)
                 else:
                     result = ivf_pq_topk(
                         corpus.select(id_col, vec_col), clean, **kw

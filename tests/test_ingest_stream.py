@@ -1127,11 +1127,11 @@ def test_ivfpq_serves_from_maintained_codes_table(spark):
                 ).collect(),
             )
         )
-        # opt-out: prune_cells=False keeps the corpus-wide scan but the
-        # same answer (the escape hatch for a known-stale _cell column)
+        # the unpruned reference: the same codes without their _cell
+        # column take the corpus-wide scan and give the same answer
         unpruned_df = ivf_pq_topk(
-            corpus, queries, k=5, nprobe=2, prune_cells=False,
-            ivf_index=(cents, assign), pq_index=(cb, stored_codes),
+            corpus, queries, k=5, nprobe=2,
+            ivf_index=(cents, assign), pq_index=(cb, stored_codes.drop("_cell")),
         )
         assert "PartitionFilters: [(_cell" not in plan_string(unpruned_df)
         assert sorted(map(tuple, unpruned_df.collect())) == sorted(
@@ -2256,7 +2256,7 @@ def test_exact_serving_pruned_rerank_fetch(spark):
             F.col("embedding").alias("query_vec"),
         )
         pruned_df = ivf_pq_topk(
-            None, one_anchor, k=5, nprobe=2, rerank_vecs="codes",
+            None, one_anchor, k=5, nprobe=2,
             ivf_index=(
                 cells.selectExpr(
                     "cell_id as centroid_id", "centroid as centroid_vec"
@@ -2309,9 +2309,7 @@ def test_exact_serving_pruned_rerank_fetch(spark):
             ),
             None,
         )
-        via_codes = ivf_pq_topk(
-            None, drift, rerank_vecs="codes", ivf_index=ivf, **kw
-        ).collect()
+        via_codes = ivf_pq_topk(None, drift, ivf_index=ivf, **kw).collect()
         via_corpus = ivf_pq_topk(
             corpus, drift, ivf_index=ivf, **kw
         ).collect()
@@ -2328,21 +2326,12 @@ def test_exact_serving_pruned_rerank_fetch(spark):
                 corpus.filter(F.col("vec_id") < 2), 2, plain_dir, cb,
                 cells=cells, store_vectors=True,
             )
-        # rerank_vecs contract errors
-        with pytest.raises(ValueError, match="rerank_vecs"):
-            ivf_pq_topk(
-                None, queries, rerank_vecs="bogus", ivf_index=ivf,
-                pq_index=(cb, stored),
-            )
+        # corpus=None re-ranks from the codes table: a codes frame
+        # without the raw vectors is a contract error
         with pytest.raises(ValueError, match="no 'embedding' column"):
             ivf_pq_topk(
-                None, queries, rerank_vecs="codes", ivf_index=ivf,
+                None, queries, ivf_index=ivf,
                 pq_index=(cb, spark.read.parquet(plain_dir)),
-            )
-        with pytest.raises(ValueError, match="rerank_vecs='corpus'"):
-            ivf_pq_topk(
-                None, queries, rerank_vecs="corpus", ivf_index=ivf,
-                pq_index=(cb, stored),
             )
         # --- adoption via rebuild + compaction keeps the layout ------
         rebuild_pq_codes(

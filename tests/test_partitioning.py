@@ -27,9 +27,9 @@ def test_small_scan_estimate_matches_rdd_and_repartitions(spark):
     df = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     est = _estimated_scan_partitions(df)
     assert est == df.rdd.getNumPartitions()
-    target = spark.sparkContext.defaultParallelism + 4
-    out = ensure_min_partitions(df, target)
-    assert out.rdd.getNumPartitions() == target
+    target = spark.sparkContext.defaultParallelism
+    assert est < target
+    assert ensure_min_partitions(df).rdd.getNumPartitions() == target
     # projection over the scan estimates identically (the common call shape)
     assert _estimated_scan_partitions(df.select("doc_id")) == est
 
@@ -69,12 +69,17 @@ def test_checkpointed_lineage_is_a_noop(spark):
     assert ensure_min_partitions(df) is df
 
 
-def test_well_partitioned_scan_is_a_noop(spark):
+def test_well_partitioned_scan_is_a_noop(spark, tmp_path):
     """When the split estimate already clears the target the helper
     must not coalesce a big scan down to the target (the at-scale
-    hazard the old >=-check guarded against)."""
-    df = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    assert ensure_min_partitions(df, 1) is df
+    hazard the old >=-check guarded against): a scan of one file per
+    ``defaultParallelism`` slot is left as it is."""
+    path = str(tmp_path / "wide.parquet")
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, 100 * n, 1, n).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert _estimated_scan_partitions(df) >= n
+    assert ensure_min_partitions(df) is df
 
 
 def test_no_rdd_call_in_helper_source():
@@ -115,5 +120,6 @@ def test_operator_named_column_under_spaced_dir_fans_out(spark, tmp_path):
     df = spark.read.parquet(path)
     est = _estimated_scan_partitions(df)
     assert est == df.rdd.getNumPartitions()
-    target = spark.sparkContext.defaultParallelism + 4
-    assert ensure_min_partitions(df, target).rdd.getNumPartitions() == target
+    target = spark.sparkContext.defaultParallelism
+    assert est < target
+    assert ensure_min_partitions(df).rdd.getNumPartitions() == target

@@ -636,6 +636,7 @@ def test_lsh_topk_exact_fallback_guarantees_k(spark):
 
     from garden_net_backend_spark.operators.similarity import (
         cosine_topk,
+        lsh_assign_buckets,
         lsh_cosine_topk,
     )
 
@@ -660,10 +661,19 @@ def test_lsh_topk_exact_fallback_guarantees_k(spark):
     assert set(per_q) == {0, 1, 2}
     for q in per_q:
         assert sorted(per_q[q]) == sorted(per_q_exact[q])
-    # fallback off reproduces the sparse behavior
-    bare = lsh_cosine_topk(
-        df, queries, k=5, bands=2, bits=12, dim=16, exact_fallback=False
-    ).count()
+    # the buckets alone are deficient: fewer than k collisions per query
+    geo = dict(bands=2, bits=12, dim=16)
+    bare = (
+        lsh_assign_buckets(df, **geo)
+        .join(
+            lsh_assign_buckets(queries, "query_id", "query_vec", **geo)
+            .withColumnRenamed("id", "_qid"),
+            ["band", "bucket"],
+        )
+        .select("_qid", "id")
+        .distinct()
+        .count()
+    )
     assert bare < 15
     # round 13: handing in the precomputed exact frame (fallback_exact=)
     # must be row-identical to the self-built fallback — the q38 suite
@@ -779,22 +789,16 @@ def test_assign_nearest_cell_norm_hoist_bit_identical(spark):
     assert got[300] == (0, 0.0)
 
 
-def test_lsh_assign_extra_bits_and_center_paths_agree(emb):
+def test_lsh_assign_extra_bits_paths_agree(emb):
     """The Arrow and pure-SQL assignment paths must stay bit-identical
-    for the round-4 extensions too (sub-key reserve bits for hot-bucket
-    splitting; mean-centering)."""
+    for the round-4 extension too (sub-key reserve bits for hot-bucket
+    splitting)."""
     from garden_net_backend_spark.operators.similarity import (
         lsh_assign_buckets,
     )
 
     sl = emb.filter(F.col("vec_id") < 120)
-    mu = [
-        float(v)
-        for v in sl.agg(
-            *[F.avg(F.col("embedding")[i]).alias(str(i)) for i in range(64)]
-        ).collect()[0]
-    ]
-    kw = dict(bands=3, bits=5, extra_bits=7, center_vec=mu)
+    kw = dict(bands=3, bits=5, extra_bits=7)
     arrow = {
         (r["id"], r["band"]): (r["bucket"], r["sub"])
         for r in lsh_assign_buckets(sl, use_arrow=True, **kw).collect()
@@ -1171,12 +1175,12 @@ def test_dedup_representatives_partial_scores_keep_all_docs(spark):
 
 
 def test_semantic_dedup_incremental_matches_batch_restriction(spark, emb):
-    """Incremental SemDeDup == batch over the union, restricted to
-    pairs touching the shard; the stored-assignment path agrees; and
-    stored-vs-stored pairs are never re-emitted."""
+    """Incremental SemDeDup (the kernel's shard mode, corpus_vecs=) ==
+    batch over the union, restricted to pairs touching the shard; the
+    stored-assignment path agrees; and stored-vs-stored pairs are never
+    re-emitted."""
     from garden_net_backend_spark.operators.similarity import (
         ivf_build_index,
-        semantic_dedup_incremental,
         semantic_dedup_pairs,
     )
 
@@ -1197,8 +1201,9 @@ def test_semantic_dedup_incremental_matches_batch_restriction(spark, emb):
     }
     got = {
         (r["id_a"], r["id_b"]): r["cosine"]
-        for r in semantic_dedup_incremental(
-            shard, corpus, cents, threshold=0.2, assign="exact"
+        for r in semantic_dedup_pairs(
+            shard, threshold=0.2, cells=cents, assign="exact",
+            corpus_vecs=corpus,
         ).collect()
     }
     assert got == want
@@ -1219,9 +1224,9 @@ def test_semantic_dedup_incremental_matches_batch_restriction(spark, emb):
     )
     got2 = {
         (r["id_a"], r["id_b"]): r["cosine"]
-        for r in semantic_dedup_incremental(
-            shard, corpus, cents, corpus_assign=stored,
-            threshold=0.2, assign="exact",
+        for r in semantic_dedup_pairs(
+            shard, threshold=0.2, cells=cents, assign="exact",
+            corpus_vecs=corpus, corpus_assign=stored,
         ).collect()
     }
     assert got2 == want
@@ -1234,7 +1239,7 @@ def test_semantic_dedup_incremental_guarded_flood(spark):
     import numpy as np
 
     from garden_net_backend_spark.operators.similarity import (
-        semantic_dedup_incremental,
+        semantic_dedup_pairs,
     )
 
     rng = np.random.default_rng(23)
@@ -1255,9 +1260,9 @@ def test_semantic_dedup_incremental_guarded_flood(spark):
     cells = stored.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
     )
-    got = semantic_dedup_incremental(
-        shard, stored, cells, threshold=0.999,
-        max_cell_size=16, hot_mode="split",
+    got = semantic_dedup_pairs(
+        shard, threshold=0.999, cells=cells, assign="arrow",
+        max_cell_size=16, hot_mode="split", corpus_vecs=stored,
     ).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in got}
     # bounded: far below the unguarded flood volume C(200,2)+200
@@ -1267,6 +1272,29 @@ def test_semantic_dedup_incremental_guarded_flood(spark):
     assert any(a == 99 or b == 99 for a, b in pairs)
     # no stored-vs-stored pair is ever re-emitted
     assert not any(a < 1000 and b < 1000 for a, b in pairs)
+
+
+def test_semantic_dedup_shard_mode_argument_errors(emb):
+    """corpus_assign= belongs to the stored side, so it needs
+    corpus_vecs=; and shard mode needs cells=, since a shard's own
+    lowest-id seed cells are not the frame the stored side was
+    assigned with."""
+    from garden_net_backend_spark.operators.similarity import (
+        assign_nearest_cell,
+        semantic_dedup_pairs,
+    )
+
+    shard = emb.filter(F.col("vec_id") % 3 == 0)
+    corpus = emb.filter(F.col("vec_id") % 3 != 0)
+    cells = corpus.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
+    )
+    with pytest.raises(ValueError, match="corpus_assign= .* needs corpus_vecs="):
+        semantic_dedup_pairs(
+            shard, cells=cells, corpus_assign=assign_nearest_cell(corpus, cells)
+        )
+    with pytest.raises(ValueError, match="corpus_vecs= needs cells="):
+        semantic_dedup_pairs(shard, corpus_vecs=corpus)
 
 
 def test_semantic_dedup_prebuilt_assignments_agree(spark, emb):
@@ -1858,13 +1886,6 @@ def test_ivfpq_membership_from_codes_table(spark, pq_clustered):
         ivf_index=(cents, None), pq_index=(cb, celled),
     ).collect()
     assert sorted(map(tuple, via_codes)) == sorted(map(tuple, via_assign))
-    # pruning off (stale-_cell escape hatch): membership still comes
-    # from _cell, just without the isin partition filter — same rows
-    unpruned = ivf_pq_topk(
-        pq_clustered, queries, k=5, nprobe=3, prune_cells=False,
-        ivf_index=(cents, None), pq_index=(cb, celled),
-    ).collect()
-    assert sorted(map(tuple, unpruned)) == sorted(map(tuple, via_assign))
     # chunked serving path: the per-chunk ADC passes each derive
     # membership from the same celled frame
     chunked = ivf_pq_topk(
@@ -1877,41 +1898,6 @@ def test_ivfpq_membership_from_codes_table(spark, pq_clustered):
             pq_clustered, queries, k=5, nprobe=3,
             ivf_index=(cents, None), pq_index=(cb, codes),
         )
-
-
-def test_lsh_collected_queries_buckets_identical(emb, queries):
-    """Round 14: the driver-side numpy query bucketing
-    (collected_queries=) is row-identical to the Spark mapInPandas
-    bucket scan — both call _np_bucket_cols on the same
-    _np_bucket_planes constants, so this pins the wiring, not the
-    math. Malformed rows (duplicate ids) must fall back to the Spark
-    path and still match."""
-    q_rows = queries.collect()
-    plain = sorted(map(tuple, lsh_cosine_topk(emb, queries, k=5).collect()))
-    fast = sorted(
-        map(
-            tuple,
-            lsh_cosine_topk(
-                emb, queries, k=5, collected_queries=q_rows
-            ).collect(),
-        )
-    )
-    assert fast == plain
-    # duplicate id → _lsh_bucket_rows_local declines, Spark path runs
-    from garden_net_backend_spark.operators.similarity import (
-        _lsh_bucket_rows_local,
-    )
-
-    assert _lsh_bucket_rows_local(
-        q_rows + q_rows[:1], "query_id", "query_vec", 8, 8, 64
-    ) is None
-    # ragged vector → declines (ADVICE r13: malformed input must fall
-    # back, not crash)
-    import pyspark.sql.types as T
-
-    bad = [{"query_id": 1, "query_vec": [1.0] * 64},
-           {"query_id": 2, "query_vec": [1.0] * 63}]
-    assert _lsh_bucket_rows_local(bad, "query_id", "query_vec", 8, 8, 64) is None
 
 
 def test_lsh_deferred_fallback_exact_identical(emb, queries):

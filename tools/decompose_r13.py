@@ -79,7 +79,6 @@ def q56(spark):
         assign_nearest_cell,
         embedding_dup_pairs,
         embedding_dup_pairs_lsh,
-        semantic_dedup_incremental,
         semantic_dedup_pairs,
     )
 
@@ -102,11 +101,10 @@ def q56(spark):
     assign_all = assign_nearest_cell(base800, seeds).localCheckpoint(eager=True)
     _time("arm:semdedup(prebuilt assign)", lambda: semantic_dedup_pairs(
         base800, threshold=0.3, cells=seeds, assignments=assign_all))
-    shard = base800.filter(F.col("vec_id") % 16 == 0)
-    _time("arm:seminc(prebuilt assign)", lambda: semantic_dedup_incremental(
-        shard, base800.filter(F.col("vec_id") % 16 != 0), seeds,
-        corpus_assign=assign_all.join(shard.select("vec_id"), "vec_id", "left_anti"),
-        threshold=0.3, assign="exact"))
+    _time("arm:seminc(prebuilt assign)", lambda: semantic_dedup_pairs(
+        base800.filter(F.col("vec_id") % 16 == 0), threshold=0.3, cells=seeds,
+        assignments=assign_all, corpus_vecs=base800.filter(F.col("vec_id") % 16 != 0),
+        corpus_assign=assign_all))
 
 
 def q29(spark):
