@@ -246,18 +246,17 @@ BENCH_NOTES = {
     "≈ the sum of their r5 constituents; round 7 is the first bench "
     "over the merged plans (r6's bench crashed on a stale import, so "
     "compare against BENCH_r05 constituent sums).",
-    "_serving_pinned": "extras.q64_warm_serving_pinned_* measures the "
-    "round-7 sorted-adjacency index path. At bench scale (233k-edge "
-    "network) it is SLOWER than the plain bucketed path — the seed "
-    "collect + literal-probe overhead exceeds the scan it prunes on a "
-    "corpus this small; its win is scale-invariance (10x corpus: "
-    "1.2-1.9x vs 3.1-3.8x unpinned, SCALING.md serving section). "
-    "Round 11 (judge r10 task 6): search_subnetwork's pin_policy="
-    "'auto' now makes that choice IN CODE from the pinned frame's "
-    "memoized row count vs the measured crossover "
-    "(_PINNED_SYM_CROSSOVER_ROWS); this extra passes pin_policy="
-    "'force' because it exists to measure the index path itself. Both "
-    "paths are output-identical (equivalence-tested).",
+    "_serving_pinned": "extras.q64_warm_serving_pinned_* times the same "
+    "warm GENE12 search as extras.q64_warm_serving_*, with the "
+    "sorted pinned adjacency (pin_serving_adjacency) passed as "
+    "pinned_sym. A search miss is resolved on the driver from three "
+    "small collects (seeds, the seeds' incident edges, the edges "
+    "inside their hood; plans/search.py), and the pin only changes "
+    "where the second collect reads from: one cached scan of the "
+    "symmetrized edges instead of two scans of the edges. The 1x/10x "
+    "serving drill measures no difference between the two sources "
+    "(SCALING.md serving section); both give the same rows "
+    "(equivalence-tested).",
     "q29_content_dedup": "suite = r5 q29 (exact dedup + span/excise "
     "arms) + former q71 cluster-representative arms, incl. their "
     "inherently-eager connected-components solve (pair-join eval + "
@@ -355,6 +354,12 @@ BENCH_NOTES = {
     "one deg pass (structural costs pinned by the r5 drill); round 8: "
     "forks off the shared family build — headline times the ~8 bundle "
     "aggregates only",
+    "_q38_first_sample": "extras.q38_standalone_first_sec is the first "
+    "of the three standalone q38 samples, kept beside "
+    "extras.q38_standalone_min_sec: the first q38 execution of a "
+    "session is the slow one (11.4-17.4s against a min of 8.4-11.4s "
+    "over the next four in 15 tools/ab_q38.py runs at sf0.1 on 4 "
+    "cores), and it is what a one-shot caller pays.",
     "_hot_load_caveat": "round 11 (judge r10 task 8): hot_load_at_best "
     "now reads SIBLING busy cores (host CPU minus this bench's own "
     "process tree, over a 0.25s window sampled immediately before the "
@@ -416,10 +421,11 @@ BENCH_NOTES = {
     "warning from the bench tail; no plan change at data scale.",
     "q64_search_ego_subnetwork": "headline = cold token index + "
     "search off the shared family build (warm bucketed serving is "
-    "extras.q64_warm_serving_min_sec). Round 6 dropped the eager "
-    "per-search adj.count() broadcast guard — broadcast choice is "
-    "AQE-delegated from exact map-stage sizes (plans/search.py); "
-    "round 7 is the first bench of that plan shape",
+    "extras.q64_warm_serving_min_sec). The search is resolved on the "
+    "driver from three small collects, and the returned sub_nodes is "
+    "the nodes joined to one broadcast literal of (fragment, searched, "
+    "degree) (plans/search.py); GENE12's hood is most of the network, "
+    "so this gate measures the largest driver-side hood in the catalog",
 }
 
 
@@ -647,6 +653,7 @@ def main() -> None:
             _release()
         extras["q38_standalone_sec"] = _q38_standalone
         extras["q38_standalone_min_sec"] = min(_q38_standalone)
+        extras["q38_standalone_first_sec"] = _q38_standalone[0]
     except Exception as exc:
         extras["q38_standalone_error"] = repr(exc)[:200]
 
@@ -803,9 +810,8 @@ def main() -> None:
             _release()
         extras["q64_warm_serving_sec"] = serving_samples
         extras["q64_warm_serving_min_sec"] = min(serving_samples)
-        # the round-7 serving index shape: sorted pinned adjacency +
-        # literal seed probe (batch-pruned cached scan) — the variant
-        # whose 10x ratios SCALING.md's serving section reports
+        # the same search reading its seed adjacency from the sorted
+        # pinned adjacency (see BENCH_NOTES["_serving_pinned"])
         from garden_net_backend_spark.plans.search import (
             pin_serving_adjacency,
         )
@@ -816,7 +822,7 @@ def main() -> None:
             t0 = time.time()
             sub_nodes, _sub_edges = search_subnetwork(
                 bnodes, edges, "GENE12", token_index=btokens,
-                pinned_sym=sym, pin_policy="force",
+                pinned_sym=sym,
             )
             sub_nodes.select("fragment", "type", "searched", "degree").collect()
             pinned_samples.append(round(time.time() - t0, 3))

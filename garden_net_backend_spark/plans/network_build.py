@@ -579,21 +579,9 @@ def assign_grid_positions(
     )
 
 
-def cytoscape_elements(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Cytoscape.js elements as one JSON string per row (reference
-    generate_cytoscape_json, network_generator_lib.R:242-275; SURVEY S10).
-
-    Output contracts preserved: ``name→id``, ``gene_names→names``, edge
-    id = ``src~dst``, ``searched`` is the STRING "true"/"false"
-    (reference network_generator_lib.R:87-88), numbers typed (the
-    reference needs a sed to unquote, backend.py:83-85 — we emit typed
-    JSON directly), never scientific notation (LongType start/end).
-    Distributed: ``df.write.text`` streams it; small graphs collect.
-
-    ``searched`` is the nodes' own column when they carry one (a
-    ``search_subnetwork`` result), else "false"; it is always the last
-    data field.
-    """
+def _element_rows(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """``(element, _ord, _key)`` rows, unordered: the element JSON, 0
+    for a node and 1 for an edge, and the node or edge id."""
     n = nodes
     if "searched" not in n.columns:
         n = n.withColumn("searched", F.lit("false"))
@@ -631,19 +619,40 @@ def cytoscape_elements(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         F.lit(1).alias("_ord"),
         F.concat_ws("~", F.col("src"), F.col("dst")).alias("_key"),
     )
-    # nodes before edges, deterministic within each block
-    return (
-        node_json.unionByName(edge_json)
-        .orderBy("_ord", "_key")
-        .select("element")
-    )
+    return node_json.unionByName(edge_json)
+
+
+def cytoscape_elements(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Cytoscape.js elements as one JSON string per row (reference
+    generate_cytoscape_json, network_generator_lib.R:242-275; SURVEY S10),
+    nodes before edges, each block in id order.
+
+    Output contracts preserved: ``name→id``, ``gene_names→names``, edge
+    id = ``src~dst``, ``searched`` is the STRING "true"/"false"
+    (reference network_generator_lib.R:87-88), numbers typed (the
+    reference needs a sed to unquote, backend.py:83-85 — we emit typed
+    JSON directly), never scientific notation (LongType start/end).
+    Distributed: ``df.write.text`` streams it; small graphs collect.
+
+    ``searched`` is the nodes' own column when they carry one (a
+    ``search_subnetwork`` result), else "false"; it is always the last
+    data field.
+    """
+    return _element_rows(nodes, edges).orderBy("_ord", "_key").select("element")
 
 
 def to_cytoscape_json(nodes: DataFrame, edges: DataFrame) -> str:
     """Collected form for interactive (small) subnetworks; "{}" when the
     network is empty (reference empty-result sentinel,
-    network_generator.R:88-92; SURVEY S13)."""
-    elems = [r["element"] for r in cytoscape_elements(nodes, edges).collect()]
-    if not elems:
+    network_generator.R:88-92; SURVEY S13). The elements are collected
+    through Arrow and put in ``cytoscape_elements``' order on the
+    driver, so the sort needs no shuffle: Arrow compares strings by
+    their UTF-8 bytes, as Spark does, and puts a null id first."""
+    t = _element_rows(nodes, edges).toArrow()
+    if not t.num_rows:
         return "{}"
-    return '{"elements": [' + ",".join(elems) + "]}"
+    elems = t.sort_by(
+        [("_ord", "ascending"), ("_key", "ascending"), ("element", "ascending")],
+        null_placement="at_start",
+    ).column("element")
+    return '{"elements": [' + ",".join(elems.to_pylist()) + "]}"

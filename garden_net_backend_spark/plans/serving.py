@@ -16,6 +16,17 @@ inspection, warm-up replay, and TTL sweeps. Matches the shelve
 semantics: persistent across processes, concurrent-reader safe, no
 invalidation (the reference never invalidates either — entries live
 until deleted; ``clear``/``evict`` are provided for ops).
+
+A miss (``serve_search``) is resolved on the driver:
+``search.search_subnetwork`` collects the seeds, the seeds' incident
+edges and the edges inside their 1-hop hood, applies the edge rules
+and counts the degrees in Python, and hands back the nodes and edges
+joined to one broadcast literal of the hood;
+``network_build.to_cytoscape_json`` collects the elements through
+Arrow and sorts them on the driver. A miss runs eight or nine Spark
+jobs, each labelled with its step's job description (``search/seeds``,
+``search/adjacency``, ``search/hood_edges``, ``search/serialize``);
+the caller's job group is left alone.
 """
 
 from __future__ import annotations
@@ -115,11 +126,13 @@ def serve_search(
     """One HTTP search request, memoized: (cytoscape JSON, was_hit).
 
     Miss path = search_subnetwork (token-index probe; pass
-    ``pinned_sym`` from plans.search.pin_serving_adjacency for
-    batch-pruned seed probes) → cytoscape serialization → cache put.
+    ``pinned_sym`` from plans.search.pin_serving_adjacency to read the
+    seed adjacency from the cached symmetrized edges) → cytoscape
+    serialization → cache put.
     The "{}" empty-result sentinel is cached too, exactly as the
     reference caches its 3-byte output before the 404 check
     (backend.py:94-103)."""
+    from ..session import job_description
     from .network_build import to_cytoscape_json
     from .search import search_subnetwork
 
@@ -138,6 +151,7 @@ def serve_search(
         pinned_sym=pinned_sym,
         pin_policy=pin_policy,
     )
-    result = to_cytoscape_json(sub_nodes, sub_edges)
+    with job_description(nodes.sparkSession, "search/serialize"):
+        result = to_cytoscape_json(sub_nodes, sub_edges)
     cache.put(key, result)
     return result, False

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine, plus the helpers every
 face shares: pinning a frame that is read more than once
-(:func:`pin`, :func:`release`) and turning the file URI Spark reports
-into a local path (:func:`local_path`).
+(:func:`pin`, :func:`release`), labelling the Spark jobs of one step
+(:func:`job_description`) and turning the file URI Spark reports into a
+local path (:func:`local_path`).
 
 Local testing runs on local[N]; the same config block is what we'd ship
 to a 1000-executor cluster (AQE on, skew-join handling on, Arrow on).
@@ -12,6 +13,7 @@ from __future__ import annotations
 
 import os
 import re
+from contextlib import contextmanager
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -132,6 +134,22 @@ def release(pinned: DataFrame) -> None:
     that warning says nothing here."""
     rdd = pinned._jdf.queryExecution().logical().rdd()
     rdd.context().unpersistRDD(rdd.id(), False)
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label every Spark job started inside the block with ``text`` (the
+    ``spark.job.description`` local property, which the status store
+    keeps per job), then restore the caller's label. The job group is
+    left alone, so a caller that counts its jobs by group still sees
+    them all."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def local_path(uri: str) -> str:

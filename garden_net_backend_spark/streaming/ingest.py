@@ -1850,9 +1850,18 @@ def process_ingest_batch_semantic(
     )
 
     def decide(new, stored_docs, stored_assign, pin):
+        # the batch is assigned to cells once: the kernel's shard side
+        # and the stored-assignment write both read this pin
+        batch_cells = pin(
+            _assign_cells(
+                new.select(id_col, vec_col), _alias_cells(cells),
+                id_col, vec_col, assign,
+            )
+        )
         pairs = semantic_dedup_pairs(
             new,
             cells=cells,
+            assignments=batch_cells,
             corpus_vecs=None
             if stored_docs is None
             else stored_docs.select(id_col, vec_col),
@@ -1865,10 +1874,7 @@ def process_ingest_batch_semantic(
         # same self-referential read-overwrite hazard as the MinHash
         # loop: pin the decision before replacing partitions
         accepted = pin(batch.join(keep_ids, id_col, "left_semi"))
-        assign_rows = _assign_cells(
-            accepted.select(id_col, vec_col), _alias_cells(cells),
-            id_col, vec_col, assign,
-        )
+        assign_rows = batch_cells.join(keep_ids, id_col, "left_semi")
         return accepted, [
             (accepted, accepted_dir, ["ingest_batch"]),
             (assign_rows, assign_dir, ["ingest_batch", "_cell"]),

@@ -6,6 +6,7 @@ fit, hard-fail rather than emit an unparseable/oversize line.
 No Spark session needed — pure string/JSON logic."""
 
 import json
+import re
 
 import pytest
 
@@ -85,8 +86,16 @@ def test_bench_module_consistent_with_catalog():
     for key in bench.BENCH_NOTES:
         if not key.startswith("_"):
             assert key in CATALOG, f"stale BENCH_NOTES key: {key}"
-    # the prebuilt-index override targets the live q38 gate
+    # every extras key a note cites (``extras.name`` or the prefix
+    # ``extras.name_*``) is one the bench writes
     src = open(bench.__file__).read()
+    for key, note in bench.BENCH_NOTES.items():
+        for cited in re.findall(r"extras\.([A-Za-z0-9_]+)", note):
+            assert f'extras["{cited.rstrip("_")}' in src, (
+                f"BENCH_NOTES[{key!r}] cites extras.{cited}, which bench.py "
+                "never writes"
+            )
+    # the prebuilt-index override targets the live q38 gate
     assert 'runners["q38_ann_suite"]' in src
     assert "warm_shared_network(spark, sf_dir)" in src
 

@@ -2,9 +2,9 @@
 time the WARM interactive search path — bucketed node/token tables,
 pinned edges — at bench scale (sf0.1) and at the ~10x synthetic
 scale-up, plus the full memoized serve_search miss/hit path
-(plans/serving.py). The r6 change under test: per-seed ego broadcast
-choice is AQE-delegated (plans/search.py) — this drill proves the
-delegated plan holds its ~1s-class warm latency at 10x.
+(plans/serving.py). A miss is resolved on the driver from three small
+collects (plans/search.py); the drill shows how its latency grows with
+the corpus (fixed output) and with the answer (fanout).
 
 Usage: python tools/serving_drill.py [sf_dir] [factor]
 Defaults: /root/testdata/sf0.1 10
@@ -155,10 +155,7 @@ def drill_scale(
         loads.append(round(os.getloadavg()[0], 1))
         t0 = time.time()
         sub_nodes, _sub_edges = search_subnetwork(
-            bnodes, edges, term, token_index=btokens, pinned_sym=sym,
-            pin_policy="force",  # the drill MEASURES the pinned path at
-            # every scale; auto would route the small baseline to the
-            # join path and the ratios would compare different plans
+            bnodes, edges, term, token_index=btokens, pinned_sym=sym
         )
         sub_nodes.select("fragment", "type", "searched", "degree").collect()
         warm.append(round(time.time() - t0, 3))
@@ -174,8 +171,7 @@ def drill_scale(
         _wait_quiet()
         t0 = time.time()
         _result, was_hit = serve_search(
-            cache, bnodes, edges, term, token_index=btokens, pinned_sym=sym,
-            pin_policy="force"
+            cache, bnodes, edges, term, token_index=btokens, pinned_sym=sym
         )
         assert not was_hit
         miss.append(round(time.time() - t0, 3))
