@@ -90,7 +90,7 @@ def _estimated_scan_partitions(df: DataFrame) -> "int | None":
       comes from an exchange, not the scan, and upstream call sites
       already fanned the scan out;
     - the frame has no resolvable input files: a local relation
-      (``createDataFrame`` parallelizes to ``defaultParallelism``
+      (its ``LocalTableScan`` spreads over up to ``defaultParallelism``
       slices already — the old check was a no-op there) or a
       checkpointed lineage (layout fixed at materialization).
 

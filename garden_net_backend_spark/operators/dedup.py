@@ -331,7 +331,8 @@ def minhash_signatures(
     so the shuffle carries one 64-long row per (doc × partition), not
     the shingles. (A per-row higher-order-function variant re-inlines
     the shingle pipeline per hash function — 64× the compute; measured
-    60× slower.)
+    60× slower.) The aggregates are one parsed SQL expression: built as
+    Columns they cost ~500 py4j calls per plan.
 
     ``grams``: optional precomputed (id_col, _grams) shingle frame.
     CONTRACT: when given, ``ngram``/``shingle`` are IGNORED — the
@@ -357,15 +358,8 @@ def minhash_signatures(
             F.pmod(F.xxhash64(F.col("_g"), F.lit(seed)), F.lit(_MERSENNE)).alias("_x"),
         )
     )
-    mins = sh.groupBy("id").agg(
-        *[
-            F.min(F.pmod(F.col("_x") * a + b, F.lit(_MERSENNE))).alias(f"_h{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-    )
-    return mins.select(
-        "id", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig")
-    )
+    mins = ", ".join(f"min(pmod(_x * {a} + {b}, {_MERSENNE}))" for a, b in coeffs)
+    return sh.groupBy("id").agg(F.expr(f"array({mins})").alias("sig"))
 
 
 def band_signatures(
@@ -468,13 +462,32 @@ def minhash_dedup_pairs(
     verify plan reads two pins instead of re-expanding the signing
     pipeline once per reference.
     """
+    return _minhash_pairs(
+        docs, text_col=text_col, id_col=id_col, threshold=threshold,
+        num_hashes=num_hashes, bands=bands, ngram=ngram, seed=seed,
+        shingle=shingle, grams=grams,
+        checkpoint=lambda df, _step: checkpoint(df),
+        corpus_docs=corpus_docs, corpus_bands=corpus_bands,
+    )[0]
+
+
+def _minhash_pairs(
+    docs, *, text_col, id_col, threshold, num_hashes, bands, ngram, seed,
+    shingle, grams, checkpoint, corpus_docs, corpus_bands,
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`minhash_dedup_pairs` → (pairs, the banded signatures of
+    ``docs``), the bands read from the checkpoint the pair search took,
+    so a caller that stores them (the ingest band-index write) signs
+    nothing again. ``checkpoint(df, step)`` names its step: ``"sigs"``,
+    ``"bands"`` or ``"pairs"``."""
     rows_per_band = num_hashes // bands
     if corpus_docs is None:
         if corpus_bands is not None:
             raise ValueError("corpus_bands= needs corpus_docs= to verify")
         sigs = checkpoint(minhash_signatures(
             docs, text_col, id_col, num_hashes, ngram, seed, shingle, grams=grams
-        ))
+        ), "sigs")
+        shard = band_signatures(sigs, bands, rows_per_band)
         cands = minhash_lsh_candidates(sigs, bands, rows_per_band)
     else:
         if grams is not None:
@@ -486,19 +499,20 @@ def minhash_dedup_pairs(
             )
             return band_signatures(sigs, bands, rows_per_band)
 
-        new = checkpoint(banded(docs))
+        shard = checkpoint(banded(docs), "bands")
         if corpus_bands is None:
             corpus_bands = banded(corpus_docs)
-        every = corpus_bands.select("id", "band", "bhash").unionByName(new)
+        every = corpus_bands.select("id", "band", "bhash").unionByName(shard)
         cands = checkpoint(
-            new.withColumnRenamed("id", "_i")
+            shard.withColumnRenamed("id", "_i")
             .join(every.withColumnRenamed("id", "_j"), ["band", "bhash"])
             .filter(F.col("_i") != F.col("_j"))
             .select(
                 F.least("_i", "_j").alias("id_a"),
                 F.greatest("_i", "_j").alias("id_b"),
             )
-            .distinct()
+            .distinct(),
+            "pairs",
         )
         cand_ids = (
             cands.select(F.col("id_a").alias(id_col))
@@ -513,7 +527,7 @@ def minhash_dedup_pairs(
     if grams is None:
         grams = with_shingles(docs, text_col, "_grams", ngram, shingle)
     shing = _hashed_grams(grams, F.col(id_col).alias("id"))
-    return _verify_jaccard(cands, shing, threshold)
+    return _verify_jaccard(cands, shing, threshold), shard
 
 
 def simhash(

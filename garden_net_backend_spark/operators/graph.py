@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def canonicalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Undirected canonical form: (least, greatest) endpoint order
@@ -316,7 +318,8 @@ def _cc_solve_bounded(
     node_type = nodes.schema[node_col].dataType
     from pyspark.sql.types import StructField, StructType
 
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        spark,
         mapping,
         StructType(
             [

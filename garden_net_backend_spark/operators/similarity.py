@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.partitioning import ensure_min_partitions
+from ..session import local_frame
 
 
 def _col_sql(c: "Column | str") -> "str | None":
@@ -672,8 +673,8 @@ def ivf_build_index(
         ]
     if pinned:
         train.unpersist()
-    centroids = spark.createDataFrame(
-        cent_rows, "centroid_id long, centroid_vec array<double>"
+    centroids = local_frame(
+        spark, cent_rows, "centroid_id long, centroid_vec array<double>"
     )
     return centroids, _ivf_assign(corpus, cent_rows, id_col, vec_col)
 
@@ -823,11 +824,11 @@ def _ivf_probes(
             rows = None
     if rows is None:
         if centroid_rows is not None:
-            centroids = spark.createDataFrame(
-                centroid_rows, "centroid_id long, centroid_vec array<double>"
+            centroids = local_frame(
+                spark, centroid_rows, "centroid_id long, centroid_vec array<double>"
             )
         if queries is None:
-            queries = spark.createDataFrame(qrows, q_schema)
+            queries = local_frame(spark, qrows, q_schema)
         qc = (
             queries.select(query_id_col, query_vec_col)
             .crossJoin(F.broadcast(centroids))
@@ -862,7 +863,7 @@ def _ivf_probes(
             ),
         ]
     )
-    return spark.createDataFrame(rows, schema), rows
+    return local_frame(spark, rows, schema), rows
 
 # --- embedding-cosine near-duplicate detection -----------------------
 #
@@ -1666,7 +1667,8 @@ def pq_train_codebooks(
             ]
     finally:
         subs.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (j, c, cb[j][c])
             for j in range(m)
@@ -1763,8 +1765,8 @@ def pq_encode(
     # micro-batch, and a no-new-data foreachBatch tick must no-op, not
     # wedge the stream on a retrying ValueError (review r11)
     if not corpus.select(id_col).take(1):
-        return corpus.sparkSession.createDataFrame(
-            [], f"{id_col} long, codes array<int>"
+        return local_frame(
+            corpus.sparkSession, [], f"{id_col} long, codes array<int>"
         )
     # validate the corpus dimension against the trained codebooks UP
     # FRONT (ADVICE r10): a mismatched corpus (encoded against
@@ -2040,8 +2042,10 @@ def pq_topk(
     )
     return _pq_exact_rerank(
         corpus,
-        queries.sparkSession.createDataFrame(
-            qrows, queries.select(query_id_col, query_vec_col).schema
+        local_frame(
+            queries.sparkSession,
+            qrows,
+            queries.select(query_id_col, query_vec_col).schema,
         ),
         top_r, k, id_col, vec_col, query_id_col, query_vec_col,
     )
@@ -2330,7 +2334,7 @@ def ivf_pq_topk(
         rerank_src = corpus
     return _pq_exact_rerank(
         rerank_src,
-        spark.createDataFrame(qrows, q_schema),
+        local_frame(spark, qrows, q_schema),
         top_r, k, id_col, vec_col, query_id_col, query_vec_col,
     )
 

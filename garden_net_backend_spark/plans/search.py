@@ -34,9 +34,10 @@ of shuffles whose fixed per-stage cost would set the latency:
   3. the edges with both endpoints in the hood, to which the driver
      applies the two edge rules and from which it counts the degrees.
 
-Each set of values goes back to the JVM as ONE JSON literal, broadcast
-into a semi-join, and the two edge collects come back through Arrow.
-The driver's answer is one literal relation over the hood: per node
+Each set of values goes back to the JVM as one Arrow-backed local
+relation (``session.local_frame``), broadcast into a semi-join, and the
+two edge collects come back through Arrow. The driver's answer is one
+local relation over the hood: per node
 its ``searched`` flag, its degree, the name seeds whose ego set holds
 it and whether a range seed's does. ``sub_nodes`` is ``nodes`` joined
 to it, ``sub_edges`` the edges whose two endpoints it admits under the
@@ -56,7 +57,6 @@ match for word-only terms.
 
 from __future__ import annotations
 
-import json
 import re
 from collections import Counter
 
@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import symmetrize
 from ..operators.interval import range_query
-from ..session import job_description
+from ..session import job_description, local_frame
 
 _RANGE_RE = re.compile(r"^(([12]?[0-9])|([XYxy])):(\d+)(-(\d+))?$")
 _FRAGMENT_RE = re.compile(r"^(([12]?[0-9])|([XYxy]))_\d+_\d+$", re.IGNORECASE)
@@ -364,23 +364,12 @@ def _seed_terms(
     return out
 
 
-def _literal_frame(spark, rows: list[dict], fields: str) -> DataFrame:
-    """``rows`` (dicts keyed by the field names of ``fields``, a
-    ``name:type,...`` list) as a one-partition frame built from ONE JSON
-    literal: one py4j call and no job to build it, whatever the row
-    count. ``isin(*values)`` costs one py4j call per value and
-    ``createDataFrame(rows)`` a Python-RDD job."""
-    schema = f"array<struct<{fields}>>"
-    return spark.range(1, numPartitions=1).select(
-        F.inline(F.from_json(F.lit(json.dumps(rows)), schema))
-    )
-
-
 def _semi(frame: DataFrame, col: str, values: set[str]) -> DataFrame:
     """Rows of ``frame`` whose string column ``col`` holds one of
-    ``values``: a broadcast semi-join against one literal frame."""
-    lit = _literal_frame(
-        frame.sparkSession, [{"v": v} for v in sorted(values)], "v:string"
+    ``values``: a broadcast semi-join against one local frame
+    (``isin(*values)`` would cost one py4j call per value)."""
+    lit = local_frame(
+        frame.sparkSession, [(v,) for v in sorted(values)], "v string"
     )
     return frame.join(F.broadcast(lit.toDF(col)), col, "left_semi").select(
         *frame.columns
@@ -398,8 +387,8 @@ def _columns(df: DataFrame) -> list[list]:
 #: indices of the name seeds whose ego set holds it, and whether a range
 #: seed's ego set holds it
 _HOOD_FIELDS = (
-    "fragment:string,searched:string,degree:bigint,owners:array<int>,"
-    "in_range:boolean"
+    "fragment string, searched string, degree bigint, owners array<int>, "
+    "in_range boolean"
 )
 
 
@@ -478,16 +467,16 @@ def search_subnetwork(
     if distinct:
         keep = list(dict.fromkeys(keep))
     degree = Counter(x for r in keep for x in r[:2])
-    hood_rel = _literal_frame(
+    hood_rel = local_frame(
         spark,
         [
-            {
-                "fragment": x,
-                "searched": "true" if x in seeds else "false",
-                "degree": degree[x],
-                "owners": sorted(owners.get(x, empty)),
-                "in_range": x in rhood,
-            }
+            (
+                x,
+                "true" if x in seeds else "false",
+                degree[x],
+                sorted(owners.get(x, empty)),
+                x in rhood,
+            )
             for x in sorted(hood)
         ],
         _HOOD_FIELDS,

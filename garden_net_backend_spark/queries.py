@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .functions import exact
 from .functions.exact import oracle_corr, oracle_davg, oracle_dsum
+from .session import local_frame
 
 
 @dataclass(frozen=True)
@@ -551,7 +552,7 @@ def q16_grouping_lattice(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact.dsum(F.col("l_extendedprice")).alias("_sum_price"),
         F.grouping_id().alias("_gid"),
     )
-    both = spark.createDataFrame(both_df.collect(), both_df.schema)
+    both = local_frame(spark, both_df.collect(), both_df.schema)
     returnflag = F.coalesce(F.col("l_returnflag"), F.lit("ALL")).alias(
         "returnflag"
     )
@@ -868,7 +869,7 @@ def q23_node_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = degrees(edges)
     comp = connected_components(nodes, edges)
-    seeds = edges.sparkSession.createDataFrame([(1,)], "node long")
+    seeds = local_frame(edges.sparkSession, [(1,)], "node long")
     bfs = bfs_distances(edges, seeds).select(
         "node", F.col("dist").cast("int").alias("dist")
     )
@@ -1848,7 +1849,7 @@ def q38_suite_impl(
     # re-scanning parquet. Content-identical, so every arm and the
     # oracle see the same rows.
     q_rows = queries.collect()
-    queries = spark.createDataFrame(q_rows, queries.schema)
+    queries = local_frame(spark, q_rows, queries.schema)
     # gate path (no prebuilt indexes handed in): build each index ONCE
     # and share it across the arms — the builds are deterministic pure
     # functions, so the shared index is bit-identical to what each arm
@@ -1887,7 +1888,7 @@ def q38_suite_impl(
     # cosine_topk.
     def _b_exact():
         exact_df = cosine_topk(emb, queries, k=5)
-        return spark.createDataFrame(exact_df.collect(), exact_df.schema)
+        return local_frame(spark, exact_df.collect(), exact_df.schema)
     # The four raw arm results union into ONE tagged frame and pass
     # through ONE fused property-gate pipeline (round 12): the arm
     # plans stay concurrent underneath the union while ~3 gate

@@ -1,6 +1,7 @@
 """SparkSession factory tuned for this engine, plus the helpers every
-face shares: pinning a frame that is read more than once
-(:func:`pin`, :func:`release`), labelling the Spark jobs of one step
+face shares: sending driver-held rows to the JVM (:func:`local_frame`),
+pinning a frame that is read more than once (:func:`pin`,
+:func:`release`), labelling the Spark jobs of one step
 (:func:`job_description`) and turning the file URI Spark reports into a
 local path (:func:`local_path`).
 
@@ -106,6 +107,34 @@ def get_session(app_name: str = "garden_net_spark", shuffle_partitions: int | No
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``rows`` (tuples or Rows, in field order) as a frame of
+    ``schema`` (a StructType or a DDL string such as ``"id long, v
+    string"``), sent to the JVM as one Arrow table. Its plan is a
+    ``LocalRelation`` (above ``spark.sql.execution.arrow.
+    localRelationThreshold``, 48 MB by default, an RDD of the Arrow
+    batches held in the JVM): building it runs no job, and reading it
+    runs no Python worker.
+
+    The one way driver-held rows enter the JVM in this package.
+    ``createDataFrame(<Python list>)`` parallelizes a Python RDD that
+    PySpark re-serializes through an identity ``map``, so every read of
+    such a frame runs a Python-worker stage."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.table(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def pin(df: DataFrame) -> DataFrame:

@@ -54,7 +54,7 @@ that contains its own rows would reject every one of its docs as a
 One runner, :func:`_run_ingest_batch`, is the single owner of this
 idempotency, replay and release contract for every ingest face: the
 batch-id check, the stored-prefix reads, the compacted-replay no-op
-with its manifest check, the persisted input projection, the
+with its manifest check, the one read of the input batch, the
 decide/write timers, the tagged dynamic-partition-overwrite writes,
 the metrics row, and — when the batch ends — the release of the input
 and of every eager checkpoint the batch pinned. A face supplies only
@@ -107,11 +107,13 @@ from __future__ import annotations
 import hashlib
 import json
 import time
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import pin as _pin, release
+from ..session import job_description, local_frame, pin as _pin, release
 
 #: reserved ingest_batch id for rows folded together by compaction —
 #: never a real foreachBatch id (those are >= 0)
@@ -320,8 +322,8 @@ def _input_fingerprint(
     even-multiplicity blind spot. The content component (ADVICE r10)
     also catches the same-ids/different-content collision — a second
     campaign plausibly reuses small sequential ids — at the cost of
-    one more combinable aggregate over the already-persisted
-    projection; xxhash64 accepts the vector column too, so every face
+    one more combinable aggregate over the batch the runner has
+    already read; xxhash64 accepts the vector column too, so every face
     passes its content column. Still a tripwire against operational
     accidents, not an adversarial MAC. Manifests written before the
     content component carry two fields; comparison is
@@ -534,7 +536,7 @@ def _write_batch_metrics(
         "decide_sec double, write_sec double, input_fp string"
     )
     (
-        spark.createDataFrame(row, schema)
+        local_frame(spark, row, schema)
         .write.mode("overwrite")
         .options(partitionOverwriteMode="dynamic")
         .partitionBy("ingest_batch")
@@ -569,77 +571,103 @@ def _run_ingest_batch(
        excludes the batch's own rows — every doc would self-match as a
        "stored" dup, or on the substring face be excised to empty
        (review r10);
-    5. persist the input projection ``(id_col, content_col)``, filtered
-       by ``keep(content Column)`` when given;
+    5. read the batch once: an uncached batch is persisted for the
+       batch's lifetime (a cached one is read from its cache), and
+       every later read — the input projection ``(id_col,
+       content_col)``, filtered by ``keep(content Column)`` when given,
+       the fingerprint and the face's accepted rows — comes from that
+       copy;
     6. ``decide(new, *prefixes, pin)`` → ``(accepted, writes)``, timed
-       as ``decide_sec``: ``pin`` is the eager local checkpoint
-       (``session.pin``) every face takes through the runner,
-       ``writes`` lists ``(frame, dir, partition columns)``;
+       as ``decide_sec``: ``pin(df, name=None)`` is the eager local
+       checkpoint (``session.pin``) every face takes through the
+       runner, ``writes`` lists ``(name, frame, dir, partition
+       columns)``;
     7. write each frame in order, tagged with ``src_batch`` and
        ``ingest_batch``, as a dynamic partition overwrite, then run the
        stamp — timed as ``write_sec``;
     8. with ``metrics``, one row in ``<outputs[0]>_metrics``: n_accepted
        counts ``accepted``, ``stored_prefix`` says whether
        ``outputs[flag_output]`` had one;
-    9. finally, release every pin and the persisted input, so a long
-       stream holds no checkpoint blocks past the batch that made them.
+    9. finally, release every pin and unpersist the batch if step 5
+       persisted it, so a long stream holds no blocks past the batch
+       that made them and the caller's frame is left as it was handed.
+
+    Every Spark job of the batch is labelled ``ingest.<family>/<step>``
+    (``session.job_description``): ``prefix``, ``replay``,
+    ``decide[/pin:<name>|/<step>]``, ``write/<name>`` and ``metrics``.
 
     ``outputs[0]`` owns the metrics row and the replay manifest."""
     _check_batch_id(batch_id)
     spark = batch.sparkSession
-    stored = [_stored_prefix(spark, d, batch_id) for d in outputs]
-    stamp = guard(spark, *stored) if guard is not None else None
-    if any(_was_compacted(s, batch_id) for s in stored):
-        _assert_true_replay(
-            spark, outputs[0], family, batch_id, batch, id_col,
-            _input_fingerprint(batch, id_col, content_col),
-        )
+    label = f"ingest.{family}"
+    with job_description(spark, label + "/prefix"):
+        stored = [_stored_prefix(spark, d, batch_id) for d in outputs]
+        stamp = guard(spark, *stored) if guard is not None else None
+        compacted = any(_was_compacted(s, batch_id) for s in stored)
+    if compacted:
+        with job_description(spark, label + "/replay"):
+            _assert_true_replay(
+                spark, outputs[0], family, batch_id, batch, id_col,
+                _input_fingerprint(batch, id_col, content_col),
+            )
         return
     t0 = time.time()
-    raw = batch.select(id_col, content_col)
-    new = raw if keep is None else raw.filter(keep(F.col(content_col)))
-    new = new.persist()
+    owned = batch.storageLevel == StorageLevel.NONE
     pins: list[DataFrame] = []
 
-    def pin(df: DataFrame) -> DataFrame:
-        pins.append(_pin(df))
+    def pin(df: DataFrame, name: str | None = None) -> DataFrame:
+        with _step(spark, "pin" if name is None else f"pin:{name}"):
+            pins.append(_pin(df))
         return pins[-1]
 
     try:
-        accepted, writes = decide(new, *stored, pin)
+        if owned:
+            batch.persist()
+        # the manifest covers the RAW projection in both the write and
+        # the replay paths, so a keep filter never makes a true replay
+        # of the same raw batch read as an input collision
+        raw = batch.select(id_col, content_col)
+        new = raw if keep is None else raw.filter(keep(F.col(content_col)))
+        with job_description(spark, label + "/decide"):
+            accepted, writes = decide(new, *stored, pin)
         t1 = time.time()
         tag = F.lit(int(batch_id))
-        for frame, path, part_cols in writes:
-            (
-                frame.withColumn("src_batch", tag)
-                .withColumn("ingest_batch", tag)
-                .write.mode("overwrite")
-                .options(partitionOverwriteMode="dynamic")
-                .partitionBy(*part_cols)
-                .parquet(path)
-            )
+        for name, frame, path, part_cols in writes:
+            with job_description(spark, f"{label}/write/{name}"):
+                (
+                    frame.withColumn("src_batch", tag)
+                    .withColumn("ingest_batch", tag)
+                    .write.mode("overwrite")
+                    .options(partitionOverwriteMode="dynamic")
+                    .partitionBy(*part_cols)
+                    .parquet(path)
+                )
         if stamp is not None:
             stamp()
         if metrics:
             t2 = time.time()
-            # fingerprint from the PERSISTED projection — the manifest
-            # must never cost an extra source scan, and is skipped
-            # entirely with metrics=False (review r10 pass 2). With a
-            # keep filter it is the RAW projection, unpersisted: the
-            # manifest covers the raw batch in both the write and replay
-            # paths, so a quality filter never makes a true replay of
-            # the same raw batch read as an input collision
-            input_fp = _input_fingerprint(raw, id_col, content_col)
-            _write_batch_metrics(
-                spark, outputs[0].rstrip("/") + "_metrics", family,
-                batch_id, int(input_fp.split(":")[0]), accepted.count(),
-                stored[flag_output] is not None, t1 - t0, t2 - t1,
-                input_fp,
-            )
+            with job_description(spark, label + "/metrics"):
+                input_fp = _input_fingerprint(raw, id_col, content_col)
+                _write_batch_metrics(
+                    spark, outputs[0].rstrip("/") + "_metrics", family,
+                    batch_id, int(input_fp.split(":")[0]), accepted.count(),
+                    stored[flag_output] is not None, t1 - t0, t2 - t1,
+                    input_fp,
+                )
     finally:
         for df in pins:
             release(df)
-        new.unpersist()
+        if owned:
+            batch.unpersist()
+
+
+@contextmanager
+def _step(spark: SparkSession, name: str):
+    """Label the Spark jobs of the block ``<the current label>/<name>``:
+    one step inside a runner phase (:func:`_run_ingest_batch`)."""
+    outer = spark.sparkContext.getLocalProperty("spark.job.description")
+    with job_description(spark, f"{outer or 'ingest'}/{name}"):
+        yield
 
 
 def _start_foreach_batch(
@@ -697,24 +725,39 @@ def _minhash_gate(
     pin,
     threshold: float,
     mh: dict,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """The MinHash near-dup gate of :func:`process_ingest_batch` and of
-    the curation face: pairs of the persisted batch ``new`` among
-    itself and against the stored corpus (probing its banded index) →
-    the keep-id frame of :func:`_ingest_decide`. ``mh`` holds the
-    text/id columns and MinHash parameters :func:`_minhash_bands`
-    takes."""
-    from ..operators.dedup import minhash_dedup_pairs
+    the curation face: pairs of the batch ``new`` among itself and
+    against the stored corpus (probing its banded index) → (the
+    keep-id frame of :func:`_ingest_decide`, the batch's banded
+    signatures). The bands are read from the pin the pair search took,
+    so the band-index write (:func:`_accepted_bands`) signs nothing
+    again. ``mh`` holds the text/id columns and MinHash parameters
+    :func:`_minhash_bands` takes."""
+    from ..operators.dedup import _minhash_pairs
 
-    pairs = minhash_dedup_pairs(
+    pairs, bands = _minhash_pairs(
         new,
         threshold=threshold,
+        grams=None,
         checkpoint=pin,
         corpus_docs=stored_docs,
         corpus_bands=stored_bands if stored_docs is not None else None,
         **mh,
     )
-    return _ingest_decide(pairs, new, stored_docs, mh["id_col"], pin)
+    return _ingest_decide(pairs, new, stored_docs, mh["id_col"], pin), bands
+
+
+def _accepted_bands(
+    bands: DataFrame, accepted: DataFrame, id_col: str
+) -> DataFrame:
+    """The band-index rows of the accepted docs: the batch's banded
+    signatures (:func:`_minhash_gate`) restricted to the ids of
+    ``accepted``: the rows :func:`_minhash_bands` of ``accepted``
+    would give (signatures are a pure function of text and seed),
+    without signing the text again."""
+    ids = accepted.select(F.col(id_col).alias("id"))
+    return bands.join(F.broadcast(ids), "id", "left_semi")
 
 
 def _minhash_bands(
@@ -859,7 +902,8 @@ def _ingest_decide(
     spark = new.sparkSession
     id_schema = new.select(id_col).schema
     pairs = pairs.select("id_a", "id_b")
-    probe = limit_probe(pairs, collect_threshold)
+    with _step(spark, "pairs"):
+        probe = limit_probe(pairs, collect_threshold)
 
     def sides(ends: DataFrame) -> DataFrame:
         """(id, _new) for each pair end found among the batch's ids
@@ -876,9 +920,10 @@ def _ingest_decide(
         ends = {v for e in edges for v in e}
         fresh, held = set(), set()
         if ends:
-            ends_df = spark.createDataFrame([(v,) for v in ends], id_schema)
-            for r in sides(F.broadcast(ends_df)).collect():
-                (fresh if r["_new"] else held).add(r[id_col])
+            ends_df = local_frame(spark, [(v,) for v in ends], id_schema)
+            with _step(spark, "sides"):
+                for r in sides(F.broadcast(ends_df)).collect():
+                    (fresh if r["_new"] else held).add(r[id_col])
         rejected = {b for a, b in edges if a in held and b in fresh} | {
             a for a, b in edges if b in held and a in fresh
         }
@@ -886,7 +931,8 @@ def _ingest_decide(
         roots = min_roots(
             (a, b) for a, b in edges if a in survivors and b in survivors
         )
-        drop = spark.createDataFrame(
+        drop = local_frame(
+            spark,
             [(v,) for v in rejected | {k for k, r in roots.items() if k != r}],
             id_schema,
         )
@@ -963,18 +1009,23 @@ def process_ingest_batch(
     )
 
     def decide(new, stored_docs, stored_bands, pin):
-        keep_ids = _minhash_gate(
+        keep_ids, bands = _minhash_gate(
             new, stored_docs, stored_bands, pin, threshold, mh
         )
         # the accept decision READS accepted_dir (the stored prefix) and
         # the write OVERWRITES a partition of the same path — a
         # self-referential read-write Spark (rightly) refuses. Pin the
         # batch-sized decision to block storage first; both writes then
-        # run off the checkpoint, never the directory being replaced.
-        accepted = pin(batch.join(keep_ids, id_col, "left_semi"))
+        # run off pins, never the directory being replaced.
+        accepted = pin(batch.join(keep_ids, id_col, "left_semi"), "accepted")
         return accepted, [
-            (accepted, accepted_dir, ["ingest_batch"]),
-            (_minhash_bands(accepted, **mh), index_dir, ["ingest_batch", "band"]),
+            ("accepted", accepted, accepted_dir, ["ingest_batch"]),
+            (
+                "index",
+                _accepted_bands(bands, accepted, id_col),
+                index_dir,
+                ["ingest_batch", "band"],
+            ),
         ]
 
     _run_ingest_batch(
@@ -1036,12 +1087,12 @@ def process_ingest_batch_substring(
         accepted = pin(batch.join(
             cleaned.select(id_col, "clean_text", "n_cut_tokens", "oversize"),
             id_col,
-        ))
+        ), "accepted")
         # legacy wbucket layout compat — see _attach_legacy_wbucket
         delta, idx_part_cols = _attach_legacy_wbucket(stored_idx, delta)
         return accepted, [
-            (accepted, accepted_dir, ["ingest_batch"]),
-            (pin(delta), index_dir, idx_part_cols),
+            ("accepted", accepted, accepted_dir, ["ingest_batch"]),
+            ("index", pin(delta, "index"), index_dir, idx_part_cols),
         ]
 
     _run_ingest_batch(
@@ -1105,10 +1156,10 @@ def process_ingest_batch_lines(
         accepted = pin(batch.join(
             cleaned.select(id_col, "clean_text", "n_kept_lines", "n_cut_lines"),
             id_col,
-        ))
+        ), "accepted")
         return accepted, [
-            (accepted, accepted_dir, ["ingest_batch"]),
-            (pin(delta), index_dir, ["ingest_batch"]),
+            ("accepted", accepted, accepted_dir, ["ingest_batch"]),
+            ("index", pin(delta, "index"), index_dir, ["ingest_batch"]),
         ]
 
     _run_ingest_batch(
@@ -1873,11 +1924,11 @@ def process_ingest_batch_semantic(
         keep_ids = _ingest_decide(pairs, new, stored_docs, id_col, pin)
         # same self-referential read-overwrite hazard as the MinHash
         # loop: pin the decision before replacing partitions
-        accepted = pin(batch.join(keep_ids, id_col, "left_semi"))
+        accepted = pin(batch.join(keep_ids, id_col, "left_semi"), "accepted")
         assign_rows = batch_cells.join(keep_ids, id_col, "left_semi")
         return accepted, [
-            (accepted, accepted_dir, ["ingest_batch"]),
-            (assign_rows, assign_dir, ["ingest_batch", "_cell"]),
+            ("accepted", accepted, accepted_dir, ["ingest_batch"]),
+            ("cells", assign_rows, assign_dir, ["ingest_batch", "_cell"]),
         ]
 
     _run_ingest_batch(
@@ -1965,10 +2016,10 @@ def process_ingest_batch_curation(
 
     def decide(new, stored_docs, stored_bands, stored_lidx, stored_widx, pin):
         # ---- stage 1: MinHash gate -----------------------------------
-        keep_ids = _minhash_gate(
+        keep_ids, bands = _minhash_gate(
             new, stored_docs, stored_bands, pin, threshold, mh
         )
-        surv = pin(new.join(keep_ids, id_col, "left_semi"))
+        surv = pin(new.join(keep_ids, id_col, "left_semi"), "survivors")
         # ---- stage 2: line dedup of survivors' ORIGINAL text ---------
         line_clean, line_delta = _line_stage(
             surv, stored_lidx, pin, text_col, id_col, sep, min_chars,
@@ -1981,7 +2032,7 @@ def process_ingest_batch_curation(
             F.col("clean_text").alias(text_col),
             "n_kept_lines",
             "n_cut_lines",
-        ))
+        ), "lines")
         # ---- stage 3: span excision of the LINE-CLEANED text ---------
         span_clean, span_delta = _substring_stage(
             lined.select(id_col, text_col), stored_widx, pin, text_col,
@@ -1996,21 +2047,33 @@ def process_ingest_batch_curation(
                     id_col, "clean_text", "n_cut_tokens", "oversize"
                 ),
                 id_col,
-            )
+            ),
+            "accepted",
         )
         # legacy wbucket layout compat — see _attach_legacy_wbucket
         span_delta, span_part_cols = _attach_legacy_wbucket(
             stored_widx, span_delta
         )
         return accepted, [
-            (accepted, accepted_dir, ["ingest_batch"]),
+            ("accepted", accepted, accepted_dir, ["ingest_batch"]),
             (
-                _minhash_bands(accepted, **mh),
+                "index",
+                _accepted_bands(bands, accepted, id_col),
                 minhash_index_dir,
                 ["ingest_batch", "band"],
             ),
-            (pin(line_delta), line_index_dir, ["ingest_batch"]),
-            (pin(span_delta), substring_index_dir, span_part_cols),
+            (
+                "index:line",
+                pin(line_delta, "index:line"),
+                line_index_dir,
+                ["ingest_batch"],
+            ),
+            (
+                "index:substring",
+                pin(span_delta, "index:substring"),
+                substring_index_dir,
+                span_part_cols,
+            ),
         ]
 
     # stage 0 is the runner's keep filter (batch-chain order: BEFORE
@@ -2211,8 +2274,8 @@ def process_ingest_batch_pq_codes(
             # is already persisted, so this is an id equi-join against
             # batch-sized sides, not a second source scan
             rows = rows.join(new, id_col)
-        rows = pin(rows)
-        return rows, [(rows, codes_dir, part_cols)]
+        rows = pin(rows, "codes")
+        return rows, [("codes", rows, codes_dir, part_cols)]
 
     _run_ingest_batch(
         batch, batch_id, "pq_codes", [codes_dir], id_col, vec_col, decide,

@@ -210,3 +210,42 @@ def test_minhash_batch_job_budget(spark):
         assert not left - before
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def test_minhash_batch_jobs_carry_engine_descriptions(spark):
+    """Every Spark job of one MinHash batch carries the description of
+    the engine step that started it (``ingest.minhash/<step>``), not
+    the caller's; the caller's job group still counts them all, and the
+    caller's description is back once the batch ends."""
+    sc = spark.sparkContext
+    work = tempfile.mkdtemp(prefix="decide_labels_")
+    face = _Face(spark, "minhash", work)
+    try:
+        face.run([(i, (i, 0)) for i in range(6)], 0)
+        rows = [(10 + i, (i, 4) if i % 2 else (10 + i, 0)) for i in range(6)]
+        group = f"labels-{id(work)}"
+        sc.setJobGroup(group, "the caller's label")
+        try:
+            face.run(rows, 1)
+            assert sc.getLocalProperty("spark.job.description") == "the caller's label"
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        store = sc._jsc.sc().statusStore()
+        labels = []
+        for jid in sc.statusTracker().getJobIdsForGroup(group):
+            desc = store.job(jid).description()
+            labels.append(desc.get() if desc.isDefined() else None)
+        assert labels and all(
+            d is not None and d.startswith("ingest.minhash/") for d in labels
+        ), labels
+        assert {
+            "ingest.minhash/decide/pin:bands",
+            "ingest.minhash/decide/pin:pairs",
+            "ingest.minhash/decide/pin:accepted",
+            "ingest.minhash/write/accepted",
+            "ingest.minhash/write/index",
+            "ingest.minhash/metrics",
+        } <= set(labels), sorted(set(labels))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -12,6 +12,7 @@ import tempfile
 import time
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from garden_net_backend_spark.streaming.ingest import (
@@ -2844,6 +2845,103 @@ def test_ingest_face_releases_its_pins(spark, face):
         for d in outputs:
             compact_ingest_index(spark, d)
         step("compacted replay", b1, 1)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+@pytest.mark.parametrize("cached", [False, True])
+def test_ingest_batch_leaves_its_input_as_handed(spark, cached):
+    """The runner reads the batch once through a cache of its own: an
+    uncached input is unpersisted again when the batch ends, and an
+    input the caller cached stays cached, on a first batch and against
+    a stored prefix alike."""
+    work = tempfile.mkdtemp(prefix="read_once_")
+    try:
+        run, _outputs, b0, b1 = _pin_release_case(spark, "minhash", work)
+        for batch_id, df in enumerate((b0, b1)):
+            if cached:
+                df.cache().count()
+            run(df, batch_id)
+            assert df.is_cached == cached
+            assert (df.storageLevel != StorageLevel.NONE) == cached
+            if cached:
+                df.unpersist()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+#: the ``<accepted>_metrics`` parquet schema (names, Spark types,
+#: nullability) the metrics row has been written with since the
+#: manifest gained its content component
+_METRICS_SCHEMA = [
+    ("src_batch", "long", True),
+    ("family", "string", True),
+    ("n_in", "long", True),
+    ("n_accepted", "long", True),
+    ("n_rejected", "long", True),
+    ("stored_prefix", "boolean", True),
+    ("decide_sec", "double", True),
+    ("write_sec", "double", True),
+    ("input_fp", "string", True),
+]
+
+
+def test_metrics_row_schema_and_replay_of_an_earlier_manifest(spark, feed):
+    """The metrics row's parquet schema is unchanged, and a compacted
+    batch whose manifest was written by the earlier ``createDataFrame``
+    metrics writer still verifies as a replay (a no-op that rewrites
+    nothing)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from garden_net_backend_spark.streaming.ingest import compact_ingest_index
+
+    docs = spark.read.schema("doc_id long, text string, source string").json(feed)
+    f0 = docs.filter(F.col("doc_id") < 2)
+    f1 = docs.filter(F.col("doc_id").between(2, 4))
+    work = tempfile.mkdtemp(prefix="metrics_contract_")
+    acc, idx = f"{work}/accepted", f"{work}/index"
+    try:
+        process_ingest_batch(f0, 0, acc, idx, **KW)
+        process_ingest_batch(f1, 1, acc, idx, **KW)
+        files = sorted(glob.glob(f"{acc}_metrics/ingest_batch=*/*.parquet"))
+        assert len(files) == 2
+        for f in files:
+            meta = pq.read_schema(f).metadata[
+                b"org.apache.spark.sql.parquet.row.metadata"
+            ]
+            fields = json.loads(meta)["fields"]
+            assert [
+                (c["name"], c["type"], c["nullable"]) for c in fields
+            ] == _METRICS_SCHEMA
+        # batch 1's manifest as the earlier writer made it: the same row
+        # through createDataFrame(<Python list>)
+        row = spark.read.parquet(f"{acc}_metrics").filter("ingest_batch = 1")
+        old = spark.createDataFrame(
+            [tuple(row.select("ingest_batch", *[n for n, _t, _ in _METRICS_SCHEMA]).first())],
+            "ingest_batch long, "
+            + ", ".join(f"{n} {t}" for n, t, _ in _METRICS_SCHEMA),
+        )
+        (
+            old.write.mode("overwrite")
+            .options(partitionOverwriteMode="dynamic")
+            .partitionBy("ingest_batch")
+            .parquet(f"{acc}_metrics")
+        )
+        for d in (acc, idx, f"{acc}_metrics"):
+            compact_ingest_index(spark, d)
+        before = sorted(
+            tuple(r) for r in spark.read.parquet(acc).select("doc_id", "src_batch").collect()
+        )
+        process_ingest_batch(f1, 1, acc, idx, **KW)
+        after = sorted(
+            tuple(r) for r in spark.read.parquet(acc).select("doc_id", "src_batch").collect()
+        )
+        assert after == before == [(0, 0), (1, 0), (3, 1)]
+        # a batch-id collision against the same manifest still raises
+        with pytest.raises(ValueError, match="COLLISION"):
+            process_ingest_batch(f0, 1, acc, idx, **KW)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
