@@ -9,9 +9,11 @@ Pancaldi et al., Genome Biology 2016, as implemented by the chaser
 package; reference call sites network_generator_lib.R:535,541).
 
 Implementation: two broadcast-or-shuffle joins of the edge list to the
-long-form feature table + one groupBy(feature) with exact moment sums
-(functions/exact.py) — order-independent, oracle-checkable with a SQL
-corr().
+long-form feature table + one groupBy with exact moment sums
+(functions/exact.py), folded from one direction of each edge —
+order-independent, oracle-checkable with a SQL corr(). The one kernel,
+``_folded_chas``, groups by ``feature`` for :func:`chas` and by
+``(run, feature)`` for the random-ChAs interval of the upload metrics.
 """
 
 from __future__ import annotations
@@ -19,35 +21,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exact import _DEC  # decimal-exact moment sums (see exact_corr)
+from ..functions.exact import _DEC, davg  # decimal-exact moment sums
+
+#: log-distance buckets per decade of a distance stratum
+_BINS_PER_DECADE = 4
 
 
-def chas(
-    edges: DataFrame,
-    features: DataFrame,
-    node_key: str = "fragment",
-    feature_col: str = "feature",
-    value_col: str = "value",
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_features: bool = False,
+def _folded_chas(
+    edges: DataFrame, features: DataFrame, keys: list[str], broadcast: bool
 ) -> DataFrame:
-    """Per-feature assortativity → (feature, chas).
-
-    ``features`` is long-form ``(node_key, feature, value)`` — the dense
-    output of ``overlap_aggregate`` plugs in directly.
-
-    ``broadcast_features=True`` broadcasts BOTH feature lookups: the
-    edge stream then never shuffles — two map-side hash joins + a
-    partial-agg-per-feature, zero wide exchanges. Right whenever the
-    feature grid is network-sized (the serving/metadata paths: ~10⁶
-    nodes × ~10² features tops). The default leaves the strategy to
-    Catalyst/AQE for pipeline-scale feature tables that outgrow a
-    broadcast — there the shuffle-on-key SortMergeJoin IS the correct
-    100 TB plan. (Without the hint, checkpointed inputs carry no stats
-    and Spark has been observed broadcasting the EDGE side — 466k rows
-    — then shuffling the edge×feature intermediate, ~3.5s of the q66
-    gate; the hint turns that into <1s with no shuffle.)"""
+    """``(*keys, chas)``: the ChAs of every ``keys`` group of ``edges``
+    (``src``, ``dst`` and the group columns other than ``feature``),
+    from ONE direction of each edge. ``broadcast`` broadcasts both
+    feature lookups (see :func:`chas`)."""
     # Round 13 (guide §2.3 — halve the joined stream): the corr runs
     # over the SYMMETRIZED edge list, but every moment sum over sym is
     # exactly recoverable from ONE direction — for each edge (a, b),
@@ -62,25 +48,16 @@ def chas(
     # symmetric condition. Joins and aggregation now touch |E| rows
     # instead of 2|E|.
     f_src = features.select(
-        F.col(node_key).alias("src"),
-        F.col(feature_col).alias("feature"),
-        F.col(value_col).alias("x"),
+        F.col("fragment").alias("src"), "feature", F.col("value").alias("x")
     )
     f_dst = features.select(
-        F.col(node_key).alias("dst"),
-        F.col(feature_col).alias("feature"),
-        F.col(value_col).alias("y"),
+        F.col("fragment").alias("dst"), "feature", F.col("value").alias("y")
     )
-    if broadcast_features:
+    if broadcast:
         f_src, f_dst = F.broadcast(f_src), F.broadcast(f_dst)
     x, y = F.col("x"), F.col("y")
-    paired = (
-        edges.select(src, dst)
-        .withColumnsRenamed({src: "src", dst: "dst"})
-        .join(f_src, "src")
-        .join(f_dst, ["dst", "feature"])
-    )
-    agg = paired.groupBy("feature").agg(
+    paired = edges.join(f_src, "src").join(f_dst, ["dst", "feature"])
+    agg = paired.groupBy(*keys).agg(
         F.count(F.when(x.isNotNull() & y.isNotNull(), 1)).alias("_n"),
         F.sum(F.when(y.isNotNull(), x).cast(_DEC)).alias("_sx"),
         F.sum(F.when(x.isNotNull(), y).cast(_DEC)).alias("_sy"),
@@ -108,87 +85,90 @@ def chas(
     den = F.sqrt(n * sxx - sx * sx) * F.sqrt(n * sxx - sx * sx)
     # a feature with no variance has den == 0: its ChAs is null (R's
     # cor gives NA), where ANSI division would fail the whole job
-    return agg.select("feature", F.try_divide(num, den).alias("chas"))
+    return agg.select(*keys, F.try_divide(num, den).alias("chas"))
+
+
+def chas(
+    edges: DataFrame, features: DataFrame, broadcast_features: bool = False
+) -> DataFrame:
+    """Per-feature assortativity → (feature, chas).
+
+    ``edges`` holds ``(src, dst)``; ``features`` is long-form
+    ``(fragment, feature, value)`` — the dense output of
+    ``overlap_aggregate`` plugs in directly.
+
+    ``broadcast_features=True`` broadcasts BOTH feature lookups: the
+    edge stream then never shuffles — two map-side hash joins + a
+    partial-agg-per-feature, zero wide exchanges. Right whenever the
+    feature grid is network-sized (the serving/metadata paths: ~10⁶
+    nodes × ~10² features tops). The default leaves the strategy to
+    Catalyst/AQE for pipeline-scale feature tables that outgrow a
+    broadcast — there the shuffle-on-key SortMergeJoin IS the correct
+    100 TB plan. (Without the hint, checkpointed inputs carry no stats
+    and Spark has been observed broadcasting the EDGE side — 466k rows
+    — then shuffling the edge×feature intermediate, ~3.5s of the q66
+    gate; the hint turns that into <1s with no shuffle.)"""
+    return _folded_chas(
+        edges.select("src", "dst"), features, ["feature"], broadcast_features
+    )
 
 
 def feature_abundance(
-    features: DataFrame,
-    feature_col: str = "feature",
-    value_col: str = "value",
-    decimals: int = 6,
+    features: DataFrame, value_col: str = "value", decimals: int = 6
 ) -> DataFrame:
     """Mean feature value over all nodes (reference merge_features.R
     'Abundance'; SURVEY A5) → (feature, abundance)."""
-    v = F.col(value_col)
-    return features.groupBy(feature_col).agg(
-        F.round(
-            F.sum(v.cast("decimal(38,8)")).cast("double") / F.count(v), decimals
-        ).alias("abundance")
+    return features.groupBy("feature").agg(
+        F.round(davg(F.col(value_col)), decimals).alias("abundance")
     )
 
 
 def feature_mean_degree(
-    features: DataFrame,
-    degrees_df: DataFrame,
-    node_key: str = "fragment",
-    feature_col: str = "feature",
-    value_col: str = "value",
-    decimals: int = 6,
+    features: DataFrame, degrees_df: DataFrame, decimals: int = 6
 ) -> DataFrame:
     """Mean degree of feature-positive (value != 0) nodes (reference
     merge_features.R mean-degree metric; network_generator_lib.R:559-566)
     → (feature, mean_degree). One pass over the long form."""
-    pos = features.filter(F.col(value_col) != 0)
+    pos = features.filter(F.col("value") != 0)
     joined = pos.join(
-        degrees_df.select(F.col("node").alias(node_key), "degree"), node_key
+        degrees_df.select(F.col("node").alias("fragment"), "degree"), "fragment"
     )
-    d = F.col("degree").cast("double")
-    return joined.groupBy(feature_col).agg(
-        F.round(
-            F.sum(d.cast("decimal(38,8)")).cast("double") / F.count(d), decimals
-        ).alias("mean_degree")
+    return joined.groupBy("feature").agg(
+        F.round(davg(F.col("degree").cast("double")), decimals).alias("mean_degree")
     )
 
 
 def edge_strata(
-    edges: DataFrame,
-    nodes: DataFrame,
-    node_key: str = "fragment",
-    chr_col: str = "chr",
-    start_col: str = "start",
-    src: str = "src",
-    dst: str = "dst",
-    dist_bins_per_decade: int = 4,
-    dist_match: bool = True,
+    edges: DataFrame, nodes: DataFrame, dist_match: bool = True
 ) -> DataFrame:
     """(src, dst, stratum): each edge's genomic-distance stratum —
     interchromosomal → -1, else the log-bucket of |src.start − dst.start|
-    (``dist_bins_per_decade`` buckets per decade); ``dist_match=False``
+    (``_BINS_PER_DECADE`` buckets per decade); ``dist_match=False``
     → one global stratum 0. Shared by the randomizer (permutation
     domain) and the q70 property gate (pre/post histogram comparison —
     same expression on both sides by construction)."""
     pos = nodes.select(
-        F.col(node_key).alias("_nk"),
-        F.col(chr_col).alias("_chr"),
-        F.col(start_col).alias("_start"),
+        F.col("fragment").alias("_nk"),
+        F.col("chr").alias("_chr"),
+        F.col("start").alias("_start"),
     )
     e = (
-        edges.select(src, dst)
-        .join(pos.withColumnRenamed("_nk", src), src)
+        edges.select("src", "dst")
+        .join(pos.withColumnRenamed("_nk", "src"), "src")
         .withColumnRenamed("_chr", "_schr")
         .withColumnRenamed("_start", "_sstart")
-        .join(pos.withColumnRenamed("_nk", dst), dst)
+        .join(pos.withColumnRenamed("_nk", "dst"), "dst")
         .withColumnRenamed("_chr", "_dchr")
         .withColumnRenamed("_start", "_dstart")
     )
     dist = F.abs(F.col("_sstart") - F.col("_dstart"))
     if dist_match:
         bucket = F.when(F.col("_schr") != F.col("_dchr"), F.lit(-1)).otherwise(
-            F.floor(F.log10(F.greatest(dist, F.lit(1))) * dist_bins_per_decade)
+            F.floor(F.log10(F.greatest(dist, F.lit(1))) * _BINS_PER_DECADE)
         )
     else:
         bucket = F.lit(0).cast("long")
-    return e.select(src, dst, bucket.cast("long").alias("stratum"))
+    return e.select("src", "dst", bucket.cast("long").alias("stratum"))
 
 
 def randomize_edges_distance_matched(
@@ -196,12 +176,6 @@ def randomize_edges_distance_matched(
     nodes: DataFrame,
     n_random: int = 10,
     seed: int = 42,
-    node_key: str = "fragment",
-    chr_col: str = "chr",
-    start_col: str = "start",
-    src: str = "src",
-    dst: str = "dst",
-    dist_bins_per_decade: int = 4,
     dist_match: bool = True,
     keep_stratum: bool = False,
     strata: DataFrame | None = None,
@@ -218,7 +192,7 @@ def randomize_edges_distance_matched(
     Method (distributed, seeded, reproducible):
       - compute each edge's genomic distance |src.start − dst.start|
         (interchromosomal → its own stratum), log-bucket it
-        (``dist_bins_per_decade`` buckets per decade);
+        (``_BINS_PER_DECADE`` buckets per decade);
       - within each (run, bucket): permute the dst endpoints among the
         edges of that bucket — sort one side by a seeded deterministic
         hash ``xxhash64(src, dst, run, seed)`` and pair by
@@ -245,17 +219,7 @@ def randomize_edges_distance_matched(
     times over the same edge set (the q70 gate's determinism/
     divergence probes) then pay the stratification joins once.
     """
-    e = strata if strata is not None else edge_strata(
-        edges,
-        nodes,
-        node_key=node_key,
-        chr_col=chr_col,
-        start_col=start_col,
-        src=src,
-        dst=dst,
-        dist_bins_per_decade=dist_bins_per_decade,
-        dist_match=dist_match,
-    )
+    e = strata if strata is not None else edge_strata(edges, nodes, dist_match)
     runs = e.sparkSession.range(n_random).withColumnRenamed("id", "run")
     fan = e.crossJoin(F.broadcast(runs))
 
@@ -279,16 +243,16 @@ def randomize_edges_distance_matched(
     paired = fan.groupBy("run", "stratum").agg(
         F.array_sort(
             F.collect_list(
-                F.struct(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+                F.struct(F.col("src").alias("_s"), F.col("dst").alias("_d"))
             )
         ).alias("_sl"),
         F.array_sort(
             F.collect_list(
                 F.struct(
                     F.xxhash64(
-                        F.col(src), F.col(dst), F.col("run"), F.lit(seed)
+                        F.col("src"), F.col("dst"), F.col("run"), F.lit(seed)
                     ).alias("_r"),
-                    F.col(dst).alias("_d"),
+                    F.col("dst").alias("_d"),
                 )
             )
         ).alias("_dl"),
@@ -307,7 +271,7 @@ def randomize_edges_distance_matched(
         ).alias("_e"),
     ).select(
         "run",
-        F.col("_e._zs").alias(src),
-        F.col("_e._zd").alias(dst),
+        F.col("_e._zs").alias("src"),
+        F.col("_e._zd").alias("dst"),
         *(["stratum"] if keep_stratum else []),
     )

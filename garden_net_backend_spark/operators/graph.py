@@ -20,20 +20,20 @@ from pyspark.sql import functions as F
 
 from ..session import local_frame
 
+#: BFS rounds :func:`bfs_distances` runs at most
+_MAX_BFS_DEPTH = 10_000
+#: the node count up to which :func:`diameter` is exact
+_EXACT_DIAMETER_NODES = 2000
 
-def canonicalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+
+def canonicalize_edges(edges: DataFrame) -> DataFrame:
     """Undirected canonical form: (least, greatest) endpoint order
     (SURVEY G1)."""
-    lo, hi = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    return edges.withColumns({src: lo, dst: hi})
+    lo, hi = F.least(F.col("src"), F.col("dst")), F.greatest(F.col("src"), F.col("dst"))
+    return edges.withColumns({"src": lo, "dst": hi})
 
 
-def simplify(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    order_by: list[str] | None = None,
-) -> DataFrame:
+def simplify(edges: DataFrame, order_by: list[str] | None = None) -> DataFrame:
     """Drop self-loops; collapse parallel (undirected) edges keeping the
     first row per canonical pair (igraph ``simplify``; reference
     network_generator.R:146-148). "First" is pinned by ``order_by``
@@ -41,7 +41,7 @@ def simplify(
     ``dropDuplicates`` over ALL columns (safe only when parallel edges
     carry identical attributes).
     """
-    e = canonicalize_edges(edges, src, dst).filter(F.col(src) != F.col(dst))
+    e = canonicalize_edges(edges).filter(F.col("src") != F.col("dst"))
     if order_by:
         # "first by order_by" as a min(struct(order_by…, attrs…))
         # aggregation — map-side combinable (one partial-agg shuffle of
@@ -49,86 +49,77 @@ def simplify(
         # sort every parallel edge. Ties on order_by break by the
         # remaining attribute values: a deterministic refinement of the
         # window form (which left order ties arbitrary).
-        attrs = [c for c in e.columns if c not in (src, dst)]
+        attrs = [c for c in e.columns if c not in ("src", "dst")]
         ordered = order_by + [c for c in attrs if c not in order_by]
-        picked = e.groupBy(src, dst).agg(
+        picked = e.groupBy("src", "dst").agg(
             F.min(F.struct(*[F.col(c) for c in ordered])).alias("_first")
         )
         return picked.select(
-            src, dst, *[F.col(f"_first.{c}").alias(c) for c in attrs]
+            "src", "dst", *[F.col(f"_first.{c}").alias(c) for c in attrs]
         )
-    return e.dropDuplicates([src, dst])
+    return e.dropDuplicates(["src", "dst"])
 
 
-def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def symmetrize(edges: DataFrame) -> DataFrame:
     """Both directions of every undirected edge (for neighbor scans)."""
-    return edges.select(src, dst).union(
-        edges.select(F.col(dst).alias(src), F.col(src).alias(dst))
+    return edges.select("src", "dst").union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
 
 
-def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def degrees(edges: DataFrame) -> DataFrame:
     """Per-node degree from simplified undirected edges → (node, degree)
     (SURVEY A3/G8; reference degree(net), network_generator.R:151).
     One union + one agg; partial (map-side) aggregation applies."""
     return (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("degree"))
     )
 
 
-def neighbors(edges: DataFrame, seeds: DataFrame, node_col: str = "node") -> DataFrame:
-    """Distinct neighbors of the seed set (SURVEY G9)."""
+def neighbors(edges: DataFrame, seeds: DataFrame) -> DataFrame:
+    """Distinct neighbors of the seed set (SURVEY G9) → (node)."""
     sym = symmetrize(edges)
     return (
-        sym.join(F.broadcast(seeds.select(F.col(node_col).alias("src"))), "src", "left_semi")
-        .select(F.col("dst").alias(node_col))
+        sym.join(F.broadcast(seeds.select(F.col("node").alias("src"))), "src", "left_semi")
+        .select(F.col("dst").alias("node"))
         .distinct()
     )
 
 
-def ego_nodes(edges: DataFrame, seeds: DataFrame, node_col: str = "node") -> DataFrame:
+def ego_nodes(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Seed set ∪ 1-hop neighbors (SURVEY G3: make_ego_graph node set;
     reference network_generator_lib.R:86,122). Multi-seed union is
     inherent — the DataFrame form needs no per-seed graphs + merge
     (reference merge_networks, network_generator_lib.R:586-630)."""
-    return (
-        seeds.select(node_col)
-        .union(neighbors(edges, seeds, node_col))
-        .distinct()
-    )
+    return seeds.select("node").union(neighbors(edges, seeds)).distinct()
 
 
-def induced_subgraph(
-    edges: DataFrame, nodeset: DataFrame, node_col: str = "node",
-    src: str = "src", dst: str = "dst",
-) -> DataFrame:
+def induced_subgraph(edges: DataFrame, nodeset: DataFrame) -> DataFrame:
     """Edges with BOTH endpoints in the node set (SURVEY G4; reference
     induced_subgraph, network_generator_lib.R:195). Two semi-joins —
     broadcast when the node set is small (ego queries), shuffle
     otherwise."""
-    ns_src = nodeset.select(F.col(node_col).alias(src))
-    ns_dst = nodeset.select(F.col(node_col).alias(dst))
-    return edges.join(ns_src, src, "left_semi").join(ns_dst, dst, "left_semi")
+    ns_src = nodeset.select(F.col("node").alias("src"))
+    ns_dst = nodeset.select(F.col("node").alias("dst"))
+    return edges.join(ns_src, "src", "left_semi").join(ns_dst, "dst", "left_semi")
 
 
-def ego_graph(
-    edges: DataFrame, seeds: DataFrame, node_col: str = "node"
-) -> tuple[DataFrame, DataFrame]:
+def ego_graph(edges: DataFrame, seeds: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(nodes, edges) of the 1-hop ego graph around the seed set."""
-    ns = ego_nodes(edges, seeds, node_col)
-    return ns, induced_subgraph(edges, ns, node_col)
+    ns = ego_nodes(edges, seeds)
+    return ns, induced_subgraph(edges, ns)
 
 
-def _forest_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def _forest_contract(edges: DataFrame) -> DataFrame:
     """One contraction pass: per-partition union-find emitting a
     spanning forest (≤ distinct-nodes-per-partition edges, connectivity
     preserved exactly). ``mapInPandas`` hands the generator every Arrow
     batch of a partition in sequence, so ONE union-find covers the
     whole partition regardless of batch splits."""
-    schema = edges.select(src, dst).schema
+    schema = edges.select("src", "dst").schema
 
     def gen(batches):
         import pandas as pd
@@ -145,7 +136,7 @@ def _forest_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
         forest_s, forest_d = [], []
         for pdf in batches:
-            for a, b in zip(pdf[src].values, pdf[dst].values):
+            for a, b in zip(pdf["src"].values, pdf["dst"].values):
                 a, b = a.item() if hasattr(a, "item") else a, b.item() if hasattr(b, "item") else b
                 if a not in parent:
                     parent[a] = a
@@ -156,9 +147,9 @@ def _forest_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
                     parent[max(ra, rb)] = min(ra, rb)
                     forest_s.append(a)
                     forest_d.append(b)
-        yield pd.DataFrame({src: forest_s, dst: forest_d})
+        yield pd.DataFrame({"src": forest_s, "dst": forest_d})
 
-    return edges.select(src, dst).mapInPandas(gen, schema=schema)
+    return edges.select("src", "dst").mapInPandas(gen, schema=schema)
 
 
 def limit_probe(df: DataFrame, collect_threshold: int):
@@ -191,14 +182,12 @@ def limit_probe(df: DataFrame, collect_threshold: int):
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
-    node_col: str = "node",
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 50,
     collect_threshold: int = 2_000_000,
 ) -> DataFrame:
-    """Connected components → (node, component), component = min node
-    id in the component (SURVEY G5; reference components(net),
+    """Connected components of ``nodes`` (``node``) and ``edges``
+    (``src``, ``dst``) → (node, component), component = min node id in
+    the component (SURVEY G5; reference components(net),
     network_generator_lib.R:415-417).
 
     Two-level scheme (the MapReduce-CC contraction idea — Kiveris et
@@ -246,10 +235,10 @@ def connected_components(
     at once; serving deployments that care should run graph builds on
     a dedicated session (``spark.newSession()`` gives a private conf).
     """
-    e = edges.select(src, dst).filter(F.col(src) != F.col(dst))
+    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     probe = limit_probe(e, collect_threshold)
     if len(probe) <= collect_threshold:
-        return _cc_solve_bounded(probe, nodes, node_col, src, dst)
+        return _cc_solve_bounded(probe, nodes)
     del probe
     # Probe overflowed: every contraction pass below re-reads e, and
     # LocalLimit did not short-circuit the emitter's shuffle stages —
@@ -267,20 +256,20 @@ def connected_components(
     nparts = None
     prev = None
     for _ in range(max_iter):
-        e = _forest_contract(e, src, dst).localCheckpoint(eager=True)
+        e = _forest_contract(e).localCheckpoint(eager=True)
         if nparts is None:
             nparts = max(1, edges.sparkSession.sparkContext.defaultParallelism)
         nparts = max(1, nparts // 8)
         e = e.repartition(nparts)
         n = e.count()
         if n <= collect_threshold:
-            return _cc_solve_bounded(e.toPandas(), nodes, node_col, src, dst)
+            return _cc_solve_bounded(e.toPandas(), nodes)
         if prev is not None and n >= prev * 0.9:
             # forest has plateaued at ~|V| > threshold — contraction
             # can't shrink further; finish distributed
             break
         prev = n
-    return _cc_pointer_jumping(nodes, e, node_col, src, dst, max_iter)
+    return _cc_pointer_jumping(nodes, e, max_iter)
 
 
 def min_roots(edges) -> dict:
@@ -305,17 +294,15 @@ def min_roots(edges) -> dict:
     return {k: find(k) for k in parent}
 
 
-def _cc_solve_bounded(
-    pdf, nodes: DataFrame, node_col: str, src: str, dst: str
-) -> DataFrame:
+def _cc_solve_bounded(pdf, nodes: DataFrame) -> DataFrame:
     """Driver-side union-find over a ≤collect_threshold edge list →
     (node, component) joined back over the full node set (nodes absent
     from every edge keep themselves as component)."""
     mapping = list(min_roots(
-        zip(pdf[src].values.tolist(), pdf[dst].values.tolist())
+        zip(pdf["src"].values.tolist(), pdf["dst"].values.tolist())
     ).items())
     spark = nodes.sparkSession
-    node_type = nodes.schema[node_col].dataType
+    node_type = nodes.schema["node"].dataType
     from pyspark.sql.types import StructField, StructType
 
     mdf = local_frame(
@@ -329,7 +316,7 @@ def _cc_solve_bounded(
         ),
     )
     return (
-        nodes.select(F.col(node_col).alias("node"))
+        nodes.select("node")
         .join(F.broadcast(mdf), "node", "left")
         .select(
             "node",
@@ -338,14 +325,7 @@ def _cc_solve_bounded(
     )
 
 
-def _cc_pointer_jumping(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "node",
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
+def _cc_pointer_jumping(nodes: DataFrame, edges: DataFrame, max_iter: int) -> DataFrame:
     """Connected components by min-label propagation WITH pointer
     jumping → (node, component), component = min node id in the
     component (SURVEY G5; reference components(net),
@@ -360,9 +340,9 @@ def _cc_pointer_jumping(
     idea, same effect as GraphFrames' large-star/small-star).
     ``localCheckpoint`` truncates lineage per round.
     """
-    sym = symmetrize(edges, src, dst).localCheckpoint(eager=True)
+    sym = symmetrize(edges).localCheckpoint(eager=True)
     labels = nodes.select(
-        F.col(node_col).alias("node"), F.col(node_col).alias("component")
+        "node", F.col("node").alias("component")
     ).localCheckpoint(eager=True)
     # bind before the loop: max_iter <= 0 skips it entirely, and the
     # non-convergence raise below must stay a RuntimeError, not a
@@ -370,8 +350,8 @@ def _cc_pointer_jumping(
     changed = None
     for _ in range(max_iter):
         neighbor_min = (
-            sym.join(labels, sym[dst] == labels["node"])
-            .select(sym[src].alias("node"), F.col("component"))
+            sym.join(labels, sym["dst"] == labels["node"])
+            .select(sym["src"].alias("node"), F.col("component"))
             .groupBy("node")
             .agg(F.min("component").alias("_nmin"))
         )
@@ -429,16 +409,15 @@ def component_sizes(components: DataFrame) -> DataFrame:
     return components.groupBy("component").agg(F.count("*").alias("size"))
 
 
-def bfs_distances(
-    edges: DataFrame, sources: DataFrame, node_col: str = "node", max_depth: int = 10_000
-) -> DataFrame:
-    """Unweighted BFS distances from a (small) source set → (node, dist).
+def bfs_distances(edges: DataFrame, sources: DataFrame) -> DataFrame:
+    """Unweighted BFS distances from a (small) source set of ``node``s
+    → (node, dist), at most ``_MAX_BFS_DEPTH`` hops deep.
     Frontier-expansion joins; each round one shuffle."""
     sym = symmetrize(edges).localCheckpoint(eager=True)
-    visited = sources.select(F.col(node_col).alias("node"), F.lit(0).alias("dist"))
+    visited = sources.select("node", F.lit(0).alias("dist"))
     visited = visited.localCheckpoint(eager=True)
     frontier = visited
-    for depth in range(1, max_depth + 1):
+    for depth in range(1, _MAX_BFS_DEPTH + 1):
         nxt = (
             sym.join(frontier, sym["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
@@ -457,14 +436,12 @@ def bfs_distances(
     return visited
 
 
-def diameter(
-    nodes: DataFrame, edges: DataFrame, node_col: str = "node", exact_limit: int = 2000
-) -> int:
+def diameter(nodes: DataFrame, edges: DataFrame) -> int:
     """Graph diameter — longest shortest path over the whole graph
     (igraph semantics: max over components; reference diameter(net),
     network_generator_lib.R:418; SURVEY G6).
 
-    ≤ ``exact_limit`` nodes → exact (BFS from every node, batched as a
+    ≤ ``_EXACT_DIAMETER_NODES`` nodes → exact (BFS from every node, batched as a
     multi-source product — fine for interactive subnetworks). Larger →
     double-sweep BFS lower bound per component (exact on trees, tight
     in practice; documented approximation — exact all-pairs at 100 TB
@@ -473,11 +450,11 @@ def diameter(
     n = nodes.count()
     if n == 0:
         return 0
-    if n <= exact_limit:
+    if n <= _EXACT_DIAMETER_NODES:
         # exact: APSP by joining BFS layers from all sources at once
         sym = symmetrize(edges).localCheckpoint(eager=True)
         dist = nodes.select(
-            F.col(node_col).alias("s"), F.col(node_col).alias("node"), F.lit(0).alias("dist")
+            F.col("node").alias("s"), "node", F.lit(0).alias("dist")
         ).localCheckpoint(eager=True)
         frontier = dist
         best = 0
@@ -497,7 +474,7 @@ def diameter(
             best = depth
         return best
     # double sweep from the max-degree node of each component
-    comps = connected_components(nodes, edges, node_col)
+    comps = connected_components(nodes, edges)
     degs = degrees(edges)
     start = (
         comps.join(degs, "node", "left")
@@ -511,39 +488,39 @@ def diameter(
         .filter(F.col("_rn") == 1)
         .select("node")
     )
-    d1 = bfs_distances(edges, start, "node")
+    d1 = bfs_distances(edges, start)
     far = d1.orderBy(F.desc("dist"), F.asc("node")).limit(1).select("node")
-    d2 = bfs_distances(edges, far, "node")
+    d2 = bfs_distances(edges, far)
     row = d2.agg(F.max("dist").alias("m")).collect()[0]
     return int(row["m"] or 0)
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> int:
+def _simple_pairs(edges: DataFrame) -> DataFrame:
+    """The distinct canonical (src < dst) pairs of ``edges``."""
+    return (
+        canonicalize_edges(edges.select("src", "dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .dropDuplicates(["src", "dst"])
+    )
+
+
+def triangle_count(edges: DataFrame) -> int:
     """Global triangle count via 3-way self-join of canonical (a<b)
     edges (SURVEY G7). Each triangle a<b<c matches exactly once."""
-    e = (
-        canonicalize_edges(edges.select(src, dst), src, dst)
-        .filter(F.col(src) != F.col(dst))
-        .dropDuplicates([src, dst])
-    )
-    e1 = e.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e2 = e.select(F.col(src).alias("b"), F.col(dst).alias("c"))
-    e3 = e.select(F.col(src).alias("a"), F.col(dst).alias("c"))
+    e = _simple_pairs(edges)
+    e1 = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    e2 = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    e3 = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     return e1.join(e2, "b").join(e3, ["a", "c"], "left_semi").count()
 
 
-def transitivity(edges: DataFrame, src: str = "src", dst: str = "dst") -> float:
+def transitivity(edges: DataFrame) -> float:
     """Global clustering coefficient = 3·triangles / #connected-triples
     (igraph ``transitivity(type="global")``; reference
     network_generator_lib.R:436). Triples from degrees: Σ d(d−1)/2."""
-    tri = triangle_count(edges, src, dst)
-    e = (
-        canonicalize_edges(edges.select(src, dst), src, dst)
-        .filter(F.col(src) != F.col(dst))
-        .dropDuplicates([src, dst])
-    )
+    tri = triangle_count(edges)
     row = (
-        degrees(e, src, dst)
+        degrees(_simple_pairs(edges))
         .agg(F.sum(F.col("degree") * (F.col("degree") - 1) / 2).alias("triples"))
         .collect()[0]
     )
@@ -551,52 +528,39 @@ def transitivity(edges: DataFrame, src: str = "src", dst: str = "dst") -> float:
     return float("nan") if triples == 0 else 3.0 * tri / triples
 
 
-def interchromosomal_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst", sep: str = "_"
-) -> int:
+def interchromosomal_count(edges: DataFrame) -> int:
     """Edges whose endpoint fragment ids live on different chromosomes
     (fragment id = ``{chr}_{start}_{end}``; reference
     network_generator_lib.R:426-435; SURVEY G10)."""
     return edges.filter(
-        F.split(F.col(src), sep).getItem(0) != F.split(F.col(dst), sep).getItem(0)
+        F.split(F.col("src"), "_").getItem(0) != F.split(F.col("dst"), "_").getItem(0)
     ).count()
 
 
 def subset_edges_by_nodesets(
-    edges: DataFrame,
-    nodes1: DataFrame,
-    nodes2: DataFrame | None = None,
-    node_col: str = "node",
-    src: str = "src",
-    dst: str = "dst",
+    edges: DataFrame, nodes1: DataFrame, nodes2: DataFrame | None = None
 ) -> DataFrame:
     """chaser ``subset_chromnet`` (SURVEY G13; reference
     network_generator.R:258-265): with only ``nodes1`` → induced
     subgraph on nodes1 (PP net); with both → edges with one endpoint in
-    each set (PO net)."""
+    each set (PO net). The node sets carry a ``node`` column."""
     if nodes2 is None:
-        return induced_subgraph(edges, nodes1, node_col, src, dst)
-    n1 = nodes1.select(F.col(node_col).alias("_n1"))
-    n2 = nodes2.select(F.col(node_col).alias("_n2"))
+        return induced_subgraph(edges, nodes1)
+    n1 = nodes1.select(F.col("node").alias("_n1"))
+    n2 = nodes2.select(F.col("node").alias("_n2"))
     e = edges
     fwd = (
-        e.join(n1, e[src] == n1["_n1"], "left_semi")
-        .join(n2, e[dst] == n2["_n2"], "left_semi")
+        e.join(n1, e["src"] == n1["_n1"], "left_semi")
+        .join(n2, e["dst"] == n2["_n2"], "left_semi")
     )
     bwd = (
-        e.join(n2, e[src] == n2["_n2"], "left_semi")
-        .join(n1, e[dst] == n1["_n1"], "left_semi")
+        e.join(n2, e["src"] == n2["_n2"], "left_semi")
+        .join(n1, e["dst"] == n1["_n1"], "left_semi")
     )
-    return fwd.union(bwd).dropDuplicates([src, dst])
+    return fwd.union(bwd).dropDuplicates(["src", "dst"])
 
 
-def graph_metadata(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "fragment",
-    type_col: str = "type",
-    edge_type_col: str = "type",
-) -> dict:
+def graph_metadata(nodes: DataFrame, edges: DataFrame) -> dict:
     """The reference's per-network metadata bundle (SURVEY G14; reference
     generate_metadata, network_generator_lib.R:411-459): counts, degree
     average, component stats, diameter, clustering coefficient.
@@ -604,11 +568,11 @@ def graph_metadata(
     Returns a plain dict (this is a small driver-side artifact — the
     inputs are aggregated, never collected row-wise).
     """
-    e = edges.select(F.col("src"), F.col("dst"), F.col(edge_type_col).alias("etype"))
+    e = edges.select(F.col("src"), F.col("dst"), F.col("type").alias("etype"))
     node_stats = nodes.agg(
         F.count("*").alias("nodes"),
-        F.sum(F.when(F.col(type_col) == "P", 1).otherwise(0)).alias("promoters"),
-        F.sum(F.when(F.col(type_col) == "O", 1).otherwise(0)).alias("other_ends"),
+        F.sum(F.when(F.col("type") == "P", 1).otherwise(0)).alias("promoters"),
+        F.sum(F.when(F.col("type") == "O", 1).otherwise(0)).alias("other_ends"),
     ).collect()[0]
     edge_stats = e.agg(
         F.count("*").alias("edges"),
@@ -618,9 +582,8 @@ def graph_metadata(
     deg_avg = (
         degrees(e).agg(F.round(F.avg("degree"), 2).alias("d")).collect()[0]["d"]
     )
-    comps = connected_components(
-        nodes.select(F.col(node_col).alias("node")), e
-    )
+    node_ids = nodes.select(F.col("fragment").alias("node"))
+    comps = connected_components(node_ids, e)
     sizes = component_sizes(comps)
     comp_row = sizes.agg(
         F.count("*").alias("n_components"), F.max("size").alias("largest")
@@ -643,7 +606,7 @@ def graph_metadata(
         "connected_components": comp_row["n_components"],
         "pct_nodes_in_largest_component": f"{pct_largest}%",
         "interchromosomal_edges": interchromosomal_count(e),
-        "diameter": diameter(nodes.select(F.col(node_col).alias("node")), e),
+        "diameter": diameter(node_ids, e),
         # NaN (no connected triples) → None: valid JSON null, unlike the
         # reference's rjson NaN emission (a wart not copied)
         "clustering_coefficient": None if math.isnan(trans) else trans,

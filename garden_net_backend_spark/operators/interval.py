@@ -97,17 +97,13 @@ def overlap_flag(
     regions: DataFrame,
     flag_name: str = "in_region",
     on: str = "chr",
-    node_range: tuple[str, str] = ("start", "end"),
-    region_range: tuple[str, str] = ("start", "end"),
     bin_size: int = DEFAULT_BIN,
 ) -> DataFrame:
     """Existence-only overlap → boolean flag (GRanges ``findOverlaps``
     used as a set-membership test; reference network_generator_lib.R:853-862
     intronic_regions). Left-semi shaped: nodes keep their full row, plus
-    ``flag_name``.
+    ``flag_name``. Both sides carry their range as ``(start, end)``.
     """
-    ls, le = node_range
-    rs, re_ = region_range
     # join back on the interval CONTENT (on, start, end) — a synthetic
     # monotonically_increasing_id here is a correctness trap: the id is
     # recomputed independently in the two plan branches and diverges
@@ -116,18 +112,17 @@ def overlap_flag(
     # (on,start,end) node rows get identical flags — semantically right.
     hits = (
         interval_overlap_join(
-            nodes.select(on, ls, le).distinct(),
-            regions.select(on, F.col(rs).alias("_rs"), F.col(re_).alias("_re")),
+            nodes.select(on, "start", "end").distinct(),
+            regions.select(on, F.col("start").alias("_rs"), F.col("end").alias("_re")),
             on=on,
-            left_range=(ls, le),
             right_range=("_rs", "_re"),
             bin_size=bin_size,
         )
-        .select(on, ls, le)
+        .select(on, "start", "end")
         .distinct()
         .withColumn(flag_name, F.lit(True))
     )
-    return nodes.join(hits, [on, ls, le], "left").withColumn(
+    return nodes.join(hits, [on, "start", "end"], "left").withColumn(
         flag_name, F.coalesce(F.col(flag_name), F.lit(False))
     )
 
@@ -139,7 +134,6 @@ def range_query(
     qend: int,
     expand: int = 0,
     on: str = "chr",
-    node_range: tuple[str, str] = ("start", "end"),
 ) -> DataFrame:
     """Single-range overlap query (reference network_generator_lib.R:163-183,
     SURVEY J6/Q1). A literal predicate — Catalyst pushes it into the
@@ -147,9 +141,8 @@ def range_query(
     (reference network_generator_lib.R:171-175).
     """
     s, e = qstart - expand, qend + expand
-    ns, ne = node_range
     return nodes.filter(
-        (F.col(on) == chrom) & (F.col(ns) <= F.lit(e)) & (F.col(ne) >= F.lit(s))
+        (F.col(on) == chrom) & (F.col("start") <= F.lit(e)) & (F.col("end") >= F.lit(s))
     )
 
 
@@ -160,11 +153,11 @@ def nearest_interval_join(
     query_range: tuple[str, str] = ("start", "end"),
     target_range: tuple[str, str] = ("start", "end"),
     target_id: str = "fragment",
-    distance_name: str = "distance",
 ) -> DataFrame:
     """Nearest-range (as-of) join: for each query interval, the single
-    closest target interval on the same key (GRanges ``nearest``,
-    reference network_generator_lib.R:138-153, 177-179; SURVEY J7).
+    closest target interval on the same key and its ``distance``
+    (GRanges ``nearest``, reference network_generator_lib.R:138-153,
+    177-179; SURVEY J7).
 
     Distance = ``max(q.start − t.end, t.start − q.end, 0)`` (0 ⇒
     overlap). Ties broken deterministically by (target start, end, id) —
@@ -331,7 +324,7 @@ def nearest_interval_join(
     out = cand.select(
         *[c for c in q.columns if c != "_qid"],
         F.when(has_ov, F.col("_ov._tid")).otherwise(flank_tid).alias(target_id),
-        F.when(has_ov, F.lit(0)).otherwise(flank_dist).cast("long").alias(distance_name),
+        F.when(has_ov, F.lit(0)).otherwise(flank_dist).cast("long").alias("distance"),
     )
     return out.filter(F.col(target_id).isNotNull())
 
@@ -340,16 +333,14 @@ def overlap_aggregate(
     nodes: DataFrame,
     features: DataFrame,
     agg: str = "mean",
-    missing_value: float = 0.0,
     on: str = "chr",
     node_key: str = "fragment",
-    node_range: tuple[str, str] = ("start", "end"),
     feature_cols: tuple[str, str, str, str, str] = ("chr", "start", "end", "feature", "value"),
     bin_size: int = DEFAULT_BIN,
 ) -> DataFrame:
     """Overlap aggregation: per (node, feature), fold the values of all
     feature intervals overlapping the node with ``agg`` ∈ {mean,min,max},
-    missing → ``missing_value`` (chaser::load_features semantics —
+    missing → 0 (chaser::load_features semantics —
     reference merge_features.R:68, auxfun from backend.py:204, missingv=0;
     SURVEY A7/A8).
 
@@ -364,10 +355,10 @@ def overlap_aggregate(
 
     fchr, fs, fe, fname, fval = feature_cols
     aggs = {
-        "mean": lambda c: (F.sum(c.cast("decimal(38,8)")).cast("double") / F.count(c)),
-        "min": lambda c: F.min(c),
-        "max": lambda c: F.max(c),
-        "sum": lambda c: F.sum(c.cast("decimal(38,8)")).cast("double"),
+        "mean": davg,
+        "min": F.min,
+        "max": F.max,
+        "sum": dsum,
         "count": lambda c: F.count(c).cast("double"),
     }
     if agg not in aggs:
@@ -381,10 +372,9 @@ def overlap_aggregate(
         F.col(fval).alias("_fv"),
     )
     pairs = interval_overlap_join(
-        nodes.select(node_key, on, *node_range),
+        nodes.select(node_key, on, "start", "end"),
         feats,
         on=on,
-        left_range=node_range,
         right_range=("_fs", "_fe"),
         bin_size=bin_size,
     )
@@ -394,5 +384,5 @@ def overlap_aggregate(
         F.broadcast(feats.select("feature").distinct())
     )
     return grid.join(agged, [node_key, "feature"], "left").withColumn(
-        "value", F.coalesce(F.col("value"), F.lit(float(missing_value)))
+        "value", F.coalesce(F.col("value"), F.lit(0.0))
     )

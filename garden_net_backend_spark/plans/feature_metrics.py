@@ -47,8 +47,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exact import exact_corr
 from ..operators.chas import (
+    _folded_chas,
     chas,
     feature_abundance,
     randomize_edges_distance_matched,
@@ -62,20 +62,19 @@ def merge_features(
     nodes: DataFrame,
     feature_intervals: DataFrame,
     agg: str = "mean",
-    missing_value: float = 0.0,
     binarize: bool = False,
 ) -> DataFrame:
     """Overlap-aggregate feature intervals onto network nodes → dense
-    long-form (fragment, feature, value). ``agg`` dispatches by name
-    (mean/min/max — reference auxfun, backend.py:204). ``binarize``
-    collapses values to presence 0/1 (the reference's default feature
-    binarization, --no-features-binarization flag at
-    network_generator_lib.R:31-35; SURVEY A11)."""
+    long-form (fragment, feature, value); a node no interval overlaps
+    reads 0. ``agg`` dispatches by name (mean/min/max — reference
+    auxfun, backend.py:204). ``binarize`` collapses values to presence
+    0/1 (the reference's default feature binarization,
+    --no-features-binarization flag at network_generator_lib.R:31-35;
+    SURVEY A11)."""
     out = overlap_aggregate(
         nodes.select("fragment", "chr", "start", "end"),
         feature_intervals,
         agg=agg,
-        missing_value=missing_value,
     )
     if binarize:
         out = out.withColumn(
@@ -95,30 +94,15 @@ def _random_chas_bounds(
     """(feature, lo, hi): the random-ChAs interval across ``n_random``
     randomizations of the SUBSET edge list (chaser randomize(subnet);
     SURVEY A6/G12) — all runs evaluated in one plan via the run-id
-    fan-out, not the reference's serial loop. Bounds round to 3
-    decimals (network_generator_lib.R:554)."""
+    fan-out, not the reference's serial loop. Each run's ChAs is the
+    one ChAs kernel of ``operators/chas`` grouped by ``(run, feature)``.
+    Bounds round to 3 decimals (network_generator_lib.R:554)."""
     rand_edges = randomize_edges_distance_matched(
         sub_edges, nodes, n_random=n_random, seed=seed, dist_match=dist_match
     )
-    sym = rand_edges.select("run", "src", "dst").union(
-        rand_edges.select(
-            "run", F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-    )
-    f_src = frame.select(
-        F.col("fragment").alias("src"), "feature", F.col("value").alias("x")
-    )
-    f_dst = frame.select(
-        F.col("fragment").alias("dst"), "feature", F.col("value").alias("y")
-    )
-    per_run = (
-        # network-sized feature grid → broadcast lookups, the n_random-
-        # fanned edge stream stays shuffle-free (chas docstring)
-        sym.join(F.broadcast(f_src), "src")
-        .join(F.broadcast(f_dst), ["dst", "feature"])
-        .groupBy("run", "feature")
-        .agg(exact_corr(F.col("x"), F.col("y")).alias("chas"))
-    )
+    # network-sized feature grid → broadcast lookups, the n_random-
+    # fanned edge stream stays shuffle-free (chas docstring)
+    per_run = _folded_chas(rand_edges, frame, ["run", "feature"], broadcast=True)
     return per_run.groupBy("feature").agg(
         F.round(F.min("chas"), 3).alias("lo"), F.round(F.max("chas"), 3).alias("hi")
     )

@@ -523,13 +523,7 @@ def network_metadata(nodes: DataFrame, edges: DataFrame) -> dict:
     return graph_metadata(nodes, edges)
 
 
-def assign_grid_positions(
-    nodes: DataFrame,
-    x_scale: int = 1000,
-    row_height: int = 200,
-    jitter: int = 160,
-    padding: int = 30,
-) -> DataFrame:
+def assign_grid_positions(nodes: DataFrame) -> DataFrame:
     """Deterministic, layout-free node coordinates → nodes + ``x``/``y``
     (closing the reference's layout-enrichment gap with zero external
     dependencies).
@@ -540,9 +534,9 @@ def assign_grid_positions(
     and served from a separate Node process. An engine artifact must be
     reproducible, so coordinates derive from the data instead:
 
-      x = padding + genomic midpoint on a ``x_scale``-bp grid
-      y = padding + natural-chromosome row · row_height
-          + a stable per-fragment stagger (xxhash64 % jitter)
+      x = 30 + genomic midpoint on a 1,000-bp grid
+      y = 30 + natural-chromosome row · 200
+          + a stable per-fragment stagger (xxhash64 % 160)
 
     i.e. a karyotype-style ribbon per chromosome, positions stable
     across runs and partitionings. Integer columns only, so the emitted
@@ -568,13 +562,13 @@ def assign_grid_positions(
         row_idx = F.lit(0)
     mid = ((F.col("start") + F.col("end")) / 2).cast("long")
     return nodes.withColumn(
-        "x", (F.lit(padding) + (mid / x_scale).cast("long")).cast("long")
+        "x", (F.lit(30) + (mid / 1000).cast("long")).cast("long")
     ).withColumn(
         "y",
         (
-            F.lit(padding)
-            + row_idx.cast("long") * row_height
-            + F.pmod(F.xxhash64(F.col("fragment")), F.lit(jitter))
+            F.lit(30)
+            + row_idx.cast("long") * 200
+            + F.pmod(F.xxhash64(F.col("fragment")), F.lit(160))
         ).cast("long"),
     )
 

@@ -779,7 +779,7 @@ def q21_overlap_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = overlap_aggregate(
-        nodes, feats, agg="mean", missing_value=0.0, on="grp",
+        nodes, feats, agg="mean", on="grp",
         node_key="fragment",
         feature_cols=("grp", "start", "end", "feature", "value"),
         bin_size=8192,

@@ -26,13 +26,14 @@ def _first_line(path: str) -> str:
         return fh.readline().rstrip("\n")
 
 
-def sniff_format(path: str, sep: str = "\t") -> tuple[str, int]:
-    """Return ("hic"|"pchic", n_columns) by counting header columns.
+def sniff_format(path: str) -> tuple[str, int]:
+    """Return ("hic"|"pchic", n_columns) by counting tab-separated
+    header columns.
 
     Mirrors the awk column-count dispatch (reference
     network_generator.R:50-55): 6 columns → plain Hi-C, else PCHiC.
     """
-    ncols = len(_first_line(path).split(sep))
+    ncols = len(_first_line(path).split("\t"))
     return ("hic" if ncols == 6 else "pchic"), ncols
 
 
@@ -98,9 +99,7 @@ def _strip_chr_prefix(col):
     return F.regexp_replace(col, "^chr", "")
 
 
-def read_feature(
-    spark: SparkSession, path: str, fmt: str, feature_name: str | None = None
-) -> DataFrame:
+def read_feature(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     """Read any feature-file format into the canonical long-form
     ``(chr, start, end, feature, value)`` interval table
     (FEATURE_INTERVAL_SCHEMA).
@@ -108,7 +107,7 @@ def read_feature(
     Format semantics follow the reference's chaser::load_features call
     sites (merge_features.R:68, backend.py:181-195):
 
-    - bed3            → one feature (file name), value = signal
+    - bed3            → one feature, value = signal
     - bed6            → one feature, value = score
     - macs2           → one feature, value = signalValue
     - chromhmm        → one 0/1 feature **per state** (value = 1 rows;
@@ -118,12 +117,14 @@ def read_feature(
     - features_on_nodes → already keyed by fragment; handled by
       :func:`read_features_on_nodes` (it is not an interval table).
 
+    A one-feature format names its feature after the file (the part of
+    its base name before the first ``.``).
+
     Coordinates in these files carry a ``chr`` prefix (chr7); it is
     stripped to the engine's canonical bare chromosome names
     (reference network_generator.R:130).
     """
-    default_name = os.path.basename(path).split(".")[0]
-    feature_name = feature_name or default_name
+    feature_name = os.path.basename(path).split(".")[0]
     if fmt not in _FEATURE_SCHEMAS:
         raise ValueError(f"unknown feature format: {fmt}")
     # coordinates are read as text and cast under ANSI: a coordinate

@@ -2283,24 +2283,6 @@ def process_ingest_batch_pq_codes(
     )
 
 
-def ingest_pq_codes_stream(
-    stream_vecs: DataFrame,
-    codes_dir: str,
-    checkpoint_dir: str,
-    codebooks: DataFrame,
-    available_now: bool = True,
-    **kernel_kwargs,
-):
-    """PQ-codes counterpart of :func:`ingest_dedup_stream` — wire a
-    streaming vector source into the codes-table maintenance loop.
-    The serving twin (a QUERY stream answered off this table) is
-    :func:`ann_query_stream`."""
-    return _start_foreach_batch(
-        stream_vecs, checkpoint_dir, available_now,
-        process_ingest_batch_pq_codes, codes_dir, codebooks, **kernel_kwargs,
-    )
-
-
 def rebuild_pq_codes(
     spark: SparkSession,
     accepted_dir: str,
@@ -2748,10 +2730,9 @@ def ann_query_stream(
     """Streaming wrapper for :func:`process_serve_batch_ann` — wire a
     query stream into per-micro-batch ANN answering off the maintained
     codes table: ``readStream`` (queries) → ``foreachBatch`` → pruned
-    ``ivf_pq_topk`` → results partitioned by ``serve_batch``. The
-    serving twin of :func:`ingest_pq_codes_stream`; run both against
-    the same ``codes_dir`` and newly ingested vectors become
-    retrievable at the ingest stream's micro-batch cadence. The frozen
+    ``ivf_pq_topk`` → results partitioned by ``serve_batch``. Vectors
+    that :func:`process_ingest_batch_pq_codes` appends to the same
+    ``codes_dir`` become retrievable at the next micro-batch. The frozen
     frames' fingerprints are computed ONCE here and handed to every
     batch (the frames cannot drift inside one stream), so the
     per-batch verification cost is two sidecar reads + string

@@ -184,3 +184,53 @@ def test_read_feature_non_numeric_coordinate_fails(spark):
     )
     with pytest.raises(Exception):
         read_feature(spark, p, "bed3").collect()
+
+
+def test_folded_chas_equals_symmetrized_exact_corr(spark):
+    """The one ChAs kernel, grouped by ``(run, feature)`` over random
+    runs of a small graph, equals ``exact_corr`` over each run's
+    symmetrized edges bit for bit: for a varying feature, for a
+    constant one (null ChAs) and for one with null values."""
+    from garden_net_backend_spark.functions.exact import exact_corr
+    from garden_net_backend_spark.operators.chas import (
+        _folded_chas,
+        randomize_edges_distance_matched,
+    )
+
+    frags = [(f"{c}_{i * 700}_{i * 700 + 300}", c, i * 700) for c in "12" for i in range(20)]
+    nodes = spark.createDataFrame(
+        [(f, c, s, s + 300) for f, c, s in frags],
+        "fragment string, chr string, start long, end long",
+    )
+    edges = spark.createDataFrame(
+        sorted({(frags[i][0], frags[(i * 11 + 7) % 40][0]) for i in range(40)}
+               | {(frags[i][0], frags[(i + 3) % 40][0]) for i in range(40)}),
+        "src string, dst string",
+    )
+    feats = spark.createDataFrame(
+        [(f, "signal", ((k * 37) % 13) / 7) for k, (f, _, _) in enumerate(frags)]
+        + [(f, "flat", 1.0) for f, _, _ in frags]
+        + [(f, "gappy", None if k % 4 == 0 else float(k % 9)) for k, (f, _, _) in enumerate(frags)],
+        "fragment string, feature string, value double",
+    )
+    runs = randomize_edges_distance_matched(edges, nodes, n_random=5, seed=7)
+    folded = {
+        (r["run"], r["feature"]): r["chas"]
+        for r in _folded_chas(runs, feats, ["run", "feature"], broadcast=True).collect()
+    }
+    sym = runs.select("run", "src", "dst").union(
+        runs.select("run", F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    f_src = feats.select(F.col("fragment").alias("src"), "feature", F.col("value").alias("x"))
+    f_dst = feats.select(F.col("fragment").alias("dst"), "feature", F.col("value").alias("y"))
+    want = {
+        (r["run"], r["feature"]): r["chas"]
+        for r in sym.join(f_src, "src").join(f_dst, ["dst", "feature"])
+        .groupBy("run", "feature")
+        .agg(exact_corr(F.col("x"), F.col("y")).alias("chas"))
+        .collect()
+    }
+    assert len(want) == 15
+    assert folded == want
+    assert all(want[(run, "flat")] is None for run in range(5))
+    assert all(want[(run, f)] is not None for run in range(5) for f in ("signal", "gappy"))

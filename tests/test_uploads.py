@@ -252,3 +252,76 @@ def test_format_inference_skips_bed_header_lines(tmp_path):
               "#chrom\tstart\tend\tname\tscore\tstrand"]
     assert infer_feature_format(_mkfile(d, "h.bed", header + ["chr1\t1\t2\tp\t5\t+"])) == "bed6"
     assert infer_feature_format(_mkfile(d, "s.bed", header[:1] + ["chr1\t1\t2\tE9"])) == "chromhmm"
+
+
+def _golden_network(spark):
+    """A 24-node, two-chromosome network with P-P, P-O, O-O and
+    interchromosomal edges at several genomic distances, so that every
+    subnet has more than one distance stratum to permute in."""
+    nodes = [
+        (f"{c}_{i * 1000}_{i * 1000 + 500}", c, i * 1000, i * 1000 + 500,
+         "P" if i % 3 == 0 else "O")
+        for c in ("1", "2")
+        for i in range(1, 13)
+    ]
+    frags = [n[0] for n in nodes]
+    edges = sorted(
+        {
+            (frags[i], frags[j], "")
+            for i in range(len(frags))
+            for j in ((i * 7 + 3) % len(frags), (i * 5 + 11) % len(frags))
+            if i != j
+        }
+    )
+    return (
+        spark.createDataFrame(
+            nodes, "fragment string, chr string, start long, end long, type string"
+        ),
+        spark.createDataFrame(edges, "src string, dst string, type string"),
+    )
+
+
+def _golden_lines(fmt):
+    lines = []
+    for k in range(18):
+        c, s = 1 + k % 2, 200 + (k * 2300) % 12_000
+        if fmt == "bed3":
+            lines.append(f"chr{c}\t{s}\t{s + 900}\t{(k * 37) % 11 / 4}")
+        elif fmt == "bed6":
+            lines.append(f"chr{c}\t{s}\t{s + 400}\tpeak{k}\t{(k * 53) % 17 / 3:.3f}\t+")
+        else:
+            lines.append(f"chr{c}\t{s}\t{s + 1500}\tE{1 + k % 3}")
+    return lines
+
+
+#: sha256 of ``features_metadata.json`` per (format, skip_pp_po), under
+#: the reference defaults (``n_random=1``, ``n_random_po=50``, seed 42)
+_METADATA_GOLDEN = {
+    ("bed3", False): "9fef7d1e582bbaf8dc5ceffd996c7922c21e5f0ba188dbc375306cacfcb00b02",
+    ("bed3", True): "954ec8dedefcea5dd87ea8fc4ae9b80adfb2b698932a7eab21894f260cebfe7f",
+    ("bed6", False): "271cd03424499a0b4419d885d7e66bc1fd879e3db771dc33ae1903ef554f0eaf",
+    ("bed6", True): "fbfee10c3023949ef9c6f3f839c2c6a657d13da94276f0dc452e7a565de3b6f2",
+    ("chromhmm", False): "c140ccd603b4a858383937c8b39ca5841413b2c83f0404dc0fafc31435910fe6",
+    ("chromhmm", True): "da7dab581175ac799d23278b8273c167355f265506d9689ea6856f0353f7cc72",
+}
+
+
+@pytest.fixture(scope="module")
+def golden_network(spark):
+    return _golden_network(spark)
+
+
+@pytest.mark.parametrize("fmt,skip", sorted(_METADATA_GOLDEN))
+def test_features_metadata_golden_bytes(spark, golden_network, tmp_path, fmt, skip):
+    """The bytes of an upload's ``features_metadata.json``: every
+    Abundance, ChAs, random-ChAs interval and mean degree of the net
+    (and, unless skipped, pp and po) subnets, as written."""
+    import hashlib
+
+    nodes, edges = golden_network
+    out = str(tmp_path / "out")
+    p = _mkfile(str(tmp_path), f"gold.{fmt}.bed", _golden_lines(fmt))
+    process_upload(spark, p, nodes, edges, out, skip_pp_po=skip)
+    with open(os.path.join(out, "gold", "features_metadata.json"), "rb") as fh:
+        body = fh.read()
+    assert hashlib.sha256(body).hexdigest() == _METADATA_GOLDEN[(fmt, skip)], body
